@@ -546,7 +546,7 @@ def _anon_scale_run(spark, n: int = 1_000_000, kanon_only: bool = False) -> dict
     cfg = {A: AttrConfig("double", "randomization")}
     out = {}
     t0 = time.time()
-    k = k_anonymity(triples, T, [A], cfg, mode="ranges")
+    k, _mode = k_anonymity(triples, T, [A], cfg, mode="ranges")
     out["kanon_ranges_1m_single_group"] = round(time.time() - t0, 3)
     out["kanon_ranges_1m_k"] = int(k)
     if kanon_only:

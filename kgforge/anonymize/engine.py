@@ -2,14 +2,20 @@
 
 Spark re-expression of AnonymizationService.applyAnonymizationForObject
 (reference: service/AnonymizationService.java:74-116): per configured object
-type — used-property semi-join (J1), per-attribute column extraction (J2
-decomposed; pred-pruned scans), operator dispatch (Configuration.java:29-65),
-KPI write-back, original deletion (QueryBuildingService.java:98-123), optional
-rename-to-original (AnonymizationService.java:159-201).
+type — used-property check (J1), per-attribute column extraction (J2),
+operator dispatch (Configuration.java:29-65), KPI write-back, original
+deletion (QueryBuildingService.java:98-123), optional rename-to-original
+(AnonymizationService.java:159-201).
 
-The config is driver-side (tiny, broadcast into every generated plan); all
-data movement is DataFrame transforms.  Per-type results accumulate into the
-same triple table, exactly like the reference's shared Jena model (M5).
+Each type starts from ONE materialized pivot: a single ``groupBy(subj)``
+over the pred-filtered triples yields the type's subjects, every configured
+attribute's values (as arrays, so multi-valued attributes survive) and the
+tie column.  J1's counts, the attribute columns and the delete's victims
+all read that pivot; none re-derives the type's subjects from the triple
+table.  The config is driver-side (tiny, inlined into every generated
+plan); all data movement is DataFrame transforms.  Per-type results
+accumulate into the same triple table, exactly like the reference's shared
+Jena model (M5).
 """
 
 from __future__ import annotations
@@ -25,7 +31,7 @@ from kgforge.anonymize import ops
 from kgforge.anonymize.buckets import calculate_number_of_buckets
 from kgforge.config import AnonymizationConfig, AttrConfig, DEMO_PREFIX
 from kgforge.rank import release_rank_caches
-from kgforge.triples import attr_column, subjects_of_type, triples_df
+from kgforge.triples import RDF_TYPE, triples_df
 
 _SUFFIX = {
     "masking": "_masked",
@@ -39,6 +45,8 @@ class AnonymizationReport:
     """Bookkeeping for assertions / KPIs (also present as triples)."""
 
     k_anonymity: dict[str, int] = field(default_factory=dict)  # type -> k
+    # type -> the k-anonymity counting path that ran (kpi.k_anonymity modes)
+    k_mode: dict[str, str] = field(default_factory=dict)
     nr_buckets: dict[str, dict[str, int]] = field(default_factory=dict)
     used: dict[str, list[str]] = field(default_factory=dict)
 
@@ -67,27 +75,16 @@ def anonymize_triples(
     seed = int(time.time() * 1000) if random_seed is None else random_seed
     report = AnonymizationReport()
 
-    order_df = None
-    if order_pred is not None:
-        order_df = (
-            triples.filter(F.col("pred") == order_pred)
-            .select("subj", F.col("obj_value").cast("long").alias("_tie"))
-            .dropDuplicates(["subj"])
-        )
-
     for type_iri, attrs_cfg in config.items():
-        subjects = subjects_of_type(triples, type_iri)
+        attrs = list(attrs_cfg)
+        pivot = _type_pivot(triples, type_iri, attrs, order_pred)
 
         # J1: which configured predicates are actually used by this type
-        counts_rows = (
-            triples.join(subjects, "subj", "left_semi")
-            .filter(F.col("pred").isin(list(attrs_cfg)))
-            .groupBy("pred")
-            .count()
-            .collect()
-        )
-        counts = {r["pred"]: r["count"] for r in counts_rows}
-        used = [a for a in attrs_cfg if a in counts]
+        sizes = pivot.agg(
+            *[F.sum(F.size(f"_a{i}")).alias(f"_n{i}") for i in range(len(attrs))]
+        ).collect()[0] if attrs else ()
+        counts = {a: n for a, n in zip(attrs, sizes) if n}
+        used = [a for a in attrs if a in counts]
         report.used[type_iri] = used
         n_anon = sum(
             1
@@ -102,11 +99,10 @@ def anonymize_triples(
         for attr in used:
             cfg: AttrConfig = attrs_cfg[attr]
             n = counts[attr]
-            col_df = attr_column(triples, subjects, attr)
-            if order_df is not None:
-                col_df = col_df.join(order_df, "subj", "left")
-            else:
-                col_df = col_df.withColumn("_tie", F.col("subj"))
+            values = F.explode(f"_a{attrs.index(attr)}").alias("_v")
+            col_df = pivot.select("subj", "_tie", values).select(
+                "subj", "_v.obj_value", "_v.obj_dtype", "_v.obj_is_iri", "_tie"
+            )
             order_col = F.col("_tie")
 
             if cfg.strategy == "masking":
@@ -140,82 +136,126 @@ def anonymize_triples(
             else:
                 raise ValueError(f"No Anonymization implementation for {cfg.strategy}")
 
-        for part in new_parts:
-            triples = triples.unionByName(
-                part.select("subj", "pred", "obj_value", "obj_dtype", "obj_is_iri")
-            )
-        if kpi_rows:
-            triples = triples.unionByName(triples_df(spark, kpi_rows))
-        # Lineage truncation, not just caching: each attribute operator stacks
-        # a rank/bucket/noise subtree onto the shared triple table, and the KPI
-        # pass re-joins that table against itself several times.  Without a
-        # checkpoint the analyzed plan grows multiplicatively per type —
-        # analysis time dominates tiny inputs and the driver can OOM just
-        # rendering plan strings for the SQL listener.  The written-back model
-        # is reused by KPIs, deletes, renames, and serialization, so this is
-        # the natural stage boundary to checkpoint.  When the session has a
-        # checkpoint dir configured we take a RELIABLE checkpoint (survives
-        # executor loss / dynamic allocation on a real cluster); otherwise
-        # localCheckpoint (unreplicated executor blocks — fine for local mode
-        # and fixture-sized services, not for long cluster jobs).
-        triples = _truncate(triples, eager=True)
-        # the checkpoint materialized every operator plan for this type, so
-        # the rank caches the operators pinned (range-partitioned sort
-        # frames) are now redundant — release them before the next type
-        release_rank_caches()
+        written = triples
+        if used:
+            if not include_original_data:
+                written = _delete_originals(written, pivot, attrs, used)
+            for part in new_parts:
+                written = written.unionByName(
+                    part.select("subj", "pred", "obj_value", "obj_dtype", "obj_is_iri")
+                )
+            if kpi_rows:
+                written = written.unionByName(triples_df(spark, kpi_rows))
+            # Lineage truncation, not just caching: each attribute operator
+            # stacks a rank/bucket/noise subtree onto the shared triple table.
+            # Without a checkpoint the analyzed plan grows multiplicatively per
+            # type — analysis time dominates tiny inputs and the driver can OOM
+            # just rendering plan strings for the SQL listener.  One truncation
+            # per type covers the write-back and the deletes; the KPI triple
+            # and the renames below are narrow unions/projections on top.
+            written = _truncate(written)
+            # the checkpoint materialized every operator plan for this type,
+            # so the rank caches the operators pinned (range-partitioned sort
+            # frames) are now redundant — release them before the next type
+            release_rank_caches()
 
         if calculate_kpi:
-            k = kpi_mod.k_anonymity(triples, type_iri, used, attrs_cfg)
+            # the KPI runs on the pre-delete model, like the reference (KPI at
+            # AnonymizationService.java:101-104, delete at :105-108): the
+            # type's input plus what was written.  Rows present in both are
+            # harmless — the KPI frame aggregates per subject with max().
+            kpi_input = triples if written is triples else triples.unionByName(written)
+            k, mode = kpi_mod.k_anonymity(kpi_input, type_iri, used, attrs_cfg)
             report.k_anonymity[type_iri] = k
-            triples = triples.unionByName(
+            report.k_mode[type_iri] = mode
+            written = written.unionByName(
                 triples_df(spark, kpi_mod.kpi_object_rows(type_iri, k))
             )
 
-        if not include_original_data and used:
-            subjects = subjects_of_type(triples, type_iri)
-            vict = (
-                triples.join(subjects, "subj", "left_semi")
-                .filter(F.col("pred").isin(used))
+        if not use_adjusted_attributes and used:
+            written = _rename_to_original(
+                written,
+                {a + _SUFFIX[attrs_cfg[a].strategy]: a for a in used},
             )
-            children = vict.filter(F.col("obj_is_iri")).select(
-                F.col("obj_value").alias("subj")
-            ).distinct()
-            typed = subjects.withColumnRenamed("subj", "_ts")
-            triples = (
-                triples.join(typed, triples["subj"] == typed["_ts"], "left")
-                .filter(F.col("_ts").isNull() | ~F.col("pred").isin(used))
-                .drop("_ts")
-            )
-            # one-hop delete of the value's own triples (drops address
-            # sub-objects — QueryBuildingService.java:98-123)
-            triples = triples.join(children, "subj", "left_anti")
-
-        if not use_adjusted_attributes:
-            # copy <attr>_<suffix> onto <attr>, drop both old predicate sets —
-            # global rewrites, like listStatements(null, p, null)
-            for attr in used:
-                sfx = attr + _SUFFIX[attrs_cfg[attr].strategy]
-                moved = triples.filter(F.col("pred") == sfx).withColumn(
-                    "pred", F.lit(attr)
-                )
-                triples = triples.filter(
-                    (F.col("pred") != attr) & (F.col("pred") != sfx)
-                ).unionByName(moved)
-
-        # Truncate again after deletes/renames so the next type's loop (and the
-        # caller's serialization) starts from a flat plan.  eager=False: the
-        # plan is already replaced by a LogicalRDD; materialization happens on
-        # the caller's first action.
-        triples = _truncate(triples, eager=False)
+        triples = written
 
     return triples, report
 
 
-def _truncate(df: DataFrame, eager: bool) -> DataFrame:
-    """Plan-lineage truncation point: reliable ``checkpoint`` when the session
-    has a checkpoint dir (cluster-safe — replicated, survives executor loss),
-    ``localCheckpoint`` otherwise (local mode / short-lived fixture jobs)."""
+def _type_pivot(
+    triples: DataFrame, type_iri: str, attrs: list[str], order_pred: str | None
+) -> DataFrame:
+    """(subj, _tie, _a0 … _aN), one row per subject typed ``type_iri``;
+    ``_ai`` is the array of attribute i's (obj_value, obj_dtype,
+    obj_is_iri) values — one entry per triple, like one OPTIONAL arm of the
+    reference's pivot query (data/QueryBuildingService.java:31-46)
+    restricted to present values.  Materialized: every later step of the
+    type reads it."""
+    pred = F.col("pred")
+    is_type = (pred == RDF_TYPE) & (F.col("obj_value") == type_iri)
+    value = F.struct("obj_value", "obj_dtype", "obj_is_iri")
+    aggs = [F.max(is_type).alias("_typed")] + [
+        F.collect_list(F.when(pred == a, value)).alias(f"_a{i}")
+        for i, a in enumerate(attrs)
+    ]
+    preds = list(attrs)
+    if order_pred is not None:
+        preds.append(order_pred)
+        tie = F.when(pred == order_pred, F.col("obj_value").cast("long"))
+        aggs.append(F.max(tie).alias("_tie"))
+    pivot = (
+        triples.filter(is_type | pred.isin(preds))
+        .groupBy("subj")
+        .agg(*aggs)
+        .filter("_typed")
+        .drop("_typed")
+    )
+    if order_pred is None:
+        pivot = pivot.withColumn("_tie", F.col("subj"))
+    return _truncate(pivot)
+
+
+def _delete_originals(
+    triples: DataFrame, pivot: DataFrame, attrs: list[str], used: list[str]
+) -> DataFrame:
+    """Drop the type's values of the used attributes, plus a one-hop delete
+    of the objects those values point to (drops address sub-objects —
+    QueryBuildingService.java:98-123).  Both victim sets come from the
+    pivot; broadcast anti-joins keep the surviving rows in order."""
+    victims = pivot.select(
+        "subj", F.explode(F.array(*[F.lit(a) for a in used])).alias("pred")
+    )
+    values = F.concat(*[F.col(f"_a{attrs.index(a)}") for a in used])
+    children = (
+        pivot.select(F.explode(values).alias("_v"))
+        .filter(F.col("_v.obj_is_iri"))
+        .select(F.col("_v.obj_value").alias("subj"))
+    )
+    return triples.join(
+        F.broadcast(victims), ["subj", "pred"], "left_anti"
+    ).join(F.broadcast(children), "subj", "left_anti")
+
+
+def _rename_to_original(triples: DataFrame, renames: dict[str, str]) -> DataFrame:
+    """Move each ``<attr>_<suffix>`` value onto ``<attr>`` and drop the old
+    ``<attr>`` values — global rewrites, like listStatements(null, p, null)."""
+    pred = F.col("pred")
+    new_pred = pred
+    for src, dst in renames.items():
+        new_pred = F.when(pred == src, F.lit(dst)).otherwise(new_pred)
+    return triples.filter(~pred.isin(list(renames.values()))).withColumn(
+        "pred", new_pred
+    )
+
+
+def _truncate(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` and cut its lineage: a reliable ``checkpoint`` when
+    the session has a checkpoint dir (cluster-safe — replicated, survives
+    executor loss), ``localCheckpoint`` otherwise (local mode / short-lived
+    fixture jobs).  Always eager: under AQE a lazy checkpoint still runs
+    every shuffle stage of the plan as soon as its RDD is built, so
+    ``eager=False`` would defer nothing."""
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir():
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

@@ -56,67 +56,77 @@ def flat_json_output(
     prefix: str,
     calculate_kpi: bool = True,
 ) -> dict:
+    # one collect: the response carries nearly every triple anyway, so the
+    # row selection, types, bucket bounds and KPIs are read on the driver
+    rows = triples.select(
+        "subj", "pred", "obj_value", "obj_dtype", "obj_is_iri"
+    ).collect()
     flat_type = prefix + FLAT_OBJECT_NAME
-    subs = subjects_of_type(triples, flat_type)
     # reference quirk (fixture 05-invalid-prefix): a prefix that is not an
     # absolute IRI makes the marker type a RELATIVE IRI; Jena resolves it
     # against the query base while the model stores it raw, so the row
     # selection matches nothing — data is empty, KPIs still emitted
-    if not _ABS_IRI_RE.match(prefix):
-        subs = subs.limit(0)
-    mine = triples.join(subs, "subj", "left_semi").persist()
+    subs = (
+        {s for s, p, o, _, _ in rows if p == RDF_TYPE and o == flat_type}
+        if _ABS_IRI_RE.match(prefix)
+        else set()
+    )
 
-    # literal attributes per resource (getLiteralData)
-    lit_rows = mine.filter(~F.col("obj_is_iri")).select(
-        "subj", "pred", "obj_value"
-    ).collect()
-    attrs_by_subj: dict[str, dict[str, str]] = {}
-    counter_by_subj: dict[str, int] = {}
-    for r in lit_rows:
-        ln = local_name(r["pred"])
-        if ln == "counter":
-            counter_by_subj[r["subj"]] = int(r["obj_value"])
-        d = attrs_by_subj.setdefault(r["subj"], {})
-        if ln != "counter" and ln not in d:
-            d[ln] = r["obj_value"]
-
-    # other types per resource, input order (getTypesForResources)
-    type_rows = mine.filter(
-        (F.col("pred") == RDF_TYPE) & (F.col("obj_value") != flat_type)
-    ).select("subj", "obj_value").collect()
-    types_by_subj: dict[str, list[str]] = {}
-    for r in type_rows:
-        lst = types_by_subj.setdefault(r["subj"], [])
-        ln = local_name(r["obj_value"])
-        if ln not in lst:
-            lst.append(ln)
-
-    # generalization bounds for the quirk-filtered attribute set
     flat_cfg = _flat_config(config)
-    bound_attrs = [
-        a
+    # generalization bounds for the quirk-filtered attribute set
+    gen_preds = {
+        a + "_generalized"
         for a, c in flat_cfg.items()
         if c.strategy == "generalization" and c.datatype in _BOUND_DATATYPES
-    ]
-    gen_by_subj: dict[str, dict[str, dict]] = {}
-    if bound_attrs:
-        gen_preds = [a + "_generalized" for a in bound_attrs]
-        assign = mine.filter(F.col("pred").isin(gen_preds)).select(
-            "subj", "pred", F.col("obj_value").alias("bucket")
-        )
-        bounds = (
-            triples.filter(F.col("pred").isin([RDF_MIN, RDF_MAX]))
-            .groupBy(F.col("subj").alias("bucket"))
-            .agg(
-                F.first(F.when(F.col("pred") == RDF_MIN, F.col("obj_value")), True).alias("min"),
-                F.first(F.when(F.col("pred") == RDF_MAX, F.col("obj_value")), True).alias("max"),
+    }
+    attrs_by_subj: dict[str, dict[str, str]] = {}
+    counter_by_subj: dict[str, int] = {}
+    types_by_subj: dict[str, list[str]] = {}
+    assign: list[tuple[str, str, str]] = []
+    bounds: dict[str, dict[str, str]] = {}
+    k_by_obj: dict[str, int] = {}
+    has_attr: list[tuple[str, str]] = []
+    anon_typ: dict[str, str] = {}
+    nr_buckets: dict[str, int] = {}
+    for subj, pred, value, _, is_iri in rows:
+        if pred in (RDF_MIN, RDF_MAX) and value is not None:
+            bounds.setdefault(subj, {}).setdefault(
+                "min" if pred == RDF_MIN else "max", value
             )
-        )
-        for r in assign.join(F.broadcast(bounds), "bucket", "left").collect():
-            gen_by_subj.setdefault(r["subj"], {})[local_name(r["pred"])] = {
-                "min": r["min"] if r["min"] is not None else "obfuscated",
-                "max": r["max"] if r["max"] is not None else "obfuscated",
-            }
+        elif pred == K_ANONYMITY:
+            k_by_obj[subj] = int(value)
+        elif pred == HAS_ATTRIBUTE:
+            has_attr.append((subj, value))
+        elif pred == ANONYMIZATION_TYP:
+            anon_typ[subj] = value
+        elif pred == NR_BUCKETS:
+            nr_buckets[subj] = int(value)
+        if subj not in subs:
+            continue
+        if not is_iri:
+            # literal attributes per resource (getLiteralData)
+            ln = local_name(pred)
+            if ln == "counter":
+                counter_by_subj[subj] = int(value)
+            d = attrs_by_subj.setdefault(subj, {})
+            if ln != "counter" and ln not in d:
+                d[ln] = value
+        if pred == RDF_TYPE and value != flat_type:
+            # other types per resource, input order (getTypesForResources)
+            lst = types_by_subj.setdefault(subj, [])
+            ln = local_name(value)
+            if ln not in lst:
+                lst.append(ln)
+        if pred in gen_preds:
+            assign.append((subj, pred, value))
+
+    gen_by_subj: dict[str, dict[str, dict]] = {}
+    for subj, pred, bucket in assign:
+        b = bounds.get(bucket, {})
+        gen_by_subj.setdefault(subj, {})[local_name(pred)] = {
+            "min": b.get("min", "obfuscated"),
+            "max": b.get("max", "obfuscated"),
+        }
 
     data = []
     all_subj = sorted(
@@ -133,32 +143,14 @@ def flat_json_output(
 
     kpis: dict = {}
     if calculate_kpi:
-        k_rows = triples.filter(F.col("pred") == K_ANONYMITY).select(
-            "subj", "obj_value"
-        ).collect()
-        k_by_obj = {r["subj"]: int(r["obj_value"]) for r in k_rows}
-        has_attr = triples.filter(F.col("pred") == HAS_ATTRIBUTE).select(
-            "subj", "obj_value"
-        ).collect()
-        attr_info_rows = triples.filter(
-            F.col("pred").isin([ANONYMIZATION_TYP, NR_BUCKETS])
-        ).select("subj", "pred", "obj_value").collect()
-        anon_typ = {}
-        nr_buckets = {}
-        for r in attr_info_rows:
-            if r["pred"] == ANONYMIZATION_TYP:
-                anon_typ[r["subj"]] = r["obj_value"]
-            else:
-                nr_buckets[r["subj"]] = int(r["obj_value"])
         for type_iri in config:
             kpi_obj = KPI_OBJECT_URI + local_name(type_iri)
             if kpi_obj not in k_by_obj:
                 continue
             node = {"k-Anonymity": k_by_obj[kpi_obj]}
-            for r in has_attr:
-                if r["subj"] != kpi_obj:
+            for s_, attr in has_attr:
+                if s_ != kpi_obj:
                     continue
-                attr = r["obj_value"]
                 info = {"anonymization": anon_typ.get(attr)}
                 if attr in nr_buckets:
                     info["nrBuckets"] = nr_buckets[attr]

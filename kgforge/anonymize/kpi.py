@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgforge.config import AttrConfig
-from kgforge.triples import SOYA_URL, local_name, subjects_of_type
+from kgforge.triples import RDF_TYPE, SOYA_URL, local_df, local_name
 
 KPI_OBJECT_URI = SOYA_URL + "kpi"
 K_ANONYMITY = SOYA_URL + "kanonymity"
@@ -26,11 +26,6 @@ HAS_ATTRIBUTE = SOYA_URL + "hasAttribute"
 ANONYMIZATION_TYP = SOYA_URL + "anonymizationTyp"
 NR_BUCKETS = SOYA_URL + "nrBucketsUsed"
 KPIS_PRED = SOYA_URL + "kpis"
-
-# the counting path the last k_anonymity() call dispatched to (after auto
-# resolution) — observability for tests and tuning, never read by the engine
-_last_mode: str | None = None
-
 
 def attribute_info_rows(type_iri: str, attr: str, strategy: str, g: int) -> list[tuple]:
     """KpiService.addAttributeInformation:61-73 — called only for non-masking
@@ -81,11 +76,21 @@ def k_anonymity(
     mode: str = "auto",
     pair_threshold: int = 50_000,
     grid_group_budget: int = 500,
-) -> int:
-    """Compute the k-anonymity KPI for one object type (KpiService.java:75-99).
+) -> tuple[int, str]:
+    """Compute the k-anonymity KPI for one object type (KpiService.java:75-99);
+    returns ``(k, mode)`` — ``mode`` is the counting path that ran, after
+    ``"auto"`` resolution.
 
     Runs BEFORE original-value deletion, exactly like the reference (KPI at
     AnonymizationService.java:101-104, delete at :105-108).
+
+    Every path counts off ONE conditional-aggregation frame, one row per
+    subject of the type: ``(subj, _g*, _o*, _r*, _po*, _pr*)`` — the
+    generalization-group key of each used attribute and the parsed original
+    and randomized values (plus their presence) of each randomized one.
+    ``max()`` picks one value per subject like the reference's pivot
+    OPTIONAL binding, so rows that occur twice in ``triples`` change
+    nothing.
 
     ``mode`` picks the counting strategy for randomized attributes:
 
@@ -126,41 +131,56 @@ def k_anonymity(
       (cheapest for fixture-sized inputs), else ``ranges``/``grid``/
       ``sliced`` by randomized-attribute count.
 
+    With no randomized attribute, k is the size of the smallest
+    generalization group and ``mode`` is ``"groups"`` whatever was asked.
+
     All paths produce identical k (property-tested against each other).
     """
-    subjects = subjects_of_type(triples, type_iri)
-    ent = subjects
-    gcols: list[str] = []
-    # one cheap pred-distinct probe (partition-pruning scan on the
-    # pred-partitioned sink): an attribute with NO _generalized triples
-    # would only contribute a constant-null field to the group key — it
-    # cannot change group membership — so skip its subject-spine join
-    # entirely instead of dragging a null column through every downstream
-    # shuffle (the all-randomized config is the common KPI shape)
-    gen_preds = [a + "_generalized" for a in used_attrs]
-    present = (
-        {
-            r["pred"]
-            for r in triples.filter(F.col("pred").isin(gen_preds))
-            .select("pred").distinct().collect()
-        }
-        if gen_preds
-        else set()
-    )
-    for i, attr in enumerate(used_attrs):
-        if attr + "_generalized" not in present:
-            continue
-        gp = (
-            triples.filter(F.col("pred") == attr + "_generalized")
-            .select("subj", F.col("obj_value").alias(f"_g{i}"))
-            .dropDuplicates(["subj"])
-        )
-        ent = ent.join(gp, "subj", "left")
-        gcols.append(f"_g{i}")
-
     rand_attrs = [a for a in used_attrs if cfgs[a].strategy == "randomization"]
+    frame = _kpi_frame(triples, type_iri, used_attrs, rand_attrs, cfgs).persist()
+    try:
+        return _dispatch(frame, len(used_attrs), rand_attrs, mode,
+                         pair_threshold, grid_group_budget)
+    finally:
+        frame.unpersist()
+
+
+def _kpi_frame(triples, type_iri, used_attrs, rand_attrs, cfgs) -> DataFrame:
+    """(subj, _g<i> per used attribute, _o<j>/_r<j>/_po<j>/_pr<j> per
+    randomized attribute) for every subject typed ``type_iri``.  _po/_pr flag
+    pred PRESENCE independent of parse success — the benchmark denominator
+    needs them."""
+    pred, val = F.col("pred"), F.col("obj_value")
+    is_type = (pred == RDF_TYPE) & (val == type_iri)
+    preds = [a + "_generalized" for a in used_attrs]
+    aggs = [F.max(is_type).alias("_typed")] + [
+        F.max(F.when(pred == p, val)).alias(f"_g{i}") for i, p in enumerate(preds)
+    ]
+    for j, attr in enumerate(rand_attrs):
+        dtp, rnd = cfgs[attr].datatype, attr + "_randomized"
+        preds += [attr, rnd]
+        aggs += [
+            F.max(F.when(pred == attr, _kpi_parse(dtp, val))).alias(f"_o{j}"),
+            F.max(F.when(pred == rnd, _kpi_parse(dtp, val))).alias(f"_r{j}"),
+            F.max(pred == attr).alias(f"_po{j}"),
+            F.max(pred == rnd).alias(f"_pr{j}"),
+        ]
+    return (
+        triples.filter(is_type | pred.isin(preds))
+        .groupBy("subj")
+        .agg(*aggs)
+        .filter("_typed")
+        .drop("_typed")
+    )
+
+
+def _dispatch(frame, n_used, rand_attrs, mode, pair_threshold,
+              grid_group_budget) -> tuple[int, str]:
+    all_gcols = [f"_g{i}" for i in range(n_used)]
     if not rand_attrs:
-        row = ent.groupBy(*[F.col(c) for c in gcols] if gcols else [F.lit(1)]).count().agg(
+        # a group-key column that is null for every subject cannot change
+        # the groups, so no presence check is needed here
+        row = frame.groupBy(*all_gcols or [F.lit(1)]).count().agg(
             F.min("count").alias("k")
         ).collect()[0]
         if row["k"] is None:
@@ -170,87 +190,37 @@ def k_anonymity(
             # yields one row whose empty GROUP_CONCAT splits into a single
             # empty-IRI resource — one group of size 1 ⇒ k = 1.  With
             # attributes (GROUP BY present) zero rows ⇒ no groups ⇒ k = 0.
-            return 1 if not used_attrs else 0
-        return int(row["k"])
+            return (1 if not n_used else 0), "groups"
+        return int(row["k"]), "groups"
 
-    # per-attribute column vectors + the global benchmark (2·mean |o − r|,
-    # computed over the whole type like the reference — never per group)
-    fused: list[DataFrame] = []
-    for attr in rand_attrs:
-        dtp = cfgs[attr].datatype
-        # ONE shuffle extracts both column vectors: the orig and
-        # randomized pred-slices fold into (_o, _r) via conditional
-        # aggregation (map-side combinable), replacing two separate
-        # pred-filter + semi-join + dropDuplicates pipelines.  max() picks
-        # one value per subject like the reference's pivot OPTIONAL binding
-        # (attrs are single-valued in every fixture; for a multi-valued
-        # subject the pick is the max instead of an arbitrary row).
-        # _po/_pr flag pred PRESENCE independent of parse success — the
-        # benchmark denominator needs them.  Persisted: the benchmark
-        # collect materializes it once and every counting path re-joins it.
-        both = (
-            triples.filter(F.col("pred").isin(attr, attr + "_randomized"))
-            .join(subjects, "subj", "left_semi")
-            .groupBy("subj")
-            .agg(
-                F.max(
-                    F.when(F.col("pred") == attr,
-                           _kpi_parse(dtp, F.col("obj_value")))
-                ).alias("_o"),
-                F.max(
-                    F.when(F.col("pred") == attr + "_randomized",
-                           _kpi_parse(dtp, F.col("obj_value")))
-                ).alias("_r"),
-                F.max(F.when(F.col("pred") == attr, F.lit(1))).alias("_po"),
-                F.max(
-                    F.when(F.col("pred") == attr + "_randomized", F.lit(1))
-                ).alias("_pr"),
-            )
-            .persist()
-        )
-        fused.append(both)
-
-    # ONE action collects every attribute's benchmark scalar (a union of
-    # single-row aggs — one driver barrier total, not one per attribute).
-    # Denominator c counts subjects with both preds PRESENT even when a
-    # value fails _kpi_parse (the reference's inner-join denominator:
-    # SUM skips null |o−r| terms, COUNT(*) over the join doesn't); a
-    # c>0/all-unparseable stratum degenerates to s=0 ⇒ benchmark 0.
-    stats_union = None
-    for i, both in enumerate(fused):
-        st = both.agg(
-            F.sum(F.abs(F.col("_o") - F.col("_r"))).cast("double").alias("s"),
-            F.count(
-                F.when(F.col("_po").isNotNull() & F.col("_pr").isNotNull(), 1)
-            ).alias("c"),
-            F.count(F.col("_o")).alias("n_o"),
-        ).select(F.lit(i).alias("_i"), "s", "c", "n_o")
-        stats_union = st if stats_union is None else stats_union.unionByName(st)
-    # the subject-spine cardinality rides the SAME action as one more
-    # union leg (_i = -1): the auto dispatch and the ranges null stratum
-    # both need it, and a separate .count() would be one more driver
-    # barrier — pure fixed cost that the N→4N scaling pair cannot
-    # parallelize away
-    stats_union = stats_union.unionByName(
-        subjects.agg(F.count(F.lit(1)).cast("double").alias("s")).select(
-            F.lit(-1).alias("_i"), "s",
-            F.lit(0).cast("long").alias("c"),
-            F.lit(0).cast("long").alias("n_o"),
-        )
-    )
-    stats_by_i = {r["_i"]: r for r in stats_union.collect()}
-    n_subj_total = int(stats_by_i[-1]["s"])
-
-    attr_data: list[tuple] = []
-    for i, (attr, both) in enumerate(zip(rand_attrs, fused)):
-        st = stats_by_i[i]
-        bench = (2.0 * (st["s"] or 0.0) / st["c"]) if st["c"] else None
-        orig = both.filter(F.col("_o").isNotNull()).select("subj", "_o")
-        rand = both.filter(F.col("_r").isNotNull()).select("subj", "_r")
-        attr_data.append((attr, orig, rand, bench))
+    # ONE action: the subject count, each group column's non-null count and
+    # every attribute's benchmark scalar (2·mean |o − r|, over the whole type
+    # like the reference — never per group).  Denominator c counts subjects
+    # with both preds PRESENT even when a value fails _kpi_parse (the
+    # reference's inner-join denominator: SUM skips null |o−r| terms,
+    # COUNT(*) over the join doesn't); a c>0/all-unparseable stratum
+    # degenerates to s=0 ⇒ benchmark 0.
+    stats = [F.count(F.lit(1)).alias("n")]
+    stats += [F.count(c).alias(f"n{c}") for c in all_gcols]
+    for j in range(len(rand_attrs)):
+        o, r = F.col(f"_o{j}"), F.col(f"_r{j}")
+        stats += [
+            F.sum(F.abs(o - r)).cast("double").alias(f"s{j}"),
+            F.count(F.when(F.col(f"_po{j}") & F.col(f"_pr{j}"), 1)).alias(f"c{j}"),
+            F.count(o).alias(f"no{j}"),
+        ]
+    st = frame.agg(*stats).collect()[0]
+    n_subj = int(st["n"])
+    # group columns with no value anywhere would only add a constant-null
+    # field to every group key
+    gcols = [c for c in all_gcols if st[f"n{c}"]]
+    benches = [
+        (2.0 * (st[f"s{j}"] or 0.0) / st[f"c{j}"]) if st[f"c{j}"] else None
+        for j in range(len(rand_attrs))
+    ]
 
     if mode == "auto":
-        if n_subj_total <= pair_threshold:
+        if n_subj <= pair_threshold:
             mode = "pairs"
         elif len(rand_attrs) == 1:
             mode = "ranges"
@@ -261,7 +231,7 @@ def k_anonymity(
             # built for); many groups would accumulate GBs on the driver, so
             # route those to sliced, which is exact and executor-resident.
             n_groups = (
-                _with_group_struct(ent, gcols)
+                _with_group_struct(frame, gcols)
                 .agg(F.countDistinct("_gs").alias("n"))
                 .collect()[0]["n"]
             )
@@ -275,57 +245,63 @@ def k_anonymity(
     if mode in ("grouped", "sliced") and len(rand_attrs) == 1:
         mode = "ranges"
 
-    global _last_mode
-    _last_mode = mode
-    try:
-        if mode == "pairs":
-            return _k_pairs(subjects, ent, gcols, attr_data)
-        if mode == "ranges":
-            return _k_ranges(
-                subjects, ent, gcols, attr_data[0], fused[0],
-                counts=(n_subj_total, int(stats_by_i[0]["n_o"])),
-            )
-        if mode == "grid":
-            return _k_grid(subjects, ent, gcols, attr_data)
-        if mode == "grouped":
-            return _k_grouped(subjects, ent, gcols, attr_data)
-        if mode == "sliced":
-            return _k_sliced(subjects, ent, gcols, attr_data)
+    if mode == "pairs":
+        k = _k_pairs(frame, gcols, benches)
+    elif mode == "ranges":
+        k = _k_ranges(frame, gcols, benches[0], (n_subj, int(st["no0"])))
+    elif mode == "grid":
+        k = _k_grid(frame, gcols, benches)
+    elif mode == "grouped":
+        k = _k_grouped(frame, gcols, benches)
+    elif mode == "sliced":
+        k = _k_sliced(frame, gcols, benches)
+    else:
         raise ValueError(f"unknown k-anonymity mode: {mode!r}")
-    finally:
-        for both in fused:
-            both.unpersist()
+    return k, mode
 
 
-def _k_pairs(subjects, ent, gcols, attr_data) -> int:
-    """Null-safe group-key self-join + range predicates (small-input path)."""
-    a = ent.select(F.col("subj").alias("_sa"), *[F.col(c).alias(c + "_a") for c in gcols])
-    b = ent.select(F.col("subj").alias("_sb"), *[F.col(c).alias(c + "_b") for c in gcols])
-    cond = F.lit(True)
-    for c in gcols:
-        cond = cond & F.col(c + "_a").eqNullSafe(F.col(c + "_b"))
-    pairs = a.join(b, cond)
-
-    for j, (_, orig, rand, bench) in enumerate(attr_data):
-        oa = orig.select(F.col("subj").alias("_sa"), F.col("_o").alias(f"_oa{j}"))
-        ob = orig.select(F.col("subj").alias("_sb"), F.col("_o").alias(f"_ob{j}"))
-        ra = rand.select(F.col("subj").alias("_sa"), F.col("_r").alias(f"_ra{j}"))
-        pairs = pairs.join(oa, "_sa", "left").join(ob, "_sb", "left").join(ra, "_sa", "left")
-        null_pair = F.col(f"_oa{j}").isNull() & F.col(f"_ob{j}").isNull()
-        if bench is None:
-            pairs = pairs.filter(null_pair)
-        else:
-            in_range = (
-                F.col(f"_oa{j}").isNotNull()
-                & F.col(f"_ob{j}").isNotNull()
-                & (F.abs(F.col(f"_ob{j}") - F.col(f"_ra{j}")) <= F.lit(bench))
-            )
-            pairs = pairs.filter(null_pair | in_range)
-
-    cnts = pairs.groupBy("_sa").count()
+def _min_count(subjects, cnts) -> int:
+    """min over every subject of its count (0 where ``cnts`` has no row)."""
     row = (
-        subjects.join(cnts, subjects["subj"] == cnts["_sa"], "left")
-        .select(F.min(F.coalesce(F.col("count"), F.lit(0))).alias("k"))
+        subjects.join(cnts, "subj", "left")
+        .select(F.min(F.coalesce(F.col("_cnt"), F.lit(0))).alias("k"))
+        .collect()[0]
+    )
+    return int(row["k"]) if row["k"] is not None else 0
+
+
+def _k_pairs(frame, gcols, benches) -> int:
+    """Null-safe group-key self-join + range predicates (small-input path).
+    Every subject pairs with itself on the group key, so the per-subject
+    match counts cover every subject, zeros included."""
+    nattrs = len(benches)
+    a = frame.select(
+        F.col("subj").alias("_sa"),
+        *[F.col(c).alias(c + "_a") for c in gcols],
+        *[F.col(f"_o{j}").alias(f"_oa{j}") for j in range(nattrs)],
+        *[F.col(f"_r{j}").alias(f"_ra{j}") for j in range(nattrs)],
+    )
+    b = frame.select(
+        *[F.col(c).alias(c + "_b") for c in gcols],
+        *[F.col(f"_o{j}").alias(f"_ob{j}") for j in range(nattrs)],
+    )
+    same_group = F.lit(True)
+    for c in gcols:
+        same_group = same_group & F.col(c + "_a").eqNullSafe(F.col(c + "_b"))
+    match = F.lit(True)
+    for j, bench in enumerate(benches):
+        oa, ob, ra = F.col(f"_oa{j}"), F.col(f"_ob{j}"), F.col(f"_ra{j}")
+        null_pair = oa.isNull() & ob.isNull()
+        if bench is None:
+            match = match & null_pair
+        else:
+            in_range = oa.isNotNull() & ob.isNotNull() & (F.abs(ob - ra) <= F.lit(bench))
+            match = match & (null_pair | in_range)
+    row = (
+        a.join(b, same_group)
+        .groupBy("_sa")
+        .agg(F.count(F.when(match, 1)).alias("_cnt"))
+        .agg(F.min("_cnt").alias("k"))
         .collect()[0]
     )
     return int(row["k"]) if row["k"] is not None else 0
@@ -424,29 +400,23 @@ def _stratum_size_counts(stratum) -> "DataFrame":
     return stratum.join(ncnt, "_gs").select("subj", "_cnt")
 
 
-def _k_ranges(subjects, ent, gcols, attr_datum, both=None,
-              counts=None) -> int:
+def _k_ranges(frame, gcols, bench, counts) -> int:
     """Distributed subMap counting for ONE randomized attribute (see
-    :func:`_counts_1d` for the event/prefix-sum core)."""
-    _, orig, rand, bench = attr_datum
-    if both is not None and not gcols:
+    :func:`_counts_1d` for the event/prefix-sum core).  ``counts`` is
+    (subjects, subjects with a parsed original) from the caller's stats
+    action."""
+    cleanup: list = []
+    if not gcols:
         # no generalization groups anywhere: every subject is in the one
         # group, so the null stratum's count is a single number (subjects
         # minus non-null-_o rows) and the event stream runs straight off
-        # the fused frame — the subject-spine string join disappears from
-        # the job entirely (this path is memory-bandwidth-bound; see
-        # _counts_1d)
-        cleanup: list = []
-        nonnull = both.filter(F.col("_o").isNotNull())
-        if counts is not None:
-            # cardinalities pre-computed in the caller's one fused stats
-            # action — two fewer driver barriers in the hot path
-            n_subj, n_nonnull = counts
-        else:
-            n_subj = subjects.count()
-            n_nonnull = nonnull.count()
+        # the frame — no subject strings in the job at all (this path is
+        # memory-bandwidth-bound; see _counts_1d)
+        n_subj, n_nonnull = counts
         cnt_nonnull = _counts_1d(
-            nonnull.select(F.lit(0).alias("_gs"), "_o", "_r"),
+            frame.filter(F.col("_o0").isNotNull()).select(
+                F.lit(0).alias("_gs"), F.col("_o0").alias("_o"), F.col("_r0").alias("_r")
+            ),
             bench, cleanup, keep_subj=False,
         )
         row = cnt_nonnull.select(F.min("_cnt").alias("k")).collect()[0]
@@ -456,22 +426,11 @@ def _k_ranges(subjects, ent, gcols, attr_datum, both=None,
         cands = [v for v in (row["k"], n_null if n_null > 0 else None)
                  if v is not None]
         return int(min(cands)) if cands else 0
-    if both is not None:
-        # the fused (subj, _o, _r) frame — ONE left join off the subject
-        # spine instead of two (orig/rand are both slices of it; a null _o
-        # or _r lands identically either way)
-        vals = both.select("subj", "_o", "_r")
-        joined = ent.join(vals, "subj", "left")
-    else:
-        joined = ent.join(orig, "subj", "left").join(rand, "subj", "left")
-    if gcols:
-        base = _with_group_struct(joined, gcols).persist()
-    else:
-        # no generalization groups: a constant int sort key beats carrying
-        # a constant struct through the 3n-row range shuffle
-        base = joined.withColumn("_gs", F.lit(0)).persist()
+    base = _with_group_struct(
+        frame.select("subj", *gcols, F.col("_o0").alias("_o"), F.col("_r0").alias("_r")),
+        gcols,
+    ).persist()
 
-    cleanup: list = []
     cnt_null = _stratum_size_counts(
         base.filter(F.col("_o").isNull()).select("subj", "_gs")
     ).select("_cnt")
@@ -482,9 +441,8 @@ def _k_ranges(subjects, ent, gcols, attr_datum, both=None,
         base.filter(F.col("_o").isNotNull()), bench, cleanup, keep_subj=False
     )
 
-    # the two strata partition `base`, and `base` keeps every subject (left
-    # joins off the subject spine), so cnts already covers all subjects —
-    # no join back needed, min() over the union is the answer
+    # the two strata partition `base`, which holds every subject, so cnts
+    # already covers all subjects — min() over the union is the answer
     cnts = cnt_nonnull.unionByName(cnt_null)
     row = cnts.select(F.min("_cnt").alias("k")).collect()[0]
     base.unpersist()
@@ -527,7 +485,10 @@ def _grid_counts_2d(stratum, b0, b1, grid: int = 256) -> "DataFrame":
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
     if not mm["n"]:
-        return spark.createDataFrame([], "subj string, _cnt long")
+        return local_df(spark, [], T.StructType([
+            T.StructField("subj", T.StringType()),
+            T.StructField("_cnt", T.LongType()),
+        ]))
     wx = (mm["x1"] - mm["x0"]) / grid or 1.0
     wy = (mm["y1"] - mm["y0"]) / grid or 1.0
 
@@ -631,7 +592,7 @@ def _grid_counts_2d(stratum, b0, b1, grid: int = 256) -> "DataFrame":
     return out
 
 
-def _k_grid(subjects, ent, gcols, attr_data, grid: int = 256) -> int:
+def _k_grid(frame, gcols, benches, grid: int = 256) -> int:
     """Scalable k-anonymity for EXACTLY TWO randomized attributes.
 
     Rows partition by (group, null-pattern) — the pair predicate forces a
@@ -640,13 +601,9 @@ def _k_grid(subjects, ent, gcols, attr_data, grid: int = 256) -> int:
     event/prefix-sum counter on the non-null attribute, both-non-null → the
     2-D grid counter (:func:`_grid_counts_2d`).  No pair set anywhere.
     """
-    (a0, orig0, rand0, b0), (a1, orig1, rand1, b1) = attr_data
+    b0, b1 = benches
     base = _with_group_struct(
-        ent.join(orig0.select("subj", F.col("_o").alias("_o0")), "subj", "left")
-        .join(rand0.select("subj", F.col("_r").alias("_r0")), "subj", "left")
-        .join(orig1.select("subj", F.col("_o").alias("_o1")), "subj", "left")
-        .join(rand1.select("subj", F.col("_r").alias("_r1")), "subj", "left"),
-        gcols,
+        frame.select("subj", *gcols, "_o0", "_r0", "_o1", "_r1"), gcols
     )
     # dense integer group ids (broadcast-joined) so the grid path can key
     # its driver-side prefix matrices
@@ -686,33 +643,28 @@ def _k_grid(subjects, ent, gcols, attr_data, grid: int = 256) -> int:
     cnts = parts[0]
     for p in parts[1:]:
         cnts = cnts.unionByName(p)
-    row = (
-        subjects.join(cnts, "subj", "left")
-        .select(F.min(F.coalesce(F.col("_cnt"), F.lit(0))).alias("k"))
-        .collect()[0]
-    )
+    k = _min_count(frame.select("subj"), cnts)
     base.unpersist()
     for d in cleanup:
         d.unpersist()
-    return int(row["k"]) if row["k"] is not None else 0
+    return k
 
 
-def _k_grouped(subjects, ent, gcols, attr_data) -> int:
+def _k_grouped(frame, gcols, benches) -> int:
     """Per-group vectorized counting for ≥2 randomized attributes: sort the
     group by attribute 0, searchsorted window per resource, numpy-verify the
     remaining attributes over the window (no shuffled pair set)."""
     import numpy as np
     import pandas as pd
 
-    full = ent
-    for j, (_, orig, rand, _) in enumerate(attr_data):
-        full = (
-            full.join(orig.select("subj", F.col("_o").alias(f"_o{j}")), "subj", "left")
-            .join(rand.select("subj", F.col("_r").alias(f"_r{j}")), "subj", "left")
-        )
-    full = _with_group_struct(full, gcols)
-    benches = [b for (_, _, _, b) in attr_data]
-    nattrs = len(attr_data)
+    nattrs = len(benches)
+    full = _with_group_struct(
+        frame.select(
+            "subj", *gcols,
+            *[F.col(f"_{x}{j}") for j in range(nattrs) for x in "or"],
+        ),
+        gcols,
+    )
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
@@ -753,15 +705,10 @@ def _k_grouped(subjects, ent, gcols, attr_data) -> int:
         return pd.DataFrame({"subj": pdf["subj"], "_cnt": counts})
 
     cnts = full.groupBy("_gs").applyInPandas(fn, "subj string, _cnt long")
-    row = (
-        subjects.join(cnts, "subj", "left")
-        .select(F.min(F.coalesce(F.col("_cnt"), F.lit(0))).alias("k"))
-        .collect()[0]
-    )
-    return int(row["k"]) if row["k"] is not None else 0
+    return _min_count(frame.select("subj"), cnts)
 
 
-def _k_sliced(subjects, ent, gcols, attr_data) -> int:
+def _k_sliced(frame, gcols, benches) -> int:
     """Skew-immune counting for ≥2 randomized attributes (the ≥3-attr scale
     path; see :func:`k_anonymity` ``mode="sliced"``).
 
@@ -781,15 +728,13 @@ def _k_sliced(subjects, ent, gcols, attr_data) -> int:
     import numpy as np
     import pandas as pd
 
-    full = ent
-    for j, (_, orig, rand, _) in enumerate(attr_data):
-        full = (
-            full.join(orig.select("subj", F.col("_o").alias(f"_o{j}")), "subj", "left")
-            .join(rand.select("subj", F.col("_r").alias(f"_r{j}")), "subj", "left")
-        )
-    full = _with_group_struct(full, gcols).persist()
-    benches = [b for (_, _, _, b) in attr_data]
-    d = len(attr_data)
+    d = len(benches)
+    full = _with_group_struct(
+        frame.select(
+            "subj", *gcols, *[F.col(f"_{x}{j}") for j in range(d) for x in "or"],
+        ),
+        gcols,
+    ).persist()
 
     patterns = [
         tuple(r[f"_p{j}"] for j in range(d))
@@ -878,10 +823,6 @@ def _k_sliced(subjects, ent, gcols, attr_data) -> int:
     cnts = parts[0]
     for p in parts[1:]:
         cnts = cnts.unionByName(p)
-    row = (
-        subjects.join(cnts, "subj", "left")
-        .select(F.min(F.coalesce(F.col("_cnt"), F.lit(0))).alias("k"))
-        .collect()[0]
-    )
+    k = _min_count(frame.select("subj"), cnts)
     full.unpersist()
-    return int(row["k"]) if row["k"] is not None else 0
+    return k

@@ -116,28 +116,35 @@ def generalize(
     lower_lex, bound_dt = format_bound_col(datatype, lower)
     upper_lex, _ = format_bound_col(datatype, upper)
     bucket_iri = F.concat(F.lit(attr + "_"), F.col("_b").cast("string"))
-    # reference addProperty(RDF.type, String) stores the type as a *string
-    # literal* (Generalization.java:75)
-    t_type = bvals.select(
-        bucket_iri.alias("subj"),
-        F.lit(RDF_TYPE).alias("pred"),
-        F.lit(SOYA_URL + "generalization").alias("obj_value"),
-        F.lit("string").alias("obj_dtype"),
-        F.lit(False).alias("obj_is_iri"),
-    )
     first_b, last_b = F.col("_b") == 0, F.col("_b") == g - 1
-    t_min = bvals.select(
+
+    def bucket_triple(pred, value, dtype):
+        return F.struct(
+            pred.alias("pred"), value.alias("obj_value"), dtype.alias("obj_dtype")
+        )
+
+    # one pass over bvals emits each bucket's three triples: the type —
+    # reference addProperty(RDF.type, String) stores it as a *string
+    # literal* (Generalization.java:75) — and the two bounds
+    bucket_triples = bvals.select(
         bucket_iri.alias("subj"),
-        F.when(first_b, F.lit(RDFS_COMMENT)).otherwise(F.lit(RDF_MIN)).alias("pred"),
-        F.when(first_b, F.lit(OBFUSCATED_LOWER)).otherwise(lower_lex).alias("obj_value"),
-        F.when(first_b, F.lit("string")).otherwise(F.lit(bound_dt)).alias("obj_dtype"),
-        F.lit(False).alias("obj_is_iri"),
-    )
-    t_max = bvals.select(
-        bucket_iri.alias("subj"),
-        F.when(last_b, F.lit(RDFS_COMMENT)).otherwise(F.lit(RDF_MAX)).alias("pred"),
-        F.when(last_b, F.lit(OBFUSCATED_UPPER)).otherwise(upper_lex).alias("obj_value"),
-        F.when(last_b, F.lit("string")).otherwise(F.lit(bound_dt)).alias("obj_dtype"),
+        F.explode(F.array(
+            bucket_triple(
+                F.lit(RDF_TYPE), F.lit(SOYA_URL + "generalization"), F.lit("string")
+            ),
+            bucket_triple(
+                F.when(first_b, F.lit(RDFS_COMMENT)).otherwise(F.lit(RDF_MIN)),
+                F.when(first_b, F.lit(OBFUSCATED_LOWER)).otherwise(lower_lex),
+                F.when(first_b, F.lit("string")).otherwise(F.lit(bound_dt)),
+            ),
+            bucket_triple(
+                F.when(last_b, F.lit(RDFS_COMMENT)).otherwise(F.lit(RDF_MAX)),
+                F.when(last_b, F.lit(OBFUSCATED_UPPER)).otherwise(upper_lex),
+                F.when(last_b, F.lit("string")).otherwise(F.lit(bound_dt)),
+            ),
+        )).alias("_t"),
+    ).select(
+        "subj", "_t.pred", "_t.obj_value", "_t.obj_dtype",
         F.lit(False).alias("obj_is_iri"),
     )
 
@@ -150,7 +157,7 @@ def generalize(
         F.lit("iri").alias("obj_dtype"),
         F.lit(True).alias("obj_is_iri"),
     )
-    return assign.unionByName(t_type).unionByName(t_min).unionByName(t_max)
+    return assign.unionByName(bucket_triples)
 
 
 def generalize_object(
@@ -170,31 +177,48 @@ def generalize_object(
     (GeneralizationObject.java:31 — quirk preserved via hier_prefix).
     """
     gen_pred = attr + "_generalized"
-    refs = col_df.select("subj", F.col("obj_value").alias("_ref"))
-    for level in attr_order:
-        level_pred = hier_prefix + level
+    level_preds = [hier_prefix + level for level in attr_order]
+    if level_preds:
+        # every level's value per referenced object, in one pivot
         child = (
-            triples.filter((F.col("pred") == level_pred) & (~F.col("obj_is_iri")))
-            .select(F.col("subj").alias("_ref"), F.col("obj_value").alias("_lv"))
-            .dropDuplicates(["_ref"])
+            triples.filter(F.col("pred").isin(level_preds) & ~F.col("obj_is_iri"))
+            .groupBy(F.col("subj").alias("_ref"))
+            .agg(*[
+                F.first(F.when(F.col("pred") == p, F.col("obj_value")), True)
+                .alias(f"_l{i}")
+                for i, p in enumerate(level_preds)
+            ])
         )
-        vals = refs.join(F.broadcast(child), "_ref", "left").select(
-            "subj", F.coalesce(F.col("_lv"), F.lit("")).alias("val")
-        )
-        stats = (
-            vals.groupBy("val")
+        vals = col_df.select("subj", F.col("obj_value").alias("_ref")).join(
+            F.broadcast(child), "_ref", "left"
+        ).select("subj", *[
+            F.coalesce(F.col(f"_l{i}"), F.lit("")).alias(f"_l{i}")
+            for i in range(len(level_preds))
+        ])
+        # the group statistics of every level in ONE action
+        per_level = F.explode(F.array(*[
+            F.struct(F.lit(i).alias("_lvl"), F.col(f"_l{i}").alias("_val"))
+            for i in range(len(level_preds))
+        ]))
+        stats = {
+            r["_lvl"]: r
+            for r in vals.select(per_level.alias("_e"))
+            .groupBy("_e._lvl", "_e._val")
             .count()
+            .groupBy("_lvl")
             .agg(F.count(F.lit(1)).alias("ngroups"), F.min("count").alias("mincnt"))
-            .collect()[0]
-        )
-        if stats["ngroups"] <= g and stats["mincnt"] > n * 0.5 / g:
-            return vals.select(
-                "subj",
-                F.lit(gen_pred).alias("pred"),
-                F.col("val").alias("obj_value"),
-                F.lit("string").alias("obj_dtype"),
-                F.lit(False).alias("obj_is_iri"),
-            )
+            .collect()
+        }
+        for i in range(len(level_preds)):
+            st = stats.get(i)
+            if st is not None and st["ngroups"] <= g and st["mincnt"] > n * 0.5 / g:
+                return vals.select(
+                    "subj",
+                    F.lit(gen_pred).alias("pred"),
+                    F.col(f"_l{i}").alias("obj_value"),
+                    F.lit("string").alias("obj_dtype"),
+                    F.lit(False).alias("obj_is_iri"),
+                )
     return col_df.select(
         "subj",
         F.lit(gen_pred).alias("pred"),

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgforge.javarandom import java_double_str
-from kgforge.triples import RDF_TYPE, TRIPLE_SCHEMA, triples_df
+from kgforge.triples import RDF_TYPE, triples_df
 
 FLAT_OBJECT_NAME = "anonymizationObject"
 _KEY_RE = re.compile(r"^[a-zA-Z_][a-zA-Z0-9_]*$")
@@ -274,7 +274,7 @@ def jsonld_to_triple_tuples(doc: dict) -> list[tuple]:
 
 
 def jsonld_to_triples(spark: SparkSession, doc: dict) -> DataFrame:
-    return spark.createDataFrame(jsonld_to_triple_tuples(doc), schema=TRIPLE_SCHEMA)
+    return triples_df(spark, jsonld_to_triple_tuples(doc))
 
 
 ERROR_PRED = "http://kgforge.dev/ns/ingestError"

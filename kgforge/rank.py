@@ -28,6 +28,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from kgforge.triples import local_df
 
 # persisted range-partitioned frames not yet released by a caller-owned
 # cleanup list; see release_rank_caches().  The registry is THREAD-LOCAL:
@@ -88,11 +91,16 @@ def release_rank_caches() -> int:
     """
     n = _drain(_cache_list())
     me = _threading.current_thread()
+    # detach the dead threads' lists under the lock, unpersist after
+    # releasing it: an unpersist is a blocking Spark call, and holding the
+    # lock through it stalls every thread registering its first cache
     with _all_lock:
-        for th, lst in list(_all_lists):
-            if th is not me and not th.is_alive():
-                n += _drain(lst)
-                _all_lists.remove((th, lst))
+        dead = [(th, lst) for th, lst in _all_lists
+                if th is not me and not th.is_alive()]
+        for entry in dead:
+            _all_lists.remove(entry)
+    for _, lst in dead:
+        n += _drain(lst)
     return n
 
 
@@ -123,12 +131,18 @@ def _ranged_with_pid(df: DataFrame, order_cols: list, npart: int,
     return _register(d, cleanup)
 
 
+_OFFSETS_SCHEMA = T.StructType([
+    T.StructField("_pid", T.IntegerType()),
+    T.StructField("_off", T.LongType()),
+])
+
+
 def _offsets_df(spark, totals: dict) -> DataFrame:
     offsets, acc = [], 0
     for pid in sorted(totals):
         offsets.append((pid, acc))
         acc += totals[pid]
-    return spark.createDataFrame(offsets or [(0, 0)], schema="_pid int, _off long")
+    return local_df(spark, offsets or [(0, 0)], _OFFSETS_SCHEMA)
 
 
 def with_global_rank(df: DataFrame, order_cols: list, out: str = "_rank",

@@ -44,13 +44,33 @@ TRIPLE_SCHEMA = T.StructType(
 )
 
 
+def local_df(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """Driver-built rows as a JVM ``LocalRelation``, via a pyarrow Table.
+
+    ``spark.createDataFrame(<python list>)`` yields a Python-RDD-backed
+    ``LogicalRDD``: every job that scans it starts a Python worker.  An
+    Arrow-built relation is plain JVM rows — the optimizer folds filters and
+    projections over it and a scan costs no Python round trip."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    rows = list(rows)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
 def triples_df(spark: SparkSession, rows) -> DataFrame:
     """Build a triple DataFrame from (subj, pred, obj_value, obj_dtype, obj_is_iri) tuples."""
-    return spark.createDataFrame(list(rows), schema=TRIPLE_SCHEMA)
+    return local_df(spark, rows, TRIPLE_SCHEMA)
 
 
 def empty_triples(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], schema=TRIPLE_SCHEMA)
+    return triples_df(spark, [])
 
 
 def local_name(iri: str) -> str:
@@ -72,20 +92,4 @@ def subjects_of_type(triples: DataFrame, type_iri: str) -> DataFrame:
         triples.filter((F.col("pred") == RDF_TYPE) & (F.col("obj_value") == type_iri))
         .select("subj")
         .distinct()
-    )
-
-
-def attr_column(triples: DataFrame, subjects: DataFrame, attr_iri: str) -> DataFrame:
-    """One attribute's column vector: (subj, obj_value, obj_dtype, obj_is_iri).
-
-    Equivalent of one OPTIONAL arm of the reference's pivot query
-    (data/QueryBuildingService.java:31-46) restricted to present values —
-    the reference's per-attribute maps only hold non-null entries
-    (service/AnonymizationService.java:118-126).  The pred equality filter
-    prunes to a single predicate partition at scale.
-    """
-    return (
-        triples.filter(F.col("pred") == attr_iri)
-        .join(subjects, "subj", "left_semi")
-        .select("subj", "obj_value", "obj_dtype", "obj_is_iri")
     )

@@ -100,16 +100,16 @@ CFG = {
 def test_ranges_equals_pairs_single_attr(spark):
     triples, data = _mk_triples(spark, 400, n_groups=5, rand_attrs=[A0])
     used = [GEN, A0]
-    k_pairs = k_anonymity(triples, T, used, CFG, mode="pairs")
-    k_ranges = k_anonymity(triples, T, used, CFG, mode="ranges")
+    k_pairs, _ = k_anonymity(triples, T, used, CFG, mode="pairs")
+    k_ranges, _ = k_anonymity(triples, T, used, CFG, mode="ranges")
     assert k_pairs == k_ranges == _expected_k(data, [A0])
 
 
 def test_grouped_equals_pairs_two_attrs(spark):
     triples, data = _mk_triples(spark, 300, n_groups=4, rand_attrs=[A0, A1])
     used = [GEN, A0, A1]
-    k_pairs = k_anonymity(triples, T, used, CFG, mode="pairs")
-    k_grouped = k_anonymity(triples, T, used, CFG, mode="grouped")
+    k_pairs, _ = k_anonymity(triples, T, used, CFG, mode="pairs")
+    k_grouped, _ = k_anonymity(triples, T, used, CFG, mode="grouped")
     assert k_pairs == k_grouped == _expected_k(data, [A0, A1])
 
 
@@ -130,7 +130,7 @@ def test_ranges_survives_single_giant_group(spark):
     triples = spark.createDataFrame(
         rows, "subj string, pred string, obj_value string, obj_dtype string, obj_is_iri boolean"
     )
-    k = k_anonymity(triples, T, [A0], CFG, mode="ranges")
+    k, _ = k_anonymity(triples, T, [A0], CFG, mode="ranges")
     bench = 2.0 * np.abs(o - r).mean()
     so = np.sort(o)
     lo = np.searchsorted(so, r - bench, side="left")
@@ -142,8 +142,8 @@ def test_auto_dispatch(spark):
     triples, data = _mk_triples(spark, 200, n_groups=3, rand_attrs=[A0])
     used = [GEN, A0]
     # auto with a tiny threshold must take the scalable path and still agree
-    k_auto_small = k_anonymity(triples, T, used, CFG, mode="auto", pair_threshold=10)
-    k_auto_big = k_anonymity(triples, T, used, CFG, mode="auto")
+    k_auto_small, _ = k_anonymity(triples, T, used, CFG, mode="auto", pair_threshold=10)
+    k_auto_big, _ = k_anonymity(triples, T, used, CFG, mode="auto")
     assert k_auto_small == k_auto_big == _expected_k(data, [A0])
 
 
@@ -157,7 +157,7 @@ def test_nulls_and_empty_bench(spark):
         rows, "subj string, pred string, obj_value string, obj_dtype string, obj_is_iri boolean"
     )
     for m in ("pairs", "ranges"):
-        k = k_anonymity(triples, T, [A0], CFG, mode=m)
+        k, _ = k_anonymity(triples, T, [A0], CFG, mode=m)
         assert k == 20, m
 
 
@@ -165,8 +165,8 @@ def test_grid_equals_pairs_two_attrs(spark):
     triples, data = _mk_triples(spark, 350, n_groups=4, rand_attrs=[A0, A1],
                                 null_frac=0.15)
     used = [GEN, A0, A1]
-    k_pairs = k_anonymity(triples, T, used, CFG, mode="pairs")
-    k_grid = k_anonymity(triples, T, used, CFG, mode="grid")
+    k_pairs, _ = k_anonymity(triples, T, used, CFG, mode="pairs")
+    k_grid, _ = k_anonymity(triples, T, used, CFG, mode="grid")
     assert k_pairs == k_grid == _expected_k(data, [A0, A1])
 
 
@@ -174,8 +174,8 @@ def test_sliced_equals_pairs_two_attrs(spark):
     triples, data = _mk_triples(spark, 300, n_groups=4, rand_attrs=[A0, A1],
                                 null_frac=0.2)
     used = [GEN, A0, A1]
-    k_pairs = k_anonymity(triples, T, used, CFG, mode="pairs")
-    k_sliced = k_anonymity(triples, T, used, CFG, mode="sliced")
+    k_pairs, _ = k_anonymity(triples, T, used, CFG, mode="pairs")
+    k_sliced, _ = k_anonymity(triples, T, used, CFG, mode="sliced")
     assert k_pairs == k_sliced == _expected_k(data, [A0, A1])
 
 
@@ -183,9 +183,9 @@ def test_sliced_equals_pairs_three_attrs(spark):
     triples, data = _mk_triples(spark, 250, n_groups=3,
                                 rand_attrs=[A0, A1, A2], null_frac=0.15)
     used = [GEN, A0, A1, A2]
-    k_pairs = k_anonymity(triples, T, used, CFG, mode="pairs")
-    k_grouped = k_anonymity(triples, T, used, CFG, mode="grouped")
-    k_sliced = k_anonymity(triples, T, used, CFG, mode="sliced")
+    k_pairs, _ = k_anonymity(triples, T, used, CFG, mode="pairs")
+    k_grouped, _ = k_anonymity(triples, T, used, CFG, mode="grouped")
+    k_sliced, _ = k_anonymity(triples, T, used, CFG, mode="sliced")
     assert k_pairs == k_grouped == k_sliced == _expected_k(data, [A0, A1, A2])
 
 
@@ -219,7 +219,7 @@ def test_sliced_survives_single_giant_group_three_attrs(spark):
     triples = spark.createDataFrame(
         rows, "subj string, pred string, obj_value string, obj_dtype string, obj_is_iri boolean"
     )
-    k = k_anonymity(triples, T, attrs, CFG, mode="sliced")
+    k, _ = k_anonymity(triples, T, attrs, CFG, mode="sliced")
     b = [2.0 * np.abs(o[j] - r[j]).mean() for j in range(3)]
     order = np.argsort(o[0], kind="stable")
     so = [o[j][order] for j in range(3)]
@@ -257,7 +257,7 @@ def test_grid_survives_single_giant_group_two_attrs(spark):
     triples = spark.createDataFrame(
         rows, "subj string, pred string, obj_value string, obj_dtype string, obj_is_iri boolean"
     )
-    k = k_anonymity(triples, T, [A0, A1], CFG, mode="grid")
+    k, _ = k_anonymity(triples, T, [A0, A1], CFG, mode="grid")
     b0 = 2.0 * np.abs(o0 - r0).mean()
     b1 = 2.0 * np.abs(o1 - r1).mean()
     # numpy oracle: sort by o0, window via searchsorted, verify o1
@@ -277,18 +277,16 @@ def test_auto_two_attr_routes_by_group_count(spark):
     """Auto dispatch above the pair threshold: few groups → grid (driver
     prefix matrices are bounded), many groups → sliced (executor-resident).
     Both must agree with pairs on the same input."""
-    from kgforge.anonymize import kpi as kpi_mod
-
     used = [GEN, A0, A1]
     triples, data = _mk_triples(spark, 300, n_groups=40, rand_attrs=[A0, A1])
 
-    k_many = k_anonymity(triples, T, used, CFG, mode="auto",
-                         pair_threshold=10, grid_group_budget=8)
-    assert kpi_mod._last_mode == "sliced"
+    k_many, mode_many = k_anonymity(triples, T, used, CFG, mode="auto",
+                                    pair_threshold=10, grid_group_budget=8)
+    assert mode_many == "sliced"
 
-    k_few = k_anonymity(triples, T, used, CFG, mode="auto",
-                        pair_threshold=10, grid_group_budget=1000)
-    assert kpi_mod._last_mode == "grid"
+    k_few, mode_few = k_anonymity(triples, T, used, CFG, mode="auto",
+                                  pair_threshold=10, grid_group_budget=1000)
+    assert mode_few == "grid"
 
-    k_pairs = k_anonymity(triples, T, used, CFG, mode="pairs")
+    k_pairs, _ = k_anonymity(triples, T, used, CFG, mode="pairs")
     assert k_many == k_few == k_pairs == _expected_k(data, [A0, A1])

@@ -183,6 +183,8 @@ def test_kg_to_anonymization_end_to_end(spark, docs, tmp_path):
     assert {r["subj"] for r in gen.collect()} == persons
     assert report.k_anonymity and all(k >= 1 for k in report.k_anonymity.values())
     assert KG + "Person" in report.k_anonymity
+    # no randomized attribute: k is the smallest generalization group
+    assert report.k_mode == {KG + "Person": "groups"}
 
 
 @pytest.mark.slow

@@ -203,6 +203,7 @@ def test_release_rank_caches_drains_dead_threads(spark):
     release — but never while the worker is still alive (that would
     reintroduce the cross-thread mid-query unpersist race)."""
     import threading
+    import time
 
     from kgforge import rank
 
@@ -216,14 +217,17 @@ def test_release_rank_caches_drains_dead_threads(spark):
 
     t = threading.Thread(target=worker)
     t.start()
+    deadline = time.monotonic() + 30
     while not any(
         th is t for th, _ in rank._all_lists
     ) and t.is_alive():  # wait for the worker to register its list
-        pass
+        assert time.monotonic() < deadline, "worker never registered a cache"
+        time.sleep(0.01)
     # worker alive: its caches are NOT drained by a main-thread release
     assert rank.release_rank_caches() == 0
     gate.set()
-    t.join()
+    t.join(timeout=60)
+    assert not t.is_alive()
     # worker dead: the orphaned cache is drained exactly once
     assert rank.release_rank_caches() >= 1
     assert rank.release_rank_caches() == 0
