@@ -5866,7 +5866,6 @@ def _kg_triples(spark, sf_dir):
     triples, _ = build_kg(
         docs,
         mention_strategy="regex",
-        link_strategy="sql",
         collect_metrics=False,
         mention_vocab=_MENTION_VOCAB,
         mention_case_insensitive=False,
@@ -5997,7 +5996,6 @@ def _kg_diff(spark, sf_dir):
         t, _ = build_kg(
             docs,
             mention_strategy="regex",
-            link_strategy="sql",
             collect_metrics=False,
             mention_vocab=_MENTION_VOCAB,
             mention_case_insensitive=False,
@@ -6643,7 +6641,7 @@ def _kg_triples_oracle(catalog: list | None = None, vocab: list | None = None,
     ``catalog``/``vocab``/``d_cte`` mirror build_kg's domain parametrization
     (see _kg_triples_geo for a second, data-derived domain).  The interleaved
     variant adds: ``span_scope`` (per-span mention identity through the
-    best-pick, like linking.py's groupBy(doc_id, span_idx, start)), ``ci``
+    best-pick: a mention is keyed by (doc_id, span_idx, start)), ``ci``
     (case-insensitive matching with original-case surfaces, the
     detect_mentions default), ``lower_norm`` (normalize surfaces with
     lower() at the catalog join and in every shingle set, mirroring
@@ -6915,7 +6913,6 @@ def _kg_triples_mixed(spark, sf_dir):
     triples, _ = build_kg(
         docs,
         mention_strategy="regex",
-        link_strategy="sql",
         collect_metrics=False,
         mention_vocab=_MENTION_VOCAB,
         mention_case_insensitive=False,
@@ -7024,7 +7021,6 @@ def _kg_triples_geo(spark, sf_dir):
     triples, _ = build_kg(
         corpus,
         mention_strategy="regex",
-        link_strategy="sql",
         collect_metrics=False,
         mention_vocab=[n for (n, _, _, _) in catalog_rows],
         mention_case_insensitive=False,
@@ -7111,7 +7107,6 @@ def _kg_triples_parts(spark, sf_dir):
     triples, _ = build_kg(
         corpus,
         mention_strategy="regex",
-        link_strategy="sql",
         collect_metrics=False,
         mention_vocab=[n for (n, _, _, _) in catalog_rows],
         mention_case_insensitive=False,

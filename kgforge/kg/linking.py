@@ -1,59 +1,46 @@
 """Entity-link scoring: mention surfaces → catalog entities.
 
-Candidate generation is a broadcast join of normalized surfaces against the
-(tiny) entity catalog; scoring is a vectorized Arrow-batched trigram-Jaccard
-UDF between the mention surface and each candidate's canonical name; the best
-candidate per mention wins via a max-struct aggregation (no window over a
-single partition).
+A mention's candidates are the catalog rows whose ``norm`` equals its
+lowercased surface; each is scored by trigram Jaccard between that ``norm``
+and the candidate's canonical name, and the best ``(score, eid, etype,
+canonical)`` wins.  Since the score depends only on the ``norm``, the winner
+is computed once per catalog surface — JVM trigram expressions and a
+max-struct aggregation over the (tiny) catalog — and broadcast-joined onto
+the mentions: no per-mention scoring, no shuffle of the mention side and no
+Python workers.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from kgforge.kg.vocab import EID_TO_ENTITY, ENTITIES
+from kgforge.kg.vocab import ENTITIES
+from kgforge.triples import local_df
 
-
-def _trigrams(s: str) -> set:
-    s = "^" + s.lower() + "$"
-    return {s[i : i + 3] for i in range(max(len(s) - 2, 1))}
-
-
-def _trigram_jaccard_fn(a: pd.Series, b: pd.Series) -> pd.Series:
-    out = []
-    for x, y in zip(a, b):
-        sx, sy = _trigrams(x), _trigrams(y)
-        inter = len(sx & sy)
-        out.append(inter / (len(sx) + len(sy) - inter))
-    return pd.Series(out, dtype="float64")
-
-
-def trigram_jaccard_udf():
-    # built lazily — pandas_udf("double") needs an active session to parse
-    from pyspark.sql import types as T
-
-    return F.pandas_udf(_trigram_jaccard_fn, T.DoubleType())
+CATALOG_SCHEMA = T.StructType([
+    T.StructField("norm", T.StringType()),
+    T.StructField("eid", T.StringType()),
+    T.StructField("canonical", T.StringType()),
+    T.StructField("etype", T.StringType()),
+])
 
 
 def candidate_table(spark) -> DataFrame:
-    rows = [
-        (v.lower(), e.eid, e.canonical, e.etype)
-        for e in ENTITIES
-        for v in e.variants
-    ]
-    return spark.createDataFrame(
-        rows, schema="norm string, eid string, canonical string, etype string"
+    return local_df(
+        spark,
+        [(v.lower(), e.eid, e.canonical, e.etype)
+         for e in ENTITIES for v in e.variants],
+        CATALOG_SCHEMA,
     )
 
 
 def trigram_jaccard_col(df: DataFrame, a: str, b: str,
                         out: str = "score") -> DataFrame:
-    """Whole-stage-codegen trigram Jaccard between two string columns —
-    same values as the pandas UDF (tests assert equality), but pure JVM:
-    no Python workers in the hot path, so it scales with cores instead of
-    contending on 2× process pools."""
+    """Whole-stage-codegen trigram Jaccard between two string columns
+    (lowercased, padded ``^…$``, distinct 3-character windows) — pure JVM,
+    so scoring needs no Python worker."""
     ta, tb = f"_tri_{a}", f"_tri_{b}"
     d = df
     for col, tmp in ((a, ta), (b, tb)):
@@ -74,51 +61,29 @@ def trigram_jaccard_col(df: DataFrame, a: str, b: str,
     )
 
 
-def link_mentions(mentions: DataFrame, strategy: str = "sql",
+def link_mentions(mentions: DataFrame,
                   cands: DataFrame | None = None) -> DataFrame:
     """(doc_id, span_idx, offset, surface, start) →
     (doc_id, span_idx, start, surface, eid, etype, canonical, score).
 
-    ``sql`` (default) scores candidates with JVM trigram-Jaccard expressions;
-    ``pandas`` uses the Arrow-batched UDF — identical scores (tested).
     ``cands`` overrides the built-in demo catalog with a caller-supplied
-    (norm, eid, canonical, etype) DataFrame."""
-    spark = mentions.sparkSession
+    (norm, eid, canonical, etype) DataFrame.  One output row per mention
+    whose lowercased surface is a catalog ``norm``; mentions are unique on
+    (doc_id, span_idx, start) for every ``detect_mentions`` strategy."""
     if cands is None:
-        cands = candidate_table(spark)
-    m = mentions.withColumn("norm", F.lower(F.col("surface")))
-    joined = m.join(F.broadcast(cands), "norm", "inner")
-    if strategy == "sql":
-        scored = trigram_jaccard_col(joined, "surface", "canonical")
-    else:
-        scored = joined.withColumn(
-            "score", trigram_jaccard_udf()(F.col("surface"), F.col("canonical"))
-        )
+        cands = candidate_table(mentions.sparkSession)
     best = (
-        scored.groupBy("doc_id", "span_idx", "start")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("score"),
-                    F.col("eid"),
-                    F.col("etype"),
-                    F.col("canonical"),
-                    F.col("surface"),
-                )
-            ).alias("m")
-        )
-        .select(
-            "doc_id",
-            "span_idx",
-            "start",
-            F.col("m.surface").alias("surface"),
-            F.col("m.eid").alias("eid"),
-            F.col("m.etype").alias("etype"),
-            F.col("m.canonical").alias("canonical"),
-            F.col("m.score").alias("score"),
-        )
+        trigram_jaccard_col(cands, "norm", "canonical")
+        .groupBy("norm")
+        .agg(F.max(F.struct("score", "eid", "etype", "canonical")).alias("m"))
+        .select("norm", "m.*")
     )
-    return best
+    return mentions.join(
+        F.broadcast(best), F.lower(F.col("surface")) == F.col("norm")
+    ).select(
+        "doc_id", "span_idx", "start", "surface", "eid", "etype", "canonical",
+        "score",
+    )
 
 
 def entity_initials(name_col) -> F.Column:

@@ -19,8 +19,10 @@ import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kgforge.kg.vocab import ALL_SURFACES
+from kgforge.triples import local_df
 
 _MENTION_SCHEMA = "doc_id string, span_idx int, offset int, surface string, start int"
 
@@ -112,9 +114,10 @@ def detect_mentions(spans: DataFrame, strategy: str = "pandas",
         )
 
     if strategy == "sql":
-        vocab_df = text_spans.sparkSession.createDataFrame(
+        vocab_df = local_df(
+            text_spans.sparkSession,
             [(s.lower(),) for s in (vocab if vocab is not None else ALL_SURFACES)],
-            schema="norm string",
+            T.StructType([T.StructField("norm", T.StringType())]),
         )
         toks = text_spans.withColumn("toks", F.split(F.col("text"), " "))
         max_n = max(len(s.split()) for s in (vocab if vocab is not None else ALL_SURFACES))

@@ -6,15 +6,16 @@ triple materialization with salted aggregation for hot entities → partitioned
 graph write with snapshot lineage (kgforge.kg.io).
 
 Every stage is a DataFrame transform; the only Python workers are the
-Arrow-batched mention/link UDFs.  The mention→entity aggregation is two-phase
-(salt then re-aggregate) so the ~100× hot entities in the corpus never pin a
-single reducer.
+Arrow-batched mention scans (``mention_strategy="pandas"``).  The
+mention→entity aggregation is two-phase (salt then re-aggregate) so the ~100×
+hot entities in the corpus never pin a single reducer.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kgforge.kg.components import connected_components
 from kgforge.kg.linking import link_mentions
@@ -22,9 +23,13 @@ from kgforge.kg.lsh import jaccard_filter, lsh_candidate_pairs
 from kgforge.kg.mentions import detect_mentions
 from kgforge.kg.synth import docs_from_testdata, explode_spans, synth_docs  # noqa: F401
 from kgforge.kg.vocab import DOC_NS, ENT_NS, KG
-from kgforge.triples import RDF_TYPE
+from kgforge.triples import RDF_TYPE, local_df
 
 _SALT_BUCKETS = 16
+_CANON_SCHEMA = T.StructType([
+    T.StructField("surface", T.StringType()),
+    T.StructField("canon_surface", T.StringType()),
+])
 
 
 def _lit_triple(df, subj, pred, value, dtype="string"):
@@ -73,7 +78,7 @@ def _canonicalize_driver(spark, surface_list, threshold: float):
                 edges.append((min(a, b), max(a, b)))
     comp = union_find_components(edges)
     rows = [(s, comp.get(s, s)) for s in sorted(surface_list)]
-    return spark.createDataFrame(rows, schema="surface string, canon_surface string")
+    return local_df(spark, rows, _CANON_SCHEMA)
 
 
 def _canonicalize_surfaces(
@@ -110,7 +115,6 @@ def _canonicalize_surfaces(
 def build_kg(
     docs: DataFrame,
     mention_strategy: str = "pandas",
-    link_strategy: str = "sql",
     near_dup_threshold: float = 0.55,
     collect_metrics: bool = True,
     small_canon_threshold: int = 20_000,
@@ -148,7 +152,7 @@ def build_kg(
         spans, strategy=mention_strategy, vocab=mention_vocab,
         case_insensitive=mention_case_insensitive,
     )
-    linked = link_mentions(mentions, strategy=link_strategy, cands=catalog).persist()
+    linked = link_mentions(mentions, cands=catalog).persist()
     if collect_metrics:
         metrics["n_mentions"] = linked.count()
 

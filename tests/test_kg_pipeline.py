@@ -50,15 +50,78 @@ def test_offsets_monotone(docs):
     assert bad.count() == 0
 
 
-def test_link_strategies_agree(spark, docs):
+def _trigrams(s: str) -> set:
+    s = "^" + s.lower() + "$"
+    return {s[i : i + 3] for i in range(max(len(s) - 2, 1))}
+
+
+def _mirror_links(mention_rows, catalog_rows) -> list[tuple]:
+    """Brute-force linking: per mention, the Python max over the catalog rows
+    with ``norm == surface.lower()`` of (score, eid, etype, canonical)."""
+    out = []
+    for doc_id, span_idx, start, surface in mention_rows:
+        cands = []
+        for norm, eid, canonical, etype in catalog_rows:
+            if norm == surface.lower():
+                a, b = _trigrams(surface), _trigrams(canonical)
+                inter = len(a & b)
+                cands.append((inter / (len(a) + len(b) - inter), eid, etype, canonical))
+        if cands:
+            score, eid, etype, canonical = max(cands)
+            out.append((doc_id, span_idx, start, surface, eid, etype, canonical, score))
+    return sorted(out)
+
+
+def _assert_links_match_mirror(mentions, catalog_rows, cands=None):
     from kgforge.kg.linking import link_mentions
 
-    spans = explode_spans(docs)
-    mentions = detect_mentions(spans, "pandas").persist()
-    key = ["doc_id", "span_idx", "start", "eid"]
-    a = link_mentions(mentions, "sql").select(*key, F.round("score", 9).alias("s"))
-    b = link_mentions(mentions, "pandas").select(*key, F.round("score", 9).alias("s"))
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    key = ["doc_id", "span_idx", "start", "surface"]
+    got = sorted(
+        tuple(r) for r in link_mentions(mentions, cands=cands).select(
+            *key, "eid", "etype", "canonical", "score").collect()
+    )
+    want = _mirror_links(
+        [tuple(r) for r in mentions.select(*key).collect()], catalog_rows)
+    assert got == want and len(want) > 0
+
+
+def test_link_mentions_matches_mirror(docs):
+    from kgforge.kg.vocab import ENTITIES
+
+    mentions = detect_mentions(explode_spans(docs), "pandas").persist()
+    catalog_rows = [
+        (v.lower(), e.eid, e.canonical, e.etype)
+        for e in ENTITIES for v in e.variants
+    ]
+    _assert_links_match_mirror(mentions, catalog_rows)
+
+
+def test_link_mentions_mirror_mixed_case_ties(spark):
+    """Caller catalog: mixed-case surfaces, one ``norm`` mapping to several
+    eids with tied scores (the winner is the max eid, then etype), and a
+    non-lowercase ``norm`` no mention can reach."""
+    from kgforge.kg.linking import CATALOG_SCHEMA
+
+    catalog_rows = [
+        ("acme corp", "e1", "Acme Corp", "Org"),
+        ("acme corp", "e2", "ACME CORP", "Org"),
+        ("acme corp", "e2", "acme corp", "Company"),
+        ("acme corp", "e0", "Acme Corporation", "Org"),
+        ("beta", "e3", "Beta", "Place"),
+        ("beta", "e4", "Betamax", "Thing"),
+        ("Gamma", "e5", "Gamma", "Thing"),
+    ]
+    docs = spark.createDataFrame(
+        [("d1", [("text", "Acme Corp met ACME CORP and acme corp", "", 0),
+                 ("text", "near BETA, Gamma and beta", "", 40)]),
+         ("d2", [("text", "aCmE cOrP or Beta", "", 0)])],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>",
+    )
+    mentions = detect_mentions(
+        explode_spans(docs), "regex", vocab=["Acme Corp", "Beta", "Gamma"])
+    cands = spark.createDataFrame(catalog_rows, CATALOG_SCHEMA)
+    _assert_links_match_mirror(mentions, catalog_rows, cands=cands)
 
 
 def test_mention_strategies_agree(spark, docs):
@@ -132,6 +195,33 @@ def test_checkpoint_resume(spark, tmp_path, docs):
     assert not resumed3 and calls["n"] == 2  # input changed → rebuild
 
 
+# Spark jobs of build_kg → write_graph on the 300-doc fixture with the test
+# session's settings (local[4], four shuffle partitions, AQE on)
+KG_BUILD_WRITE_JOB_BUDGET = 21
+
+
+def test_build_write_job_budget(spark, docs, tmp_path):
+    """The triple DAG executes once per write_graph: the row total rides
+    the write as an observation, not a second pass over the triples."""
+    from kgforge.kg.io import write_graph
+
+    docs.count()
+    sc = spark.sparkContext
+    group = "kg-build-write-budget"
+    sc.setJobGroup(group, "build_kg -> write_graph")
+    try:
+        triples, _ = build_kg(docs, collect_metrics=False)
+        snap = write_graph(triples, str(tmp_path / "graph"), stage="kg",
+                           fingerprint="budget")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert snap["rows"] > 0
+    assert jobs <= KG_BUILD_WRITE_JOB_BUDGET, jobs
+
+
 def test_kg_to_anonymization_end_to_end(spark, docs, tmp_path):
     """The north-star composition: interleaved docs → KG triples → graph
     write with snapshot → read back → the reference's anonymization
@@ -148,6 +238,12 @@ def test_kg_to_anonymization_end_to_end(spark, docs, tmp_path):
     snap = write_graph(triples, path, stage="kg", fingerprint="t")
     assert snap["rows"] == triples.count() and last_snapshot(path)["stage"] == "kg"
     stored = spark.read.parquet(path)
+    # per-pred lineage: one {"pred", "rows"} entry per written partition
+    assert all(set(p) == {"pred", "rows"} for p in snap["partitions"])
+    assert sum(p["rows"] for p in snap["partitions"]) == snap["rows"]
+    assert {(p["pred"], p["rows"]) for p in snap["partitions"]} == {
+        (r["pred"], r["count"]) for r in stored.groupBy("pred").count().collect()
+    }
 
     cfg = config_from_dict(
         {
@@ -293,7 +389,7 @@ def test_update_kg_stable_labels(spark):
         )
 
     kw = dict(
-        mention_strategy="regex", link_strategy="sql",
+        mention_strategy="regex",
         mention_vocab=surfaces, mention_case_insensitive=False,
         catalog=catalog,
     )

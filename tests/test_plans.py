@@ -87,16 +87,42 @@ def test_q6_prunes_columns(spark, plans):
     assert "l_quantity" in read_schema
 
 
+def _hash_shuffles_outside_broadcast(df) -> list[str]:
+    """Hash-partitioned exchanges of ``df``'s physical plan that do not sit
+    under a BroadcastExchange, i.e. that shuffle the streamed side."""
+    found = []
+    stack = [(df._jdf.queryExecution().executedPlan(), False)]
+    while stack:
+        node, in_broadcast = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append((node.executedPlan(), in_broadcast))
+            continue
+        if name == "BroadcastExchangeExec":
+            in_broadcast = True
+        elif name == "ShuffleExchangeExec" and not in_broadcast:
+            part = node.outputPartitioning().toString()
+            if part.startswith("hashpartitioning"):
+                found.append(part)
+        children = node.children()
+        stack.extend((children.apply(i), in_broadcast) for i in range(children.size()))
+    return found
+
+
 def test_jvm_link_path_has_no_python(spark):
     from kgforge.kg.linking import link_mentions
     from kgforge.kg.mentions import detect_mentions
     from kgforge.kg.synth import explode_spans, synth_docs
 
     spans = explode_spans(synth_docs(spark, 50))
-    linked = link_mentions(detect_mentions(spans, "regex"), "sql")
+    linked = link_mentions(detect_mentions(spans, "regex"))
     plan = _plan(linked)
     for marker in ("BatchEvalPython", "ArrowEvalPython"):
         assert marker not in plan, f"{marker} found in JVM-only link path"
+    # the catalog is scored and reduced on the broadcast side; the mentions
+    # stream through the join without a shuffle
+    assert "BroadcastHashJoin" in plan
+    assert _hash_shuffles_outside_broadcast(linked) == []
 
 
 def test_simhash_is_jvm_only(spark, plans):

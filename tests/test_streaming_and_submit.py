@@ -96,7 +96,7 @@ def test_stream_docs_to_triples_equals_batch_build_kg(spark, tmp_path):
 
     triples, _ = build_kg(
         spark.read.parquet(docs_dir), mention_strategy="sql",
-        link_strategy="sql", collect_metrics=False,
+        collect_metrics=False,
     )
     want = {
         tuple(r)
