@@ -50,14 +50,14 @@ def entry(spark: SparkSession) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def _mask_names(spark, sf_dir):
-    from kgforge.anonymize.ops import mask
+    from kgforge.anonymize.ops import AttrSpec, mask
 
     cust = _read(spark, sf_dir, "customer")
     col_df = cust.filter(F.col("c_name").isNotNull()).select(
         F.col("c_custkey").cast("string").alias("subj"),
         F.col("c_name").alias("obj_value"),
     )
-    out = mask(col_df, "name")
+    out = mask(col_df, [AttrSpec("name")])
     return out.select(
         F.col("subj").cast("bigint").alias("c_custkey"),
         F.col("obj_value").alias("name_masked"),
@@ -75,12 +75,12 @@ def _acctbal_column(spark, sf_dir):
 
 def _generalize_acctbal(spark, sf_dir):
     from kgforge.anonymize.buckets import calculate_number_of_buckets
-    from kgforge.anonymize.ops import generalize
+    from kgforge.anonymize.ops import AttrSpec, generalize
 
     col_df = _acctbal_column(spark, sf_dir)
     n = col_df.count()
     g = calculate_number_of_buckets(n, 1)
-    out = generalize(col_df, "acctbal", "double", g, n, F.col("_tie"))
+    out = generalize(col_df, [AttrSpec("acctbal", "double", g, n)], F.col("_tie"))
     return (
         out.filter(F.col("pred") == "acctbal_generalized")
         .select(
@@ -92,13 +92,13 @@ def _generalize_acctbal(spark, sf_dir):
 
 def _generalize_acctbal_bounds(spark, sf_dir):
     from kgforge.anonymize.buckets import calculate_number_of_buckets
-    from kgforge.anonymize.ops import generalize
+    from kgforge.anonymize.ops import AttrSpec, generalize
     from kgforge.triples import RDF_MAX, RDF_MIN
 
     col_df = _acctbal_column(spark, sf_dir)
     n = col_df.count()
     g = calculate_number_of_buckets(n, 1)
-    out = generalize(col_df, "acctbal", "double", g, n, F.col("_tie"))
+    out = generalize(col_df, [AttrSpec("acctbal", "double", g, n)], F.col("_tie"))
     bounds = (
         out.filter(F.col("pred").isin([RDF_MIN, RDF_MAX]))
         .groupBy(F.substring_index("subj", "_", -1).try_cast("bigint").alias("bucket"))
@@ -116,7 +116,7 @@ def _generalize_acctbal_bounds(spark, sf_dir):
 
 def _generalize_orderdate(spark, sf_dir):
     from kgforge.anonymize.buckets import calculate_number_of_buckets
-    from kgforge.anonymize.ops import generalize
+    from kgforge.anonymize.ops import AttrSpec, generalize
 
     orders = _read(spark, sf_dir, "orders")
     col_df = orders.filter(F.col("o_orderdate").isNotNull()).select(
@@ -126,7 +126,7 @@ def _generalize_orderdate(spark, sf_dir):
     )
     n = col_df.count()
     g = calculate_number_of_buckets(n, 2)
-    out = generalize(col_df, "odate", "date", g, n, F.col("_tie"))
+    out = generalize(col_df, [AttrSpec("odate", "date", g, n)], F.col("_tie"))
     return (
         out.filter(F.col("pred") == "odate_generalized")
         .select(
@@ -6588,7 +6588,7 @@ def _kg_anon_mention_counts(spark, sf_dir):
     partitioned global rank) to that attribute.  Docs with zero mentions
     drop out exactly like the reference's null-drop (P4)."""
     from kgforge.anonymize.buckets import calculate_number_of_buckets
-    from kgforge.anonymize.ops import generalize
+    from kgforge.anonymize.ops import AttrSpec, generalize
 
     m = _doc_mentions(spark, sf_dir)
     counts = m.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nm"))
@@ -6599,7 +6599,7 @@ def _kg_anon_mention_counts(spark, sf_dir):
     )
     n = col_df.count()
     g = calculate_number_of_buckets(n, 1)
-    out = generalize(col_df, "mentions", "integer", g, n, F.col("_tie"))
+    out = generalize(col_df, [AttrSpec("mentions", "integer", g, n)], F.col("_tie"))
     return out.filter(F.col("pred") == "mentions_generalized").select(
         F.col("subj").try_cast("bigint").alias("doc_id"),
         F.substring_index("obj_value", "_", -1).try_cast("bigint").alias("bucket"),

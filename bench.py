@@ -518,7 +518,7 @@ def _anon_scale_run(spark, n: int = 1_000_000, kanon_only: bool = False) -> dict
 
     from kgforge.anonymize.buckets import calculate_number_of_buckets
     from kgforge.anonymize.kpi import k_anonymity
-    from kgforge.anonymize.ops import generalize
+    from kgforge.anonymize.ops import AttrSpec, generalize
     from kgforge.config import AttrConfig
     from kgforge.triples import RDF_TYPE
 
@@ -555,7 +555,7 @@ def _anon_scale_run(spark, n: int = 1_000_000, kanon_only: bool = False) -> dict
     col_df = base.select(subj.alias("subj"), o.cast("string").alias("obj_value"))
     g = calculate_number_of_buckets(n, 1)
     t0 = time.time()
-    generalize(col_df, A, "double", g, n).count()
+    generalize(col_df, [AttrSpec(A, "double", g, n)]).count()
     out["generalize_1m"] = round(time.time() - t0, 3)
     out["generalize_1m_buckets"] = int(g)
     triples.unpersist()

@@ -2,7 +2,7 @@
 
 Spark re-expression of AnonymizationService.applyAnonymizationForObject
 (reference: service/AnonymizationService.java:74-116): per configured object
-type — used-property check (J1), per-attribute column extraction (J2),
+type — used-property check (J1), attribute column extraction (J2),
 operator dispatch (Configuration.java:29-65), KPI write-back, original
 deletion (QueryBuildingService.java:98-123), optional rename-to-original
 (AnonymizationService.java:159-201).
@@ -10,12 +10,17 @@ deletion (QueryBuildingService.java:98-123), optional rename-to-original
 Each type starts from ONE materialized pivot: a single ``groupBy(subj)``
 over the pred-filtered triples yields the type's subjects, every configured
 attribute's values (as arrays, so multi-valued attributes survive) and the
-tie column.  J1's counts, the attribute columns and the delete's victims
-all read that pivot; none re-derives the type's subjects from the triple
-table.  The config is driver-side (tiny, inlined into every generated
-plan); all data movement is DataFrame transforms.  Per-type results
-accumulate into the same triple table, exactly like the reference's shared
-Jena model (M5).
+tie column.  J1's counts are observed while the pivot materializes; the
+delete's victims and the long-format attribute frame
+``(subj, _tie, _k, obj_value, …)`` — exploded once, ``_k`` the attribute's
+index — all read that pivot; none re-derives the type's subjects from the
+triple table.  The reference dispatches one operator per attribute; here
+each operator kind runs once per type over all of its attributes (masking,
+generalization, randomization — object generalization stays per
+attribute), so a type's Spark jobs do not grow with its attribute count.
+The config is driver-side; all data movement is DataFrame transforms.
+Per-type results accumulate into the same triple table, exactly like the
+reference's shared Jena model (M5).
 """
 
 from __future__ import annotations
@@ -23,7 +28,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from kgforge.anonymize import kpi as kpi_mod
@@ -77,12 +82,9 @@ def anonymize_triples(
 
     for type_iri, attrs_cfg in config.items():
         attrs = list(attrs_cfg)
-        pivot = _type_pivot(triples, type_iri, attrs, order_pred)
+        pivot, sizes = _type_pivot(triples, type_iri, attrs, order_pred)
 
         # J1: which configured predicates are actually used by this type
-        sizes = pivot.agg(
-            *[F.sum(F.size(f"_a{i}")).alias(f"_n{i}") for i in range(len(attrs))]
-        ).collect()[0] if attrs else ()
         counts = {a: n for a, n in zip(attrs, sizes) if n}
         used = [a for a in attrs if a in counts]
         report.used[type_iri] = used
@@ -92,22 +94,31 @@ def anonymize_triples(
             if attrs_cfg[a].strategy in ("generalization", "randomization")
         )
 
+        # every used attribute's values, one row per value; _k is the
+        # attribute's index in ``attrs``
+        long_df = pivot.select(
+            "subj", "_tie",
+            F.posexplode(F.array(*[f"_a{i}" for i in range(len(attrs))]))
+            .alias("_k", "_vs"),
+        ).select("subj", "_tie", "_k", F.explode("_vs").alias("_e")).select(
+            "subj", "_tie", "_k", "_e.obj_value", "_e.obj_dtype", "_e.obj_is_iri"
+        )
         new_parts: list[DataFrame] = []
         kpi_rows: list[tuple] = []
         report.nr_buckets[type_iri] = {}
+        # operator kind -> the specs of its attributes, one call per kind
+        batches: dict[str, list[ops.AttrSpec]] = {}
 
         for attr in used:
             cfg: AttrConfig = attrs_cfg[attr]
             n = counts[attr]
-            values = F.explode(f"_a{attrs.index(attr)}").alias("_v")
-            col_df = pivot.select("subj", "_tie", values).select(
-                "subj", "_v.obj_value", "_v.obj_dtype", "_v.obj_is_iri", "_tie"
-            )
-            order_col = F.col("_tie")
-
+            k = attrs.index(attr)
             if cfg.strategy == "masking":
-                new_parts.append(ops.mask(col_df, attr))
-                continue  # masking records no KPI attribute info (short ctor)
+                # masking records no KPI attribute info (short ctor)
+                batches.setdefault("masking", []).append(ops.AttrSpec(attr, k=k))
+                continue
+            if cfg.strategy not in ("generalization", "randomization"):
+                raise ValueError(f"No Anonymization implementation for {cfg.strategy}")
 
             g = calculate_number_of_buckets(n, n_anon)
             report.nr_buckets[type_iri][attr] = g
@@ -115,26 +126,31 @@ def anonymize_triples(
                 kpi_rows.extend(
                     kpi_mod.attribute_info_rows(type_iri, attr, cfg.strategy, g)
                 )
-
-            if cfg.strategy == "generalization":
-                if cfg.is_object_generalization:
-                    new_parts.append(
-                        ops.generalize_object(
-                            triples, col_df, attr, cfg.attr_order, g, n, hier_prefix
-                        )
-                    )
-                else:
-                    new_parts.append(
-                        ops.generalize(col_df, attr, cfg.datatype, g, n, order_col)
-                    )
-            elif cfg.strategy == "randomization":
+            if cfg.is_object_generalization:
+                col_df = long_df.filter(F.col("_k") == k)
                 new_parts.append(
-                    ops.randomize(
-                        col_df, attr, cfg.datatype, g, n, seed, order_col, rng_mode
+                    ops.generalize_object(
+                        triples, col_df, attr, cfg.attr_order, g, n, hier_prefix
                     )
                 )
             else:
-                raise ValueError(f"No Anonymization implementation for {cfg.strategy}")
+                batches.setdefault(cfg.strategy, []).append(
+                    ops.AttrSpec(attr, cfg.datatype, g, n, k)
+                )
+
+        order_col = F.col("_tie")
+        if "masking" in batches:
+            new_parts.append(ops.mask(long_df, batches["masking"]))
+        if "generalization" in batches:
+            new_parts.append(
+                ops.generalize(long_df, batches["generalization"], order_col)
+            )
+        if "randomization" in batches:
+            new_parts.append(
+                ops.randomize(
+                    long_df, batches["randomization"], seed, order_col, rng_mode
+                )
+            )
 
         written = triples
         if used:
@@ -146,8 +162,8 @@ def anonymize_triples(
                 )
             if kpi_rows:
                 written = written.unionByName(triples_df(spark, kpi_rows))
-            # Lineage truncation, not just caching: each attribute operator
-            # stacks a rank/bucket/noise subtree onto the shared triple table.
+            # Lineage truncation, not just caching: each operator stacks a
+            # rank/bucket/noise subtree onto the shared triple table.
             # Without a checkpoint the analyzed plan grows multiplicatively per
             # type — analysis time dominates tiny inputs and the driver can OOM
             # just rendering plan strings for the SQL listener.  One truncation
@@ -184,13 +200,14 @@ def anonymize_triples(
 
 def _type_pivot(
     triples: DataFrame, type_iri: str, attrs: list[str], order_pred: str | None
-) -> DataFrame:
+) -> tuple[DataFrame, list[int | None]]:
     """(subj, _tie, _a0 … _aN), one row per subject typed ``type_iri``;
     ``_ai`` is the array of attribute i's (obj_value, obj_dtype,
     obj_is_iri) values — one entry per triple, like one OPTIONAL arm of the
     reference's pivot query (data/QueryBuildingService.java:31-46)
     restricted to present values.  Materialized: every later step of the
-    type reads it."""
+    type reads it.  Also returns each attribute's value count (J1), observed
+    while the pivot materializes, so it costs no action of its own."""
     pred = F.col("pred")
     is_type = (pred == RDF_TYPE) & (F.col("obj_value") == type_iri)
     value = F.struct("obj_value", "obj_dtype", "obj_is_iri")
@@ -212,7 +229,13 @@ def _type_pivot(
     )
     if order_pred is None:
         pivot = pivot.withColumn("_tie", F.col("subj"))
-    return _truncate(pivot)
+    if not attrs:
+        return _truncate(pivot), []
+    sizes = Observation()
+    pivot = _truncate(pivot.observe(sizes, *[
+        F.sum(F.size(f"_a{i}")).alias(f"_n{i}") for i in range(len(attrs))
+    ]))
+    return pivot, [sizes.get[f"_n{i}"] for i in range(len(attrs))]
 
 
 def _delete_originals(
@@ -221,7 +244,8 @@ def _delete_originals(
     """Drop the type's values of the used attributes, plus a one-hop delete
     of the objects those values point to (drops address sub-objects —
     QueryBuildingService.java:98-123).  Both victim sets come from the
-    pivot; broadcast anti-joins keep the surviving rows in order."""
+    pivot, as one broadcast ``(subj, pred)`` relation — ``pred`` null for a
+    whole object — so one anti-join keeps the surviving rows in order."""
     victims = pivot.select(
         "subj", F.explode(F.array(*[F.lit(a) for a in used])).alias("pred")
     )
@@ -229,11 +253,17 @@ def _delete_originals(
     children = (
         pivot.select(F.explode(values).alias("_v"))
         .filter(F.col("_v.obj_is_iri"))
-        .select(F.col("_v.obj_value").alias("subj"))
+        .select(
+            F.col("_v.obj_value").alias("subj"),
+            F.lit(None).cast("string").alias("pred"),
+        )
     )
-    return triples.join(
-        F.broadcast(victims), ["subj", "pred"], "left_anti"
-    ).join(F.broadcast(children), "subj", "left_anti")
+    gone = F.broadcast(victims.unionByName(children).alias("_gone"))
+    t = triples.alias("_t")
+    hit = (F.col("_t.subj") == F.col("_gone.subj")) & (
+        F.col("_gone.pred").isNull() | (F.col("_t.pred") == F.col("_gone.pred"))
+    )
+    return t.join(gone, hit, "left_anti")
 
 
 def _rename_to_original(triples: DataFrame, renames: dict[str, str]) -> DataFrame:

@@ -1,37 +1,51 @@
 """Column anonymization operators as DataFrame transforms.
 
-Each operator consumes one attribute's column vector ``(subj, obj_value, ...)``
-and returns NEW triples to union into the graph (the reference mutates its
-Jena model in place — Masking.java:19-25, Generalization.java:59-62,
-Randomization.java:72-75; we rebuild immutably).
+Each operator consumes the values of one or more attributes in long format
+``(subj, _k, obj_value, ...)`` — ``_k`` selects the row's attribute among
+the call's :class:`AttrSpec` list — and returns NEW triples to union into
+the graph (the reference mutates its Jena model in place —
+Masking.java:19-25, Generalization.java:59-62, Randomization.java:72-75; we
+rebuild immutably).  The reference runs one operator per attribute; here
+one call covers every attribute of its kind, so a request's Spark jobs do
+not grow with its attribute count.  The per-attribute parameters (name,
+datatype, bucket count, value count, rank offset) travel as a small
+broadcast relation joined on ``_k``, never as per-attribute literals, so
+plan size is O(1) in the attribute count and in the bucket count.
 
-Scale notes are inline: generalization uses a range-partitioned global rank
-(never a single-partition window); randomization's sequential RNG contract
-forces one task per attribute in fixture-parity mode (attributes run in
-parallel — independent seeded streams per attribute, RandomizationNumeric.java:22),
-with a documented partition-parallel scale mode.
+Generalization ranks all of its attributes with one range-partitioned global
+rank over ``(_k, value, tie)`` (never a single-partition window unless the
+session has a single slice); randomization's sequential RNG contract forces
+one task per attribute in fixture-parity mode (one ``applyInPandas`` group
+per attribute, each with its own seeded stream —
+RandomizationNumeric.java:22), with a documented partition-parallel scale
+mode.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kgforge.anonymize.values import (
-    format_bound_col,
+    PARSED_DATATYPES,
+    format_bound_sql,
     format_randomized,
-    median_col,
-    parse_col,
+    median_sql,
+    parse_sql,
 )
 from kgforge.javarandom import JavaRandom, java_math_round
-from kgforge.rank import register_cache, with_global_rank
+from kgforge.rank import with_global_rank
 from kgforge.triples import (
     RDF_MAX,
     RDF_MIN,
     RDF_TYPE,
     RDFS_COMMENT,
     SOYA_URL,
+    local_df,
 )
 
 MASK = "*****"
@@ -39,123 +53,163 @@ OBFUSCATED_LOWER = "For the lower bound the minimum value is obfuscated"
 OBFUSCATED_UPPER = "For the higher bound the maximum value is obfuscated"
 
 
-def mask(col_df: DataFrame, attr: str) -> DataFrame:
-    """Masking (reference: Masking.java:19-25): constant '*****' per non-null."""
-    return col_df.select(
-        F.col("subj"),
-        F.lit(attr + "_masked").alias("pred"),
-        F.lit(MASK).alias("obj_value"),
-        F.lit("string").alias("obj_dtype"),
-        F.lit(False).alias("obj_is_iri"),
+@dataclass(frozen=True)
+class AttrSpec:
+    """One attribute of an operator call: the rows whose ``_k`` is ``k``
+    hold ``attr``'s values.  ``g`` (bucket count) and ``n`` (value count)
+    are read by generalization and randomization only."""
+
+    attr: str
+    datatype: str = "string"
+    g: int = 0
+    n: int = 0
+    k: int = 0
+
+
+_PARAMS_SCHEMA = T.StructType([
+    T.StructField("_k", T.IntegerType()),
+    T.StructField("_attr", T.StringType()),
+    T.StructField("_dt", T.StringType()),
+    T.StructField("_g", T.LongType()),
+    T.StructField("_n", T.LongType()),
+    T.StructField("_koff", T.LongType()),
+])
+
+
+def _with_params(col_df: DataFrame, specs: list[AttrSpec]) -> DataFrame:
+    """``col_df`` joined with its attributes' parameters
+    ``(_attr, _dt, _g, _n, _koff)`` on ``_k``; rows of other attributes drop
+    out.  ``_koff`` is the number of values of the attributes with a smaller
+    ``k`` — where an attribute's block starts in a rank ordered by ``_k``
+    first.  A frame without ``_k`` holds the single attribute of ``specs``.
+    """
+    if "_k" not in col_df.columns:
+        (spec,) = specs
+        col_df = col_df.withColumn("_k", F.lit(spec.k))
+    rows, off = [], 0
+    for s in sorted(specs, key=lambda s: s.k):
+        rows.append((s.k, s.attr, s.datatype, s.g, s.n, off))
+        off += s.n
+    params = local_df(col_df.sparkSession, rows, _PARAMS_SCHEMA)
+    return col_df.join(F.broadcast(params), "_k")
+
+
+def _check_datatypes(specs: list[AttrSpec]) -> None:
+    for s in specs:
+        if s.datatype not in PARSED_DATATYPES:
+            raise ValueError(f"unsupported datatype for value parsing: {s.datatype}")
+
+
+def mask(col_df: DataFrame, specs: list[AttrSpec]) -> DataFrame:
+    """Masking (reference: Masking.java:19-25): constant '*****' per value."""
+    return _with_params(col_df, specs).selectExpr(
+        "subj",
+        "concat(_attr, '_masked') AS pred",
+        f"'{MASK}' AS obj_value",
+        "'string' AS obj_dtype",
+        "false AS obj_is_iri",
+    )
+
+
+def _boundaries(lo: str, hi: str, before: str) -> str:
+    """SQL: the boundaries ``lo``..``hi`` as ``(_c, _before)`` structs —
+    none when hi < lo, where a bare ``sequence`` would count down."""
+    return (
+        f"transform(filter(sequence({lo}, greatest({lo}, {hi})), c -> c <= {hi}),"
+        f" c -> named_struct('_c', c, '_before', {before}))"
+    )
+
+
+def _bucket_triple(b: str, pred: str, value: str, dtype: str) -> str:
+    return (
+        f"named_struct('subj', concat(_attr, '_', CAST({b} AS STRING)),"
+        f" 'pred', {pred}, 'obj_value', {value}, 'obj_dtype', {dtype})"
     )
 
 
 def generalize(
-    col_df: DataFrame,
-    attr: str,
-    datatype: str,
-    g: int,
-    n: int,
-    order_col=None,
+    col_df: DataFrame, specs: list[AttrSpec], order_col=None
 ) -> DataFrame:
-    """Equal-frequency generalization (reference: Generalization.java:30-104).
+    """Equal-frequency generalization (reference: Generalization.java:30-104)
+    of every attribute in ``specs`` at once.
 
-    bucket(i) = g*i/k (int arithmetic — NOT ntile, which distributes
-    remainders differently); bucket b bounds are means of the sorted values
-    adjacent to indices b*k/g and (b+1)*k/g - 1; edge buckets obfuscate the
-    outer bound.  The global rank is computed with range partitioning +
-    partition offsets (kgforge.rank) so the sort scales.
+    Per attribute with n values in g buckets: bucket(i) = g*i/n (int
+    arithmetic — NOT ntile, which distributes remainders differently).  The
+    bucket bounds sit at the boundaries lb(c) = c*n/g, c = 0..g: boundary c
+    has the value before it (sorted index lb(c)-1) and after it (index
+    lb(c)); bucket b's lower bound is the mean at boundary b and its upper
+    bound the mean at boundary b+1 (Generalization.java:94-103 — these
+    indices do not align with the assignment formula; preserved); the first
+    bucket's lower and the last bucket's upper bound are obfuscated.
 
-    Boundary extraction is fully distributed: the ≤4g boundary indices live
-    in a ``spark.range(g)`` DataFrame that is *broadcast* into a join against
-    the ranked table (no literal IN-list in the plan, no driver loop over g),
-    and the g bucket-bound triples are built as DataFrame transforms via the
-    column twins of median/format (kgforge.anonymize.values).  Plan size is
-    O(1) in g, so g ≈ 10⁶ (k ≈ 10¹²) works.
+    One global rank over ``(_k, value, tie)`` ranks every attribute; an
+    attribute's rank is that minus its offset.  Each row works out the
+    boundaries it is adjacent to (integer arithmetic, no join), and one
+    ``groupBy(_k, boundary)`` yields every attribute's bounds — plan size is
+    O(1) in g, so g ≈ 10⁶ (k ≈ 10¹²) works.  Expressions are SQL text: the
+    plan is built in a few driver round trips, not one per expression node.
     """
-    spark = col_df.sparkSession
-    d = col_df.withColumn("_v", parse_col(datatype, F.col("obj_value")))
+    _check_datatypes(specs)
     tiebreak = order_col if order_col is not None else F.col("subj")
-    # persisted (read by the boundary join AND the bucket assignment) and
-    # registered: the engine releases it after its per-type checkpoint
-    ranked = register_cache(
-        with_global_rank(d, [F.col("_v"), tiebreak], out="_rank").persist()
+    d = _with_params(col_df, specs).withColumn(
+        "_v", F.expr(parse_sql("_dt", "obj_value"))
     )
+    ranked = with_global_rank(
+        d, [F.col("_k"), F.col("_v"), tiebreak], out="_grank"
+    ).withColumn("_rank", F.expr("_grank - _koff"))
 
-    # boundary-adjacent sorted indices for all g buckets, as a DataFrame
-    roles = F.array(
-        F.struct(F.lit("lo_prev").alias("_role"), (F.col("_lb") - 1).alias("_i")),
-        F.struct(F.lit("lo").alias("_role"), F.col("_lb").alias("_i")),
-        F.struct(F.lit("hi").alias("_role"), F.col("_ub").alias("_i")),
-        F.struct(F.lit("hi_next").alias("_role"), (F.col("_ub") + 1).alias("_i")),
+    # first[j] = ceil((_rank + j) * g / n): the smallest boundary c with
+    # lb(c) >= _rank + j.  The row is after the boundaries c with
+    # lb(c) == _rank and before those with lb(c) == _rank + 1 (c <= g)
+    first = [f"(((_rank + {j}) * _g + _n - 1) div _n)" for j in (0, 1, 2)]
+    sides = (
+        f"concat({_boundaries(first[0], f'{first[1]} - 1', 'false')},"
+        f" {_boundaries(first[1], f'least({first[2]} - 1, _g)', 'true')})"
     )
-    bidx = (
-        spark.range(g)
-        .select(
-            F.col("id").alias("_b"),
-            F.expr(f"id * CAST({n} AS BIGINT) div {g}").alias("_lb"),
-            F.expr(f"(id + 1) * CAST({n} AS BIGINT) div {g} - 1").alias("_ub"),
-        )
-        .select("_b", F.explode(roles).alias("_e"))
-        .select("_b", F.col("_e._role").alias("_role"), F.col("_e._i").alias("_i"))
-        .filter((F.col("_i") >= 0) & (F.col("_i") < n))
-    )
-    bvals = (
-        ranked.select(F.col("_rank").alias("_i"), "_v")
-        .join(F.broadcast(bidx), "_i")
-        .groupBy("_b")
+    lex, bound_dt = format_bound_sql("_dt", median_sql("_dt", "_vb", "_va"))
+    bounds = (
+        ranked.selectExpr("_k", "_attr", "_dt", "_g", "_v", f"explode({sides}) AS _e")
+        .groupBy("_k", "_attr", "_dt", "_g", "_e._c")
         .agg(
-            F.max(F.when(F.col("_role") == "lo_prev", F.col("_v"))).alias("_vlp"),
-            F.max(F.when(F.col("_role") == "lo", F.col("_v"))).alias("_vlo"),
-            F.max(F.when(F.col("_role") == "hi", F.col("_v"))).alias("_vhi"),
-            F.max(F.when(F.col("_role") == "hi_next", F.col("_v"))).alias("_vhn"),
+            F.expr("max(IF(_e._before, _v, NULL)) AS _vb"),
+            F.expr("max(IF(_e._before, NULL, _v)) AS _va"),
         )
+        .selectExpr("_attr", "_g", "_c", f"{lex} AS _lex", f"{bound_dt} AS _bdt")
     )
-    lower = median_col(datatype, F.col("_vlp"), F.col("_vlo"))
-    upper = median_col(datatype, F.col("_vhi"), F.col("_vhn"))
-    lower_lex, bound_dt = format_bound_col(datatype, lower)
-    upper_lex, _ = format_bound_col(datatype, upper)
-    bucket_iri = F.concat(F.lit(attr + "_"), F.col("_b").cast("string"))
-    first_b, last_b = F.col("_b") == 0, F.col("_b") == g - 1
+    # boundary c emits bucket c's type triple — reference
+    # addProperty(RDF.type, String) stores it as a *string literal*
+    # (Generalization.java:75) — and lower bound, and bucket c-1's upper
+    # bound
+    triples = [
+        _bucket_triple(
+            "_c", f"'{RDF_TYPE}'", f"'{SOYA_URL}generalization'", "'string'"
+        ),
+        _bucket_triple(
+            "_c",
+            f"IF(_c = 0, '{RDFS_COMMENT}', '{RDF_MIN}')",
+            f"IF(_c = 0, '{OBFUSCATED_LOWER}', _lex)",
+            "IF(_c = 0, 'string', _bdt)",
+        ),
+        _bucket_triple(
+            "_c - 1",
+            f"IF(_c = _g, '{RDFS_COMMENT}', '{RDF_MAX}')",
+            f"IF(_c = _g, '{OBFUSCATED_UPPER}', _lex)",
+            "IF(_c = _g, 'string', _bdt)",
+        ),
+    ]
+    bucket_triples = bounds.selectExpr(
+        f"explode(filter(array(IF(_c < _g, {triples[0]}, NULL),"
+        f" IF(_c < _g, {triples[1]}, NULL), IF(_c > 0, {triples[2]}, NULL)),"
+        " t -> t IS NOT NULL)) AS _t"
+    ).selectExpr("_t.*", "false AS obj_is_iri")
 
-    def bucket_triple(pred, value, dtype):
-        return F.struct(
-            pred.alias("pred"), value.alias("obj_value"), dtype.alias("obj_dtype")
-        )
-
-    # one pass over bvals emits each bucket's three triples: the type —
-    # reference addProperty(RDF.type, String) stores it as a *string
-    # literal* (Generalization.java:75) — and the two bounds
-    bucket_triples = bvals.select(
-        bucket_iri.alias("subj"),
-        F.explode(F.array(
-            bucket_triple(
-                F.lit(RDF_TYPE), F.lit(SOYA_URL + "generalization"), F.lit("string")
-            ),
-            bucket_triple(
-                F.when(first_b, F.lit(RDFS_COMMENT)).otherwise(F.lit(RDF_MIN)),
-                F.when(first_b, F.lit(OBFUSCATED_LOWER)).otherwise(lower_lex),
-                F.when(first_b, F.lit("string")).otherwise(F.lit(bound_dt)),
-            ),
-            bucket_triple(
-                F.when(last_b, F.lit(RDFS_COMMENT)).otherwise(F.lit(RDF_MAX)),
-                F.when(last_b, F.lit(OBFUSCATED_UPPER)).otherwise(upper_lex),
-                F.when(last_b, F.lit("string")).otherwise(F.lit(bound_dt)),
-            ),
-        )).alias("_t"),
-    ).select(
-        "subj", "_t.pred", "_t.obj_value", "_t.obj_dtype",
-        F.lit(False).alias("obj_is_iri"),
-    )
-
-    # bucket(i) = g*i/k in integer arithmetic (Generalization.java:50)
-    bucket_id = F.expr(f"CAST({g} AS BIGINT) * _rank DIV {n}")
-    assign = ranked.select(
-        F.col("subj"),
-        F.lit(attr + "_generalized").alias("pred"),
-        F.concat(F.lit(attr + "_"), bucket_id.cast("string")).alias("obj_value"),
-        F.lit("iri").alias("obj_dtype"),
-        F.lit(True).alias("obj_is_iri"),
+    # bucket(i) = g*i/n in integer arithmetic (Generalization.java:50)
+    assign = ranked.selectExpr(
+        "subj",
+        "concat(_attr, '_generalized') AS pred",
+        "concat(_attr, '_', CAST(_g * _rank div _n AS STRING)) AS obj_value",
+        "'iri' AS obj_dtype",
+        "true AS obj_is_iri",
     )
     return assign.unionByName(bucket_triples)
 
@@ -260,41 +314,42 @@ def _draw_datetime(rng: JavaRandom, sec: int, dist: float, smin: int, smax: int)
 
 def randomize(
     col_df: DataFrame,
-    attr: str,
-    datatype: str,
-    g: int,
-    n: int,
+    specs: list[AttrSpec],
     seed: int,
     order_col=None,
     mode: str = "exact",
 ) -> DataFrame:
     """Adaptive-noise randomization (reference: Randomization.java:27-59 +
-    per-datatype draws).
+    per-datatype draws) of every attribute in ``specs`` at once.
 
     Window size rv = n/g (n-1 if rv == n); for each sorted value, a two-pointer
     pass finds the closest contiguous (rv+1)-window and the noise scale is the
-    max distance to its ends.  Draws come from ONE java.util.Random(seed)
-    stream consumed in ascending-value order with data-dependent retry loops —
-    inherently sequential per attribute (RandomizationNumeric.java:22,
-    fixtures pin seed=1234).  mode="exact" runs the attribute as a single
-    applyInPandas group (attributes parallelize across tasks); mode
-    ="partitioned" range-partitions and seeds each partition with seed ⊕ pid —
-    a documented semantic extension for corpus scale.
+    max distance to its ends.  Each attribute draws from its own
+    java.util.Random(seed) stream consumed in ascending (value, tie) order
+    with data-dependent retry loops — inherently sequential per attribute
+    (RandomizationNumeric.java:22, fixtures pin seed=1234).  mode="exact"
+    runs one applyInPandas group per attribute (attributes parallelize
+    across tasks); mode="partitioned" range-partitions by (attribute, value)
+    and seeds each partition's share of an attribute with seed ⊕ pid — a
+    documented semantic extension for corpus scale.
     """
-    d = col_df.withColumn("_v", parse_col(datatype, F.col("obj_value")))
+    _check_datatypes(specs)
     tiebreak = order_col if order_col is not None else F.col("subj")
-    d = d.withColumn("_ord", tiebreak.cast("string"))
+    d = _with_params(col_df, specs).select(
+        "subj", "_k", "_attr", "_dt", "_g",
+        F.expr(parse_sql("_dt", "obj_value")).alias("_v"),
+        tiebreak.cast("string").alias("_ord"),
+    )
 
     def run_group(pdf: pd.DataFrame, seed_: int) -> pd.DataFrame:
         pdf = pdf.sort_values(["_v", "_ord"], kind="mergesort").reset_index(drop=True)
         vals = pdf["_v"].to_numpy()
         k = len(vals)
-        if k == 0:
-            return pd.DataFrame({"subj": [], "obj_value": []})
+        datatype, g = pdf["_dt"].iat[0], int(pdf["_g"].iat[0])
         rng = JavaRandom(seed_)
         vmin, vmax = vals[0], vals[-1]
         # window size from the group's own size (Randomization.java:29,37);
-        # in exact mode the group IS the whole column, so this equals n/g
+        # in exact mode the group IS the attribute's column, so this is n/g
         rvv = k // g
         if rvv == k:
             rvv -= 1
@@ -315,37 +370,31 @@ def randomize(
             else:
                 res = _draw_datetime(rng, int(v), float(dist), int(vmin), int(vmax))
             out.append(format_randomized(datatype, res)[0])
-        return pd.DataFrame({"subj": pdf["subj"], "obj_value": out})
+        return pd.DataFrame({
+            "subj": pdf["subj"],
+            "pred": pdf["_attr"] + "_randomized",
+            "obj_value": out,
+            "obj_dtype": format_randomized(datatype, 0)[1],
+        })
 
-    dtype = format_randomized(datatype, 0)[1]
+    schema = "subj string, pred string, obj_value string, obj_dtype string"
     if mode == "partitioned":
         npart = max(d.sparkSession.sparkContext.defaultParallelism, 1)
         from pyspark import TaskContext
 
         def run_part(it):
+            frames = list(it)
+            if not frames:
+                return
             pid = TaskContext.get().partitionId()
-            pdf = pd.concat(list(it)) if it else pd.DataFrame()
-            frames = [pdf] if len(pdf) else []
-            for f_ in frames:
-                yield run_group(f_, seed ^ pid)
+            for _, grp in pd.concat(frames).groupby("_k"):
+                yield run_group(grp, seed ^ pid)
 
-        randomized = (
-            d.repartitionByRange(npart, "_v", "_ord")
-            .mapInPandas(run_part, schema="subj string, obj_value string")
+        randomized = d.repartitionByRange(npart, "_k", "_v", "_ord").mapInPandas(
+            run_part, schema=schema
         )
     else:
-        randomized = (
-            d.withColumn("_grp", F.lit(1))
-            .groupBy("_grp")
-            .applyInPandas(
-                lambda pdf: run_group(pdf, seed),
-                schema="subj string, obj_value string",
-            )
+        randomized = d.groupBy("_k").applyInPandas(
+            lambda pdf: run_group(pdf, seed), schema=schema
         )
-    return randomized.select(
-        "subj",
-        F.lit(attr + "_randomized").alias("pred"),
-        "obj_value",
-        F.lit(dtype).alias("obj_dtype"),
-        F.lit(False).alias("obj_is_iri"),
-    )
+    return randomized.withColumn("obj_is_iri", F.lit(False))

@@ -11,27 +11,33 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from kgforge.javarandom import java_double_str, jdiv
 
 EPOCH = _dt.date(1970, 1, 1)
 
 NUMERIC_DATATYPES = ("integer", "double")
+# the datatypes the generalization/randomization operators order by value
+PARSED_DATATYPES = (*NUMERIC_DATATYPES, "date", "dateTime")
 
 
-def parse_col(datatype: str, c: Column) -> Column:
-    """Lexical obj_value → sortable double column."""
-    if datatype in NUMERIC_DATATYPES:
-        return c.cast("double")
-    if datatype == "date":
-        return F.datediff(F.to_date(c), F.lit("1970-01-01")).cast("double")
-    if datatype == "dateTime":
-        # xsd:date-or-dateTime fallback parse (RandomizationDateTime.java:58-70)
-        ts = F.coalesce(F.to_timestamp(c), F.to_timestamp(F.to_date(c)))
-        return F.unix_timestamp(ts).cast("double")
-    raise ValueError(f"unsupported datatype for value parsing: {datatype}")
+def _numeric(dt: str) -> str:
+    # an OR of equalities, not IN: plan gates reject literal IN-lists
+    return f"({dt} = 'integer' OR {dt} = 'double')"
+
+
+def parse_sql(dt: str, c: str) -> str:
+    """SQL expression: lexical column ``c`` → sortable double, per row by
+    the datatype name in column ``dt`` (one of :data:`PARSED_DATATYPES`;
+    anything else → null).  Expression text, not a Column: one parse on the
+    JVM instead of a driver round trip per node."""
+    # xsd:date-or-dateTime fallback parse (RandomizationDateTime.java:58-70)
+    ts = f"coalesce(to_timestamp({c}), to_timestamp(to_date({c})))"
+    return (
+        f"CASE WHEN {_numeric(dt)} THEN CAST({c} AS DOUBLE)"
+        f" WHEN {dt} = 'date'"
+        f" THEN CAST(datediff(to_date({c}), '1970-01-01') AS DOUBLE)"
+        f" WHEN {dt} = 'dateTime' THEN CAST(unix_timestamp({ts}) AS DOUBLE) END"
+    )
 
 
 def epoch_day_to_iso(day: int) -> str:
@@ -67,36 +73,39 @@ def format_bound(datatype: str, v: float) -> tuple[str, str]:
     return epoch_sec_to_lexical(int(v)), "xsd:dateTime"
 
 
-def median_col(datatype: str, v1: Column, v2: Column) -> Column:
-    """Column twin of :func:`median_value` (same null-tolerance and Java
-    long-division truncation) so bucket bounds can be built as a DataFrame
-    transform instead of a driver loop."""
-    if datatype in NUMERIC_DATATYPES:
-        mean = (v1 + v2) / F.lit(2.0)
-    else:
-        s = v1.cast("long") + v2.cast("long")
-        # Java long division truncates toward zero; Spark's % keeps the
-        # dividend's sign (like Java), so (s - s % 2) / 2 is exact
-        mean = ((s - (s % F.lit(2))) / F.lit(2)).cast("double")
-    return F.when(v1.isNull(), v2).when(v2.isNull(), v1).otherwise(mean)
-
-
-def format_bound_col(datatype: str, v: Column) -> tuple[Column, str]:
-    """Column twin of :func:`format_bound`.  Spark's double→string cast calls
-    JVM Double.toString, byte-identical to :func:`java_double_str` (verified
-    over the fixture value domain); date/dateTime render in the session
-    timezone, which the engine pins to UTC."""
-    if datatype in NUMERIC_DATATYPES:
-        return v.cast("string"), "xsd:double"
-    if datatype == "date":
-        return (
-            F.date_add(F.to_date(F.lit("1970-01-01")), v.cast("int")).cast("string"),
-            "xsd:date",
-        )
+def median_sql(dt: str, v1: str, v2: str) -> str:
+    """SQL twin of :func:`median_value` over columns ``v1``/``v2`` (same
+    null-tolerance and Java long-division truncation) so bucket bounds can
+    be built as a DataFrame transform instead of a driver loop.  ``dt`` as
+    in :func:`parse_sql`."""
+    # Java long division truncates toward zero; Spark's % keeps the
+    # dividend's sign (like Java), so (s - s % 2) / 2 is exact
+    s = f"(CAST({v1} AS BIGINT) + CAST({v2} AS BIGINT))"
     return (
-        F.date_format(F.timestamp_seconds(v.cast("long")), "yyyy-MM-dd'T'HH:mm:ss'Z'"),
-        "xsd:dateTime",
+        f"CASE WHEN {v1} IS NULL THEN {v2} WHEN {v2} IS NULL THEN {v1}"
+        f" WHEN {_numeric(dt)} THEN ({v1} + {v2}) / 2.0D"
+        f" ELSE CAST(({s} - {s} % 2) / 2 AS DOUBLE) END"
     )
+
+
+def format_bound_sql(dt: str, v: str) -> tuple[str, str]:
+    """SQL twin of :func:`format_bound`: (lexical, dtype) expressions.
+    Spark's double→string cast calls JVM Double.toString, byte-identical to
+    :func:`java_double_str` (verified over the fixture value domain);
+    date/dateTime render in the session timezone, which the engine pins to
+    UTC.  ``dt`` as in :func:`parse_sql`."""
+    lexical = (
+        f"CASE WHEN {dt} = 'date'"
+        f" THEN CAST(date_add(to_date('1970-01-01'), CAST({v} AS INT)) AS STRING)"
+        f" WHEN {dt} = 'dateTime' THEN date_format("
+        f"timestamp_seconds(CAST({v} AS BIGINT)), \"yyyy-MM-dd'T'HH:mm:ss'Z'\")"
+        f" ELSE CAST({v} AS STRING) END"
+    )
+    dtype = (
+        f"CASE WHEN {dt} = 'date' THEN 'xsd:date'"
+        f" WHEN {dt} = 'dateTime' THEN 'xsd:dateTime' ELSE 'xsd:double' END"
+    )
+    return lexical, dtype
 
 
 def format_randomized(datatype: str, v: float) -> tuple[str, str]:

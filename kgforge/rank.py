@@ -8,7 +8,9 @@ across all partitions, ``spark_partition_id()`` stamps the range bucket, a
 window PARTITIONED BY that bucket (bounded ~n/npart rows — never a global
 window) does the per-bucket rank/cumsum in whole-stage codegen, and a
 broadcast of one offset row per partition splices the buckets together.
-The only driver traffic is one count/sum per partition.
+The only driver traffic is one count/sum per partition.  With a single
+range bucket (one partition) there are no offsets: ``with_global_rank`` is
+then one window and persists nothing.
 
 (Earlier versions ran the per-partition pass through Arrow ``mapInPandas``;
 the Arrow round-trip dominated the runtime and anti-scaled with cores on
@@ -154,6 +156,11 @@ def with_global_rank(df: DataFrame, order_cols: list, out: str = "_rank",
     ``order_cols`` for determinism.
     """
     npart = num_partitions or max(df.sparkSession.sparkContext.defaultParallelism, 1)
+    if npart == 1:
+        # one range bucket: every offset is 0, so one window ranks the frame
+        # (no persisted frame, no offset collect)
+        w = Window.orderBy(*order_cols)
+        return df.withColumn(out, F.row_number().over(w).cast("long") - 1)
     d = _ranged_with_pid(df, order_cols, npart, cleanup)
     counts = {r["_pid"]: r["count"] for r in d.groupBy("_pid").count().collect()}
     off_df = _offsets_df(df.sparkSession, counts)

@@ -8,7 +8,10 @@ nodes, a third of them carrying both types).  Each runs as sent and with
 ``calculateKpi: false``.  The responses are compared as parsed JSON with
 recordings in ``tests/data/anon_snapshots.json``; the job count of each
 request (read through its own Spark job group) must stay within
-``JOB_BUDGET``.
+``JOB_BUDGET``.  The same requests are replayed in a second session with
+one shuffle partition and one default slice — the settings of a service
+answering request-sized inputs, where ranks take the single-window path —
+against the same recordings and ``SERVICE_JOB_BUDGET``.
 
 Re-record only when a response change is intended:
 ``PYTHONPATH=. python tests/test_anon_snapshot.py`` (from the repository
@@ -20,6 +23,8 @@ from __future__ import annotations
 import json
 import os
 import random
+import subprocess
+import sys
 
 import pytest
 
@@ -47,14 +52,25 @@ VARIANTS = {
 # Spark jobs per request with the test session's settings (local[4], four
 # shuffle partitions, AQE on)
 JOB_BUDGET = {
-    "flat/as_sent": 53,
-    "flat/original": 51,
-    "flat/renamed": 53,
-    "flat/no_kpi": 46,
-    "jsonld2/as_sent": 50,
-    "jsonld2/original": 46,
-    "jsonld2/renamed": 50,
-    "jsonld2/no_kpi": 38,
+    "flat/as_sent": 30,
+    "flat/original": 29,
+    "flat/renamed": 30,
+    "flat/no_kpi": 23,
+    "jsonld2/as_sent": 34,
+    "jsonld2/original": 32,
+    "jsonld2/renamed": 34,
+    "jsonld2/no_kpi": 22,
+}
+# the same with one shuffle partition and one default slice
+SERVICE_JOB_BUDGET = {
+    "flat/as_sent": 21,
+    "flat/original": 20,
+    "flat/renamed": 21,
+    "flat/no_kpi": 16,
+    "jsonld2/as_sent": 24,
+    "jsonld2/original": 22,
+    "jsonld2/renamed": 24,
+    "jsonld2/no_kpi": 15,
 }
 
 
@@ -158,21 +174,60 @@ def test_job_budget(runs, key):
     assert runs[key][1] <= JOB_BUDGET[key], (key, runs[key][1])
 
 
-if __name__ == "__main__":
+@pytest.fixture(scope="module")
+def service_runs(tmp_path_factory):
+    """The requests replayed by ``python tests/test_anon_snapshot.py
+    --replay 1 <out>`` in a session of its own."""
+    out = tmp_path_factory.mktemp("service") / "runs.json"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root}
+    subprocess.run(
+        [sys.executable, os.path.abspath(__file__), "--replay", "1", str(out)],
+        cwd=root, env=env, check=True, timeout=1200,
+    )
+    with open(out) as f:
+        return json.load(f)
+
+
+@pytest.mark.parametrize("key", sorted(SERVICE_JOB_BUDGET))
+def test_single_partition_response_matches_snapshot(service_runs, recorded, key):
+    assert service_runs[key][0] == recorded[key]
+
+
+@pytest.mark.parametrize("key", sorted(SERVICE_JOB_BUDGET))
+def test_single_partition_job_budget(service_runs, key):
+    assert service_runs[key][1] <= SERVICE_JOB_BUDGET[key], (key, service_runs[key][1])
+
+
+def _session(partitions: int):
     from pyspark.sql import SparkSession
 
     session = (
         SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.default.parallelism", "4")
+        .config("spark.sql.shuffle.partitions", str(partitions))
+        .config("spark.default.parallelism", str(partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
+        .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.driver.memory", "2g")
         .getOrCreate()
     )
     session.sparkContext.setLogLevel("ERROR")
+    return session
+
+
+if __name__ == "__main__":
+    if sys.argv[1:2] == ["--replay"]:
+        # --replay <partitions> <out.json>: responses and job counts, no
+        # re-recording
+        session = _session(int(sys.argv[2]))
+        with open(sys.argv[3], "w") as f:
+            json.dump(run_all(session), f)
+        session.stop()
+        sys.exit(0)
+    session = _session(4)
     results = run_all(session)
     os.makedirs(os.path.dirname(SNAPSHOTS), exist_ok=True)
     with open(SNAPSHOTS, "w") as f:

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgforge.anonymize.buckets import calculate_number_of_buckets
-from kgforge.anonymize.ops import generalize, randomize
+from kgforge.anonymize.ops import AttrSpec, generalize, randomize
 from kgforge.rank import with_global_rank
 
 
@@ -35,7 +35,7 @@ def test_floor_bucket_differs_from_ntile(spark):
     col_df = spark.createDataFrame(
         rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
     )
-    out = generalize(col_df, "x", "double", 3, 10, F.col("_tie"))
+    out = generalize(col_df, [AttrSpec("x", "double", 3, 10)], F.col("_tie"))
     got = {
         r["subj"]: int(r["obj_value"].rsplit("_", 1)[-1])
         for r in out.filter(F.col("pred") == "x_generalized").collect()
@@ -49,7 +49,7 @@ def test_bucket_bounds_medians_and_obfuscation(spark):
     col_df = spark.createDataFrame(
         rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
     )
-    out = generalize(col_df, "x", "double", 3, 10, F.col("_tie")).collect()
+    out = generalize(col_df, [AttrSpec("x", "double", 3, 10)], F.col("_tie")).collect()
     from kgforge.triples import RDF_MAX, RDF_MIN, RDFS_COMMENT
 
     by = {}
@@ -80,7 +80,7 @@ def test_date_median_truncates_toward_zero(spark):
     col_df = spark.createDataFrame(
         rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
     )
-    out = generalize(col_df, "d", "date", 2, 4, F.col("_tie")).collect()
+    out = generalize(col_df, [AttrSpec("d", "date", 2, 4)], F.col("_tie")).collect()
     from kgforge.triples import RDF_MIN
 
     mins = {r["subj"]: r["obj_value"] for r in out if r["pred"] == RDF_MIN}
@@ -98,14 +98,18 @@ def test_global_rank_matches_window(spark):
     rnd = random.Random(7)
     rows = [(i, rnd.random()) for i in range(500)]
     df = spark.createDataFrame(rows, schema="id long, v double")
-    ranked = {
-        r["id"]: r["_rank"]
-        for r in with_global_rank(df, [F.col("v"), F.col("id")]).collect()
-    }
     expect = {
         i: pos for pos, (i, _) in enumerate(sorted(rows, key=lambda t: (t[1], t[0])))
     }
-    assert ranked == expect
+    # one range bucket (the single-window path) and several
+    for nparts in (1, 4):
+        ranked = {
+            r["id"]: r["_rank"]
+            for r in with_global_rank(
+                df, [F.col("v"), F.col("id")], num_partitions=nparts
+            ).collect()
+        }
+        assert ranked == expect, nparts
 
 
 def test_randomize_partitioned_mode_runs(spark):
@@ -113,13 +117,13 @@ def test_randomize_partitioned_mode_runs(spark):
     col_df = spark.createDataFrame(
         rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
     )
-    out = randomize(col_df, "x", "double", 3, 100, seed=1234,
+    out = randomize(col_df, [AttrSpec("x", "double", 3, 100)], seed=1234,
                     order_col=F.col("_tie"), mode="partitioned")
     vals = {r["subj"]: float(r["obj_value"]) for r in out.collect()}
     assert len(vals) == 100
     assert all(0.0 <= v <= 99.0 for v in vals.values())  # clamped to [min,max]
     # deterministic given fixed partitioning inputs
-    out2 = randomize(col_df, "x", "double", 3, 100, seed=1234,
+    out2 = randomize(col_df, [AttrSpec("x", "double", 3, 100)], seed=1234,
                      order_col=F.col("_tie"), mode="partitioned")
     vals2 = {r["subj"]: float(r["obj_value"]) for r in out2.collect()}
     assert vals == vals2
@@ -131,13 +135,202 @@ def test_randomize_exact_stays_in_range_and_seeded(spark):
         rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
     )
     a = {r["subj"]: r["obj_value"] for r in
-         randomize(col_df, "x", "double", 2, 50, 99, F.col("_tie")).collect()}
+         randomize(col_df, [AttrSpec("x", "double", 2, 50)], 99, F.col("_tie")).collect()}
     b = {r["subj"]: r["obj_value"] for r in
-         randomize(col_df, "x", "double", 2, 50, 99, F.col("_tie")).collect()}
+         randomize(col_df, [AttrSpec("x", "double", 2, 50)], 99, F.col("_tie")).collect()}
     assert a == b  # same seed → identical
     c = {r["subj"]: r["obj_value"] for r in
-         randomize(col_df, "x", "double", 2, 50, 100, F.col("_tie")).collect()}
+         randomize(col_df, [AttrSpec("x", "double", 2, 50)], 100, F.col("_tie")).collect()}
     assert a != c  # different seed → different
+
+
+# --- batched operators against a per-attribute brute-force mirror ----------
+
+# (k, attr, datatype, g, values); every value is (subj, lexical, tie).  The
+# k are sparse and unordered, the value lists hold tied values (equal
+# lexicals on different subjects), multi-valued subjects (two values for one
+# attribute), pre-1970 dates and a bucket count above the value count.
+_BATCH = [
+    (6, "int", "integer", 4, [
+        (f"s{i}", str((i * 7) % 11), i) for i in range(23)
+    ] + [("s3", "40", 3), ("s5", "-2", 5)]),
+    (1, "dbl", "double", 3, [
+        (f"s{i}", str([0.5, 2.25, 2.25, -1.0][i % 4] + (i // 8)), 100 - i)
+        for i in range(17)
+    ]),
+    (4, "day", "date", 5, [
+        (f"s{i}", f"{1966 + (i * 5) % 9}-0{1 + i % 9}-1{i % 10}", i)
+        for i in range(12)
+    ] + [("s2", "1969-12-25", 2), ("s7", "1969-12-25", 7)]),
+    (3, "ts", "dateTime", 2, [
+        (f"s{i}", f"20{10 + i % 4}-03-0{1 + i % 3}T0{i % 10}:1{i % 6}:0{i % 7}Z", i)
+        for i in range(9)
+    ]),
+    (0, "few", "double", 5, [("s1", "3.0", 1), ("s2", "1.5", 2), ("s3", "3.0", 3)]),
+]
+
+
+def _batch_frame(spark, batch):
+    rows = [
+        (subj, k, lex, tie)
+        for k, _a, _dt, _g, values in batch
+        for subj, lex, tie in values
+    ]
+    return spark.createDataFrame(
+        rows, "subj string, _k int, obj_value string, _tie long"
+    ).repartition(3)
+
+
+def _batch_specs(batch):
+    return [AttrSpec(a, dt, g, len(values), k) for k, a, dt, g, values in batch]
+
+
+def _parse(datatype, lex):
+    import datetime as dt
+
+    if datatype in ("integer", "double"):
+        return float(lex)
+    if datatype == "date":
+        return float((dt.date.fromisoformat(lex) - dt.date(1970, 1, 1)).days)
+    return float(int(dt.datetime.fromisoformat(lex).timestamp()))
+
+
+def _mirror_generalize(attr, datatype, g, values):
+    """One attribute, literally as Generalization.java:30-104 indexes it."""
+    from kgforge.anonymize.values import format_bound, median_value
+    from kgforge.triples import RDF_MAX, RDF_MIN, RDF_TYPE, RDFS_COMMENT, SOYA_URL
+
+    from kgforge.anonymize.ops import OBFUSCATED_LOWER, OBFUSCATED_UPPER
+
+    rows = sorted((_parse(datatype, lex), tie, subj) for subj, lex, tie in values)
+    n = len(rows)
+    sv = [v for v, _, _ in rows]
+    out = [
+        (subj, attr + "_generalized", f"{attr}_{g * i // n}", "iri", True)
+        for i, (_, _, subj) in enumerate(rows)
+    ]
+
+    def at(i):
+        return sv[i] if 0 <= i < n else None
+
+    for b in range(g):
+        lb, ub = b * n // g, (b + 1) * n // g - 1
+        iri = f"{attr}_{b}"
+        out.append((iri, RDF_TYPE, SOYA_URL + "generalization", "string", False))
+        if b == 0:
+            out.append((iri, RDFS_COMMENT, OBFUSCATED_LOWER, "string", False))
+        else:
+            lex, bdt = format_bound(datatype, median_value(datatype, at(lb - 1), at(lb)))
+            out.append((iri, RDF_MIN, lex, bdt, False))
+        if b == g - 1:
+            out.append((iri, RDFS_COMMENT, OBFUSCATED_UPPER, "string", False))
+        else:
+            lex, bdt = format_bound(datatype, median_value(datatype, at(ub), at(ub + 1)))
+            out.append((iri, RDF_MAX, lex, bdt, False))
+    return out
+
+
+def _mirror_randomize(attr, datatype, g, values, seed):
+    """One attribute: its own java.util.Random(seed) stream, drawn in
+    ascending (value, tie-as-string) order (Randomization.java:27-59,
+    RandomizationNumeric/Date/DateTime draws)."""
+    from kgforge.anonymize.values import format_bound
+    from kgforge.javarandom import JavaRandom, java_math_round
+
+    rows = sorted((_parse(datatype, lex), str(tie), subj) for subj, lex, tie in values)
+    vals = [v for v, _, _ in rows]
+    n, rng = len(vals), JavaRandom(seed)
+    lo_v, hi_v = vals[0], vals[-1]
+    rv = n // g if n // g != n else n - 1
+    out, lower = [], 0
+    for idx, (v, _, subj) in enumerate(rows):
+        while lower < n - (rv + 1) and (
+            lower < idx - rv or abs(vals[lower] - v) > abs(vals[lower + rv + 1] - v)
+        ):
+            lower += 1
+        dist = max(abs(vals[lower] - v), abs(vals[lower + rv] - v))
+        if datatype in ("integer", "double"):
+            res = float("inf")
+            while not lo_v <= res <= hi_v:
+                noise = rng.next_double() * dist
+                res = v - noise if not lo_v <= v + noise <= hi_v else v + noise
+        else:
+            noise = 2**31 - 1
+            while not lo_v <= v + noise <= hi_v:
+                x = rng.next_gaussian() * dist
+                noise = int(java_math_round(x)) if datatype == "date" else int(x)
+                if not lo_v <= v + noise <= hi_v:
+                    noise = -noise
+            res = v + noise
+        lex, rdt = format_bound(datatype, res)
+        out.append((subj, attr + "_randomized", lex, rdt, False))
+    return out
+
+
+def _triples(df):
+    return sorted(tuple(r) for r in df.select(
+        "subj", "pred", "obj_value", "obj_dtype", "obj_is_iri").collect())
+
+
+def test_batched_generalize_matches_per_attribute_mirror(spark):
+    out = generalize(_batch_frame(spark, _BATCH), _batch_specs(_BATCH), F.col("_tie"))
+    expect = sorted(
+        t for _k, a, dt, g, values in _BATCH
+        for t in _mirror_generalize(a, dt, g, values)
+    )
+    assert _triples(out) == expect
+
+
+def test_batched_randomize_matches_per_attribute_mirror(spark):
+    out = randomize(
+        _batch_frame(spark, _BATCH), _batch_specs(_BATCH), 4242, F.col("_tie")
+    )
+    expect = sorted(
+        t for _k, a, dt, g, values in _BATCH
+        for t in _mirror_randomize(a, dt, g, values, 4242)
+    )
+    assert _triples(out) == expect
+
+
+def test_operator_jobs_do_not_grow_with_attribute_count(spark):
+    """A type with 3 generalized and 2 randomized attributes runs no more
+    Spark jobs than one with 1 and 1: one pass per operator kind."""
+    from kgforge.anonymize.engine import anonymize_triples
+    from kgforge.config import AttrConfig
+    from kgforge.triples import RDF_TYPE, triples_df
+
+    kinds = [("integer", "generalization"), ("double", "generalization"),
+             ("date", "generalization"), ("double", "randomization"),
+             ("date", "randomization")]
+    rows = []
+    for i in range(40):
+        subj = f"http://t/s{i}"
+        rows.append((subj, RDF_TYPE, "http://t/T", "iri", True))
+        for a, (dt, _) in enumerate(kinds):
+            lex = f"{1990 + i % 17}-0{1 + i % 9}-1{a}" if dt == "date" else str(i * (a + 3) % 29)
+            rows.append((subj, f"http://t/a{a}", lex, "c", False))
+    triples = triples_df(spark, rows)
+    sc = spark.sparkContext
+    runs = iter(range(3))
+
+    def jobs(picked):
+        config = {"http://t/T": {
+            f"http://t/a{a}": AttrConfig(*kinds[a]) for a in picked
+        }}
+        group = f"ops-jobs-{next(runs)}"
+        sc.setJobGroup(group, group)
+        try:
+            out, _ = anonymize_triples(
+                triples, config, calculate_kpi=False, random_seed=7
+            )
+            out.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    jobs([0, 3])  # warm the session: both counts below run after this
+    assert jobs([0, 1, 2, 3, 4]) <= jobs([0, 3])
 
 
 def test_global_running_sum_matches_python_reference(spark):

@@ -175,7 +175,7 @@ def test_build_kg_plan_is_clean(spark):
 def test_generalize_plan_flat_at_large_g(spark):
     """W3 scale gate: boundary extraction must not inline a literal IN-list or
     run a driver loop over g — plan size stays O(1) as g grows to 10^4."""
-    from kgforge.anonymize.ops import generalize
+    from kgforge.anonymize.ops import AttrSpec, generalize
 
     n = 20_000
     col_df = spark.range(n).select(
@@ -184,14 +184,14 @@ def test_generalize_plan_flat_at_large_g(spark):
     )
     plans = {}
     for g in (10, 10_000):
-        df = generalize(col_df, "http://ex.org/attr", "double", g, n)
+        df = generalize(col_df, [AttrSpec("http://ex.org/attr", "double", g, n)])
         plans[g] = df._jdf.queryExecution().optimizedPlan().toString()
         assert " IN (" not in plans[g]
     # plan text must not grow with g (allow slack for the differing digits)
     assert len(plans[10_000]) < len(plans[10]) + 2_000
     # and the boundary join must be a broadcast (ranked side never shuffles
     # for the boundary lookup)
-    big = generalize(col_df, "http://ex.org/attr", "double", 10_000, n)
+    big = generalize(col_df, [AttrSpec("http://ex.org/attr", "double", 10_000, n)])
     phys = big._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in phys
 
@@ -199,7 +199,7 @@ def test_generalize_plan_flat_at_large_g(spark):
 def test_generalize_large_g_bounds_match_driver_formula(spark):
     """Value check at g=1000: DataFrame-built bounds equal the scalar
     median/format formulas computed in plain Python."""
-    from kgforge.anonymize.ops import generalize
+    from kgforge.anonymize.ops import AttrSpec, generalize
     from kgforge.anonymize.values import format_bound, median_value
 
     n, g = 5_000, 1_000
@@ -208,7 +208,7 @@ def test_generalize_large_g_bounds_match_driver_formula(spark):
         [(f"http://ex.org/r{i:05d}", str(v)) for i, v in enumerate(vals)],
         "subj string, obj_value string",
     )
-    out = generalize(col_df, "http://ex.org/a", "double", g, n)
+    out = generalize(col_df, [AttrSpec("http://ex.org/a", "double", g, n)])
     got_min = {
         r["subj"]: r["obj_value"]
         for r in out.filter(F.col("pred").endswith("min")).collect()

@@ -65,7 +65,7 @@ def test_frozen_bounds_agree_with_generalize_interior(spark):
     inside a bucket (only boundary ties may differ, by the documented
     value-function rule)."""
     from kgforge.anonymize.buckets import calculate_number_of_buckets
-    from kgforge.anonymize.ops import generalize
+    from kgforge.anonymize.ops import AttrSpec, generalize
     from kgforge.triples import RDF_MAX, RDF_MIN
 
     vals = [(str(i), float(v)) for i, v in enumerate(
@@ -77,7 +77,7 @@ def test_frozen_bounds_agree_with_generalize_interior(spark):
     )
     n = len(vals)
     g = calculate_number_of_buckets(n, 1)
-    out = generalize(df, "v", "double", g, n, F.col("_tie"))
+    out = generalize(df, [AttrSpec("v", "double", g, n)], F.col("_tie"))
     orig = {
         r["subj"]: int(r["obj_value"].rsplit("_", 1)[-1])
         for r in out.filter(F.col("pred") == "v_generalized").collect()
