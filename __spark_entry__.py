@@ -2201,8 +2201,7 @@ _MENTION_VOCAB = [
 
 
 def _doc_mentions(spark, sf_dir):
-    """The KG mention-detection operator (regex strategy: regexp_extract_all
-    + split-segment offset reconstruction) run over the documents table with
+    """The KG mention-detection operator run over the documents table with
     a corpus-word vocabulary — text pre-lowered and case folding disabled so
     the DuckDB oracle matches the exact same occurrences and offsets."""
     from kgforge.kg.mentions import detect_mentions
@@ -2216,7 +2215,7 @@ def _doc_mentions(spark, sf_dir):
         F.lower(F.col("text")).alias("text"),
         F.lit("").alias("media_ref"),
     )
-    m = detect_mentions(spans_like, "regex", vocab=_MENTION_VOCAB,
+    m = detect_mentions(spans_like, vocab=_MENTION_VOCAB,
                         case_insensitive=False)
     return m.select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
@@ -5865,7 +5864,6 @@ def _kg_triples(spark, sf_dir):
     )
     triples, _ = build_kg(
         docs,
-        mention_strategy="regex",
         collect_metrics=False,
         mention_vocab=_MENTION_VOCAB,
         mention_case_insensitive=False,
@@ -5995,7 +5993,6 @@ def _kg_diff(spark, sf_dir):
         )
         t, _ = build_kg(
             docs,
-            mention_strategy="regex",
             collect_metrics=False,
             mention_vocab=_MENTION_VOCAB,
             mention_case_insensitive=False,
@@ -6912,7 +6909,6 @@ def _kg_triples_mixed(spark, sf_dir):
     )
     triples, _ = build_kg(
         docs,
-        mention_strategy="regex",
         collect_metrics=False,
         mention_vocab=_MENTION_VOCAB,
         mention_case_insensitive=False,
@@ -7020,7 +7016,6 @@ def _kg_triples_geo(spark, sf_dir):
     )
     triples, _ = build_kg(
         corpus,
-        mention_strategy="regex",
         collect_metrics=False,
         mention_vocab=[n for (n, _, _, _) in catalog_rows],
         mention_case_insensitive=False,
@@ -7106,7 +7101,6 @@ def _kg_triples_parts(spark, sf_dir):
     )
     triples, _ = build_kg(
         corpus,
-        mention_strategy="regex",
         collect_metrics=False,
         mention_vocab=[n for (n, _, _, _) in catalog_rows],
         mention_case_insensitive=False,

@@ -113,11 +113,6 @@ def k_anonymity(
       perimeter boundary cells exact-verified by a shuffle join against
       only those cells' points.  No pair set, immune to a single giant
       group.
-    - ``"grouped"`` (≥3 randomized attributes) — per-group applyInPandas:
-      sort by the first attribute, numpy ``searchsorted`` window per
-      resource, vectorized verification of the remaining attributes over the
-      window.  Work is Σ|window| (the pairs passing attribute 1) but stays
-      in-memory per group — one giant group pins one partition.
     - ``"sliced"`` (≥2 randomized attributes, the ≥3-attr scale path) —
       stratify by (group, null-pattern); within a stratum, slice the first
       non-null attribute into slabs of width 2·benchmark so every query
@@ -242,7 +237,7 @@ def _dispatch(frame, n_used, rand_attrs, mode, pair_threshold,
         mode = "grid" if len(rand_attrs) == 2 else "sliced"
     if mode == "grid" and len(rand_attrs) != 2:
         mode = "ranges" if len(rand_attrs) == 1 else "sliced"
-    if mode in ("grouped", "sliced") and len(rand_attrs) == 1:
+    if mode == "sliced" and len(rand_attrs) == 1:
         mode = "ranges"
 
     if mode == "pairs":
@@ -251,8 +246,6 @@ def _dispatch(frame, n_used, rand_attrs, mode, pair_threshold,
         k = _k_ranges(frame, gcols, benches[0], (n_subj, int(st["no0"])))
     elif mode == "grid":
         k = _k_grid(frame, gcols, benches)
-    elif mode == "grouped":
-        k = _k_grouped(frame, gcols, benches)
     elif mode == "sliced":
         k = _k_sliced(frame, gcols, benches)
     else:
@@ -648,64 +641,6 @@ def _k_grid(frame, gcols, benches, grid: int = 256) -> int:
     for d in cleanup:
         d.unpersist()
     return k
-
-
-def _k_grouped(frame, gcols, benches) -> int:
-    """Per-group vectorized counting for ≥2 randomized attributes: sort the
-    group by attribute 0, searchsorted window per resource, numpy-verify the
-    remaining attributes over the window (no shuffled pair set)."""
-    import numpy as np
-    import pandas as pd
-
-    nattrs = len(benches)
-    full = _with_group_struct(
-        frame.select(
-            "subj", *gcols,
-            *[F.col(f"_{x}{j}") for j in range(nattrs) for x in "or"],
-        ),
-        gcols,
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        O = [pdf[f"_o{j}"].to_numpy(dtype=float) for j in range(nattrs)]
-        R = [pdf[f"_r{j}"].to_numpy(dtype=float) for j in range(nattrs)]
-        isnull = [np.isnan(O[j]) for j in range(nattrs)]
-        nn0 = np.flatnonzero(~isnull[0])
-        nn0 = nn0[np.argsort(O[0][nn0], kind="stable")]
-        sorted_o0 = O[0][nn0]
-        null0 = np.flatnonzero(isnull[0])
-        b0 = benches[0]
-        counts = np.zeros(n, dtype=np.int64)
-        for i in range(n):
-            if isnull[0][i]:
-                cand = null0
-            elif b0 is None:
-                continue
-            else:
-                lo = np.searchsorted(sorted_o0, R[0][i] - b0, side="left")
-                hi = np.searchsorted(sorted_o0, R[0][i] + b0, side="right")
-                cand = nn0[lo:hi]
-            ok = np.ones(cand.size, dtype=bool)
-            for j in range(1, nattrs):
-                bj = benches[j]
-                if isnull[j][i]:
-                    ok &= isnull[j][cand]
-                elif bj is None:
-                    ok[:] = False
-                    break
-                else:
-                    oc = O[j][cand]
-                    ok &= (
-                        ~isnull[j][cand]
-                        & (oc >= R[j][i] - bj)
-                        & (oc <= R[j][i] + bj)
-                    )
-            counts[i] = int(ok.sum())
-        return pd.DataFrame({"subj": pdf["subj"], "_cnt": counts})
-
-    cnts = full.groupBy("_gs").applyInPandas(fn, "subj string, _cnt long")
-    return _min_count(frame.select("subj"), cnts)
 
 
 def _k_sliced(frame, gcols, benches) -> int:

@@ -69,7 +69,7 @@ def link_mentions(mentions: DataFrame,
     ``cands`` overrides the built-in demo catalog with a caller-supplied
     (norm, eid, canonical, etype) DataFrame.  One output row per mention
     whose lowercased surface is a catalog ``norm``; mentions are unique on
-    (doc_id, span_idx, start) for every ``detect_mentions`` strategy."""
+    (doc_id, span_idx, start) in ``detect_mentions`` output."""
     if cands is None:
         cands = candidate_table(mentions.sparkSession)
     best = (

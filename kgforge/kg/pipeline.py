@@ -6,7 +6,7 @@ triple materialization with salted aggregation for hot entities → partitioned
 graph write with snapshot lineage (kgforge.kg.io).
 
 Every stage is a DataFrame transform; the only Python workers are the
-Arrow-batched mention scans (``mention_strategy="pandas"``).  The
+Arrow-batched mention scans (kgforge.kg.mentions).  The
 mention→entity aggregation is two-phase (salt then re-aggregate) so the ~100×
 hot entities in the corpus never pin a single reducer.
 """
@@ -114,7 +114,6 @@ def _canonicalize_surfaces(
 
 def build_kg(
     docs: DataFrame,
-    mention_strategy: str = "pandas",
     near_dup_threshold: float = 0.55,
     collect_metrics: bool = True,
     small_canon_threshold: int = 20_000,
@@ -149,8 +148,7 @@ def build_kg(
         metrics["n_spans"] = int(sum(kind_counts.values()))
 
     mentions = detect_mentions(
-        spans, strategy=mention_strategy, vocab=mention_vocab,
-        case_insensitive=mention_case_insensitive,
+        spans, vocab=mention_vocab, case_insensitive=mention_case_insensitive,
     )
     linked = link_mentions(mentions, cands=catalog).persist()
     if collect_metrics:

@@ -56,7 +56,6 @@ def stream_docs_to_triples(
     out_dir: str,
     checkpoint_dir: str,
     schema,
-    mention_strategy: str = "sql",
 ):
     """Incremental KG ingestion: each microbatch of docs is exploded, mentions
     detected and linked, and the resulting triples appended to the graph."""
@@ -71,7 +70,7 @@ def stream_docs_to_triples(
         if batch_df.isEmpty():
             return
         spans = explode_spans(batch_df)
-        linked = link_mentions(detect_mentions(spans, strategy=mention_strategy))
+        linked = link_mentions(detect_mentions(spans))
         triples = linked.select(
             F.concat(F.lit(DOC_NS), F.col("doc_id")).alias("subj"),
             F.lit(KG + "mentions").alias("pred"),

@@ -22,7 +22,6 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--n-docs", type=int, default=None,
                     help="synthesize N docs instead of deriving from sf-dir")
-    ap.add_argument("--mention-strategy", default="pandas")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -41,7 +40,7 @@ def main() -> None:
         fingerprint = f"testdata:{args.sf_dir}:42"
 
     def build():
-        triples, metrics = build_kg(docs, mention_strategy=args.mention_strategy)
+        triples, metrics = build_kg(docs)
         print(json.dumps({"stage_metrics": metrics}))
         return triples
 

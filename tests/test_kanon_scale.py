@@ -1,4 +1,4 @@
-"""A6 scale-path equivalence: the pairs / ranges / grouped k-anonymity
+"""A6 scale-path equivalence: the pairs / ranges / grid / sliced k-anonymity
 strategies must produce identical k, and the scalable paths must work on the
 skew case that kills the pair join (one generalization group = whole table).
 """
@@ -105,14 +105,6 @@ def test_ranges_equals_pairs_single_attr(spark):
     assert k_pairs == k_ranges == _expected_k(data, [A0])
 
 
-def test_grouped_equals_pairs_two_attrs(spark):
-    triples, data = _mk_triples(spark, 300, n_groups=4, rand_attrs=[A0, A1])
-    used = [GEN, A0, A1]
-    k_pairs, _ = k_anonymity(triples, T, used, CFG, mode="pairs")
-    k_grouped, _ = k_anonymity(triples, T, used, CFG, mode="grouped")
-    assert k_pairs == k_grouped == _expected_k(data, [A0, A1])
-
-
 def test_ranges_survives_single_giant_group(spark):
     """The skew case: no generalization attr → every resource lands in ONE
     null group.  The pair join would build n² rows; the ranges path is a
@@ -184,15 +176,13 @@ def test_sliced_equals_pairs_three_attrs(spark):
                                 rand_attrs=[A0, A1, A2], null_frac=0.15)
     used = [GEN, A0, A1, A2]
     k_pairs, _ = k_anonymity(triples, T, used, CFG, mode="pairs")
-    k_grouped, _ = k_anonymity(triples, T, used, CFG, mode="grouped")
     k_sliced, _ = k_anonymity(triples, T, used, CFG, mode="sliced")
-    assert k_pairs == k_grouped == k_sliced == _expected_k(data, [A0, A1, A2])
+    assert k_pairs == k_sliced == _expected_k(data, [A0, A1, A2])
 
 
 def test_sliced_survives_single_giant_group_three_attrs(spark):
-    """The ≥3-attr skew case: one group, 20k rows — `grouped` would pin the
-    whole group into one pandas partition, `pairs` would build 4·10⁸ rows;
-    the sliced path (attr-0 slabs + cogrouped searchsorted) must finish
+    """The ≥3-attr skew case: one group, 20k rows — `pairs` would build
+    4·10⁸ rows; the sliced path (attr-0 slabs + cogrouped searchsorted) must finish
     distributed and match a numpy oracle."""
     n = 20_000
     rng = np.random.default_rng(17)

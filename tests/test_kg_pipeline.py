@@ -1,5 +1,6 @@
 """KG-construction layer: determinism, span-sequence invariant, mention
-strategy equivalence, LSH+CC canonicalization, checkpoint resume."""
+detection against a regex mirror, LSH+CC canonicalization, checkpoint
+resume."""
 
 from __future__ import annotations
 
@@ -88,7 +89,7 @@ def _assert_links_match_mirror(mentions, catalog_rows, cands=None):
 def test_link_mentions_matches_mirror(docs):
     from kgforge.kg.vocab import ENTITIES
 
-    mentions = detect_mentions(explode_spans(docs), "pandas").persist()
+    mentions = detect_mentions(explode_spans(docs)).persist()
     catalog_rows = [
         (v.lower(), e.eid, e.canonical, e.etype)
         for e in ENTITIES for v in e.variants
@@ -119,23 +120,88 @@ def test_link_mentions_mirror_mixed_case_ties(spark):
         "media_ref:string,offset:int>>",
     )
     mentions = detect_mentions(
-        explode_spans(docs), "regex", vocab=["Acme Corp", "Beta", "Gamma"])
+        explode_spans(docs), vocab=["Acme Corp", "Beta", "Gamma"])
     cands = spark.createDataFrame(catalog_rows, CATALOG_SCHEMA)
     _assert_links_match_mirror(mentions, catalog_rows, cands=cands)
 
 
-def test_mention_strategies_agree(spark, docs):
-    spans = explode_spans(docs)
-    key = ["doc_id", "span_idx", "start", "surface"]
-    a = {tuple(r) for r in detect_mentions(spans, "pandas").select(*key).collect()}
-    c = {tuple(r) for r in detect_mentions(spans, "regex").select(*key).collect()}
-    assert a == c, f"pandas-only={sorted(a - c)[:5]} regex-only={sorted(c - a)[:5]}"
-    b = {tuple(r) for r in detect_mentions(spans, "sql").select(*key).collect()}
-    only_a, only_b = a - b, b - a
-    assert not only_a and not only_b, (
-        f"pandas-only={sorted(only_a)[:5]} sql-only={sorted(only_b)[:5]}"
+_SPANS_SCHEMA = (
+    "doc_id string, spans array<struct<kind:string,text:string,"
+    "media_ref:string,offset:int>>"
+)
+
+
+def _re_mirror_mentions(span_rows, vocab, case_insensitive) -> set:
+    """Brute-force detection: Python ``re.finditer`` over the escaped,
+    longest-first alternation of ``vocab``, per text span."""
+    import re
+
+    rx = re.compile(
+        "|".join(re.escape(v) for v in sorted(vocab, key=len, reverse=True)),
+        re.IGNORECASE if case_insensitive else 0,
     )
-    assert len(a) > 0
+    return {
+        (r["doc_id"], r["span_idx"], r["offset"], m.group(0), m.start())
+        for r in span_rows if r["kind"] == "text"
+        for m in rx.finditer(r["text"])
+    }
+
+
+def test_detect_mentions_matches_re_mirror(spark, docs):
+    """``detect_mentions`` equals a ``re.finditer`` mirror on the 300-doc
+    fixture, on hand-made multi-span docs (non-zero offsets, a media span,
+    the ``Vienna`` / ``Vienna Austria`` prefix pair, the ``A. Muller``
+    metacharacter surface) and with a ``vocab=`` override and
+    ``case_insensitive=False`` over pre-lowered text.
+
+    The alternation has no word boundary (``Alpine Analytics AG`` matches
+    the start of "agreement"); that defect is recorded in ROADMAP's open
+    items and is not fixed here, so the mirror shares it."""
+    from kgforge.kg.vocab import ALL_SURFACES
+
+    key = ["doc_id", "span_idx", "offset", "surface", "start"]
+
+    def check(d, vocab=None, case_insensitive=True):
+        spans = explode_spans(d)
+        got = {
+            tuple(r) for r in detect_mentions(
+                spans, vocab=vocab, case_insensitive=case_insensitive,
+            ).select(*key).collect()
+        }
+        want = _re_mirror_mentions(
+            spans.collect(), vocab or ALL_SURFACES, case_insensitive)
+        assert got == want and want, (
+            f"only-got={sorted(got - want)[:5]} only-want={sorted(want - got)[:5]}")
+        return got
+
+    check(docs)
+
+    hand = spark.createDataFrame(
+        [("d1", [("text", "Vienna Austria and vienna, then VIENNA AUSTRIA", "", 0),
+                 ("image", "Vienna", "img/1.png", 48),
+                 ("text", "A. Muller met AX Muller in Wien", "", 60)]),
+         ("d2", [("text", "no entity here", "", 0),
+                 ("text", "a. muller visited Vienna", "", 15)])],
+        _SPANS_SCHEMA,
+    )
+    got = check(hand)
+    assert ("d1", 0, 0, "Vienna Austria", 0) in got
+    assert ("d1", 2, 60, "A. Muller", 0) in got
+    assert ("d1", 1) not in {r[:2] for r in got}  # the image span
+
+    # the oracle callers' mode: pre-lowered text, case folding off
+    vocab = ["acme", "acme corp", "x.y"]
+    raw = spark.createDataFrame(
+        [("d1", [("text", "acme corp bought acme and x.y, not xzy", "", 0)]),
+         ("d2", [("text", "ACME CORP is matched only lowered; x.y", "", 7)])],
+        _SPANS_SCHEMA,
+    )
+    lowered = raw.select("doc_id", F.transform("spans", lambda x: x.withField(
+        "text", F.lower(x["text"]))).alias("spans"))
+    assert ("d2", 0, 7, "acme corp", 0) in check(
+        lowered, vocab, case_insensitive=False)
+    assert not any(r[0] == "d2" and r[3] != "x.y"
+                   for r in check(raw, vocab, case_insensitive=False))
 
 
 def test_connected_components_basic(spark):
@@ -389,7 +455,6 @@ def test_update_kg_stable_labels(spark):
         )
 
     kw = dict(
-        mention_strategy="regex",
         mention_vocab=surfaces, mention_case_insensitive=False,
         catalog=catalog,
     )

@@ -114,10 +114,13 @@ def test_jvm_link_path_has_no_python(spark):
     from kgforge.kg.mentions import detect_mentions
     from kgforge.kg.synth import explode_spans, synth_docs
 
+    # the detector is an Arrow mapInPandas scan; checkpointing its output
+    # hands link_mentions a JVM-only input, so the gate sees only linking
     spans = explode_spans(synth_docs(spark, 50))
-    linked = link_mentions(detect_mentions(spans, "regex"))
+    mentions = detect_mentions(spans).localCheckpoint(eager=True)
+    linked = link_mentions(mentions)
     plan = _plan(linked)
-    for marker in ("BatchEvalPython", "ArrowEvalPython"):
+    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert marker not in plan, f"{marker} found in JVM-only link path"
     # the catalog is scored and reduced on the broadcast side; the mentions
     # stream through the join without a shuffle
@@ -153,6 +156,8 @@ def test_range_join_is_equi_key_not_nested_loop(spark, plans):
 
 
 def test_doc_mentions_and_links_are_jvm_only(spark, plans):
+    # the mention scan itself is one Arrow mapInPandas stage; nothing
+    # around it may evaluate Python row by row
     for q in ("doc_mentions", "doc_links"):
         plan = plans[q]
         for marker in ("BatchEvalPython", "ArrowEvalPython"):

@@ -94,10 +94,7 @@ def test_stream_docs_to_triples_equals_batch_build_kg(spark, tmp_path):
         "partial failed-epoch output survived the idempotent retry"
     )
 
-    triples, _ = build_kg(
-        spark.read.parquet(docs_dir), mention_strategy="sql",
-        collect_metrics=False,
-    )
+    triples, _ = build_kg(spark.read.parquet(docs_dir), collect_metrics=False)
     want = {
         tuple(r)
         for r in triples.filter(F.col("pred") == KG + "mentions").collect()
