@@ -1,6 +1,10 @@
-"""A6 scale-path equivalence: the pairs / ranges / grid / sliced k-anonymity
+"""A6 scale-path equivalence: the pairs / ranges / sliced k-anonymity
 strategies must produce identical k, and the scalable paths must work on the
 skew case that kills the pair join (one generalization group = whole table).
+
+The numpy-mirror scale sweeps are ``slow``; one small equivalence test per
+scale path, the routing rule and the cache-release checks run in the
+default lane.
 """
 
 from __future__ import annotations
@@ -11,9 +15,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-pytestmark = pytest.mark.slow  # numpy-mirror scale sweeps; kanon oracles stay in the default lane
-
-from kgforge.anonymize.kpi import k_anonymity
+from kgforge.anonymize import kpi
+from kgforge.anonymize.kpi import PAIR_THRESHOLD, auto_mode, k_anonymity
 from kgforge.config import AttrConfig
 from kgforge.triples import RDF_TYPE
 
@@ -101,10 +104,12 @@ def test_ranges_equals_pairs_single_attr(spark):
     triples, data = _mk_triples(spark, 400, n_groups=5, rand_attrs=[A0])
     used = [GEN, A0]
     k_pairs, _ = k_anonymity(triples, T, used, CFG, mode="pairs")
-    k_ranges, _ = k_anonymity(triples, T, used, CFG, mode="ranges")
+    k_ranges, ran = k_anonymity(triples, T, used, CFG, mode="ranges")
+    assert ran == "ranges"
     assert k_pairs == k_ranges == _expected_k(data, [A0])
 
 
+@pytest.mark.slow
 def test_ranges_survives_single_giant_group(spark):
     """The skew case: no generalization attr → every resource lands in ONE
     null group.  The pair join would build n² rows; the ranges path is a
@@ -130,47 +135,117 @@ def test_ranges_survives_single_giant_group(spark):
     assert k == int((hi - lo).min())
 
 
-def test_auto_dispatch(spark):
-    triples, data = _mk_triples(spark, 200, n_groups=3, rand_attrs=[A0])
-    used = [GEN, A0]
-    # auto with a tiny threshold must take the scalable path and still agree
-    k_auto_small, _ = k_anonymity(triples, T, used, CFG, mode="auto", pair_threshold=10)
-    k_auto_big, _ = k_anonymity(triples, T, used, CFG, mode="auto")
-    assert k_auto_small == k_auto_big == _expected_k(data, [A0])
+@pytest.mark.parametrize(
+    "n_rand, at_threshold, above_threshold",
+    [(0, "groups", "groups"), (1, "pairs", "ranges"),
+     (2, "pairs", "sliced"), (3, "pairs", "sliced")],
+)
+def test_auto_mode_routes_by_subjects_and_attr_count(n_rand, at_threshold,
+                                                     above_threshold):
+    """Two attributes above the threshold route to sliced like three or more
+    (the 2-D grid counter they once went to never beat it)."""
+    assert auto_mode(PAIR_THRESHOLD, n_rand) == at_threshold
+    assert auto_mode(PAIR_THRESHOLD + 1, n_rand) == above_threshold
 
 
+@pytest.mark.parametrize("mode", ["grid", "groups", "Pairs"])
+def test_unknown_mode_is_rejected_before_any_job(mode):
+    with pytest.raises(ValueError, match="unknown k-anonymity mode"):
+        k_anonymity(None, T, [A0], CFG, mode=mode)
+
+
+def _typed_only(spark, n, extra=()):
+    rows = [(f"http://ex.org/r{i:02d}", RDF_TYPE, T, "iri", True) for i in range(n)]
+    return spark.createDataFrame(
+        rows + list(extra),
+        "subj string, pred string, obj_value string, obj_dtype string, obj_is_iri boolean",
+    )
+
+
+@pytest.mark.slow
 def test_nulls_and_empty_bench(spark):
-    # all originals null for one attr → bench None → only null-pairs count
-    rows = []
+    # all originals null → bench None → only null-pairs count
+    triples = _typed_only(spark, 20)
+    for m, used in (("pairs", [A0]), ("ranges", [A0]),
+                    ("pairs", [A0, A1]), ("sliced", [A0, A1])):
+        k, ran = k_anonymity(triples, T, used, CFG, mode=m)
+        assert (k, ran) == (20, m)
+    # originals present but no _randomized triple → bench None and the
+    # non-null stratum matches nothing
+    extra = []
     for i in range(20):
         s = f"http://ex.org/r{i:02d}"
-        rows.append((s, RDF_TYPE, T, "iri", True))
-    triples = spark.createDataFrame(
-        rows, "subj string, pred string, obj_value string, obj_dtype string, obj_is_iri boolean"
-    )
-    for m in ("pairs", "ranges"):
-        k, _ = k_anonymity(triples, T, [A0], CFG, mode=m)
-        assert k == 20, m
+        extra += [(s, A0, repr(float(i)), "xsd:double", False),
+                  (s, A0 + "_randomized", repr(i + 0.5), "xsd:double", False),
+                  (s, A1, repr(float(2 * i)), "xsd:double", False)]
+    triples = _typed_only(spark, 20, extra)
+    for m, used in (("pairs", [A1]), ("ranges", [A1]),
+                    ("pairs", [A0, A1]), ("sliced", [A0, A1])):
+        k, ran = k_anonymity(triples, T, used, CFG, mode=m)
+        assert (k, ran) == (0, m)
+    # no subject of the type at all
+    for m in ("pairs", "sliced"):
+        k, ran = k_anonymity(_typed_only(spark, 0), T, [A0, A1], CFG, mode=m)
+        assert (k, ran) == (0, m)
 
 
-def test_grid_equals_pairs_two_attrs(spark):
-    triples, data = _mk_triples(spark, 350, n_groups=4, rand_attrs=[A0, A1],
-                                null_frac=0.15)
-    used = [GEN, A0, A1]
-    k_pairs, _ = k_anonymity(triples, T, used, CFG, mode="pairs")
-    k_grid, _ = k_anonymity(triples, T, used, CFG, mode="grid")
-    assert k_pairs == k_grid == _expected_k(data, [A0, A1])
+def _persistent_rdds(spark) -> set:
+    """Ids of the persisted RDDs.  Compared as sets, not counts: the context
+    cleaner may free another test's unreachable cache during the call."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
-def test_sliced_equals_pairs_two_attrs(spark):
-    triples, data = _mk_triples(spark, 300, n_groups=4, rand_attrs=[A0, A1],
-                                null_frac=0.2)
+def test_k_anonymity_releases_its_caches(spark):
+    triples, _ = _mk_triples(spark, 60, n_groups=3, rand_attrs=[A0, A1])
+    # an explicit "ranges" with two attributes resolves to sliced
+    for used, mode, ran in (([GEN], "auto", "groups"), ([GEN, A0], "pairs", "pairs"),
+                            ([GEN, A0], "ranges", "ranges"),
+                            ([GEN, A0, A1], "ranges", "sliced")):
+        before = _persistent_rdds(spark)
+        _, got = k_anonymity(triples, T, used, CFG, mode=mode)
+        assert got == ran
+        assert _persistent_rdds(spark) <= before, ran
+
+
+def test_k_anonymity_releases_its_caches_on_failure(spark, monkeypatch):
+    """A counting job that fails after the path's caches are filled must
+    still release them."""
+    import kgforge.rank as rank
+
+    triples, _ = _mk_triples(spark, 60, n_groups=3, rand_attrs=[A0, A1])
+    real_runsum = rank.with_global_running_sum
+
+    def failing_runsum(*args, **kwargs):
+        real_runsum(*args, **kwargs)  # fills the base and range caches
+        raise RuntimeError("injected")
+
+    def failing_min_count(subjects, cnts):
+        cnts.count()
+        raise RuntimeError("injected")
+
+    monkeypatch.setattr(rank, "with_global_running_sum", failing_runsum)
+    monkeypatch.setattr(kpi, "_min_count", failing_min_count)
+    for used, mode in (([GEN, A0], "ranges"), ([GEN, A0, A1], "sliced")):
+        before = _persistent_rdds(spark)
+        with pytest.raises(RuntimeError, match="injected"):
+            k_anonymity(triples, T, used, CFG, mode=mode)
+        assert _persistent_rdds(spark) <= before, mode
+
+
+@pytest.mark.parametrize("n, null_frac", [
+    (300, 0.2),
+    pytest.param(350, 0.15, marks=pytest.mark.slow),
+])
+def test_sliced_equals_pairs_two_attrs(spark, n, null_frac):
+    triples, data = _mk_triples(spark, n, n_groups=4, rand_attrs=[A0, A1],
+                                null_frac=null_frac)
     used = [GEN, A0, A1]
     k_pairs, _ = k_anonymity(triples, T, used, CFG, mode="pairs")
     k_sliced, _ = k_anonymity(triples, T, used, CFG, mode="sliced")
     assert k_pairs == k_sliced == _expected_k(data, [A0, A1])
 
 
+@pytest.mark.slow
 def test_sliced_equals_pairs_three_attrs(spark):
     triples, data = _mk_triples(spark, 250, n_groups=3,
                                 rand_attrs=[A0, A1, A2], null_frac=0.15)
@@ -180,6 +255,7 @@ def test_sliced_equals_pairs_three_attrs(spark):
     assert k_pairs == k_sliced == _expected_k(data, [A0, A1, A2])
 
 
+@pytest.mark.slow
 def test_sliced_survives_single_giant_group_three_attrs(spark):
     """The ≥3-attr skew case: one group, 20k rows — `pairs` would build
     4·10⁸ rows; the sliced path (attr-0 slabs + cogrouped searchsorted) must finish
@@ -226,10 +302,11 @@ def test_sliced_survives_single_giant_group_three_attrs(spark):
     assert k == kmin
 
 
-def test_grid_survives_single_giant_group_two_attrs(spark):
+@pytest.mark.slow
+def test_sliced_survives_single_giant_group_two_attrs(spark):
     """The 2-attr skew case: one group, 20k rows — the pair join would build
-    4·10⁸ pairs; the grid path (prefix-matrix interior + perimeter-verified
-    boundary) must finish and match a numpy rectangle-count oracle."""
+    4·10⁸ pairs; the sliced path must finish and match a numpy
+    rectangle-count oracle."""
     n = 20_000
     rng = np.random.default_rng(13)
     o0 = np.round(rng.uniform(0, 1000, n), 3)
@@ -247,7 +324,7 @@ def test_grid_survives_single_giant_group_two_attrs(spark):
     triples = spark.createDataFrame(
         rows, "subj string, pred string, obj_value string, obj_dtype string, obj_is_iri boolean"
     )
-    k, _ = k_anonymity(triples, T, [A0, A1], CFG, mode="grid")
+    k, _ = k_anonymity(triples, T, [A0, A1], CFG, mode="sliced")
     b0 = 2.0 * np.abs(o0 - r0).mean()
     b1 = 2.0 * np.abs(o1 - r1).mean()
     # numpy oracle: sort by o0, window via searchsorted, verify o1
@@ -261,22 +338,3 @@ def test_grid_survives_single_giant_group_two_attrs(spark):
         c = int(((seg >= r1[i] - b1) & (seg <= r1[i] + b1)).sum())
         kmin = c if kmin is None else min(kmin, c)
     assert k == kmin
-
-
-def test_auto_two_attr_routes_by_group_count(spark):
-    """Auto dispatch above the pair threshold: few groups → grid (driver
-    prefix matrices are bounded), many groups → sliced (executor-resident).
-    Both must agree with pairs on the same input."""
-    used = [GEN, A0, A1]
-    triples, data = _mk_triples(spark, 300, n_groups=40, rand_attrs=[A0, A1])
-
-    k_many, mode_many = k_anonymity(triples, T, used, CFG, mode="auto",
-                                    pair_threshold=10, grid_group_budget=8)
-    assert mode_many == "sliced"
-
-    k_few, mode_few = k_anonymity(triples, T, used, CFG, mode="auto",
-                                  pair_threshold=10, grid_group_budget=1000)
-    assert mode_few == "grid"
-
-    k_pairs, _ = k_anonymity(triples, T, used, CFG, mode="pairs")
-    assert k_many == k_few == k_pairs == _expected_k(data, [A0, A1])
