@@ -64,6 +64,21 @@ def _mask_names(spark, sf_dir):
     )
 
 
+def _generalized(col_df, spec):
+    """``generalize`` over one attribute, tie-broken by ``_tie`` and
+    checkpointed, so the rank cache it persisted is released here."""
+    from kgforge.anonymize.ops import generalize
+
+    caches: list = []
+    try:
+        return generalize(
+            col_df, [spec], F.col("_tie"), cleanup=caches
+        ).localCheckpoint(eager=True)
+    finally:
+        for c in caches:
+            c.unpersist()
+
+
 def _acctbal_column(spark, sf_dir):
     cust = _read(spark, sf_dir, "customer")
     return cust.filter(F.col("c_acctbal").isNotNull()).select(
@@ -75,12 +90,12 @@ def _acctbal_column(spark, sf_dir):
 
 def _generalize_acctbal(spark, sf_dir):
     from kgforge.anonymize.buckets import calculate_number_of_buckets
-    from kgforge.anonymize.ops import AttrSpec, generalize
+    from kgforge.anonymize.ops import AttrSpec
 
     col_df = _acctbal_column(spark, sf_dir)
     n = col_df.count()
     g = calculate_number_of_buckets(n, 1)
-    out = generalize(col_df, [AttrSpec("acctbal", "double", g, n)], F.col("_tie"))
+    out = _generalized(col_df, AttrSpec("acctbal", "double", g, n))
     return (
         out.filter(F.col("pred") == "acctbal_generalized")
         .select(
@@ -92,13 +107,13 @@ def _generalize_acctbal(spark, sf_dir):
 
 def _generalize_acctbal_bounds(spark, sf_dir):
     from kgforge.anonymize.buckets import calculate_number_of_buckets
-    from kgforge.anonymize.ops import AttrSpec, generalize
+    from kgforge.anonymize.ops import AttrSpec
     from kgforge.triples import RDF_MAX, RDF_MIN
 
     col_df = _acctbal_column(spark, sf_dir)
     n = col_df.count()
     g = calculate_number_of_buckets(n, 1)
-    out = generalize(col_df, [AttrSpec("acctbal", "double", g, n)], F.col("_tie"))
+    out = _generalized(col_df, AttrSpec("acctbal", "double", g, n))
     bounds = (
         out.filter(F.col("pred").isin([RDF_MIN, RDF_MAX]))
         .groupBy(F.substring_index("subj", "_", -1).try_cast("bigint").alias("bucket"))
@@ -116,7 +131,7 @@ def _generalize_acctbal_bounds(spark, sf_dir):
 
 def _generalize_orderdate(spark, sf_dir):
     from kgforge.anonymize.buckets import calculate_number_of_buckets
-    from kgforge.anonymize.ops import AttrSpec, generalize
+    from kgforge.anonymize.ops import AttrSpec
 
     orders = _read(spark, sf_dir, "orders")
     col_df = orders.filter(F.col("o_orderdate").isNotNull()).select(
@@ -126,7 +141,7 @@ def _generalize_orderdate(spark, sf_dir):
     )
     n = col_df.count()
     g = calculate_number_of_buckets(n, 2)
-    out = generalize(col_df, [AttrSpec("odate", "date", g, n)], F.col("_tie"))
+    out = _generalized(col_df, AttrSpec("odate", "date", g, n))
     return (
         out.filter(F.col("pred") == "odate_generalized")
         .select(
@@ -6585,7 +6600,7 @@ def _kg_anon_mention_counts(spark, sf_dir):
     partitioned global rank) to that attribute.  Docs with zero mentions
     drop out exactly like the reference's null-drop (P4)."""
     from kgforge.anonymize.buckets import calculate_number_of_buckets
-    from kgforge.anonymize.ops import AttrSpec, generalize
+    from kgforge.anonymize.ops import AttrSpec
 
     m = _doc_mentions(spark, sf_dir)
     counts = m.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nm"))
@@ -6596,7 +6611,7 @@ def _kg_anon_mention_counts(spark, sf_dir):
     )
     n = col_df.count()
     g = calculate_number_of_buckets(n, 1)
-    out = generalize(col_df, [AttrSpec("mentions", "integer", g, n)], F.col("_tie"))
+    out = _generalized(col_df, AttrSpec("mentions", "integer", g, n))
     return out.filter(F.col("pred") == "mentions_generalized").select(
         F.col("subj").try_cast("bigint").alias("doc_id"),
         F.substring_index("obj_value", "_", -1).try_cast("bigint").alias("bucket"),

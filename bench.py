@@ -555,7 +555,10 @@ def _anon_scale_run(spark, n: int = 1_000_000, kanon_only: bool = False) -> dict
     col_df = base.select(subj.alias("subj"), o.cast("string").alias("obj_value"))
     g = calculate_number_of_buckets(n, 1)
     t0 = time.time()
-    generalize(col_df, [AttrSpec(A, "double", g, n)]).count()
+    caches: list = []
+    generalize(col_df, [AttrSpec(A, "double", g, n)], cleanup=caches).count()
+    for c in caches:
+        c.unpersist()
     out["generalize_1m"] = round(time.time() - t0, 3)
     out["generalize_1m_buckets"] = int(g)
     triples.unpersist()
@@ -665,8 +668,6 @@ def main() -> None:
     _warmup(spark)
     SNAPSHOT["iceberg_available"] = bool(_iceberg_probe(spark))
 
-    from kgforge.rank import release_rank_caches
-
     # ---- section: headline cold + warm ---------------------------------
     timings: dict[str, float] = {}
     warm: dict[str, float] = {}
@@ -674,7 +675,6 @@ def main() -> None:
         t0 = time.time()
         qmap[name](spark, sf_dir).count()
         timings[name] = round(time.time() - t0, 3)
-        release_rank_caches()
     SNAPSHOT["queries"] = timings
     SNAPSHOT["value"] = round(sum(timings.values()), 3)
     done.append("headline_cold")
@@ -683,7 +683,6 @@ def main() -> None:
         t0 = time.time()
         qmap[name](spark, sf_dir).count()
         warm[name] = round(min(time.time() - t0, timings[name]), 3)
-        release_rank_caches()
     SNAPSHOT["queries_warm"] = warm
     SNAPSHOT["queries_warm_total"] = round(sum(warm.values()), 3)
     done.append("headline_warm")
@@ -835,7 +834,6 @@ def main() -> None:
             t0 = time.time()
             qmap[qname](spark, sf_dir).count()
             extras[name] = round(time.time() - t0, 3)
-            release_rank_caches()
             if not budget.fits(90):
                 skipped.append("extras_tail")
                 break

@@ -35,7 +35,6 @@ from kgforge.anonymize import kpi as kpi_mod
 from kgforge.anonymize import ops
 from kgforge.anonymize.buckets import calculate_number_of_buckets
 from kgforge.config import AnonymizationConfig, AttrConfig, DEMO_PREFIX
-from kgforge.rank import release_rank_caches
 from kgforge.triples import RDF_TYPE, triples_df
 
 _SUFFIX = {
@@ -139,41 +138,47 @@ def anonymize_triples(
                 )
 
         order_col = F.col("_tie")
-        if "masking" in batches:
-            new_parts.append(ops.mask(long_df, batches["masking"]))
-        if "generalization" in batches:
-            new_parts.append(
-                ops.generalize(long_df, batches["generalization"], order_col)
-            )
-        if "randomization" in batches:
-            new_parts.append(
-                ops.randomize(
-                    long_df, batches["randomization"], seed, order_col, rng_mode
+        # the rank caches generalize persists for this type; the checkpoint
+        # below materializes every operator plan, so they go right after it
+        caches: list[DataFrame] = []
+        try:
+            if "masking" in batches:
+                new_parts.append(ops.mask(long_df, batches["masking"]))
+            if "generalization" in batches:
+                new_parts.append(
+                    ops.generalize(
+                        long_df, batches["generalization"], order_col, cleanup=caches
+                    )
                 )
-            )
+            if "randomization" in batches:
+                new_parts.append(
+                    ops.randomize(
+                        long_df, batches["randomization"], seed, order_col, rng_mode
+                    )
+                )
 
-        written = triples
-        if used:
-            if not include_original_data:
-                written = _delete_originals(written, pivot, attrs, used)
-            for part in new_parts:
-                written = written.unionByName(
-                    part.select("subj", "pred", "obj_value", "obj_dtype", "obj_is_iri")
-                )
-            if kpi_rows:
-                written = written.unionByName(triples_df(spark, kpi_rows))
-            # Lineage truncation, not just caching: each operator stacks a
-            # rank/bucket/noise subtree onto the shared triple table.
-            # Without a checkpoint the analyzed plan grows multiplicatively per
-            # type — analysis time dominates tiny inputs and the driver can OOM
-            # just rendering plan strings for the SQL listener.  One truncation
-            # per type covers the write-back and the deletes; the KPI triple
-            # and the renames below are narrow unions/projections on top.
-            written = _truncate(written)
-            # the checkpoint materialized every operator plan for this type,
-            # so the rank caches the operators pinned (range-partitioned sort
-            # frames) are now redundant — release them before the next type
-            release_rank_caches()
+            written = triples
+            if used:
+                if not include_original_data:
+                    written = _delete_originals(written, pivot, attrs, used)
+                for part in new_parts:
+                    written = written.unionByName(part.select(
+                        "subj", "pred", "obj_value", "obj_dtype", "obj_is_iri"
+                    ))
+                if kpi_rows:
+                    written = written.unionByName(triples_df(spark, kpi_rows))
+                # Lineage truncation, not just caching: each operator stacks
+                # a rank/bucket/noise subtree onto the shared triple table.
+                # Without a checkpoint the analyzed plan grows
+                # multiplicatively per type — analysis time dominates tiny
+                # inputs and the driver can OOM just rendering plan strings
+                # for the SQL listener.  One truncation per type covers the
+                # write-back and the deletes; the KPI triple and the renames
+                # below are narrow unions/projections on top.
+                written = _truncate(written)
+        finally:
+            for c in caches:
+                c.unpersist()
 
         if calculate_kpi:
             # the KPI runs on the pre-delete model, like the reference (KPI at

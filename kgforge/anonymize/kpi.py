@@ -296,7 +296,7 @@ def _with_group_struct(ent, gcols):
     return ent.withColumn("_gs", key)
 
 
-def _counts_1d(stratum, bench, cleanup: list | None = None) -> "DataFrame":
+def _counts_1d(stratum, bench, cleanup: list) -> "DataFrame":
     """(_cnt) interval counts within a (_gs, _o, _r) stratum — the
     distributed subMap event/prefix-sum core.
 

@@ -128,7 +128,7 @@ def _bucket_triple(b: str, pred: str, value: str, dtype: str) -> str:
 
 
 def generalize(
-    col_df: DataFrame, specs: list[AttrSpec], order_col=None
+    col_df: DataFrame, specs: list[AttrSpec], order_col=None, *, cleanup: list
 ) -> DataFrame:
     """Equal-frequency generalization (reference: Generalization.java:30-104)
     of every attribute in ``specs`` at once.
@@ -148,6 +148,8 @@ def generalize(
     ``groupBy(_k, boundary)`` yields every attribute's bounds — plan size is
     O(1) in g, so g ≈ 10⁶ (k ≈ 10¹²) works.  Expressions are SQL text: the
     plan is built in a few driver round trips, not one per expression node.
+    The rank's persisted frame goes to ``cleanup``; the caller unpersists it
+    after its last action over the result.
     """
     _check_datatypes(specs)
     tiebreak = order_col if order_col is not None else F.col("subj")
@@ -155,7 +157,7 @@ def generalize(
         "_v", F.expr(parse_sql("_dt", "obj_value"))
     )
     ranked = with_global_rank(
-        d, [F.col("_k"), F.col("_v"), tiebreak], out="_grank"
+        d, [F.col("_k"), F.col("_v"), tiebreak], out="_grank", cleanup=cleanup
     ).withColumn("_rank", F.expr("_grank - _koff"))
 
     # first[j] = ceil((_rank + j) * g / n): the smallest boundary c with

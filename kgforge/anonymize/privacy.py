@@ -215,7 +215,7 @@ def microaggregate(
     Returns the input columns plus ``out`` (double group centroid),
     ``{out}_n`` (group size) and ``{out}_gid``.  Requires ``k >= 1`` and
     a unique ``id_col`` for deterministic tie-breaking."""
-    from kgforge.rank import release_rank_caches, with_global_rank
+    from kgforge.rank import with_global_rank
 
     if k < 1:
         raise ValueError("microaggregate requires k >= 1")
@@ -227,8 +227,11 @@ def microaggregate(
             .withColumn(f"{out}_gid", F.lit(None).cast("bigint"))
         )
     n_groups = max(n_total // k, 1)
+    caches: list = []
     try:
-        ranked = with_global_rank(df, [F.col(value_col), F.col(id_col)])
+        ranked = with_global_rank(
+            df, [F.col(value_col), F.col(id_col)], cleanup=caches
+        )
         gid = F.least(
             F.expr(f"CAST(_rank AS BIGINT) div {int(k)}"),
             F.lit(n_groups - 1).cast("bigint"),
@@ -240,7 +243,8 @@ def microaggregate(
             eager=True
         )
     finally:
-        release_rank_caches()
+        for c in caches:
+            c.unpersist()
     cents = assigned.groupBy(f"{out}_gid").agg(
         F.avg(F.col(value_col).cast("double")).alias(out),
         F.count(F.lit(1)).alias(f"{out}_n"),
@@ -280,15 +284,18 @@ def rank_swap(
     the input columns plus ``out`` (the swapped value).  Requires a
     unique ``id_col`` for deterministic tie-breaking and ``block >= 1``
     (block 1 is the identity)."""
-    from kgforge.rank import release_rank_caches, with_global_rank
+    from kgforge.rank import with_global_rank
 
     if block < 1:
         raise ValueError("rank_swap requires block >= 1")
     n_total = df.count()
     if n_total == 0:
         return df.withColumn(out, F.lit(None).cast(dict(df.dtypes)[value_col]))
+    caches: list = []
     try:
-        ranked = with_global_rank(df, [F.col(value_col), F.col(id_col)])
+        ranked = with_global_rank(
+            df, [F.col(value_col), F.col(id_col)], cleanup=caches
+        )
         # materialize before releasing the rank caches: the offsets were
         # collected against THIS range partitioning, so the assignment
         # must never be recomputed from source
@@ -296,7 +303,8 @@ def rank_swap(
             eager=True
         )
     finally:
-        release_rank_caches()
+        for c in caches:
+            c.unpersist()
     b = int(block)
     blk_lo = F.expr(f"(_rank div {b}) * {b}")
     blk_hi = F.least(blk_lo + F.lit(b - 1), F.lit(n_total - 1))
@@ -334,12 +342,13 @@ def pseudonymize(
     Deterministic: sorted order, no RNG, reproducible across runs —
     callers needing unlinkability across releases should salt ``col``
     upstream.  Nulls stay null."""
-    from kgforge.rank import release_rank_caches, with_global_rank
+    from kgforge.rank import with_global_rank
 
     out = out or f"{col}_pseudo"
     vals = df.select(col).filter(F.col(col).isNotNull()).distinct()
+    caches: list = []
     try:
-        ranked = with_global_rank(vals, [F.col(col)])
+        ranked = with_global_rank(vals, [F.col(col)], cleanup=caches)
         dictionary = ranked.select(
             F.col(col),
             F.concat(
@@ -347,7 +356,8 @@ def pseudonymize(
             ).alias(out),
         ).localCheckpoint(eager=True)
     finally:
-        release_rank_caches()
+        for c in caches:
+            c.unpersist()
     return df.join(dictionary, col, "left")
 
 

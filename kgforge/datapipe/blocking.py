@@ -37,10 +37,13 @@ def sorted_neighborhood_pairs(
     function of the data; ``id_col`` must be unique."""
     if window < 2:
         raise ValueError("window must be >= 2")
-    from kgforge.rank import release_rank_caches, with_global_rank
+    from kgforge.rank import with_global_rank
 
+    caches: list = []
     try:
-        ranked = with_global_rank(df, [F.col(key_col), F.col(id_col)])
+        ranked = with_global_rank(
+            df, [F.col(key_col), F.col(id_col)], cleanup=caches
+        )
         # materialize before releasing the rank caches: the offsets were
         # collected against THIS range partitioning
         r = ranked.select(
@@ -49,7 +52,8 @@ def sorted_neighborhood_pairs(
             "_rank",
         ).localCheckpoint(eager=True)
     finally:
-        release_rank_caches()
+        for c in caches:
+            c.unpersist()
     probe = r.select(
         F.col("_id").alias("id_a"),
         F.col("_key").alias("key_a"),

@@ -601,17 +601,7 @@ def gini_tree2(
             (-F.col("b.nc")).cast("bigint").alias("n_majority"),
         )
 
-    from kgforge.rank import register_cache
-
-    def pin(d: DataFrame) -> DataFrame:
-        # persisted intermediates go to the session-level cache registry
-        # (released by release_rank_caches() at job boundaries — the
-        # caller-owned lifecycle convention used by the rank helpers);
-        # recompute after release is deterministic (min-struct arg-min),
-        # so this is purely an efficiency cache, never a correctness pin
-        return register_cache(d.persist())
-
-    best1 = pin(best_of(gini_splits(df, feature_cols, label_col)))
+    best1 = best_of(gini_splits(df, feature_cols, label_col))
     n_root = df.agg(F.count(F.lit(1)).alias("n"))
     out = node_row("root", best1, n_root)
 
@@ -631,11 +621,10 @@ def gini_tree2(
     tagged = df.crossJoin(F.broadcast(best1))
     for side in ("L", "R"):
         cond = match_cond()
-        branch = pin(
-            tagged.filter(cond if side == "L" else ~cond)
-            .drop("bfeat", "bvalue", "bscore")
+        branch = tagged.filter(cond if side == "L" else ~cond).drop(
+            "bfeat", "bvalue", "bscore"
         )
-        best2 = pin(best_of(gini_splits(branch, feature_cols, label_col)))
+        best2 = best_of(gini_splits(branch, feature_cols, label_col))
         n_b = branch.agg(F.count(F.lit(1)).alias("n"))
         out = out.unionByName(node_row(side, best2, n_b))
         t2 = branch.crossJoin(F.broadcast(best2))

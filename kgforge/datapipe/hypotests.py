@@ -29,7 +29,9 @@ correctness gate checks them digit-for-digit at round-6.
 Scale notes: the cumulative-CDF steps run over the DISTINCT-value table
 (one row per distinct value), ordered with the range-partition + fused
 per-partition-offset pattern from :mod:`kgforge.rank` — one collect of one
-row per partition, never a single-partition global window.  Integer bounds:
+row per partition, never a single-partition global window.  The tests
+checkpoint each cumulative table and release its range-partitioned cache,
+so a result reads no cache.  Integer bounds:
 rank sums stay under 2^63 while ``n < ~1.3e6 per test pair`` for Spearman
 (``Σ(2r)² ≤ 4n³``) and tie cubes while the largest tie group is < ~2^21
 rows; beyond that, swap the commented casts to ``decimal(38,0)``.
@@ -75,8 +77,7 @@ def _normal_sf2(z):
 
 
 def _with_cumsums(
-    cells: DataFrame, order_col: str, sum_cols: list[str],
-    cleanup: list | None = None,
+    cells: DataFrame, order_col: str, sum_cols: list[str], cleanup: list,
 ) -> DataFrame:
     """Inclusive running sums of several BIGINT columns under ONE ordering in
     ONE range-partitioned pass: repartitionByRange on the sort key, a single
@@ -136,7 +137,6 @@ def _two_group_cells(
 
 def ks_two_sample(
     df: DataFrame, value_col: str, group_col: str, group_a, group_b,
-    cleanup: list | None = None,
 ) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov test between two groups of one column.
 
@@ -149,7 +149,14 @@ def ks_two_sample(
     ``2·Σ_{k=1..100} (−1)^{k−1} e^{−2k²λ²}`` clamped to [0, 1].
     """
     cells = _two_group_cells(df, value_col, group_col, group_a, group_b)
-    cum = _with_cumsums(cells, "v", ["na_v", "nb_v"], cleanup)
+    caches: list = []
+    try:
+        cum = _with_cumsums(
+            cells, "v", ["na_v", "nb_v"], caches
+        ).localCheckpoint(eager=True)
+    finally:
+        for c in caches:
+            c.unpersist()
     tot = cells.agg(
         F.sum("na_v").cast("bigint").alias("na"),
         F.sum("nb_v").cast("bigint").alias("nb"),
@@ -198,7 +205,6 @@ def ks_two_sample(
 
 def mann_whitney_u(
     df: DataFrame, value_col: str, group_col: str, group_a, group_b,
-    cleanup: list | None = None,
 ) -> DataFrame:
     """Mann–Whitney U (Wilcoxon rank-sum) with midrank ties and the
     tie-corrected normal approximation.
@@ -214,7 +220,14 @@ def mann_whitney_u(
     """
     cells = _two_group_cells(df, value_col, group_col, group_a, group_b)
     cells = cells.withColumn("n_v", F.col("na_v") + F.col("nb_v"))
-    cum = _with_cumsums(cells, "v", ["n_v"], cleanup)
+    caches: list = []
+    try:
+        cum = _with_cumsums(cells, "v", ["n_v"], caches).localCheckpoint(
+            eager=True
+        )
+    finally:
+        for c in caches:
+            c.unpersist()
     agg = cum.agg(
         F.sum("na_v").cast("bigint").alias("na"),
         F.sum("nb_v").cast("bigint").alias("nb"),
@@ -336,9 +349,7 @@ def chi_square_independence(df: DataFrame, col_x: str, col_y: str) -> DataFrame:
     )
 
 
-def spearman_corr(
-    df: DataFrame, col_a: str, col_b: str, cleanup: list | None = None,
-) -> DataFrame:
+def spearman_corr(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """Spearman rank correlation with midrank ties.
 
     Output: one row ``(n, rho)``.  Scaling every midrank by 2 keeps them
@@ -359,7 +370,14 @@ def spearman_corr(
 
     def ranks(col: str, out: str) -> DataFrame:
         c = rows0.groupBy(col).agg(F.count(F.lit(1)).cast("bigint").alias("n_v"))
-        cum = _with_cumsums(c, col, ["n_v"], cleanup)
+        caches: list = []
+        try:
+            cum = _with_cumsums(c, col, ["n_v"], caches).localCheckpoint(
+                eager=True
+            )
+        finally:
+            for d in caches:
+                d.unpersist()
         return cum.select(
             col,
             (F.lit(2) * F.col("cum_n_v") - F.col("n_v") + F.lit(1)).alias(out),
@@ -651,15 +669,21 @@ def bh_fdr(
         )
     else:
         # global family: NEVER a single-partition window — the range-
-        # partitioned rank helper plus one driver-sized count scalar
-        # (the helper's persisted frame stays registered in the module's
-        # cache list — both downstream executions of d must read the SAME
-        # range partitioning; long sessions release via release_rank_caches)
+        # partitioned rank helper plus one driver-sized count scalar.  Both
+        # downstream executions of d must read the SAME range partitioning,
+        # so d is checkpointed before the helper's cache is released
         from kgforge.rank import with_global_rank
 
         m_total = d.count()
-        d = with_global_rank(d, [F.col("p"), *[F.col(c) for c in ids]],
-                             out="i")
+        caches: list = []
+        try:
+            d = with_global_rank(
+                d, [F.col("p"), *[F.col(c) for c in ids]], out="i",
+                cleanup=caches,
+            ).localCheckpoint(eager=True)
+        finally:
+            for c in caches:
+                c.unpersist()
         d = d.withColumn("i", F.col("i") + 1).withColumn(
             "m", F.lit(m_total).cast("bigint")
         )

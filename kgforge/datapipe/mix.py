@@ -89,13 +89,21 @@ def pack_chunks(
     The global prefix sum comes from :func:`kgforge.rank.
     with_global_running_sum` (range partition + per-partition offsets), so
     there is no single-partition window; determinism requires ``id_col``
-    (the order key) to be unique.
+    (the order key) to be unique.  The prefix sums are checkpointed, so the
+    result reads no cache.
     """
     from kgforge.rank import with_global_running_sum
 
     if budget <= 0:
         raise ValueError("budget must be positive")
-    d = with_global_running_sum(df, [id_col], tokens_col, out="_cum")
+    caches: list = []
+    try:
+        d = with_global_running_sum(
+            df, [id_col], tokens_col, out="_cum", cleanup=caches
+        ).localCheckpoint(eager=True)
+    finally:
+        for c in caches:
+            c.unpersist()
     return (
         d.withColumn(
             out,

@@ -130,21 +130,24 @@ def quantile_normalize(
     ranked once."""
     from pyspark.sql import Window
 
-    from kgforge.rank import release_rank_caches, with_global_rank
+    from kgforge.rank import with_global_rank
 
     n_total = df.count()
     if n_total == 0:
         return df.withColumn(out, F.col(value_col))
+    caches: list = []
     try:
         pooled = with_global_rank(
-            df.select(value_col, id_col), [F.col(value_col), F.col(id_col)]
+            df.select(value_col, id_col), [F.col(value_col), F.col(id_col)],
+            cleanup=caches,
         )
         ref = pooled.select(
             (F.col("_rank") + 1).alias("_pos"),
             F.col(value_col).alias(out),
         ).localCheckpoint(eager=True)
     finally:
-        release_rank_caches()
+        for c in caches:
+            c.unpersist()
     w = Window.partitionBy(group_col).orderBy(F.col(value_col), F.col(id_col))
     part = Window.partitionBy(group_col)
     r = F.row_number().over(w).cast("bigint")

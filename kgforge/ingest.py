@@ -78,11 +78,19 @@ def flat_df_to_triples(df: DataFrame, prefix: str, type_col: str = "type") -> Da
     subjects are minted from a global row number (counter).  The melt is a
     single ``posexplode`` over a struct array (no per-row Python); counter
     assignment uses zipWithIndex-style partition offsets, not a global window.
+    The indexed frame is checkpointed, so the result reads no cache.
     """
     from kgforge.rank import with_global_index
 
     cols = [c for c in df.columns if c != type_col]
-    d = with_global_index(df, out="_counter")
+    caches: list = []
+    try:
+        d = with_global_index(df, out="_counter", cleanup=caches).localCheckpoint(
+            eager=True
+        )
+    finally:
+        for c in caches:
+            c.unpersist()
     subj = F.concat(F.lit(prefix + "object"), F.col("_counter").cast("string"))
     d = d.withColumn("_subj", subj)
 

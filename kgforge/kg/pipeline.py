@@ -85,17 +85,18 @@ def _canonicalize_surfaces(
     spark, surfaces: DataFrame, threshold: float,
     small_canon_threshold: int, n_surfaces: int | None = None,
 ) -> DataFrame:
-    """(surface) → persisted (surface, canon_surface).  At or below the
-    threshold the vocabulary is collected and clustered exactly on the
-    driver (one job); above it the MinHash-LSH + distributed
-    connected-components path runs.  Both paths agree on the synthetic
-    vocabulary (tested)."""
+    """(surface) → (surface, canon_surface).  At or below the threshold the
+    vocabulary is collected and clustered exactly on the driver (one job;
+    the result is a local relation, its rows already in the plan); above it
+    the MinHash-LSH + distributed connected-components path runs and its
+    result is persisted.  Both paths agree on the synthetic vocabulary
+    (tested)."""
     if n_surfaces is None:
         n_surfaces = surfaces.count()
     if n_surfaces <= small_canon_threshold:
         return _canonicalize_driver(
             spark, [r["surface"] for r in surfaces.collect()], threshold
-        ).persist()
+        )
     # 96 lanes / 32 bands (r=3): ≥0.998 candidate recall at the 0.55
     # Jaccard threshold (24/8 missed ~23% of near-threshold pairs); the
     # exact-Jaccard verify prunes the extra sub-threshold candidates

@@ -34,7 +34,47 @@ def spark():
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s
+    _SESSION_END.update(
+        cache_entries=_cache_entries(s),
+        persisted_rdds=s.sparkContext._jsc.getPersistentRDDs().size(),
+    )
     s.stop()
+
+
+def _cache_entries(spark) -> int:
+    """Entries in the session's CacheManager: frames persisted and not yet
+    unpersisted, one per distinct plan.  Local checkpoints are persisted
+    RDDs without an entry, so they are not counted."""
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+# what the session still held when it stopped (see pytest_terminal_summary)
+_SESSION_END: dict = {}
+
+
+@pytest.fixture
+def cache_entries(spark):
+    """Leak check: ``cache_entries()`` before and after a call must agree."""
+    return lambda: _cache_entries(spark)
+
+
+@pytest.fixture
+def caches():
+    """The ``cleanup`` list for a direct call of a helper that hands up the
+    frames it persists; they are unpersisted when the test ends."""
+    frames: list = []
+    yield frames
+    for d in frames:
+        d.unpersist()
+
+
+def pytest_terminal_summary(terminalreporter):
+    # a count, not a gate: what earlier tests or the calls they drive left
+    if _SESSION_END:
+        terminalreporter.write_line(
+            "Spark session end: {cache_entries} cache entries, "
+            "{persisted_rdds} persisted RDDs".format(**_SESSION_END)
+        )
 
 
 @pytest.fixture(scope="session")

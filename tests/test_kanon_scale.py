@@ -189,25 +189,20 @@ def test_nulls_and_empty_bench(spark):
         assert (k, ran) == (0, m)
 
 
-def _persistent_rdds(spark) -> set:
-    """Ids of the persisted RDDs.  Compared as sets, not counts: the context
-    cleaner may free another test's unreachable cache during the call."""
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
-
-def test_k_anonymity_releases_its_caches(spark):
+def test_k_anonymity_releases_its_caches(spark, cache_entries):
     triples, _ = _mk_triples(spark, 60, n_groups=3, rand_attrs=[A0, A1])
     # an explicit "ranges" with two attributes resolves to sliced
     for used, mode, ran in (([GEN], "auto", "groups"), ([GEN, A0], "pairs", "pairs"),
                             ([GEN, A0], "ranges", "ranges"),
                             ([GEN, A0, A1], "ranges", "sliced")):
-        before = _persistent_rdds(spark)
+        before = cache_entries()
         _, got = k_anonymity(triples, T, used, CFG, mode=mode)
         assert got == ran
-        assert _persistent_rdds(spark) <= before, ran
+        assert cache_entries() == before, ran
 
 
-def test_k_anonymity_releases_its_caches_on_failure(spark, monkeypatch):
+def test_k_anonymity_releases_its_caches_on_failure(spark, monkeypatch,
+                                                    cache_entries):
     """A counting job that fails after the path's caches are filled must
     still release them."""
     import kgforge.rank as rank
@@ -226,10 +221,10 @@ def test_k_anonymity_releases_its_caches_on_failure(spark, monkeypatch):
     monkeypatch.setattr(rank, "with_global_running_sum", failing_runsum)
     monkeypatch.setattr(kpi, "_min_count", failing_min_count)
     for used, mode in (([GEN, A0], "ranges"), ([GEN, A0, A1], "sliced")):
-        before = _persistent_rdds(spark)
+        before = cache_entries()
         with pytest.raises(RuntimeError, match="injected"):
             k_anonymity(triples, T, used, CFG, mode=mode)
-        assert _persistent_rdds(spark) <= before, mode
+        assert cache_entries() == before, mode
 
 
 @pytest.mark.parametrize("n, null_frac", [

@@ -28,14 +28,16 @@ def test_bucket_formula_golden_points(n, attrs, expected):
     assert calculate_number_of_buckets(n, attrs) == expected
 
 
-def test_floor_bucket_differs_from_ntile(spark):
+def test_floor_bucket_differs_from_ntile(spark, caches):
     """g*i/k with k=10, g=3 → sizes [4,3,3]; ntile(3) would give [4,4,2].
     The reference formula (Generalization.java:50) must win."""
     rows = [(str(i), str(float(i)), "c", False, i) for i in range(10)]
     col_df = spark.createDataFrame(
         rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
     )
-    out = generalize(col_df, [AttrSpec("x", "double", 3, 10)], F.col("_tie"))
+    out = generalize(
+        col_df, [AttrSpec("x", "double", 3, 10)], F.col("_tie"), cleanup=caches
+    )
     got = {
         r["subj"]: int(r["obj_value"].rsplit("_", 1)[-1])
         for r in out.filter(F.col("pred") == "x_generalized").collect()
@@ -44,12 +46,14 @@ def test_floor_bucket_differs_from_ntile(spark):
     assert got == expected  # sizes 4,3,3 — not ntile's 4,4,2
 
 
-def test_bucket_bounds_medians_and_obfuscation(spark):
+def test_bucket_bounds_medians_and_obfuscation(spark, caches):
     rows = [(str(i), str(float(10 * i)), "c", False, i) for i in range(10)]
     col_df = spark.createDataFrame(
         rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
     )
-    out = generalize(col_df, [AttrSpec("x", "double", 3, 10)], F.col("_tie")).collect()
+    out = generalize(
+        col_df, [AttrSpec("x", "double", 3, 10)], F.col("_tie"), cleanup=caches
+    ).collect()
     from kgforge.triples import RDF_MAX, RDF_MIN, RDFS_COMMENT
 
     by = {}
@@ -69,7 +73,7 @@ def test_bucket_bounds_medians_and_obfuscation(spark):
     assert by["x_2"][RDF_MIN] == "55.0" and RDF_MAX not in by["x_2"]
 
 
-def test_date_median_truncates_toward_zero(spark):
+def test_date_median_truncates_toward_zero(spark, caches):
     # pre-1970 dates: Java (a+b)/2 long division truncates toward zero
     rows = [
         ("a", "1969-12-25", "c", False, 0),  # epoch day -7
@@ -80,7 +84,9 @@ def test_date_median_truncates_toward_zero(spark):
     col_df = spark.createDataFrame(
         rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
     )
-    out = generalize(col_df, [AttrSpec("d", "date", 2, 4)], F.col("_tie")).collect()
+    out = generalize(
+        col_df, [AttrSpec("d", "date", 2, 4)], F.col("_tie"), cleanup=caches
+    ).collect()
     from kgforge.triples import RDF_MIN
 
     mins = {r["subj"]: r["obj_value"] for r in out if r["pred"] == RDF_MIN}
@@ -92,7 +98,7 @@ def test_date_median_truncates_toward_zero(spark):
     assert mins["d_1"] == "1969-12-31"
 
 
-def test_global_rank_matches_window(spark):
+def test_global_rank_matches_window(spark, caches):
     import random
 
     rnd = random.Random(7)
@@ -106,7 +112,8 @@ def test_global_rank_matches_window(spark):
         ranked = {
             r["id"]: r["_rank"]
             for r in with_global_rank(
-                df, [F.col("v"), F.col("id")], num_partitions=nparts
+                df, [F.col("v"), F.col("id")], num_partitions=nparts,
+                cleanup=caches,
             ).collect()
         }
         assert ranked == expect, nparts
@@ -272,8 +279,9 @@ def _triples(df):
         "subj", "pred", "obj_value", "obj_dtype", "obj_is_iri").collect())
 
 
-def test_batched_generalize_matches_per_attribute_mirror(spark):
-    out = generalize(_batch_frame(spark, _BATCH), _batch_specs(_BATCH), F.col("_tie"))
+def test_batched_generalize_matches_per_attribute_mirror(spark, caches):
+    out = generalize(_batch_frame(spark, _BATCH), _batch_specs(_BATCH),
+                     F.col("_tie"), cleanup=caches)
     expect = sorted(
         t for _k, a, dt, g, values in _BATCH
         for t in _mirror_generalize(a, dt, g, values)
@@ -333,7 +341,7 @@ def test_operator_jobs_do_not_grow_with_attribute_count(spark):
     assert jobs([0, 1, 2, 3, 4]) <= jobs([0, 3])
 
 
-def test_global_running_sum_matches_python_reference(spark):
+def test_global_running_sum_matches_python_reference(spark, caches):
     """The JVM-window running sum under multiple partition counts must
     equal the sequential python prefix sum — three seeds, duplicate keys
     included (the weight-0 tie contract makes tied queries order-free)."""
@@ -354,7 +362,7 @@ def test_global_running_sum_matches_python_reference(spark):
                 r["id"]: r["_rs"]
                 for r in with_global_running_sum(
                     df, [F.col("k"), F.col("id")], "w", out="_rs",
-                    num_partitions=nparts,
+                    num_partitions=nparts, cleanup=caches,
                 ).collect()
             }
             acc, expect = 0, {}
@@ -364,66 +372,18 @@ def test_global_running_sum_matches_python_reference(spark):
             assert got == expect, (seed, nparts)
 
 
-def test_with_global_index_contiguous_and_cleanup(spark):
+def test_with_global_index_contiguous_and_cleanup(spark, caches):
     from kgforge import rank
 
     df = spark.createDataFrame(
         [(i, f"v{i}") for i in range(257)], schema="id long, s string"
     ).repartition(7)
-    cleanup = []
-    got = rank.with_global_index(df, out="_idx", cleanup=cleanup).collect()
+    got = rank.with_global_index(df, out="_idx", cleanup=caches).collect()
     idxs = sorted(r["_idx"] for r in got)
     assert idxs == list(range(257))  # contiguous 0..n-1, no gaps/dupes
     # one row per input id (the index is a bijection over the input)
     assert len({r["id"] for r in got}) == 257
-    assert len(cleanup) == 1
-    for d in cleanup:
-        d.unpersist()
-
-
-def test_release_rank_caches_drops_registered_frames(spark):
-    from kgforge import rank
-
-    df = spark.createDataFrame([(i,) for i in range(10)], schema="id long")
-    rank.with_global_rank(df, [F.col("id")]).collect()
-    assert rank.release_rank_caches() >= 1
-    assert rank.release_rank_caches() == 0
-
-
-def test_release_rank_caches_drains_dead_threads(spark):
-    """Caches registered by a worker thread that exits without releasing
-    (ThreadPoolExecutor sweeps) must be reachable from a later main-thread
-    release — but never while the worker is still alive (that would
-    reintroduce the cross-thread mid-query unpersist race)."""
-    import threading
-    import time
-
-    from kgforge import rank
-
-    df = spark.createDataFrame([(i,) for i in range(10)], schema="id long")
-    rank.release_rank_caches()  # drain any leftovers from earlier tests
-    gate = threading.Event()
-
-    def worker():
-        rank.with_global_rank(df, [F.col("id")]).collect()
-        gate.wait(timeout=30)
-
-    t = threading.Thread(target=worker)
-    t.start()
-    deadline = time.monotonic() + 30
-    while not any(
-        th is t for th, _ in rank._all_lists
-    ) and t.is_alive():  # wait for the worker to register its list
-        assert time.monotonic() < deadline, "worker never registered a cache"
-        time.sleep(0.01)
-    # worker alive: its caches are NOT drained by a main-thread release
-    assert rank.release_rank_caches() == 0
-    gate.set()
-    t.join(timeout=60)
-    assert not t.is_alive()
-    # worker dead: the orphaned cache is drained exactly once
-    assert rank.release_rank_caches() >= 1
-    assert rank.release_rank_caches() == 0
+    assert len(caches) == 1
 
 
 def test_flat_df_to_triples_matches_driver_ingest(spark):

@@ -29,8 +29,7 @@ PLAN_NAMES = [
     "compaction_bins", "copurchase_topk", "doc_chunks", "doc_links",
     "doc_mentions", "dup_spans", "edit_dist_pairs", "er_quality",
     "events_attribution", "events_cusum", "events_followup_range_join",
-    "events_gap_fill", "fd_check", "fs_scores", "generalize_acctbal",
-    "gini_tree", "golden_records", "ivm_orders", "kg_triples_geo",
+    "events_gap_fill", "fd_check", "fs_scores", "gini_tree", "golden_records", "ivm_orders", "kg_triples_geo",
     "kg_void", "kmv_source_overlap", "lang_profiles", "lm_xent",
     "mad_prices", "minhash_clusters", "mondrian_k10", "ols_trend",
     "orders_skyline", "phonetic_blocks", "pii_scrub", "pseudonymize_names",
@@ -140,11 +139,21 @@ def test_minhash_band_join_not_cartesian(spark, plans):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_generalize_has_no_global_single_partition_sort(spark, plans):
+def test_generalize_has_no_global_single_partition_sort(spark, caches):
     # W1 global rank must be range-partition + offsets, not a 1-partition
-    # window (which would serialize the sort at scale)
-    plan = plans["generalize_acctbal"]
-    assert "SinglePartition" not in plan.split("Window")[0] or "Window" not in plan
+    # window (which would serialize the sort at scale).  The registry's
+    # generalize_* queries return a checkpoint, so the gate reads the
+    # operator's own plan over the same input
+    from kgforge.anonymize.buckets import calculate_number_of_buckets
+    from kgforge.anonymize.ops import AttrSpec, generalize
+
+    col_df = entry._acctbal_column(spark, SF)
+    n = col_df.count()
+    g = calculate_number_of_buckets(n, 1)
+    out = generalize(col_df, [AttrSpec("acctbal", "double", g, n)],
+                     F.col("_tie"), cleanup=caches)
+    plan = _plan(out)
+    assert "Window" in plan and "SinglePartition" not in plan
 
 
 def test_range_join_is_equi_key_not_nested_loop(spark, plans):
@@ -177,7 +186,7 @@ def test_build_kg_plan_is_clean(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_generalize_plan_flat_at_large_g(spark):
+def test_generalize_plan_flat_at_large_g(spark, caches):
     """W3 scale gate: boundary extraction must not inline a literal IN-list or
     run a driver loop over g — plan size stays O(1) as g grows to 10^4."""
     from kgforge.anonymize.ops import AttrSpec, generalize
@@ -189,19 +198,21 @@ def test_generalize_plan_flat_at_large_g(spark):
     )
     plans = {}
     for g in (10, 10_000):
-        df = generalize(col_df, [AttrSpec("http://ex.org/attr", "double", g, n)])
+        df = generalize(col_df, [AttrSpec("http://ex.org/attr", "double", g, n)],
+                        cleanup=caches)
         plans[g] = df._jdf.queryExecution().optimizedPlan().toString()
         assert " IN (" not in plans[g]
     # plan text must not grow with g (allow slack for the differing digits)
     assert len(plans[10_000]) < len(plans[10]) + 2_000
     # and the boundary join must be a broadcast (ranked side never shuffles
     # for the boundary lookup)
-    big = generalize(col_df, [AttrSpec("http://ex.org/attr", "double", 10_000, n)])
+    big = generalize(col_df, [AttrSpec("http://ex.org/attr", "double", 10_000, n)],
+                     cleanup=caches)
     phys = big._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in phys
 
 
-def test_generalize_large_g_bounds_match_driver_formula(spark):
+def test_generalize_large_g_bounds_match_driver_formula(spark, caches):
     """Value check at g=1000: DataFrame-built bounds equal the scalar
     median/format formulas computed in plain Python."""
     from kgforge.anonymize.ops import AttrSpec, generalize
@@ -213,7 +224,8 @@ def test_generalize_large_g_bounds_match_driver_formula(spark):
         [(f"http://ex.org/r{i:05d}", str(v)) for i, v in enumerate(vals)],
         "subj string, obj_value string",
     )
-    out = generalize(col_df, [AttrSpec("http://ex.org/a", "double", g, n)])
+    out = generalize(col_df, [AttrSpec("http://ex.org/a", "double", g, n)],
+                     cleanup=caches)
     got_min = {
         r["subj"]: r["obj_value"]
         for r in out.filter(F.col("pred").endswith("min")).collect()

@@ -59,7 +59,7 @@ def test_inner_boundaries_roundtrip(spark):
     assert inner_boundaries(bounds) == [5.0, 9.0]
 
 
-def test_frozen_bounds_agree_with_generalize_interior(spark):
+def test_frozen_bounds_agree_with_generalize_interior(spark, caches):
     """Applying the published bounds back to the snapshot's own values
     reproduces generalize's rank-based buckets for every value strictly
     inside a bucket (only boundary ties may differ, by the documented
@@ -77,7 +77,8 @@ def test_frozen_bounds_agree_with_generalize_interior(spark):
     )
     n = len(vals)
     g = calculate_number_of_buckets(n, 1)
-    out = generalize(df, [AttrSpec("v", "double", g, n)], F.col("_tie"))
+    out = generalize(df, [AttrSpec("v", "double", g, n)], F.col("_tie"),
+                     cleanup=caches)
     orig = {
         r["subj"]: int(r["obj_value"].rsplit("_", 1)[-1])
         for r in out.filter(F.col("pred") == "v_generalized").collect()
