@@ -38,7 +38,8 @@ def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def entry(spark: SparkSession) -> DataFrame:
-    from kgforge.kg.pipeline import build_kg, docs_from_testdata
+    from kgforge.kg.pipeline import build_kg
+    from kgforge.kg.synth import docs_from_testdata
 
     docs = docs_from_testdata(spark, "/root/testdata/sf0.001")
     triples, _metrics = build_kg(docs)

@@ -21,7 +21,7 @@ from kgforge.kg.components import connected_components
 from kgforge.kg.linking import link_mentions
 from kgforge.kg.lsh import jaccard_filter, lsh_candidate_pairs
 from kgforge.kg.mentions import detect_mentions
-from kgforge.kg.synth import docs_from_testdata, explode_spans, synth_docs  # noqa: F401
+from kgforge.kg.synth import explode_spans
 from kgforge.kg.vocab import DOC_NS, ENT_NS, KG
 from kgforge.triples import RDF_TYPE, local_df
 

@@ -6,11 +6,11 @@ Input shape per BASELINE.json input_hint:
     spans   array<struct<kind string, text string, media_ref string, offset int>>
 
 Every span sequence is a pure function of (seed, doc_id) — independent of
-partitioning, task order, or parallelism level — which is what makes the
-local[8] vs local[32] scaling-equivalence evidence meaningful and lets the
-pipeline re-derive any partition for checkpoint resume.  Randomness comes
-from a counter-based splitmix64 stream, generated distributively inside
-mapInPandas (no driver-side RNG, no shuffle).
+partitioning, task order, or parallelism level — which is what makes runs
+at different parallelism comparable and lets the pipeline re-derive any
+partition for checkpoint resume.  Randomness comes from a counter-based
+splitmix64 stream, generated distributively inside mapInPandas (no
+driver-side RNG, no shuffle).
 """
 
 from __future__ import annotations
@@ -61,16 +61,10 @@ class _Stream:
         return self.state % mod if mod else self.state
 
 
-def make_spans(seed: int, idx: int, base_text: str | None = None,
-               eid_table: list[str] | None = None) -> list[dict]:
+def make_spans(seed: int, idx: int, base_text: str | None = None) -> list[dict]:
     """Span sequence for one document — the single source of truth used by
-    both the synthesizer and the testdata deriver.
-
-    ``eid_table`` overrides the entity sampling table (default: the module
-    WEIGHTED_EIDS with its 100× hot entities).  The default stream is
-    byte-identical to all prior rounds; the override exists for the
-    skew-vs-uniform throughput spot-check (same doc count, same span/word
-    stream — only the entity draw changes)."""
+    both the synthesizer and the testdata deriver.  Entities are drawn from
+    WEIGHTED_EIDS, whose hot entities carry 100× weight."""
     st = _Stream(seed, idx)
     n_spans = 1 + st.next(16)
     spans: list[dict] = []
@@ -81,9 +75,8 @@ def make_spans(seed: int, idx: int, base_text: str | None = None,
             n_words = 4 + st.next(10)
             words = [FILLER_WORDS[st.next(len(FILLER_WORDS))] for _ in range(n_words)]
             n_mentions = 1 + st.next(3)
-            table = eid_table if eid_table is not None else WEIGHTED_EIDS
             for _m in range(n_mentions):
-                ent = EID_TO_ENTITY[table[st.next(len(table))]]
+                ent = EID_TO_ENTITY[WEIGHTED_EIDS[st.next(len(WEIGHTED_EIDS))]]
                 surface = ent.variants[st.next(len(ent.variants))]
                 pos = st.next(len(words) + 1)
                 words.insert(pos, surface)
@@ -101,18 +94,12 @@ def make_spans(seed: int, idx: int, base_text: str | None = None,
 
 
 def synth_docs(spark: SparkSession, n_docs: int, seed: int = 42,
-               num_partitions: int | None = None,
-               uniform_entities: bool = False) -> DataFrame:
+               num_partitions: int | None = None) -> DataFrame:
     """Generate the interleaved doc table distributively (one task per range
-    slice; each row derived only from its global id).
-
-    ``uniform_entities=True`` samples every entity with weight 1 (no 100×
-    hot entities) — the control corpus for the skew-degradation
-    spot-check; the default remains the skewed corpus where the hottest
-    entity holds ~31% of all mentions."""
+    slice; each row derived only from its global id).  The hottest entity
+    holds ~31% of all mentions."""
     npart = num_partitions or spark.sparkContext.defaultParallelism
     base = spark.range(0, n_docs, 1, npart)
-    table = sorted(EID_TO_ENTITY) if uniform_entities else None
 
     def gen(batches):
         import pandas as pd
@@ -123,7 +110,7 @@ def synth_docs(spark: SparkSession, n_docs: int, seed: int = 42,
                 rows.append(
                     {
                         "doc_id": f"doc_{idx:012d}",
-                        "spans": make_spans(seed, int(idx), eid_table=table),
+                        "spans": make_spans(seed, int(idx)),
                     }
                 )
             yield pd.DataFrame(rows)

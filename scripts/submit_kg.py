@@ -30,7 +30,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
 
     from kgforge.kg.io import resume_or_run
-    from kgforge.kg.pipeline import build_kg, docs_from_testdata, synth_docs
+    from kgforge.kg.pipeline import build_kg
+    from kgforge.kg.synth import docs_from_testdata, synth_docs
 
     if args.n_docs:
         docs = synth_docs(spark, args.n_docs)

@@ -4,6 +4,9 @@ resume."""
 
 from __future__ import annotations
 
+import hashlib
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -34,6 +37,10 @@ def test_generator_deterministic_across_parallelism(spark):
 def test_make_spans_pure_function():
     assert make_spans(42, 7) == make_spans(42, 7)
     assert make_spans(42, 7) != make_spans(42, 8)
+    # the default span stream is pinned: every corpus and benchmark input
+    # is derived from it
+    stream = json.dumps([make_spans(42, i) for i in range(200)], sort_keys=True)
+    assert hashlib.sha256(stream.encode()).hexdigest()[:16] == "bc8ba25919225ebb"
 
 
 def test_span_sequence_invariant(docs):
