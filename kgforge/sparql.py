@@ -5,8 +5,8 @@ The reference interacts with its Jena ``Model`` exclusively through SPARQL
 ARQ in ``data/QueryService.java``).  Those templates are each implemented as
 dedicated operators elsewhere in this repo; this module adds what a Jena
 user actually reaches for when they *switch*: ad-hoc SPARQL over the triple
-table, compiled to a DataFrame plan so Catalyst/AQE — not a driver loop —
-executes it.
+table, compiled to ONE parameterized Spark SQL statement so Catalyst/AQE —
+not a driver loop — plans and executes it.
 
 Supported subset (covers every shape the reference's templates use, plus
 the common exploratory forms):
@@ -38,7 +38,7 @@ the common exploratory forms):
     graph's terms), with parentheses — the ``rdf:rest*/rdf:first`` idiom
     the reference's attributeOrder closure walks
   - ``OPTIONAL { … }`` groups (compiled to left joins)
-  - ``{ … } UNION { … }`` alternatives (compiled to ``unionByName`` with
+  - ``{ … } UNION { … }`` alternatives (compiled to ``UNION ALL`` with
     null-padding for variables bound on one side only)
   - negation: ``MINUS { … }`` and ``FILTER NOT EXISTS { … }`` compile to
     LEFT ANTI joins on the shared variables, ``FILTER EXISTS { … }`` to a
@@ -54,14 +54,15 @@ the common exploratory forms):
     only projected variables visible to the enclosing group (separate
     scope for inner non-projected names per spec); aggregate /
     DISTINCT / top-k (ORDER BY + LIMIT) subqueries all compile to the
-    same DataFrame shapes as top-level queries and merge into the outer
+    same SQL shapes as top-level queries and merge into the outer
     group as one more equi-join — the "join against a pre-aggregated
     side" idiom Catalyst/AQE already plans well at scale
   - ``VALUES ?v { … }`` / ``VALUES (?a ?b) { (…) … }`` inline data
-    (``UNDEF`` → null), compiled to a literal DataFrame join — at scale
+    (``UNDEF`` → null), compiled to a SQL ``VALUES`` relation of parameter
+    markers (a local relation, no Python-backed scan) joined in — at scale
     this is the broadcast-join idiom for "restrict to this ID list"
   - ``FILTER ( expr )`` with ``= != < <= > >= && || !``, arithmetic
-    ``+ - * /`` (operands coerced to double), ``regex(?v, "pat")``,
+    ``+ - * /`` (operands coerced to double, see below), ``regex(?v, "pat")``,
     ``bound(?v)``, ``isIRI(?v)``, ``isLiteral(?v)``, ``str(?v)``, and the
     SPARQL 1.1 builtins ``STRLEN UCASE LCASE CONCAT SUBSTR STRSTARTS
     STRENDS CONTAINS STRBEFORE STRAFTER REPLACE ABS CEIL FLOOR ROUND IF
@@ -87,30 +88,48 @@ Aggregate typing over lexical bindings: ``COUNT`` counts non-null
 bindings; ``SUM``/``AVG`` cast operands with ``try_cast`` to double
 (SPARQL numeric aggregation over this engine's stored datatypes);
 ``MIN``/``MAX`` compare lexical forms (document the cast if you need
-numeric extrema: ``xsd:integer`` lexical order ≠ numeric order).
+numeric extrema: ``xsd:integer`` lexical order ≠ numeric order).  ORDER BY
+compares lexical forms too.
 
 Terms: ``?var``, ``<iri>``, ``pfx:local``, ``"string"``, integers/decimals,
 ``true``/``false``.
 
-Compilation model — one scan per triple pattern, joined on shared
-variables:
+Compilation model — each ``sparql_*`` call parses the query and makes ONE
+``spark.sql(text, args, g=triples, …)`` call (class ``_Sql``):
 
-- a CONSTANT predicate becomes ``pred = <iri>`` on the scan, which is a
-  partition-pruning predicate on the pred-partitioned graph sink
-  (``kgforge/kg/io.py``) — at 100 TB each pattern reads only its
-  predicate's partitions;
-- constant subjects/objects push down as parquet filters;
+- every relation is a derived table: a triple pattern is ``SELECT … FROM
+  {g} WHERE pred = :pN …``, a group joins its parts on the shared variables
+  (``JOIN … USING``; no shared variables → ``CROSS JOIN``), OPTIONAL is
+  ``LEFT JOIN … USING``, UNION is a null-padded ``UNION ALL``, MINUS and
+  FILTER NOT EXISTS are ``LEFT ANTI JOIN``, FILTER EXISTS is ``LEFT SEMI
+  JOIN``, FILTER is ``WHERE``, BIND is a projection, and aggregates,
+  DISTINCT, ORDER BY, LIMIT and OFFSET are the SQL clauses of the same
+  name (ORDER BY + LIMIT collapses to TakeOrdered); the optimized plan is
+  the one a hand-written DataFrame query gets;
+- no query value reaches the statement text: every IRI, literal, regex,
+  separator and replacement is a named parameter marker ``:pN`` bound to a
+  literal before optimization, and variables are backquoted identifiers
+  (the tokenizer limits them to ``[A-Za-z_][A-Za-z0-9_]*``).  Only the
+  parser's integers (LIMIT, OFFSET, SUBSTR bounds) are written as text;
+- a CONSTANT predicate is therefore still a partition-pruning filter on the
+  pred-partitioned graph sink (``kgforge/kg/io.py``) — at 100 TB each
+  pattern reads only its predicate's partitions — and constant
+  subjects/objects push down as parquet filters;
 - join order is left as written and joins are plain equi-joins on the
   shared variable columns — AQE picks broadcast/shuffle per side at
   runtime, exactly the decision we should not hand-schedule;
-- patterns with no shared variables produce a cross join (a real SPARQL
-  semantics corner — allowed, documented, and visible in the plan).
+- a property path's closure (``_path_rel``) runs as DataFrame actions
+  before the statement and enters it as one more relation argument;
+- the Python side stays O(query size): a compiled query costs a few dozen
+  py4j round trips, not one per Column node.
 
-Variable bindings are lexical forms (strings); comparisons against a
-numeric literal cast both sides with ``try_cast`` to double, matching
-SPARQL's numeric-vs-numeric operator mapping for the datatypes this engine
-stores.  DISTINCT/ORDER BY/LIMIT map to the DataFrame operators of the
-same name (ORDER BY + LIMIT collapses to TakeOrdered).
+Variable bindings are lexical forms (strings).  Every numeric coercion — a
+comparison with a numeric operand, arithmetic, ABS/CEIL/FLOOR/ROUND, a BIND
+of either — is ``try_cast(… AS DOUBLE)`` and division is ``try_divide``,
+matching SPARQL's numeric operator mapping for the datatypes this engine
+stores: a lexical form that does not parse as a number yields NULL and the
+solution drops, as a SPARQL type error does, whether or not Spark's ANSI
+mode is on.
 """
 
 from __future__ import annotations
@@ -118,7 +137,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -854,219 +873,38 @@ def _path_rel(triples: DataFrame, path: Path, max_iter: int = 64) -> DataFrame:
     raise SparqlError(f"unsupported path operator {path.op!r}")
 
 
-def _path_pattern_df(triples: DataFrame, pat: Pattern) -> tuple[DataFrame, set]:
-    """A triple pattern whose predicate is a property path: endpoints bind
-    against the path's compiled relation (either endpoint may be a literal —
-    an inverse path puts the original object on the left)."""
-    df = _path_rel(triples, pat.p)
-    out_cols: list[Column] = []
-    bound: set[str] = set()
-    seen: dict[str, str] = {}
-    for (vcol, icol, dcol), term in (
-        (("_ps", "_ps_iri", "_ps_dt"), pat.s),
-        (("_po", "_po_iri", "_po_dt"), pat.o),
-    ):
-        if term.kind == "var":
-            if term.value in seen:
-                df = df.filter(F.col(vcol) == F.col(seen[term.value]))
-            else:
-                seen[term.value] = vcol
-                out_cols.append(F.col(vcol).alias(term.value))
-                out_cols.append(F.col(icol).alias(_m_iri(term.value)))
-                out_cols.append(F.col(dcol).alias(_m_dt(term.value)))
-                bound.add(term.value)
-        elif term.kind == "iri":
-            df = df.filter((F.col(vcol) == term.value) & F.col(icol))
-        elif term.kind in ("str", "bool"):
-            df = df.filter((F.col(vcol) == term.value) & (~F.col(icol)))
-        elif term.kind == "num":
-            df = df.filter(
-                F.expr(f"try_cast({vcol} AS DOUBLE)") == float(term.value)
-            )
-    return df.select(*out_cols), bound
 
 
-def _pattern_df(triples: DataFrame, pat: Pattern) -> tuple[DataFrame, set]:
-    """One triple pattern → a filtered scan projected to its variables.
-
-    Each variable also carries two hidden companion columns
-    (``__m_<v>_iri``, ``__m_<v>_dt``): the binding's IRI-ness and datatype.
-    Subject/predicate bindings are IRIs by RDF definition; object bindings
-    copy the triple's ``obj_is_iri``/``obj_dtype``.  CONSTRUCT templates and
-    ``isIRI()`` read these instead of guessing from the lexical shape."""
-    if isinstance(pat.p, Path):
-        return _path_pattern_df(triples, pat)
-    df = triples
-    out_cols: list[Column] = []
-    bound: set[str] = set()
-    slots = (("subj", pat.s), ("pred", pat.p), ("obj_value", pat.o))
-    seen: dict[str, str] = {}
-    for col, term in slots:
-        if term.kind == "var":
-            if term.value in seen:  # e.g. ?x ?p ?x — intra-pattern equality
-                df = df.filter(F.col(col) == F.col(seen[term.value]))
-            else:
-                seen[term.value] = col
-                out_cols.append(F.col(col).alias(term.value))
-                if col == "obj_value":
-                    out_cols.append(F.col("obj_is_iri").alias(_m_iri(term.value)))
-                    out_cols.append(F.col("obj_dtype").alias(_m_dt(term.value)))
-                else:
-                    out_cols.append(F.lit(True).alias(_m_iri(term.value)))
-                    out_cols.append(F.lit("iri").alias(_m_dt(term.value)))
-                bound.add(term.value)
-        elif term.kind == "iri":
-            df = df.filter(F.col(col) == term.value)
-            if col == "obj_value":
-                df = df.filter(F.col("obj_is_iri"))
-        elif term.kind in ("str", "bool"):
-            if col != "obj_value":
-                raise SparqlError("literals are only valid in object position")
-            df = df.filter(
-                (F.col("obj_value") == term.value) & (~F.col("obj_is_iri"))
-            )
-        elif term.kind == "num":
-            if col != "obj_value":
-                raise SparqlError("literals are only valid in object position")
-            df = df.filter(
-                F.expr("try_cast(obj_value AS DOUBLE)") == float(term.value)
-            )
-    return df.select(*out_cols), bound
+def _q(name: str) -> str:
+    """A backquoted SQL identifier.  Variable names are limited by the
+    tokenizer to ``[A-Za-z_][A-Za-z0-9_]*``, so quoting cannot be escaped."""
+    return f"`{name}`"
 
 
-def _union_df(triples: DataFrame, alts: list) -> tuple[DataFrame, set]:
-    """``{A} UNION {B}`` → unionByName with null-padding: a variable bound
-    in only one branch is null in the other's rows (SPARQL's unbound)."""
-    dfs, all_vars = [], set()
-    for alt in alts:
-        adf, avars = _join_group(triples, alt)
-        dfs.append((adf, avars))
-        all_vars |= avars
-    sel_cols = []
-    for v in sorted(all_vars):
-        sel_cols.append((v, "string"))
-        sel_cols.append((_m_iri(v), "boolean"))
-        sel_cols.append((_m_dt(v), "string"))
-    padded = [
-        adf.select(*[
-            F.col(c) if c in adf.columns else F.lit(None).cast(t).alias(c)
-            for c, t in sel_cols
-        ])
-        for adf, avars in dfs
-    ]
-    out = padded[0]
-    for p in padded[1:]:
-        out = out.unionByName(p)
-    return out, all_vars
+def _var_cols(v: str) -> list[str]:
+    """A variable's binding column and its two companions."""
+    return [_q(v), _q(_m_iri(v)), _q(_m_dt(v))]
 
 
-def _values_df(spark, vars_: list, rows: list) -> DataFrame:
-    """Inline data; bindings carry literal-string companions (VALUES terms
-    that are IRIs still join fine — companions matter only in CONSTRUCT
-    object slots and isIRI())."""
-    df = spark.createDataFrame(
-        [tuple(r) for r in rows], schema=", ".join(f"{v} string" for v in vars_)
-    )
-    for v in vars_:
-        df = df.withColumn(_m_iri(v), F.lit(False)).withColumn(
-            _m_dt(v), F.lit("string")
-        )
-    return df
+def _col_list(names) -> str:
+    return ", ".join(_q(v) for v in names)
 
 
-def _merge(acc, bound, pdf, pvars, how: str = "inner"):
-    if acc is None:
-        return pdf, set(pvars)
-    shared = sorted(bound & pvars)
-    if shared:
-        # the left side already carries the shared vars' companions
-        dup = [c for v in shared for c in (_m_iri(v), _m_dt(v))
-               if c in pdf.columns]
-        acc = acc.join(pdf.drop(*dup), on=shared, how=how)
-    elif how == "inner":
-        acc = acc.crossJoin(pdf)
-    else:
-        # SPARQL leftjoin with no shared variables: cross product, but the
-        # left row survives when the inner group is empty
-        acc = acc.join(pdf, F.lit(True), how="left")
-    return acc, bound | pvars
+# the canonical graph as it appears in the statement text; ``spark.sql``
+# formats it into a temporary view name
+_G = "{g}"
 
-
-def _join_group(triples: DataFrame, g: Group) -> tuple[DataFrame, set]:
-    acc: DataFrame | None = None
-    bound: set[str] = set()
-    for pat in g.patterns:
-        pdf, pvars = _pattern_df(triples, pat)
-        acc, bound = _merge(acc, bound, pdf, pvars)
-    for alts in g.unions:
-        udf, uvars = _union_df(triples, alts)
-        acc, bound = _merge(acc, bound, udf, uvars)
-    for vars_, rows in g.values:
-        vdf = _values_df(triples.sparkSession, vars_, rows)
-        acc, bound = _merge(acc, bound, vdf, set(vars_))
-    for sq in g.subqueries:
-        sdf, svars = _subquery_df(triples, sq)
-        acc, bound = _merge(acc, bound, sdf, svars)
-    if acc is None:
-        if not (g.optionals or g.exists or g.not_exists or g.binds):
-            raise SparqlError("empty graph pattern")
-        # the spec's unit solution: a group of only OPTIONALs/negation
-        # extends one empty mapping (the reference's KPI-data query shape)
-        acc = triples.sparkSession.range(1).select(
-            F.lit(True).alias("__unit")
-        )
-    for og in g.optionals:
-        odf, ovars = _join_group(triples, og)
-        acc, bound = _merge(acc, bound, odf, ovars, how="left")
-    for bexpr, bvar in g.binds:
-        # BIND extends each solution with a computed literal binding.  It is
-        # applied after the group's pattern joins (so it may reference any
-        # variable the group binds) and before FILTER/negation; the value is
-        # stored lexically (string) like every binding, with its dtype in
-        # the companion column so CONSTRUCT emits a typed literal.
-        if bvar in bound:
-            raise SparqlError(f"BIND would rebind already-bound ?{bvar}")
-        col = _compile_expr(bexpr, bound, set(acc.columns))
-        acc = (
-            acc.withColumn(bvar, col.cast("string"))
-            .withColumn(_m_iri(bvar), F.lit(False))
-            .withColumn(_m_dt(bvar), F.lit(_expr_dtype(bexpr)))
-        )
-        bound = bound | {bvar}
-    for mg in g.minuses:
-        mdf, mvars = _join_group(triples, mg)
-        shared = sorted(bound & mvars)
-        # spec: MINUS with disjoint variable domains removes nothing
-        if shared:
-            acc = acc.join(mdf.select(*shared), on=shared, how="left_anti")
-    for eg, how in [(x, "left_semi") for x in g.exists] + \
-                   [(x, "left_anti") for x in g.not_exists]:
-        edf, evars = _join_group(triples, eg)
-        shared = sorted(bound & evars)
-        if shared:
-            acc = acc.join(edf.select(*shared), on=shared, how=how)
-        else:
-            # no shared variables: (NOT) EXISTS tests mere non-emptiness
-            probe = edf.select(F.lit(1).alias("__k_exists")).limit(1)
-            acc = acc.withColumn("__k_exists", F.lit(1)).join(
-                probe, on="__k_exists", how=how
-            ).drop("__k_exists")
-    for fexpr in g.filters:
-        acc = acc.filter(_compile_expr(fexpr, bound, set(acc.columns)))
-    return acc, bound
-
-
-def _compile_term(t: Term, bound: set, numeric: bool = False):
-    if t.kind == "var":
-        if t.value not in bound:
-            raise SparqlError(f"filter references unbound variable ?{t.value}")
-        c = F.col(t.value)
-        return c.cast("double") if numeric else c
-    if t.kind == "num":
-        return F.lit(float(t.value))
-    if t.kind == "bool":
-        return F.lit(t.value)
-    return F.lit(t.value)
+# the slots of a triple-table scan and of a path relation: (value column,
+# IRI-ness, datatype, whether a literal constant may stand there)
+_TRIPLE_SLOTS = (
+    ("subj", "true", "'iri'", False),
+    ("pred", "true", "'iri'", False),
+    ("obj_value", "obj_is_iri", "obj_dtype", True),
+)
+_PATH_SLOTS = (
+    ("_ps", "_ps_iri", "_ps_dt", True),
+    ("_po", "_po_iri", "_po_dt", True),
+)
 
 
 _BOOL_FNS = ("regex", "bound", "isiri", "isliteral",
@@ -1124,246 +962,518 @@ def _lit_str(node, what: str) -> str:
     return t.value
 
 
-def _compile_expr(node, bound: set, meta: set = frozenset()) -> Column:
-    op = node[0]
-    if op == "or":
-        return _compile_expr(node[1], bound, meta) | _compile_expr(node[2], bound, meta)
-    if op == "and":
-        return _compile_expr(node[1], bound, meta) & _compile_expr(node[2], bound, meta)
-    if op == "not":
-        return ~_compile_expr(node[1], bound, meta)
-    if op == "truthy":
-        return _compile_expr(node[1], bound, meta)
-    if op == "cmp":
-        _, sym, ln, rn = node
-        numeric = any(_is_numeric_node(n) for n in (ln, rn))
-        lc = _compile_operand(ln, bound, numeric, meta)
-        rc = _compile_operand(rn, bound, numeric, meta)
-        return {
-            "=": lc == rc, "!=": lc != rc, "<": lc < rc,
-            "<=": lc <= rc, ">": lc > rc, ">=": lc >= rc,
-        }[sym]
-    if op == "arith":
-        _, sym, ln, rn = node
-        lc = _compile_operand(ln, bound, True, meta)
-        rc = _compile_operand(rn, bound, True, meta)
-        return {
-            "+": lc + rc, "-": lc - rc, "*": lc * rc, "/": lc / rc,
-        }[sym]
-    if op == "fn":
-        _, fn, args = node
+class _Sql:
+    """One SPARQL request → one parameterized Spark SQL statement.
 
+    Every relation (a pattern scan, a group, a subquery) is a derived
+    table whose columns are, per bound variable ``v``, the binding ``v``
+    and its companions ``__m_v_iri``/``__m_v_dt`` (other columns are
+    internal and never projected out).  Every IRI, literal, regex and
+    separator from the query is a named parameter marker ``:pN`` in
+    ``args``; the text itself holds only identifiers, engine constants and
+    the parser's integers (LIMIT, OFFSET, SUBSTR bounds)."""
+
+    def __init__(self, triples: DataFrame):
+        self.triples = triples
+        self.args: dict = {}
+        self.rels: dict = {"g": triples}
+
+    def param(self, value) -> str:
+        name = f"p{len(self.args)}"
+        self.args[name] = value
+        return ":" + name
+
+    @staticmethod
+    def sub(body: str) -> str:
+        """A relation as a derived table: Spark analyzes nested derived
+        tables faster than the same statement as a chain of CTEs."""
+        return f"({body})"
+
+    def relation(self, df: DataFrame) -> str:
+        """A DataFrame argument (a property path's closure), referenced as
+        ``{rN}`` and bound by ``spark.sql`` like the graph."""
+        name = f"r{len(self.rels) - 1}"
+        self.rels[name] = df
+        return "{" + name + "}"
+
+    def run(self, final: str) -> DataFrame:
+        return self.triples.sparkSession.sql(final, self.args, **self.rels)
+
+    # -- graph patterns ---------------------------------------------------
+
+    def pattern(self, pat: Pattern) -> tuple[str, set]:
+        """One triple pattern → a filtered scan projected to its variables.
+
+        A constant predicate becomes ``pred = :pN``; the marker is bound to
+        a literal before optimization, so the scan keeps its partition
+        filter on the pred-partitioned sink.  Subject/predicate bindings
+        are IRIs by RDF definition; object bindings copy the triple's
+        ``obj_is_iri``/``obj_dtype``.  A property path binds its endpoints
+        against the path's relation (either may be a literal)."""
+        if isinstance(pat.p, Path):
+            src = self.relation(_path_rel(self.triples, pat.p))
+            slots = zip(_PATH_SLOTS, (pat.s, pat.o))
+        else:
+            src = _G
+            slots = zip(_TRIPLE_SLOTS, (pat.s, pat.p, pat.o))
+        where, proj, seen = [], [], {}
+        for (col, iri, dt, literal_ok), term in slots:
+            if term.kind == "var":
+                if term.value in seen:  # e.g. ?x ?p ?x — intra-pattern equality
+                    where.append(f"{col} = {seen[term.value]}")
+                    continue
+                seen[term.value] = col
+                proj += [f"{col} AS {_q(term.value)}",
+                         f"{iri} AS {_q(_m_iri(term.value))}",
+                         f"{dt} AS {_q(_m_dt(term.value))}"]
+            elif term.kind == "iri":
+                where.append(f"{col} = {self.param(term.value)}")
+                if iri != "true":
+                    where.append(iri)
+            elif not literal_ok:
+                raise SparqlError("literals are only valid in object position")
+            elif term.kind in ("str", "bool"):
+                where.append(f"{col} = {self.param(term.value)} AND NOT {iri}")
+            else:  # num
+                where.append(
+                    f"try_cast({col} AS DOUBLE) = {self.param(float(term.value))}")
+        sql = f"SELECT {', '.join(proj) or '1 AS __unit'} FROM {src}"
+        if where:
+            sql += " WHERE " + " AND ".join(where)
+        return self.sub(sql), set(seen)
+
+    def union(self, alts: list) -> tuple[str, set]:
+        """``{A} UNION {B}`` → ``UNION ALL`` with null-padding: a variable
+        bound in only one branch is null in the other's rows."""
+        parts = [self.group(alt) for alt in alts]
+        all_vars = sorted(set().union(*(v for _, v in parts)))
+        branches = []
+        for rel, avars in parts:
+            sel = []
+            for v in all_vars:
+                if v in avars:
+                    sel += _var_cols(v)
+                else:
+                    sel += [f"CAST(NULL AS STRING) AS {_q(v)}",
+                            f"CAST(NULL AS BOOLEAN) AS {_q(_m_iri(v))}",
+                            f"CAST(NULL AS STRING) AS {_q(_m_dt(v))}"]
+            branches.append(f"SELECT {', '.join(sel) or '1 AS __unit'} FROM {rel}")
+        return self.sub(" UNION ALL ".join(branches)), set(all_vars)
+
+    def values_rows(self, width: int, rows: list) -> str:
+        """Inline data as a SQL ``VALUES`` relation ``t(c0, …)`` of
+        parameter markers (``UNDEF`` → NULL): a local relation, no
+        Python-backed scan."""
+        cols = ", ".join(f"c{i}" for i in range(width))
+        if not rows:
+            nulls = ", ".join("NULL" for _ in range(width))
+            return f"(SELECT {nulls} WHERE FALSE) AS t({cols})"
+        body = ", ".join(
+            "(" + ", ".join("NULL" if x is None else self.param(x) for x in r) + ")"
+            for r in rows)
+        return f"VALUES {body} AS t({cols})"
+
+    def values(self, vars_: list, rows: list) -> tuple[str, set]:
+        """``VALUES`` bindings carry literal-string companions (IRI terms
+        still join fine — companions matter only in CONSTRUCT object slots
+        and isIRI())."""
+        sel = []
+        for i, v in enumerate(vars_):
+            sel += [f"CAST(c{i} AS STRING) AS {_q(v)}",
+                    f"false AS {_q(_m_iri(v))}", f"'string' AS {_q(_m_dt(v))}"]
+        return (self.sub(f"SELECT {', '.join(sel)} FROM "
+                         f"{self.values_rows(len(vars_), rows)}"), set(vars_))
+
+    def merge(self, acc, bound: set, rel: str, rvars: set, how: str = "inner"):
+        """Join ``rel`` into the accumulated solutions on the shared
+        variables (``USING``: the left side keeps the shared variables'
+        companions).  No shared variables: a cross join, or for OPTIONAL a
+        left join that keeps the left row when the inner group is empty."""
+        if acc is None:
+            return rel, set(rvars)
+        shared = sorted(bound & rvars)
+        sel = ", ".join(["a.*"] + [f"b.{c}" for v in sorted(rvars - bound)
+                                   for c in _var_cols(v)])
+        if shared:
+            kind = "LEFT JOIN" if how == "left" else "JOIN"
+            join = f"{kind} {rel} b USING ({_col_list(shared)})"
+        elif how == "inner":
+            join = f"CROSS JOIN {rel} b"
+        else:
+            join = f"LEFT JOIN {rel} b ON TRUE"
+        return self.sub(f"SELECT {sel} FROM {acc} a {join}"), bound | rvars
+
+    def group(self, g: Group) -> tuple[str, set]:
+        """A group graph pattern → (derived table, bound variables).  Patterns,
+        unions, VALUES and subqueries join in that order, then OPTIONALs
+        (left joins), BINDs, MINUS, (NOT) EXISTS and finally FILTERs."""
+        acc, bound = None, set()
+        for pat in g.patterns:
+            acc, bound = self.merge(acc, bound, *self.pattern(pat))
+        for alts in g.unions:
+            acc, bound = self.merge(acc, bound, *self.union(alts))
+        for vars_, rows in g.values:
+            acc, bound = self.merge(acc, bound, *self.values(vars_, rows))
+        for sq in g.subqueries:
+            acc, bound = self.merge(acc, bound, *self.subquery(sq))
+        if acc is None:
+            if not (g.optionals or g.exists or g.not_exists or g.binds):
+                raise SparqlError("empty graph pattern")
+            # the spec's unit solution: a group of only OPTIONALs/negation
+            # extends one empty mapping (the reference's KPI-data query shape)
+            acc = self.sub("SELECT true AS __unit")
+        for og in g.optionals:
+            acc, bound = self.merge(acc, bound, *self.group(og), how="left")
+        for bexpr, bvar in g.binds:
+            # BIND extends each solution with a computed literal binding,
+            # after the group's joins (so it may reference any variable the
+            # group binds) and before FILTER/negation; the value is stored
+            # lexically like every binding, its datatype in the companion
+            # so CONSTRUCT emits a typed literal
+            if bvar in bound:
+                raise SparqlError(f"BIND would rebind already-bound ?{bvar}")
+            e = self.expr(bexpr, bound)
+            acc = self.sub(
+                f"SELECT *, CAST({e} AS STRING) AS {_q(bvar)}, "
+                f"false AS {_q(_m_iri(bvar))}, "
+                f"'{_expr_dtype(bexpr)}' AS {_q(_m_dt(bvar))} FROM {acc}")
+            bound = bound | {bvar}
+        for eg, how in ([(x, "MINUS") for x in g.minuses]
+                        + [(x, "LEFT SEMI") for x in g.exists]
+                        + [(x, "LEFT ANTI") for x in g.not_exists]):
+            rel, evars = self.group(eg)
+            shared = _col_list(sorted(bound & evars))
+            if shared:
+                join = "LEFT ANTI" if how == "MINUS" else how
+                acc = self.sub(f"SELECT * FROM {acc} {join} JOIN "
+                               f"(SELECT {shared} FROM {rel}) e USING ({shared})")
+            elif how != "MINUS":
+                # no shared variables: (NOT) EXISTS tests mere non-emptiness,
+                # while MINUS removes nothing (both per spec)
+                acc = self.sub(f"SELECT * FROM {acc} {how} JOIN "
+                               f"(SELECT 1 FROM {rel} LIMIT 1) e ON TRUE")
+        if g.filters:
+            cond = " AND ".join(f"({self.expr(f, bound)})" for f in g.filters)
+            acc = self.sub(f"SELECT * FROM {acc} WHERE {cond}")
+        return acc, bound
+
+    # -- expressions ------------------------------------------------------
+
+    def term(self, t: Term, bound: set, numeric: bool = False) -> str:
+        if t.kind == "var":
+            if t.value not in bound:
+                raise SparqlError(f"filter references unbound variable ?{t.value}")
+            c = _q(t.value)
+        elif t.kind == "num":
+            return self.param(float(t.value))
+        else:
+            c = self.param(t.value)
+        return f"try_cast({c} AS DOUBLE)" if numeric else c
+
+    def operand(self, node, bound: set, numeric: bool, companions: bool) -> str:
+        if node[0] == "term":
+            return self.term(node[1], bound, numeric)
+        e = self.expr(node, bound, companions)
+        return f"try_cast({e} AS DOUBLE)" if numeric else e
+
+    def expr(self, node, bound: set, companions: bool = True) -> str:
+        """A FILTER/BIND/HAVING expression → SQL text.  Every numeric
+        coercion is ``try_cast(… AS DOUBLE)`` (and division ``try_divide``):
+        a value that does not parse yields NULL and drops the solution, as
+        a SPARQL type error does, with or without ANSI mode.  With
+        ``companions`` the bindings' IRI flags are in scope (not in HAVING,
+        which sees only group keys and aggregate aliases)."""
+        op = node[0]
+        if op in ("or", "and"):
+            left = self.expr(node[1], bound, companions)
+            right = self.expr(node[2], bound, companions)
+            return f"({left} {op.upper()} {right})"
+        if op == "not":
+            return f"(NOT {self.expr(node[1], bound, companions)})"
+        if op == "truthy":
+            return self.expr(node[1], bound, companions)
+        if op in ("cmp", "arith"):
+            _, sym, ln, rn = node
+            numeric = op == "arith" or any(_is_numeric_node(n) for n in (ln, rn))
+            lc = self.operand(ln, bound, numeric, companions)
+            rc = self.operand(rn, bound, numeric, companions)
+            if sym == "/":
+                return f"try_divide({lc}, {rc})"
+            return f"({lc} {sym} {rc})"
+        if op == "fn":
+            return self.call(node[1], node[2], bound, companions)
+        if op == "term":
+            return self.term(node[1], bound)
+        raise SparqlError(f"unsupported filter expression {node!r}")
+
+    def call(self, fn: str, args: list, bound: set, companions: bool) -> str:
         def S(i):  # string-typed operand
-            return _compile_operand(args[i], bound, False, meta)
+            return self.operand(args[i], bound, False, companions)
 
         def N(i):  # numeric-typed operand
-            return _compile_operand(args[i], bound, True, meta)
+            return self.operand(args[i], bound, True, companions)
 
         if fn == "regex":
-            return S(0).rlike(_lit_str(args[1], "regex() pattern"))
+            return f"({S(0)} RLIKE {self.param(_lit_str(args[1], 'regex() pattern'))})"
         if fn == "bound":
-            return S(0).isNotNull()
+            return f"({S(0)} IS NOT NULL)"
         if fn in ("isiri", "isliteral"):
             t = _unwrap_term(args[0])
-            if t is not None and t.kind == "var" and _m_iri(t.value) in meta:
+            if t is not None and t.kind == "var" and companions and t.value in bound:
                 # the binding's real IRI flag, carried from the scan;
                 # unbound (null) is neither an IRI nor a literal
-                flag = F.col(_m_iri(t.value))
-                c = flag if fn == "isiri" else ~flag
-                return F.coalesce(c, F.lit(False))
+                flag = _q(_m_iri(t.value))
+                c = flag if fn == "isiri" else f"NOT {flag}"
+                return f"coalesce({c}, false)"
             if t is not None and t.kind == "iri":
-                return F.lit(fn == "isiri")
+                return "true" if fn == "isiri" else "false"
             if t is not None and t.kind in ("str", "num", "bool"):
-                return F.lit(fn == "isliteral")
+                return "true" if fn == "isliteral" else "false"
             # fallback (e.g. HAVING scope): approximate by lexical shape
-            shaped = S(0).rlike("^[a-z][a-z0-9+.-]*:")
-            return shaped if fn == "isiri" else ~shaped
+            shaped = f"({S(0)} RLIKE '^[a-z][a-z0-9+.-]*:')"
+            return shaped if fn == "isiri" else f"(NOT {shaped})"
         if fn == "str":
-            return S(0).cast("string")
-        if fn == "strlen":
-            return F.length(S(0))
-        if fn == "ucase":
-            return F.upper(S(0))
-        if fn == "lcase":
-            return F.lower(S(0))
+            return f"CAST({S(0)} AS STRING)"
+        if fn in ("strlen", "ucase", "lcase"):
+            sql_fn = {"strlen": "length", "ucase": "upper", "lcase": "lower"}[fn]
+            return f"{sql_fn}({S(0)})"
         if fn == "concat":
-            return F.concat(*[S(i) for i in range(len(args))])
+            return f"concat({', '.join(S(i) for i in range(len(args)))})"
         if fn == "substr":
             # SPARQL SUBSTR is 1-based like Spark substring
             pos = _unwrap_term(args[1])
             if pos is None or pos.kind != "num":
                 raise SparqlError("SUBSTR position must be a numeric literal")
+            length = 2**31 - 1
             if len(args) > 2:
                 ln = _unwrap_term(args[2])
                 if ln is None or ln.kind != "num":
                     raise SparqlError("SUBSTR length must be a numeric literal")
-                return F.substring(S(0), int(float(pos.value)), int(float(ln.value)))
-            return F.substring(S(0), int(float(pos.value)), 2**31 - 1)
-        if fn == "strstarts":
-            return S(0).startswith(S(1))
-        if fn == "strends":
-            return S(0).endswith(S(1))
-        if fn == "contains":
-            return S(0).contains(S(1))
+                length = int(float(ln.value))
+            return f"substring({S(0)}, {int(float(pos.value))}, {length})"
+        if fn in ("strstarts", "strends", "contains"):
+            sql_fn = {"strstarts": "startswith", "strends": "endswith"}.get(fn, fn)
+            return f"{sql_fn}({S(0)}, {S(1)})"
         if fn in ("strbefore", "strafter"):
-            needle = _lit_str(args[1], f"{fn.upper()} needle")
+            needle = self.param(_lit_str(args[1], f"{fn.upper()} needle"))
             s = S(0)
-            pos = F.locate(needle, s)
+            pos = f"locate({needle}, {s})"
             if fn == "strbefore":
-                hit = F.substring_index(s, needle, 1)
+                hit = f"substring_index({s}, {needle}, 1)"
             else:
                 # everything after the FIRST occurrence (spec)
-                hit = s.substr(pos + F.lit(len(needle)), F.length(s))
-            return F.when(pos > 0, hit).otherwise(F.lit(""))
+                hit = f"substring({s}, {pos} + length({needle}), length({s}))"
+            return f"CASE WHEN {pos} > 0 THEN {hit} ELSE '' END"
         if fn == "replace":
-            return F.regexp_replace(
-                S(0),
-                _lit_str(args[1], "REPLACE pattern"),
-                _lit_str(args[2], "REPLACE replacement"),
-            )
-        if fn == "abs":
-            return F.abs(N(0))
-        if fn == "ceil":
-            return F.ceil(N(0))
-        if fn == "floor":
-            return F.floor(N(0))
+            pat = self.param(_lit_str(args[1], "REPLACE pattern"))
+            rep = self.param(_lit_str(args[2], "REPLACE replacement"))
+            return f"regexp_replace({S(0)}, {pat}, {rep})"
+        if fn in ("abs", "ceil", "floor"):
+            return f"{fn}({N(0)})"
         if fn == "round":
-            return F.round(N(0), 0)
+            return f"round({N(0)}, 0)"
         if fn == "if":
-            return F.when(
-                _compile_expr(args[0], bound, meta), S(1)
-            ).otherwise(S(2))
+            cond = self.expr(args[0], bound, companions)
+            return f"CASE WHEN {cond} THEN {S(1)} ELSE {S(2)} END"
         if fn == "coalesce":
-            return F.coalesce(*[S(i) for i in range(len(args))])
+            return f"coalesce({', '.join(S(i) for i in range(len(args)))})"
         raise SparqlError(f"unsupported function {fn}()")
-    if op == "term":
-        return _compile_term(node[1], bound)
-    raise SparqlError(f"unsupported filter expression {node!r}")
 
+    # -- solution modifiers -----------------------------------------------
 
-def _compile_operand(node, bound: set, numeric: bool, meta: set = frozenset()) -> Column:
-    if node[0] == "term":
-        return _compile_term(node[1], bound, numeric)
-    c = _compile_expr(node, bound, meta)
-    return c.cast("double") if numeric else c
-
-
-def _aggregate(acc: DataFrame, bound: set, q: Query,
-               with_companions: bool = False) -> DataFrame:
-    """GROUP BY + aggregate projection → one hash-aggregate (map-side
-    partials + one shuffle on the group keys — Catalyst's HashAggregate
-    pair, the same physical shape a hand-written groupBy().agg() gets)."""
-    keys = q.group_by
-    plain = [s for s in q.select if not isinstance(s, Agg)]
-    if q.select == ["*"]:
-        raise SparqlError("SELECT * cannot be combined with aggregates")
-    for v in set(plain) | set(keys):
-        if v not in bound:
-            raise SparqlError(f"GROUP BY/SELECT references unbound variable ?{v}")
-    stray = [v for v in plain if v not in keys]
-    if stray:
-        raise SparqlError(f"non-aggregated SELECT variables not in GROUP BY: {stray}")
-    exprs = []
-    for a in (s for s in q.select if isinstance(s, Agg)):
-        if a.arg is None:
-            if a.distinct:
-                raise SparqlError("COUNT(DISTINCT *) is not supported")
-            c = F.count(F.lit(1))
-        else:
-            if a.arg not in bound:
-                raise SparqlError(f"aggregate over unbound variable ?{a.arg}")
-            col = F.col(a.arg)
-            if a.fn in ("sum", "avg"):
-                col = F.expr(f"try_cast({a.arg} AS DOUBLE)")
-            if a.fn == "count":
-                c = F.countDistinct(col) if a.distinct else F.count(col)
-            elif a.fn == "group_concat":
-                # Jena concatenates in encounter order, which is not a
-                # well-defined order under distribution; sort the operands
-                # so the result is partition-invariant (documented
-                # divergence — the reference's consumer splits and counts,
-                # so order never matters to it)
-                lst = F.collect_set(col) if a.distinct else F.collect_list(col)
-                c = F.array_join(F.array_sort(lst), a.sep)
-            elif a.distinct and a.fn in ("sum", "avg"):
-                # SPARQL set semantics: dedup the numeric operand first
-                c = F.expr(f"{a.fn}(DISTINCT try_cast({a.arg} AS DOUBLE))")
-            elif a.fn == "sample":
-                # SAMPLE may return ANY value from the group per spec; pick
-                # min so the result is deterministic across engines and
-                # partitionings (a documented narrowing, like GROUP_CONCAT's
-                # sorted operands)
-                c = F.min(col)
-            else:  # DISTINCT under min/max is a semantic no-op
-                c = getattr(F, a.fn)(col)
-        exprs.append(c.alias(a.alias))
-    if with_companions:
-        # subquery exports: group keys keep their real companions (every
-        # row in a group shares the key's lexical form; first() resolves
-        # the rare same-lexical/different-type collision), aggregate
-        # aliases get derived ones (COUNT → xsd:integer, SUM/AVG →
-        # xsd:double, else string; never IRIs)
-        for kcol in keys:
-            exprs.append(F.first(F.col(_m_iri(kcol))).alias(_m_iri(kcol)))
-            exprs.append(F.first(F.col(_m_dt(kcol))).alias(_m_dt(kcol)))
-    grouped = acc.groupBy(*keys) if keys else acc.groupBy()
-    out = grouped.agg(*exprs)
-    if with_companions:
-        for a in (s for s in q.select if isinstance(s, Agg)):
-            dt = ("xsd:integer" if a.fn == "count"
-                  else "xsd:double" if a.fn in ("sum", "avg") else "string")
-            out = out.withColumn(_m_iri(a.alias), F.lit(False)).withColumn(
-                _m_dt(a.alias), F.lit(dt)
-            )
-    out_cols = set(keys) | {a.alias for a in q.select if isinstance(a, Agg)}
-    for h in q.having:
-        out = out.filter(_compile_expr(h, out_cols))
-    order = [s if isinstance(s, str) else s.alias for s in q.select]
-    if with_companions:
-        order = [c for v in order for c in (v, _m_iri(v), _m_dt(v))]
-    return out.select(*order)
-
-
-def _subquery_df(triples: DataFrame, q: Query) -> tuple[DataFrame, set]:
-    """``{ SELECT … }`` subquery → (bindings DataFrame, exported vars).
-
-    Evaluated bottom-up per the SPARQL 1.1 spec: only PROJECTED variables
-    are visible to the enclosing group (inner non-projected variables,
-    even ones sharing a name with outer variables, are a separate scope —
-    the merge joins exclusively on exported names).  Exported bindings
-    carry companion columns so CONSTRUCT templates and isIRI() work on
-    subquery-bound variables.  ORDER BY inside a subquery matters only
-    with LIMIT (top-k per group of nothing — the solution SET is otherwise
-    order-free), so a bare ORDER BY is skipped rather than paying a global
-    sort the outer join would immediately destroy."""
-    if any(isinstance(s, ExistsProj) for s in q.select):
-        raise SparqlError("EXISTS projections are not supported in subqueries")
-    acc, bound = _join_group(triples, q.where)
-    aggs = [s for s in q.select if isinstance(s, Agg)]
-    if aggs or q.group_by:
-        out = _aggregate(acc, bound, q, with_companions=True)
+    def aggregate(self, acc: str, bound: set, q: Query,
+                  with_companions: bool = False) -> str:
+        """GROUP BY + aggregate projection → one hash aggregate, HAVING as a
+        WHERE over its output (aliases and keys only).  ``with_companions``
+        (subquery exports): group keys keep their real companions (every row
+        in a group shares the key's lexical form; ``first`` resolves the rare
+        same-lexical/different-type collision), aggregate aliases get
+        derived ones (COUNT → xsd:integer, SUM/AVG → xsd:double, else
+        string; never IRIs)."""
+        keys = q.group_by
+        plain = [s for s in q.select if not isinstance(s, Agg)]
+        if q.select == ["*"]:
+            raise SparqlError("SELECT * cannot be combined with aggregates")
+        for v in set(plain) | set(keys):
+            if v not in bound:
+                raise SparqlError(f"GROUP BY/SELECT references unbound variable ?{v}")
+        stray = [v for v in plain if v not in keys]
+        if stray:
+            raise SparqlError(f"non-aggregated SELECT variables not in GROUP BY: {stray}")
+        aggs = [s for s in q.select if isinstance(s, Agg)]
+        exprs = [_q(k) for k in keys]
+        for a in aggs:
+            if a.arg is None:
+                if a.distinct:
+                    raise SparqlError("COUNT(DISTINCT *) is not supported")
+                c = "count(1)"
+            else:
+                if a.arg not in bound:
+                    raise SparqlError(f"aggregate over unbound variable ?{a.arg}")
+                col = _q(a.arg)
+                dist = "DISTINCT " if a.distinct else ""
+                if a.fn == "count":
+                    c = f"count({dist}{col})"
+                elif a.fn in ("sum", "avg"):
+                    # SPARQL set semantics for DISTINCT: dedup the operand
+                    c = f"{a.fn}({dist}try_cast({col} AS DOUBLE))"
+                elif a.fn == "group_concat":
+                    # Jena concatenates in encounter order, which is not a
+                    # well-defined order under distribution; sort the
+                    # operands so the result is partition-invariant
+                    # (documented divergence — the reference's consumer
+                    # splits and counts, so order never matters to it)
+                    lst = "collect_set" if a.distinct else "collect_list"
+                    c = f"array_join(array_sort({lst}({col})), {self.param(a.sep)})"
+                elif a.fn == "sample":
+                    # SAMPLE may return ANY value from the group per spec;
+                    # pick min so the result is deterministic across engines
+                    # and partitionings (a documented narrowing)
+                    c = f"min({col})"
+                else:  # DISTINCT under min/max is a semantic no-op
+                    c = f"{a.fn}({col})"
+            exprs.append(f"{c} AS {_q(a.alias)}")
+        if with_companions:
+            exprs += [f"first({_q(c)}) AS {_q(c)}"
+                      for k in keys for c in (_m_iri(k), _m_dt(k))]
+        sql = f"SELECT {', '.join(exprs)} FROM {acc}"
+        if keys:
+            sql += f" GROUP BY {_col_list(keys)}"
+        out = self.sub(sql)
         names = [s if isinstance(s, str) else s.alias for s in q.select]
-    else:
+        proj = [_q(v) for v in names]
+        if with_companions:
+            derived = {a.alias: ("xsd:integer" if a.fn == "count" else "xsd:double"
+                                 if a.fn in ("sum", "avg") else "string")
+                       for a in aggs}
+            proj = []
+            for v in names:
+                if v in derived:
+                    proj += [_q(v), f"false AS {_q(_m_iri(v))}",
+                             f"'{derived[v]}' AS {_q(_m_dt(v))}"]
+                else:
+                    proj += _var_cols(v)
+        sql = f"SELECT {', '.join(proj)} FROM {out}"
         if q.having:
+            scope = set(keys) | {a.alias for a in aggs}
+            sql += " WHERE " + " AND ".join(
+                f"({self.expr(h, scope, companions=False)})" for h in q.having)
+        return self.sub(sql)
+
+    def project(self, acc: str, bound: set, q: Query, subquery: bool) -> tuple[str, list]:
+        """SELECT list, DISTINCT, ORDER BY, OFFSET and LIMIT → (SQL text,
+        projected names).  A subquery exports companions too, and its bare
+        ORDER BY (no LIMIT/OFFSET) is dropped: the solution SET it feeds is
+        order-free, so a global sort would be wasted."""
+        aggs = [s for s in q.select if isinstance(s, Agg)]
+        if aggs or q.group_by:
+            acc = self.aggregate(acc, bound, q, with_companions=subquery)
+            names = [s if isinstance(s, str) else s.alias for s in q.select]
+        elif q.having:
             raise SparqlError("HAVING requires GROUP BY or aggregates")
-        names = sorted(bound) if q.select == ["*"] else list(q.select)
-        missing = [v for v in names if v not in bound]
-        if missing:
-            raise SparqlError(f"SELECT references unbound variables: {missing}")
-        out = acc.select(*[c for v in names for c in (v, _m_iri(v), _m_dt(v))])
-    if q.distinct:
-        out = out.distinct()
-    if q.limit is not None or q.offset:
-        if q.order_by:
-            out = out.orderBy(
-                *[F.col(v).asc() if asc else F.col(v).desc()
-                  for v, asc in q.order_by]
-            )
-        if q.offset:
-            out = out.offset(q.offset)
+        else:
+            names = sorted(bound) if q.select == ["*"] else [
+                s if isinstance(s, str) else s.alias for s in q.select]
+            missing = [v for v in names if v not in bound]
+            if missing:
+                raise SparqlError(f"SELECT references unbound variables: {missing}")
+        cols = [c for v in names for c in _var_cols(v)] if subquery else [
+            _q(v) for v in names]
+        sql = (f"SELECT {'DISTINCT ' if q.distinct else ''}"
+               f"{', '.join(cols) or '1 AS __unit'} FROM {acc}")
+        if q.order_by and (not subquery or q.limit is not None or q.offset):
+            sql += " ORDER BY " + ", ".join(
+                f"{_q(v)} {'ASC' if asc else 'DESC'}" for v, asc in q.order_by)
         if q.limit is not None:
-            out = out.limit(q.limit)
-    return out, set(names)
+            sql += f" LIMIT {int(q.limit)}"
+        if q.offset:
+            # SPARQL slice: skip OFFSET solutions, then take LIMIT.  Without
+            # an ORDER BY the skipped prefix is implementation-defined
+            sql += f" OFFSET {int(q.offset)}"
+        return sql, names
+
+    def subquery(self, q: Query) -> tuple[str, set]:
+        """``{ SELECT … }`` → (derived table, exported variables), evaluated bottom-up
+        per SPARQL 1.1: only PROJECTED variables are visible to the
+        enclosing group (inner non-projected names are a separate scope —
+        the merge joins exclusively on exported names).  Exports carry
+        companions so CONSTRUCT templates and isIRI() work on them."""
+        if any(isinstance(s, ExistsProj) for s in q.select):
+            raise SparqlError("EXISTS projections are not supported in subqueries")
+        acc, bound = self.group(q.where)
+        sql, names = self.project(acc, bound, q, subquery=True)
+        return self.sub(sql), set(names)
+
+    def exists_projection(self, acc: str, bound: set, ep: ExistsProj) -> str:
+        """``(EXISTS { … } AS ?flag)`` → a LEFT join against the inner
+        group's distinct shared variables, the flag coalesced to false and
+        bound lexically as ``"true"``/``"false"``; with no shared variables
+        it degrades to a non-emptiness probe."""
+        rel, evars = self.group(ep.group)
+        shared = _col_list(sorted(bound & evars))
+        if shared:
+            join = (f"LEFT JOIN (SELECT DISTINCT {shared}, true AS __e FROM {rel}) e "
+                    f"USING ({shared})")
+        else:
+            join = f"LEFT JOIN (SELECT true AS __e FROM {rel} LIMIT 1) e ON TRUE"
+        return self.sub(
+            f"SELECT a.*, CASE WHEN coalesce(e.__e, false) THEN 'true' "
+            f"ELSE 'false' END AS {_q(ep.alias)} FROM {acc} a {join}")
+
+    # -- templates --------------------------------------------------------
+
+    def template_term(self, term: Term, slot: str, bound: set):
+        """One CONSTRUCT/DELETE template slot → (value, dtype, is_iri)."""
+        if term.kind == "var":
+            if term.value not in bound:
+                raise SparqlError(
+                    f"CONSTRUCT template uses unbound variable ?{term.value}")
+            return (_q(term.value), _q(_m_dt(term.value)),
+                    f"coalesce({_q(_m_iri(term.value))}, false)")
+        if term.kind == "iri":
+            return self.param(term.value), "'iri'", "true"
+        if slot != "obj":
+            raise SparqlError(f"literal is not a valid {slot} in a CONSTRUCT template")
+        if term.kind == "num":
+            dt = ("xsd:integer" if re.fullmatch(r"[+-]?\d+", term.value)
+                  else "xsd:decimal")
+        else:
+            dt = "xsd:boolean" if term.kind == "bool" else "string"
+        return self.param(term.value), f"'{dt}'", "false"
+
+    def instantiate(self, acc: str, bound: set, template: Group) -> str:
+        """Project a solution set through a plain-triples template: one
+        triple family per template pattern, ``UNION ALL``, then DISTINCT
+        (graph-set semantics).  Rows where any slot is unbound (an OPTIONAL
+        variable) emit no triple, per spec."""
+        fams = []
+        for pat in template.patterns:
+            sv, _, _ = self.template_term(pat.s, "subject", bound)
+            pv, _, _ = self.template_term(pat.p, "predicate", bound)
+            ov, od, oi = self.template_term(pat.o, "obj", bound)
+            fams.append(
+                f"SELECT * FROM (SELECT CAST({sv} AS STRING) AS subj, "
+                f"CAST({pv} AS STRING) AS pred, CAST({ov} AS STRING) AS obj_value, "
+                f"CAST({od} AS STRING) AS obj_dtype, "
+                f"CAST({oi} AS BOOLEAN) AS obj_is_iri FROM {acc}) "
+                "WHERE subj IS NOT NULL AND pred IS NOT NULL AND obj_value IS NOT NULL")
+        return f"SELECT DISTINCT * FROM ({' UNION ALL '.join(fams)})"
+
+
+_FORM_ERRORS = {
+    "ask": "sparql_ask() expects an ASK query",
+    "construct": "sparql_construct() expects a CONSTRUCT query",
+    "describe": "sparql_describe() expects a DESCRIBE query",
+    "delete": "sparql_delete() expects a DELETE WHERE update",
+}
+
+
+def _parse(query: str, form: str) -> Query:
+    q = _Parser(query).parse()
+    if q.form != form:
+        raise SparqlError(_FORM_ERRORS.get(form) or (
+            f"{q.form.upper()} is evaluated by sparql_{q.form}(), not sparql_select()"))
+    return q
 
 
 def sparql_select(triples: DataFrame, query: str) -> DataFrame:
@@ -1373,129 +1483,63 @@ def sparql_select(triples: DataFrame, query: str) -> DataFrame:
     forms; IRIs as their string value).  See the module docstring for the
     supported subset and the compilation model.
     """
-    q = _Parser(query).parse()
-    if q.form != "select":
-        raise SparqlError(
-            f"{q.form.upper()} is evaluated by sparql_{q.form}(), not sparql_select()"
-        )
-    acc, bound = _join_group(triples, q.where)
-    aggs = [s for s in q.select if isinstance(s, Agg)]
+    q = _parse(query, "select")
+    sql = _Sql(triples)
+    acc, bound = sql.group(q.where)
     eprojs = [s for s in q.select if isinstance(s, ExistsProj)]
-    if eprojs and (aggs or q.group_by):
+    if eprojs and (q.group_by or any(isinstance(s, Agg) for s in q.select)):
         raise SparqlError("EXISTS projections cannot mix with aggregates")
     for ep in eprojs:
-        edf, evars = _join_group(triples, ep.group)
-        shared = sorted(bound & evars)
-        flag = f"__e_{ep.alias}"
-        if shared:
-            probe = edf.select(*shared).distinct().withColumn(flag, F.lit(True))
-            acc = acc.join(probe, on=shared, how="left")
-        else:
-            probe = edf.select(F.lit(True).alias(flag)).limit(1)
-            acc = acc.join(probe, F.lit(True), how="left")
-        acc = acc.withColumn(
-            ep.alias,
-            F.when(F.coalesce(F.col(flag), F.lit(False)), "true")
-            .otherwise("false"),
-        )
+        acc = sql.exists_projection(acc, bound, ep)
         bound = bound | {ep.alias}
-    if aggs or q.group_by:
-        out = _aggregate(acc, bound, q)
-    elif q.having:
-        raise SparqlError("HAVING requires GROUP BY or aggregates")
-    elif q.select == ["*"]:
-        out = acc.select(*sorted(bound))
-    else:
-        names = [s if isinstance(s, str) else s.alias for s in q.select]
-        missing = [v for v in names if v not in bound]
-        if missing:
-            raise SparqlError(f"SELECT references unbound variables: {missing}")
-        out = acc.select(*names)
-    if q.distinct:
-        out = out.distinct()
-    if q.order_by:
-        out = out.orderBy(
-            *[F.col(v).asc() if asc else F.col(v).desc() for v, asc in q.order_by]
-        )
-    if q.offset:
-        # SPARQL slice: skip OFFSET solutions, then take LIMIT.  Without an
-        # ORDER BY the skipped prefix is implementation-defined, per spec.
-        out = out.offset(q.offset)
-    if q.limit is not None:
-        out = out.limit(q.limit)
-    return out
+    text, names = sql.project(acc, bound, q, subquery=False)
+    out = sql.run(text)
+    return out if names else out.drop("__unit")
 
 
 def sparql_ask(triples: DataFrame, query: str) -> bool:
     """Evaluate a SPARQL ASK query: does the pattern have any solution?
 
-    Compiles the group exactly like SELECT and probes with ``limit(1)`` —
+    Compiles the group exactly like SELECT and probes with ``LIMIT 1`` —
     Spark stops the scan at the first matching row."""
-    q = _Parser(query).parse()
-    if q.form != "ask":
-        raise SparqlError("sparql_ask() expects an ASK query")
-    acc, _ = _join_group(triples, q.where)
-    return bool(acc.limit(1).count())
-
-
-def _template_term(term: Term, slot: str, bound: set):
-    """One CONSTRUCT template slot → (value, dtype, is_iri) columns."""
-    if term.kind == "var":
-        if term.value not in bound:
-            raise SparqlError(f"CONSTRUCT template uses unbound variable ?{term.value}")
-        return (
-            F.col(term.value),
-            F.col(_m_dt(term.value)),
-            F.coalesce(F.col(_m_iri(term.value)), F.lit(False)),
-        )
-    if term.kind == "iri":
-        return F.lit(term.value), F.lit("iri"), F.lit(True)
-    if slot != "obj":
-        raise SparqlError(f"literal is not a valid {slot} in a CONSTRUCT template")
-    if term.kind == "num":
-        dt = "xsd:integer" if re.fullmatch(r"[+-]?\d+", term.value) else "xsd:decimal"
-        return F.lit(term.value), F.lit(dt), F.lit(False)
-    if term.kind == "bool":
-        return F.lit(term.value), F.lit("xsd:boolean"), F.lit(False)
-    return F.lit(term.value), F.lit("string"), F.lit(False)
+    q = _parse(query, "ask")
+    sql = _Sql(triples)
+    acc, _ = sql.group(q.where)
+    return bool(sql.run(f"SELECT 1 FROM {acc} LIMIT 1").count())
 
 
 def sparql_describe(triples: DataFrame, query: str) -> DataFrame:
     """Evaluate ``DESCRIBE <iri>… [?var…] [WHERE { … }]`` → the canonical
     triple rows whose SUBJECT is a described resource.
 
-    Described resources are the explicit IRIs plus, for each DESCRIBE
-    variable, its IRI-valued bindings in the WHERE solutions (literal
-    bindings are not resources and are skipped, read from the IRI-ness
-    companion — never guessed from lexical shape).  The description is the
-    subject-rows form (Concise Bounded Description minus blank-node
-    closure: this engine's graphs have no blank subjects after ingest,
-    which labels every bnode).  One distinct resource set + one left-semi
-    join — at scale the semi-join probe side is the small one and AQE
-    broadcasts it."""
-    q = _Parser(query).parse()
-    if q.form != "describe":
-        raise SparqlError("sparql_describe() expects a DESCRIBE query")
-    spark = triples.sparkSession
+    Described resources are the explicit IRIs (a SQL ``VALUES`` relation)
+    plus, for each DESCRIBE variable, its IRI-valued bindings in the WHERE
+    solutions (literal bindings are not resources and are skipped, read
+    from the IRI-ness companion — never guessed from lexical shape).  The
+    description is the subject-rows form (Concise Bounded Description minus
+    blank-node closure: this engine's graphs have no blank subjects after
+    ingest, which labels every bnode).  One distinct resource set + one
+    left-semi join — at scale the semi-join probe side is the small one and
+    AQE broadcasts it."""
+    q = _parse(query, "describe")
+    sql = _Sql(triples)
     iris = [t.value for t in q.select if t.kind == "iri"]
     vars_ = [t.value for t in q.select if t.kind == "var"]
-    subs = (
-        spark.createDataFrame([(i,) for i in iris], "subj string")
-        if iris
-        else None
-    )
+    parts = []
+    if iris:
+        parts.append("SELECT CAST(c0 AS STRING) AS subj FROM "
+                     + sql.values_rows(1, [[i] for i in iris]))
     if vars_:
         if q.where.is_plain_triples() and not q.where.patterns:
             raise SparqlError("DESCRIBE ?var needs a WHERE clause")
-        acc, bound = _join_group(triples, q.where)
+        acc, bound = sql.group(q.where)
         for v in vars_:
             if v not in bound:
                 raise SparqlError(f"DESCRIBE references unbound variable ?{v}")
-            col = acc.filter(
-                F.coalesce(F.col(_m_iri(v)), F.lit(False))
-            ).select(F.col(v).alias("subj"))
-            subs = col if subs is None else subs.unionByName(col)
-    return triples.join(subs.distinct(), "subj", "left_semi")
+            parts.append(f"SELECT {_q(v)} AS subj FROM {acc} "
+                         f"WHERE coalesce({_q(_m_iri(v))}, false)")
+    subs = sql.sub(f"SELECT DISTINCT subj FROM ({' UNION ALL '.join(parts)})")
+    return sql.run(f"SELECT * FROM {_G} LEFT SEMI JOIN {subs} USING (subj)")
 
 
 def sparql_construct(triples: DataFrame, query: str) -> DataFrame:
@@ -1503,49 +1547,20 @@ def sparql_construct(triples: DataFrame, query: str) -> DataFrame:
     (``subj, pred, obj_value, obj_dtype, obj_is_iri``).
 
     Each template pattern projects the solution set into one triple family
-    (same columns, narrow select) and the families union; ``distinct()``
-    gives CONSTRUCT's graph-set semantics, exactly how this repo's own KG
-    pipeline materializes its triple families.  Rows where any slot is
-    unbound (an OPTIONAL variable) emit no triple, per the SPARQL spec.
-    Subject/predicate slots must be IRIs or variables; a variable there
-    emits whatever it is bound to (this engine does not re-check IRI-ness
-    of subject bindings — bindings from subject/predicate positions are
-    IRIs by construction)."""
-    q = _Parser(query).parse()
-    if q.form != "construct":
-        raise SparqlError("sparql_construct() expects a CONSTRUCT query")
-    acc, bound = _join_group(triples, q.where)
+    (same columns, narrow select) and the families union; DISTINCT gives
+    CONSTRUCT's graph-set semantics, exactly how this repo's own KG pipeline
+    materializes its triple families.  Rows where any slot is unbound (an
+    OPTIONAL variable) emit no triple, per the SPARQL spec.  Subject/
+    predicate slots must be IRIs or variables; a variable there emits
+    whatever it is bound to (this engine does not re-check IRI-ness of
+    subject bindings — bindings from subject/predicate positions are IRIs
+    by construction)."""
+    q = _parse(query, "construct")
+    sql = _Sql(triples)
+    acc, bound = sql.group(q.where)
     if q.limit is not None:
-        acc = acc.limit(q.limit)
-    return _instantiate(acc, bound, q.template)
-
-
-def _instantiate(acc: DataFrame, bound: set, template: Group) -> DataFrame:
-    """Project a solution set through a plain-triples template: one triple
-    family per template pattern, unioned, set semantics.  Rows where any
-    slot is unbound (an OPTIONAL variable) emit no triple, per spec."""
-    fams = []
-    for pat in template.patterns:
-        sv, _, _ = _template_term(pat.s, "subject", bound)
-        pv, _, _ = _template_term(pat.p, "predicate", bound)
-        ov, od, oi = _template_term(pat.o, "obj", bound)
-        fams.append(
-            acc.select(
-                sv.cast("string").alias("subj"),
-                pv.cast("string").alias("pred"),
-                ov.cast("string").alias("obj_value"),
-                od.cast("string").alias("obj_dtype"),
-                oi.cast("boolean").alias("obj_is_iri"),
-            ).filter(
-                F.col("subj").isNotNull()
-                & F.col("pred").isNotNull()
-                & F.col("obj_value").isNotNull()
-            )
-        )
-    out = fams[0]
-    for f in fams[1:]:
-        out = out.unionByName(f)
-    return out.distinct()
+        acc = sql.sub(f"SELECT * FROM {acc} LIMIT {int(q.limit)}")
+    return sql.run(sql.instantiate(acc, bound, q.template))
 
 
 def sparql_delete(triples: DataFrame, query: str) -> DataFrame:
@@ -1561,13 +1576,10 @@ def sparql_delete(triples: DataFrame, query: str) -> DataFrame:
     path uses.  One shuffle, no driver materialization; covers the
     reference's ``deleteOriginalPropertyQuery`` (M3 delete-originals +
     one-hop) verbatim."""
-    q = _Parser(query).parse()
-    if q.form != "delete":
-        raise SparqlError("sparql_delete() expects a DELETE WHERE update")
-    acc, bound = _join_group(triples, q.where)
-    doomed = _instantiate(acc, bound, q.template).select(
-        "subj", "pred", "obj_value", "obj_is_iri"
-    )
-    return triples.join(
-        doomed, on=["subj", "pred", "obj_value", "obj_is_iri"], how="left_anti"
-    )
+    q = _parse(query, "delete")
+    sql = _Sql(triples)
+    acc, bound = sql.group(q.where)
+    doomed = sql.sub(sql.instantiate(acc, bound, q.template))
+    keys = "subj, pred, obj_value, obj_is_iri"
+    return sql.run(f"SELECT * FROM {_G} LEFT ANTI JOIN "
+                   f"(SELECT {keys} FROM {doomed}) d USING ({keys})")
