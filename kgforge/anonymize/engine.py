@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from kgforge.anonymize import kpi as kpi_mod
 from kgforge.anonymize import ops
 from kgforge.anonymize.buckets import calculate_number_of_buckets
-from kgforge.config import AnonymizationConfig, AttrConfig, DEMO_PREFIX
+from kgforge.config import AnonymizationConfig, AttrConfig
 from kgforge.triples import RDF_TYPE, triples_df
 
 _SUFFIX = {
@@ -63,9 +63,7 @@ def anonymize_triples(
     include_original_data: bool = False,
     use_adjusted_attributes: bool = True,
     random_seed: int | None = None,
-    hier_prefix: str = DEMO_PREFIX,
     order_pred: str | None = None,
-    rng_mode: str = "exact",
 ) -> tuple[DataFrame, AnonymizationReport]:
     """Apply the full anonymization pipeline; returns (new triples, report).
 
@@ -129,7 +127,7 @@ def anonymize_triples(
                 col_df = long_df.filter(F.col("_k") == k)
                 new_parts.append(
                     ops.generalize_object(
-                        triples, col_df, attr, cfg.attr_order, g, n, hier_prefix
+                        triples, col_df, attr, cfg.attr_order, g, n
                     )
                 )
             else:
@@ -153,7 +151,7 @@ def anonymize_triples(
             if "randomization" in batches:
                 new_parts.append(
                     ops.randomize(
-                        long_df, batches["randomization"], seed, order_col, rng_mode
+                        long_df, batches["randomization"], seed, order_col
                     )
                 )
 

@@ -7,18 +7,15 @@ strategy=generalization with datatype ∈ {integer, float, date} — the
 ``float``≠``double`` mismatch is a preserved reference quirk
 (FaltJsonService.java:113-118); absent bounds render "obfuscated".
 
-``flat_json_rows`` keeps everything distributed (one row per resource as a
-JSON string); ``flat_json_output`` collects into the reference's response
-dict for fixture-sized payloads.
+``flat_json_output`` is the one serializer: it collects a request-sized
+model into the reference's response dict.
 """
 
 from __future__ import annotations
 
-import json
 import re
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from kgforge.anonymize.kpi import (
     ANONYMIZATION_TYP,
@@ -29,13 +26,7 @@ from kgforge.anonymize.kpi import (
 )
 from kgforge.config import AnonymizationConfig
 from kgforge.ingest import FLAT_OBJECT_NAME
-from kgforge.triples import (
-    RDF_MAX,
-    RDF_MIN,
-    RDF_TYPE,
-    local_name,
-    subjects_of_type,
-)
+from kgforge.triples import RDF_MAX, RDF_MIN, RDF_TYPE, local_name
 
 _BOUND_DATATYPES = ("integer", "float", "date")  # quirk: float, not double
 
@@ -158,36 +149,3 @@ def flat_json_output(
             kpis[local_name(kpi_obj)] = node
 
     return {"data": data, "kpis": kpis}
-
-
-def flat_json_rows(
-    triples: DataFrame, config: AnonymizationConfig, prefix: str
-) -> DataFrame:
-    """Distributed variant: one JSON string per flat row (scale path).
-
-    Same row semantics as :func:`flat_json_output` without driver collection —
-    pivot by predicate local name via map aggregation, counter-ordered.
-    """
-    from kgforge.triples import local_name_col
-
-    flat_type = prefix + FLAT_OBJECT_NAME
-    subs = subjects_of_type(triples, flat_type)
-    mine = triples.join(subs, "subj", "left_semi")
-    lits = mine.filter(~F.col("obj_is_iri")).select(
-        "subj", local_name_col(F.col("pred")).alias("k"), F.col("obj_value").alias("v")
-    )
-    rows = lits.groupBy("subj").agg(
-        F.map_from_entries(F.collect_list(F.struct("k", "v"))).alias("attrs")
-    )
-    rows = rows.withColumn("counter", F.col("attrs")["counter"].cast("long"))
-    types = (
-        mine.filter((F.col("pred") == RDF_TYPE) & (F.col("obj_value") != flat_type))
-        .groupBy("subj")
-        .agg(F.collect_list(local_name_col(F.col("obj_value"))).alias("types"))
-    )
-    rows = rows.join(types, "subj", "left")
-    return rows.orderBy("counter").select(
-        "subj",
-        "counter",
-        F.to_json(F.struct(F.col("attrs"), F.col("types"))).alias("row_json"),
-    )

@@ -28,7 +28,6 @@ K_ANONYMITY = SOYA_URL + "kanonymity"
 HAS_ATTRIBUTE = SOYA_URL + "hasAttribute"
 ANONYMIZATION_TYP = SOYA_URL + "anonymizationTyp"
 NR_BUCKETS = SOYA_URL + "nrBucketsUsed"
-KPIS_PRED = SOYA_URL + "kpis"
 
 # subjects up to which "auto" counts with the pair join
 PAIR_THRESHOLD = 50_000

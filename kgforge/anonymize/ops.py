@@ -15,10 +15,8 @@ plan size is O(1) in the attribute count and in the bucket count.
 Generalization ranks all of its attributes with one range-partitioned global
 rank over ``(_k, value, tie)`` (never a single-partition window unless the
 session has a single slice); randomization's sequential RNG contract forces
-one task per attribute in fixture-parity mode (one ``applyInPandas`` group
-per attribute, each with its own seeded stream —
-RandomizationNumeric.java:22), with a documented partition-parallel scale
-mode.
+one task per attribute (one ``applyInPandas`` group per attribute, each with
+its own seeded stream — RandomizationNumeric.java:22).
 """
 
 from __future__ import annotations
@@ -37,6 +35,7 @@ from kgforge.anonymize.values import (
     median_sql,
     parse_sql,
 )
+from kgforge.config import DEMO_PREFIX
 from kgforge.javarandom import JavaRandom, java_math_round
 from kgforge.rank import with_global_rank
 from kgforge.triples import (
@@ -223,17 +222,16 @@ def generalize_object(
     attr_order: tuple[str, ...],
     g: int,
     n: int,
-    hier_prefix: str,
 ) -> DataFrame:
     """Hierarchy generalization (reference: GeneralizationObject.java:27-58).
 
     Walk the attributeOrder ladder low→high; first level whose value groups
     satisfy (#groups ≤ g AND min group count > 0.5·n/g) wins; otherwise mask.
     Sub-property IRIs are hardcoded under the demo prefix
-    (GeneralizationObject.java:31 — quirk preserved via hier_prefix).
+    (GeneralizationObject.java:31 — quirk preserved).
     """
     gen_pred = attr + "_generalized"
-    level_preds = [hier_prefix + level for level in attr_order]
+    level_preds = [DEMO_PREFIX + level for level in attr_order]
     if level_preds:
         # every level's value per referenced object, in one pivot
         child = (
@@ -319,7 +317,6 @@ def randomize(
     specs: list[AttrSpec],
     seed: int,
     order_col=None,
-    mode: str = "exact",
 ) -> DataFrame:
     """Adaptive-noise randomization (reference: Randomization.java:27-59 +
     per-datatype draws) of every attribute in ``specs`` at once.
@@ -329,11 +326,9 @@ def randomize(
     max distance to its ends.  Each attribute draws from its own
     java.util.Random(seed) stream consumed in ascending (value, tie) order
     with data-dependent retry loops — inherently sequential per attribute
-    (RandomizationNumeric.java:22, fixtures pin seed=1234).  mode="exact"
-    runs one applyInPandas group per attribute (attributes parallelize
-    across tasks); mode="partitioned" range-partitions by (attribute, value)
-    and seeds each partition's share of an attribute with seed ⊕ pid — a
-    documented semantic extension for corpus scale.
+    (RandomizationNumeric.java:22, fixtures pin seed=1234), so each
+    attribute is one applyInPandas group (attributes parallelize across
+    tasks).
     """
     _check_datatypes(specs)
     tiebreak = order_col if order_col is not None else F.col("subj")
@@ -343,15 +338,15 @@ def randomize(
         tiebreak.cast("string").alias("_ord"),
     )
 
-    def run_group(pdf: pd.DataFrame, seed_: int) -> pd.DataFrame:
+    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["_v", "_ord"], kind="mergesort").reset_index(drop=True)
         vals = pdf["_v"].to_numpy()
         k = len(vals)
         datatype, g = pdf["_dt"].iat[0], int(pdf["_g"].iat[0])
-        rng = JavaRandom(seed_)
+        rng = JavaRandom(seed)
         vmin, vmax = vals[0], vals[-1]
-        # window size from the group's own size (Randomization.java:29,37);
-        # in exact mode the group IS the attribute's column, so this is n/g
+        # window size n/g from the attribute's own value count
+        # (Randomization.java:29,37)
         rvv = k // g
         if rvv == k:
             rvv -= 1
@@ -380,23 +375,5 @@ def randomize(
         })
 
     schema = "subj string, pred string, obj_value string, obj_dtype string"
-    if mode == "partitioned":
-        npart = max(d.sparkSession.sparkContext.defaultParallelism, 1)
-        from pyspark import TaskContext
-
-        def run_part(it):
-            frames = list(it)
-            if not frames:
-                return
-            pid = TaskContext.get().partitionId()
-            for _, grp in pd.concat(frames).groupby("_k"):
-                yield run_group(grp, seed ^ pid)
-
-        randomized = d.repartitionByRange(npart, "_k", "_v", "_ord").mapInPandas(
-            run_part, schema=schema
-        )
-    else:
-        randomized = d.groupBy("_k").applyInPandas(
-            lambda pdf: run_group(pdf, seed), schema=schema
-        )
+    randomized = d.groupBy("_k").applyInPandas(run_group, schema=schema)
     return randomized.withColumn("obj_is_iri", F.lit(False))

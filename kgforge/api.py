@@ -19,7 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 from kgforge.anonymize.engine import AnonymizationReport, anonymize_triples
 from kgforge.anonymize.flat_output import flat_json_output
 from kgforge.config import CONFIG_BY_URL, AnonymizationConfig, fetch_config
-from kgforge.ingest import flat_rows_to_triples, jsonld_to_triples
+from kgforge.ingest import (
+    RequestModelError,
+    flat_rows_to_triples,
+    jsonld_to_triples,
+)
 
 
 class RequestValidationError(ValueError):
@@ -40,10 +44,6 @@ class MessageNotReadableError(ValueError):
     object where ``data`` must be a list of objects (error fixture
     04-no-json-ld).  Binding happens BEFORE bean validation, exactly like
     Jackson runs before @Valid."""
-
-
-class RequestModelError(ValueError):
-    """Invalid request model (400, GlobalExceptionHandler.java:58-65)."""
 
 
 class AnonymizationError(RuntimeError):

@@ -6,7 +6,7 @@ one resource ``prefix + "object<i>"`` per row, typed ``prefix +
 input order, ``type`` key (string or list) adding extra rdf:types, scalar
 values stored as *string* literals via toString, one level of nested map
 becoming a blank-node sub-resource with string properties, and key validation
-``^[a-zA-Z_][a-zA-Z0-9_]*$`` (FaltJsonService.java:267-277).
+``^[a-zA-Z_][a-zA-Z0-9_]*$`` over the whole key (FaltJsonService.java:267-277).
 """
 
 from __future__ import annotations
@@ -20,11 +20,12 @@ from kgforge.javarandom import java_double_str
 from kgforge.triples import RDF_TYPE, triples_df
 
 FLAT_OBJECT_NAME = "anonymizationObject"
-_KEY_RE = re.compile(r"^[a-zA-Z_][a-zA-Z0-9_]*$")
+_KEY_RE = re.compile(r"[a-zA-Z_][a-zA-Z0-9_]*")
 
 
 class RequestModelError(ValueError):
-    """Bad request payload (reference: exceptions/RequestModelException.java)."""
+    """Invalid request model (reference: exceptions/RequestModelException.java;
+    400, GlobalExceptionHandler.java:58-65)."""
 
 
 def _scalar_to_string(value) -> str:
@@ -50,7 +51,7 @@ def flat_rows_to_triple_tuples(rows: list[dict], prefix: str) -> list[tuple]:
         out.append((subj, RDF_TYPE, flat_type, "iri", True))
         out.append((subj, prefix + "counter", str(counter), "xsd:integer", False))
         for key, value in entry.items():
-            if not key or not _KEY_RE.match(key):
+            if not _KEY_RE.fullmatch(key):
                 raise RequestModelError(f"Invalid property key: {key}")
             if key == "type":
                 vals = value if isinstance(value, list) else ([value] if value is not None else [])
@@ -71,18 +72,19 @@ def flat_rows_to_triples(spark: SparkSession, rows: list[dict], prefix: str) -> 
     return triples_df(spark, flat_rows_to_triple_tuples(rows, prefix))
 
 
-def flat_df_to_triples(df: DataFrame, prefix: str, type_col: str = "type") -> DataFrame:
+def flat_df_to_triples(df: DataFrame, prefix: str) -> DataFrame:
     """Distributed flat ingest: melt a wide DataFrame into the triple table.
 
     Scale path for the same semantics — scalar columns become string literals,
-    subjects are minted from a global row number (counter).  The melt is a
-    single ``posexplode`` over a struct array (no per-row Python); counter
-    assignment uses zipWithIndex-style partition offsets, not a global window.
+    subjects are minted from a global row number (counter), and a ``type``
+    column adds one extra rdf:type per row.  The melt is a single
+    ``posexplode`` over a struct array (no per-row Python); counter assignment
+    uses zipWithIndex-style partition offsets, not a global window.
     The indexed frame is checkpointed, so the result reads no cache.
     """
     from kgforge.rank import with_global_index
 
-    cols = [c for c in df.columns if c != type_col]
+    cols = [c for c in df.columns if c != "type"]
     caches: list = []
     try:
         d = with_global_index(df, out="_counter", cleanup=caches).localCheckpoint(
@@ -111,12 +113,12 @@ def flat_df_to_triples(df: DataFrame, prefix: str, type_col: str = "type") -> Da
             F.lit(False).alias("obj_is_iri"),
         ),
     ]
-    if type_col in df.columns:
+    if "type" in df.columns:
         parts.append(
             d.select(
                 F.col("_subj").alias("subj"),
                 F.lit(RDF_TYPE).alias("pred"),
-                F.concat(F.lit(prefix), F.col(type_col).cast("string")).alias("obj_value"),
+                F.concat(F.lit(prefix), F.col("type").cast("string")).alias("obj_value"),
                 F.lit("iri").alias("obj_dtype"),
                 F.lit(True).alias("obj_is_iri"),
             ).filter(F.col("obj_value").isNotNull())

@@ -1,56 +1,15 @@
 """Triples → JSON-LD serialization (reference S4: Model.write(out, "JSON-LD"),
 AnonymizationService.java:41-46).
 
-``triples_to_jsonld_rows`` stays distributed: one JSON node object per subject
-(groupBy + collect_list + to_json), suitable for writing JSONL graph shards at
-scale.  ``triples_to_jsonld`` collects into a single @graph dict for
-request-sized payloads (what the reference's HTTP response carries).
+``serialize_jsonld`` is the one serializer: it collects a request-sized
+model and compacts it into the reference's response document.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from kgforge.triples import RDF_TYPE
-
-_XSD_LONG = {"xsd:integer", "xsd:long"}
-
-
-def _node(subj: str, rows: list) -> dict:
-    node: dict = {"@id": subj}
-    for pred, value, dtype, is_iri in rows:
-        if pred == RDF_TYPE and is_iri:
-            node.setdefault("@type", []).append(value)
-            continue
-        if is_iri:
-            v: object = {"@id": value}
-        elif dtype and dtype != "string":
-            v = {"@value": value, "@type": dtype}
-        else:
-            v = value
-        if pred in node:
-            prev = node[pred]
-            node[pred] = prev + [v] if isinstance(prev, list) else [prev, v]
-        else:
-            node[pred] = v
-    if "@type" in node and len(node["@type"]) == 1:
-        node["@type"] = node["@type"][0]
-    return node
-
-
-def triples_to_jsonld(triples: DataFrame, context: dict | None = None) -> dict:
-    rows = triples.select("subj", "pred", "obj_value", "obj_dtype", "obj_is_iri").collect()
-    by_subj: dict[str, list] = {}
-    for r in rows:
-        by_subj.setdefault(r["subj"], []).append(
-            (r["pred"], r["obj_value"], r["obj_dtype"], r["obj_is_iri"])
-        )
-    doc: dict = {"@graph": [_node(s, rs) for s, rs in sorted(by_subj.items())]}
-    if context:
-        doc["@context"] = context
-    return doc
-
 
 XSD_NS = "http://www.w3.org/2001/XMLSchema#"
 _RDF_MIN = "http://www.w3.org/2000/01/rdf-schema#min"
@@ -149,14 +108,3 @@ def serialize_jsonld(triples: DataFrame, context: dict | None = None) -> dict:
     if ctx:
         doc["@context"] = dict(ctx)
     return doc
-
-
-def triples_to_jsonld_rows(triples: DataFrame) -> DataFrame:
-    """(subj, node_json) — distributed per-subject JSON-LD node objects."""
-    grouped = triples.groupBy("subj").agg(
-        F.collect_list(
-            F.struct("pred", "obj_value", "obj_dtype", "obj_is_iri")
-        ).alias("po")
-    )
-    node = F.to_json(F.struct(F.col("subj").alias("@id"), F.col("po")))
-    return grouped.select("subj", node.alias("node_json"))

@@ -26,6 +26,9 @@ from kgforge.kg.vocab import DOC_NS, ENT_NS, KG
 from kgforge.triples import RDF_TYPE, local_df
 
 _SALT_BUCKETS = 16
+# distinct surfaces up to which canonicalization clusters exactly on the
+# driver; above it the MinHash-LSH + distributed connected-components path runs
+SMALL_CANON_THRESHOLD = 20_000
 _CANON_SCHEMA = T.StructType([
     T.StructField("surface", T.StringType()),
     T.StructField("canon_surface", T.StringType()),
@@ -64,7 +67,7 @@ def _py_shingles(s: str, n: int = 3) -> set:
 
 def _canonicalize_driver(spark, surface_list, threshold: float):
     """Exact all-pairs Jaccard + union-find for small surface vocabularies.
-    O(n²) on the driver — only taken below ``small_canon_threshold``; recall
+    O(n²) on the driver — only taken up to ``SMALL_CANON_THRESHOLD``; recall
     is a superset of the LSH-blocked distributed path (blocking exists purely
     to avoid the quadratic scan at scale)."""
     from kgforge.kg.components import union_find_components
@@ -82,18 +85,17 @@ def _canonicalize_driver(spark, surface_list, threshold: float):
 
 
 def _canonicalize_surfaces(
-    spark, surfaces: DataFrame, threshold: float,
-    small_canon_threshold: int, n_surfaces: int | None = None,
+    spark, surfaces: DataFrame, threshold: float, n_surfaces: int | None = None,
 ) -> DataFrame:
-    """(surface) → (surface, canon_surface).  At or below the threshold the
-    vocabulary is collected and clustered exactly on the driver (one job;
-    the result is a local relation, its rows already in the plan); above it
-    the MinHash-LSH + distributed connected-components path runs and its
-    result is persisted.  Both paths agree on the synthetic vocabulary
-    (tested)."""
+    """(surface) → (surface, canon_surface).  Up to ``SMALL_CANON_THRESHOLD``
+    distinct surfaces the vocabulary is collected and clustered exactly on
+    the driver (one job; the result is a local relation, its rows already in
+    the plan); above it the MinHash-LSH + distributed connected-components
+    path runs and its result is persisted.  Both paths agree on the
+    synthetic vocabulary (tested)."""
     if n_surfaces is None:
         n_surfaces = surfaces.count()
-    if n_surfaces <= small_canon_threshold:
+    if n_surfaces <= SMALL_CANON_THRESHOLD:
         return _canonicalize_driver(
             spark, [r["surface"] for r in surfaces.collect()], threshold
         )
@@ -113,16 +115,25 @@ def _canonicalize_surfaces(
     ).persist()
 
 
+def _neardup_triples(canon: DataFrame) -> DataFrame:
+    """surface —nearDuplicateOf→ canonical surface, for every surface that is
+    not its own cluster's label."""
+    return canon.filter(F.col("surface") != F.col("canon_surface")).select(
+        F.concat(F.lit(KG), F.lit("surface/"), F.col("surface")).alias("subj"),
+        F.lit(KG + "nearDuplicateOf").alias("pred"),
+        F.concat(F.lit(KG), F.lit("surface/"), F.col("canon_surface")).alias("obj_value"),
+        F.lit("iri").alias("obj_dtype"),
+        F.lit(True).alias("obj_is_iri"),
+    )
+
+
 def build_kg(
     docs: DataFrame,
     near_dup_threshold: float = 0.55,
     collect_metrics: bool = True,
-    small_canon_threshold: int = 20_000,
     mention_vocab: list | None = None,
     mention_case_insensitive: bool = True,
     catalog: DataFrame | None = None,
-    relation_patterns: tuple | None = None,
-    relation_min_support: int = 1,
 ) -> tuple[DataFrame, dict]:
     """Returns (triples, metrics).
 
@@ -134,8 +145,8 @@ def build_kg(
     ``collect_metrics=False`` skips the per-stage count actions (each is a
     full pipeline barrier) — used by throughput benchmarks; the numbers are
     still available from the graph-write snapshot (kgforge.kg.io).
-    ``small_canon_threshold`` picks the canonicalization strategy: at or
-    below it the distinct surface vocabulary is collected and clustered
+    ``SMALL_CANON_THRESHOLD`` picks the canonicalization strategy: up to
+    that many distinct surfaces the vocabulary is collected and clustered
     exactly on the driver (one job); above it the MinHash-LSH + distributed
     connected-components path runs."""
     metrics: dict = {}
@@ -159,9 +170,7 @@ def build_kg(
     surfaces = linked.select("surface").distinct().persist()
     n_surfaces = surfaces.count()
     metrics["n_surfaces"] = n_surfaces
-    canon = _canonicalize_surfaces(
-        spark, surfaces, near_dup_threshold, small_canon_threshold, n_surfaces
-    )
+    canon = _canonicalize_surfaces(spark, surfaces, near_dup_threshold, n_surfaces)
     if collect_metrics:
         metrics["n_surface_clusters"] = canon.select("canon_surface").distinct().count()
 
@@ -204,16 +213,7 @@ def build_kg(
         F.col("surface"),
     )
 
-    t_neardup = (
-        canon.filter(F.col("surface") != F.col("canon_surface"))
-        .select(
-            F.concat(F.lit(KG), F.lit("surface/"), F.col("surface")).alias("subj"),
-            F.lit(KG + "nearDuplicateOf").alias("pred"),
-            F.concat(F.lit(KG), F.lit("surface/"), F.col("canon_surface")).alias("obj_value"),
-            F.lit("iri").alias("obj_dtype"),
-            F.lit(True).alias("obj_is_iri"),
-        )
-    )
+    t_neardup = _neardup_triples(canon)
 
     media = spans.filter(F.col("kind") != "text")
     t_media = _iri_triple(
@@ -245,35 +245,6 @@ def build_kg(
         t_spancount,
     ):
         triples = triples.unionByName(part)
-
-    if relation_patterns is not None:
-        # optional surface-pattern relation mining (kg/relations.py):
-        # corpus-supported (subj, pred, obj) candidates promoted into the
-        # graph under the kg rel/ namespace — one extra map-only scan of
-        # the text spans plus one combinable support aggregation
-        from kgforge.kg.relations import (
-            extract_relation_candidates,
-            relation_support,
-            relations_to_triples,
-        )
-
-        text_spans = spans.filter(F.col("kind") == "text").select(
-            "doc_id", "text")
-        sup = relation_support(
-            extract_relation_candidates(
-                text_spans, "doc_id", "text", patterns=relation_patterns))
-        t_rel = relations_to_triples(
-            sup, min_support=relation_min_support, namespace=KG + "rel/"
-        ).select(
-            F.col("subject").alias("subj"),
-            F.col("predicate").alias("pred"),
-            F.col("object").alias("obj_value"),
-            F.lit("iri").alias("obj_dtype"),
-            F.lit(True).alias("obj_is_iri"),
-        )
-        triples = triples.unionByName(t_rel)
-        if collect_metrics:
-            metrics["n_relation_triples"] = t_rel.count()
 
     metrics["n_triples"] = None  # filled by the caller's action (avoid extra job)
     return triples, metrics
@@ -310,8 +281,6 @@ def update_kg(
     old_triples: DataFrame,
     new_docs: DataFrame,
     near_dup_threshold: float = 0.55,
-    small_canon_threshold: int = 20_000,
-    stable_labels: bool = False,
     **build_kwargs,
 ) -> tuple[DataFrame, dict]:
     """Incremental KG maintenance: fold a batch of NEW documents into an
@@ -330,18 +299,6 @@ def update_kg(
     Caller contract: ``new_docs`` doc_ids must be disjoint from already
     ingested ones (replays are the streaming sink's epoch-overwrite job).
 
-    ``stable_labels=True`` pins cluster labels across increments instead of
-    re-deriving min-surface labels: each new cluster is labeled with the
-    MINIMUM of the OLD labels of its old members (falling back to the fresh
-    min-surface label for entirely-new clusters).  Pure growth never
-    relabels an existing cluster; when two old clusters merge, the
-    lexicographically smaller prior label deterministically wins (one side
-    must relabel — that is the merge, not churn).  Correctness of "the prior
-    label is always a member of its superset cluster" follows from
-    connectivity being monotone under vocabulary growth.  The default
-    (False) keeps the rebuild-equivalence guarantee above, where labels are
-    min-surface exactly as ``build_kg`` would assign them.
-
     Scale: the increment costs mention/link/aggregate over the NEW docs
     only, plus one distinct over old surfaceForm triples and the
     canonicalization of the union vocabulary — nothing reprocesses old
@@ -351,7 +308,6 @@ def update_kg(
     new_triples, metrics = build_kg(
         new_docs,
         near_dup_threshold=near_dup_threshold,
-        small_canon_threshold=small_canon_threshold,
         collect_metrics=False,
         **build_kwargs,
     )
@@ -374,49 +330,7 @@ def update_kg(
         .distinct()
         .persist()
     )
-    canon = _canonicalize_surfaces(
-        spark, surfaces, near_dup_threshold, small_canon_threshold
-    )
-    if stable_labels:
-        # prior label per OLD surface: its nearDuplicateOf target if it had
-        # one, else itself (canonicals and singletons carry no nd edge)
-        pref_len = len(KG + "surface/") + 1  # substring() is 1-based
-        old_nd = (
-            old_triples.filter(F.col("pred") == nd)
-            .select(
-                F.expr(f"substring(subj, {pref_len})").alias("surface"),
-                F.expr(f"substring(obj_value, {pref_len})").alias("_lab"),
-            )
-        )
-        old_lab = (
-            old_triples.filter(F.col("pred") == KG + "surfaceForm")
-            .select(F.col("obj_value").alias("surface"))
-            .distinct()
-            .join(old_nd, "surface", "left")
-            .withColumn("_old_label", F.coalesce(F.col("_lab"), F.col("surface")))
-            .select("surface", "_old_label")
-        )
-        stable = (
-            canon.join(old_lab, "surface", "left")
-            .groupBy("canon_surface")
-            .agg(F.min("_old_label").alias("_stable"))
-        )
-        canon = (
-            canon.join(stable, "canon_surface", "left")
-            .withColumn(
-                "canon_surface", F.coalesce(F.col("_stable"), F.col("canon_surface"))
-            )
-            .select("surface", "canon_surface")
-        )
-    t_neardup = (
-        canon.filter(F.col("surface") != F.col("canon_surface"))
-        .select(
-            F.concat(F.lit(KG), F.lit("surface/"), F.col("surface")).alias("subj"),
-            F.lit(nd).alias("pred"),
-            F.concat(F.lit(KG), F.lit("surface/"), F.col("canon_surface")).alias("obj_value"),
-            F.lit("iri").alias("obj_dtype"),
-            F.lit(True).alias("obj_is_iri"),
-        )
-    )
+    canon = _canonicalize_surfaces(spark, surfaces, near_dup_threshold)
+    t_neardup = _neardup_triples(canon)
     metrics["incremental"] = True
     return rest.unionByName(t_counts).unionByName(t_neardup), metrics

@@ -12,10 +12,6 @@ The only driver traffic is one count/sum per partition.  With a single
 range bucket (one partition) there are no offsets: ``with_global_rank`` is
 then one window and persists nothing.
 
-(Earlier versions ran the per-partition pass through Arrow ``mapInPandas``;
-the Arrow round-trip dominated the runtime and anti-scaled with cores on
-this host — the JVM window is both faster and scaling-clean.)
-
 Cache lifecycle: each helper must persist its range-partitioned frame (the
 offset collect and the windowed read must see the SAME partitioning — the
 range partitioner samples bounds, so two independent executions could split

@@ -18,7 +18,6 @@ scans at scale (Iceberg/parquet partition column):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -69,27 +68,7 @@ def triples_df(spark: SparkSession, rows) -> DataFrame:
     return local_df(spark, rows, TRIPLE_SCHEMA)
 
 
-def empty_triples(spark: SparkSession) -> DataFrame:
-    return triples_df(spark, [])
-
-
 def local_name(iri: str) -> str:
     """Last '/'- or '#'-segment (reference: ConfigurationService.java:151-154)."""
     i = max(iri.rfind("/"), iri.rfind("#"))
     return iri[i + 1 :] if i != -1 else iri
-
-
-LOCAL_NAME_SQL = F.substring_index  # used as substring_index(substring_index(c,'#',-1),'/',-1)
-
-
-def local_name_col(c):
-    return F.substring_index(F.substring_index(c, "#", -1), "/", -1)
-
-
-def subjects_of_type(triples: DataFrame, type_iri: str) -> DataFrame:
-    """Distinct subjects with rdf:type <type_iri> — the emergent 'table'."""
-    return (
-        triples.filter((F.col("pred") == RDF_TYPE) & (F.col("obj_value") == type_iri))
-        .select("subj")
-        .distinct()
-    )

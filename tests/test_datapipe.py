@@ -122,7 +122,7 @@ def test_multimodal_plumbing(spark):
 
 def test_jsonld_roundtrip(spark):
     from kgforge.ingest import jsonld_to_triple_tuples
-    from kgforge.jsonld_out import triples_to_jsonld
+    from kgforge.jsonld_out import serialize_jsonld
     from kgforge.triples import triples_df
 
     tuples = [
@@ -131,7 +131,7 @@ def test_jsonld_roundtrip(spark):
         ("http://x/1", "http://x/q", "3.5", "xsd:double", False),
         ("http://x/2", "http://x/r", "http://x/1", "iri", True),
     ]
-    doc = triples_to_jsonld(triples_df(spark, tuples))
+    doc = serialize_jsonld(triples_df(spark, tuples), None)
     back = set(jsonld_to_triple_tuples(doc))
     assert back == set(tuples)
 

@@ -270,3 +270,28 @@ def test_golden_04_jsonld_fed_flat_list_yields_kpi_only_doc(spark):
         req = json.load(f)
     got = anonymize_jsonld_response(spark, req)
     assert got == _golden("ld", "04-no-json-ld")
+
+
+@pytest.mark.parametrize("key", ["bad key", "abc\n"])
+def test_invalid_flat_key_maps_to_400_body(key):
+    # the whole key must match ^[a-zA-Z_][a-zA-Z0-9_]*$
+    # (FaltJsonService.java:267-277); ingest rejects it before any Spark call
+    # and the error maps to 400 'Invalid request model'
+    # (GlobalExceptionHandler.java:58-65)
+    from kgforge.api import RequestModelError, anonymize_flat_json, problem_detail
+    from kgforge.config import ANONYMISATION_DEMO, DEMO_PREFIX
+
+    req = {
+        "configurationUrl": "https://soya.ownyourdata.eu/AnonymisationDemo",
+        "prefix": DEMO_PREFIX,
+        "data": [{"name": "a", key: 1}],
+    }
+    with pytest.raises(RequestModelError) as ei:
+        anonymize_flat_json(None, req, config=ANONYMISATION_DEMO)
+    assert problem_detail(ei.value, FLAT_INSTANCE) == {
+        "type": "about:blank",
+        "title": "Invalid request model",
+        "status": 400,
+        "detail": f"Invalid property key: {key}",
+        "instance": FLAT_INSTANCE,
+    }

@@ -357,13 +357,16 @@ def test_kg_to_anonymization_end_to_end(spark, docs, tmp_path):
 
 
 @pytest.mark.slow
-def test_canonicalization_paths_agree(spark, docs):
+def test_canonicalization_paths_agree(spark, docs, monkeypatch):
     """Driver union-find (small-vocab fast path) and the distributed
     MinHash-LSH + connected-components path produce the same surface
     clusters on the synthetic vocabulary (96-lane banding: ≥0.998 candidate
     recall at the 0.55 threshold, then exact-Jaccard verify)."""
+    from kgforge.kg import pipeline
+
     a, _ = build_kg(docs)
-    b, _ = build_kg(docs, small_canon_threshold=0)
+    monkeypatch.setattr(pipeline, "SMALL_CANON_THRESHOLD", 0)
+    b, _ = build_kg(docs)
     key = lambda t: {(r["subj"], r["obj_value"]) for r in
                      t.filter(F.col("pred").endswith("nearDuplicateOf")).collect()}
     assert key(a) == key(b) and len(key(a)) > 0
@@ -426,11 +429,10 @@ def test_update_kg_equals_batch_rebuild(spark):
     docs.unpersist()
 
 
-def test_update_kg_stable_labels(spark):
-    """stable_labels=True pins cluster labels across increments: pure growth
-    never relabels, and a bridge-induced merge keeps the minimum PRIOR label
-    even when the fresh min-surface label would differ; cluster membership
-    stays identical to the default (rebuild-equivalent) policy."""
+def test_update_kg_relabels_bridge_merge(spark):
+    """update_kg labels clusters exactly as a rebuild would: pure growth
+    keeps every label, and a bridge surface that connects two old clusters
+    merges them under the fresh min-surface label (the bridge itself)."""
     from pyspark.sql import functions as F
 
     from kgforge.kg.pipeline import KG, _py_shingles, build_kg, update_kg
@@ -482,25 +484,15 @@ def test_update_kg_stable_labels(spark):
 
     # pure growth (re-mention of an existing surface): labels unchanged
     grown, _ = update_kg(
-        t1, mk_docs([("d10", "z bbbb-cccd w")]),
-        near_dup_threshold=thr, stable_labels=True, **kw,
+        t1, mk_docs([("d10", "z bbbb-cccd w")]), near_dup_threshold=thr, **kw,
     )
     assert labels(grown) == labels(t1)
 
-    # merge: the bridge connects both old clusters.  Stable policy keeps the
-    # min PRIOR label (bbbb-cccc); the default rebuild policy relabels to the
-    # fresh min surface (the bridge itself).
-    merge_docs = mk_docs([("d11", f"z {bridge} w")])
-    stable, _ = update_kg(
-        t1, merge_docs, near_dup_threshold=thr, stable_labels=True, **kw,
+    # merge: the bridge connects both old clusters, which relabel to the
+    # fresh min surface; every surface lands in the one merged cluster
+    merged, _ = update_kg(
+        t1, mk_docs([("d11", f"z {bridge} w")]), near_dup_threshold=thr, **kw,
     )
-    lab_s = labels(stable)
-    assert set(lab_s.values()) == {"bbbb-cccc"}
-    assert set(lab_s) == {"bbbb-cccd", "dddd-eeee", "dddd-eeef", bridge}
-
-    default, _ = update_kg(t1, merge_docs, near_dup_threshold=thr, **kw)
-    lab_d = labels(default)
-    assert set(lab_d.values()) == {bridge}
-    # same partition of the vocabulary under both policies: every surface in
-    # one merged cluster (label + its members)
-    assert set(lab_d) | set(lab_d.values()) == set(lab_s) | set(lab_s.values())
+    lab = labels(merged)
+    assert set(lab.values()) == {bridge}
+    assert set(lab) == set(c1 + c2)

@@ -119,23 +119,6 @@ def test_global_rank_matches_window(spark, caches):
         assert ranked == expect, nparts
 
 
-def test_randomize_partitioned_mode_runs(spark):
-    rows = [(str(i), str(float(i)), "c", False, i) for i in range(100)]
-    col_df = spark.createDataFrame(
-        rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
-    )
-    out = randomize(col_df, [AttrSpec("x", "double", 3, 100)], seed=1234,
-                    order_col=F.col("_tie"), mode="partitioned")
-    vals = {r["subj"]: float(r["obj_value"]) for r in out.collect()}
-    assert len(vals) == 100
-    assert all(0.0 <= v <= 99.0 for v in vals.values())  # clamped to [min,max]
-    # deterministic given fixed partitioning inputs
-    out2 = randomize(col_df, [AttrSpec("x", "double", 3, 100)], seed=1234,
-                     order_col=F.col("_tie"), mode="partitioned")
-    vals2 = {r["subj"]: float(r["obj_value"]) for r in out2.collect()}
-    assert vals == vals2
-
-
 def test_randomize_exact_stays_in_range_and_seeded(spark):
     rows = [(str(i), str(float(i * 3 % 50)), "c", False, i) for i in range(50)]
     col_df = spark.createDataFrame(
