@@ -5,14 +5,14 @@ k-anonymity = min over resources of |generalization-group(r) ∩
 benchmark = 2·mean(|orig − rand|) and null originals form their own
 similarity group (KpiService.java:75-154).
 
-One small-input path and one scale path per attribute count.  Up to
-PAIR_THRESHOLD subjects, a null-safe self-join on the generalization group
-key plus one range predicate per randomized attribute (``pairs``, O(Σ
-group²) pairs).  Above it, a distributed sort + running sum for one
-randomized attribute (``ranges``) and slab-sliced cogrouped counting for two
-or more (``sliced``).  Neither scale path materializes a pair, so one giant
-generalization group (e.g. an all-masked config) spreads across partitions
-instead of pinning one reducer.
+The input picks the counting path (:func:`auto_mode`); no caller chooses
+it.  Up to PAIR_THRESHOLD subjects, a null-safe self-join on the
+generalization group key plus one range predicate per randomized attribute
+(``pairs``, O(Σ group²) pairs).  Above it, a distributed sort + running sum
+for one randomized attribute (``ranges``) and slab-sliced cogrouped counting
+for two or more (``sliced``).  Neither scale path materializes a pair, so one
+giant generalization group (e.g. an all-masked config) spreads across
+partitions instead of pinning one reducer.
 """
 
 from __future__ import annotations
@@ -29,9 +29,8 @@ HAS_ATTRIBUTE = SOYA_URL + "hasAttribute"
 ANONYMIZATION_TYP = SOYA_URL + "anonymizationTyp"
 NR_BUCKETS = SOYA_URL + "nrBucketsUsed"
 
-# subjects up to which "auto" counts with the pair join
+# subjects up to which k is counted with the pair join
 PAIR_THRESHOLD = 50_000
-MODES = ("auto", "pairs", "ranges", "sliced")
 
 
 def attribute_info_rows(type_iri: str, attr: str, strategy: str, g: int) -> list[tuple]:
@@ -80,11 +79,9 @@ def k_anonymity(
     type_iri: str,
     used_attrs: list[str],
     cfgs: dict[str, AttrConfig],
-    mode: str = "auto",
 ) -> tuple[int, str]:
     """Compute the k-anonymity KPI for one object type (KpiService.java:75-99);
-    returns ``(k, mode)`` — ``mode`` is the counting path that ran, after
-    ``"auto"`` resolution.
+    returns ``(k, mode)`` — ``mode`` is the counting path that ran.
 
     Runs BEFORE original-value deletion, exactly like the reference (KPI at
     AnonymizationService.java:101-104, delete at :105-108).
@@ -97,7 +94,8 @@ def k_anonymity(
     OPTIONAL binding, so rows that occur twice in ``triples`` change
     nothing.
 
-    ``mode`` picks the counting strategy for randomized attributes:
+    :func:`auto_mode` picks the counting path for randomized attributes
+    from the subject count and the randomized-attribute count:
 
     - ``"pairs"`` — null-safe self-join on the generalization-group key plus
       one range predicate per attribute.  Simple and oracle-mirrored, but the
@@ -120,29 +118,23 @@ def k_anonymity(
       ``searchsorted`` plus vectorized verification of the remaining
       attributes.  A giant group spreads across its slabs — no pair set, no
       single-partition group.
-    - ``"auto"`` — :func:`auto_mode` of the subject count and the
-      randomized-attribute count.
 
-    An explicit ``"ranges"`` or ``"sliced"`` resolves by attribute count:
-    ``"ranges"`` for one randomized attribute, ``"sliced"`` for more.  With
-    no randomized attribute, k is the size of the smallest generalization
-    group and ``mode`` is ``"groups"`` whatever was asked.  A ``mode`` not
-    in MODES raises ValueError before any Spark job.
+    With no randomized attribute, k is the size of the smallest
+    generalization group and ``mode`` is ``"groups"``.
 
-    All paths produce identical k (property-tested against each other).
+    All paths produce identical k (property-tested against each other with
+    PAIR_THRESHOLD moved).
     """
-    if mode not in MODES:
-        raise ValueError(f"unknown k-anonymity mode: {mode!r}")
     rand_attrs = [a for a in used_attrs if cfgs[a].strategy == "randomization"]
     frame = _kpi_frame(triples, type_iri, used_attrs, rand_attrs, cfgs).persist()
     try:
-        return _dispatch(frame, len(used_attrs), rand_attrs, mode)
+        return _dispatch(frame, len(used_attrs), rand_attrs)
     finally:
         frame.unpersist()
 
 
 def auto_mode(n_subj: int, n_rand: int) -> str:
-    """The ``"auto"`` counting path for ``n_subj`` subjects with ``n_rand``
+    """The counting path for ``n_subj`` subjects with ``n_rand``
     randomized attributes: ``pairs`` up to PAIR_THRESHOLD subjects (cheapest
     for request-sized inputs), else the scale path of the attribute count."""
     if not n_rand:
@@ -181,7 +173,7 @@ def _kpi_frame(triples, type_iri, used_attrs, rand_attrs, cfgs) -> DataFrame:
     )
 
 
-def _dispatch(frame, n_used, rand_attrs, mode) -> tuple[int, str]:
+def _dispatch(frame, n_used, rand_attrs) -> tuple[int, str]:
     all_gcols = [f"_g{i}" for i in range(n_used)]
     if not rand_attrs:
         # a group-key column that is null for every subject cannot change
@@ -223,11 +215,7 @@ def _dispatch(frame, n_used, rand_attrs, mode) -> tuple[int, str]:
         for j in range(len(rand_attrs))
     ]
 
-    if mode == "auto":
-        mode = auto_mode(int(st["n"]), len(rand_attrs))
-    elif mode in ("ranges", "sliced"):
-        mode = "ranges" if len(rand_attrs) == 1 else "sliced"
-
+    mode = auto_mode(int(st["n"]), len(rand_attrs))
     if mode == "pairs":
         k = _k_pairs(frame, gcols, benches)
     elif mode == "ranges":
@@ -399,7 +387,7 @@ def _k_ranges(frame, gcols, bench) -> int:
 
 def _k_sliced(frame, gcols, benches) -> int:
     """Skew-immune counting for two or more randomized attributes (see
-    :func:`k_anonymity` ``mode="sliced"``).
+    :func:`k_anonymity`, ``"sliced"``).
 
     The pair predicate forces a candidate to share the resource's exact
     null pattern across all randomized attributes, so rows stratify by

@@ -30,8 +30,8 @@ from pyspark.sql import types as T
 
 from kgforge.anonymize.values import (
     PARSED_DATATYPES,
+    format_bound,
     format_bound_sql,
-    format_randomized,
     median_sql,
     parse_sql,
 )
@@ -366,12 +366,12 @@ def randomize(
                 res = _draw_date(rng, int(v), float(dist), int(vmin), int(vmax))
             else:
                 res = _draw_datetime(rng, int(v), float(dist), int(vmin), int(vmax))
-            out.append(format_randomized(datatype, res)[0])
+            out.append(format_bound(datatype, res)[0])
         return pd.DataFrame({
             "subj": pdf["subj"],
             "pred": pdf["_attr"] + "_randomized",
             "obj_value": out,
-            "obj_dtype": format_randomized(datatype, 0)[1],
+            "obj_dtype": format_bound(datatype, 0)[1],
         })
 
     schema = "subj string, pred string, obj_value string, obj_dtype string"

@@ -107,10 +107,3 @@ def format_bound_sql(dt: str, v: str) -> tuple[str, str]:
     )
     return lexical, dtype
 
-
-def format_randomized(datatype: str, v: float) -> tuple[str, str]:
-    if datatype in NUMERIC_DATATYPES:
-        return java_double_str(float(v)), "xsd:double"
-    if datatype == "date":
-        return epoch_day_to_iso(int(v)), "xsd:date"
-    return epoch_sec_to_lexical(int(v)), "xsd:dateTime"

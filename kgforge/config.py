@@ -175,13 +175,14 @@ CONFIG_BY_URL = {
 # --- HTTP config loading (reference: ConfigurationService.java:54-101) -----
 
 
-def _default_transport(url: str, timeout: float = 30.0) -> tuple[int, str | None]:
-    """GET ``url`` → (status, body).  Raises OSError/ValueError on transport
-    failure — exactly the failures :func:`fetch_config` converts to
-    OntologyError like the reference's URISyntaxException/IOException arm."""
+def _default_transport(url: str) -> tuple[int, str | None]:
+    """GET ``url`` → (status, body), 30 s timeout.  Raises OSError/ValueError
+    on transport failure — exactly the failures :func:`fetch_config`
+    converts to OntologyError like the reference's
+    URISyntaxException/IOException arm."""
     import urllib.request
 
-    with urllib.request.urlopen(url, timeout=timeout) as resp:  # noqa: S310
+    with urllib.request.urlopen(url, timeout=30.0) as resp:  # noqa: S310
         body = resp.read()
         charset = resp.headers.get_content_charset() or "utf-8"
         return resp.status, body.decode(charset, errors="replace")

@@ -287,14 +287,10 @@ def jsonld_to_triples(spark: SparkSession, doc: dict) -> DataFrame:
     return triples_df(spark, jsonld_to_triple_tuples(doc))
 
 
-ERROR_PRED = "http://kgforge.dev/ns/ingestError"
-
-
-def jsonld_lines_to_triples(
-    lines: DataFrame, json_col: str = "value", on_error: str = "raise"
-) -> DataFrame:
-    """Distributed JSON-LD ingest: one JSON-LD document per row (the JSONL
-    layout object stores ship at corpus scale) → triple DataFrame.
+def jsonld_lines_to_triples(lines: DataFrame) -> DataFrame:
+    """Distributed JSON-LD ingest: one JSON-LD document per row of the
+    ``value`` column (the JSONL layout object stores ship at corpus scale,
+    as ``spark.read.text`` reads it) → triple DataFrame.
 
     Each document is normalized independently inside an Arrow batch with the
     same profile as :func:`jsonld_to_triple_tuples`; blank-node labels are
@@ -303,15 +299,9 @@ def jsonld_lines_to_triples(
     so unioned documents never collide — including byte-identical duplicate
     lines, which are distinct documents and must keep distinct blank nodes.
 
-    ``on_error`` controls malformed-line handling (at corpus scale one
-    corrupt line must not kill the job): ``"raise"`` (default) fails the
-    task with batch-job semantics; ``"skip"`` drops the line silently;
-    ``"triple"`` emits an auditable in-band error triple
-    ``(_:badline.<tag>, kgforge:ingestError, <message>)`` so the count and
-    content of rejects stay queryable next to the good triples.
+    A malformed line fails the task, and with it the job (batch-job
+    semantics: no line is dropped silently).
     """
-    if on_error not in ("raise", "skip", "triple"):
-        raise ValueError("on_error must be raise | skip | triple")
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -332,23 +322,11 @@ def jsonld_lines_to_triples(
 
         for pdf in batches:
             rows = {"subj": [], "pred": [], "obj_value": [], "obj_dtype": [], "obj_is_iri": []}
-            for line, rowid in zip(pdf[json_col], pdf["_kgforge_rowid"]):
+            for line, rowid in zip(pdf["value"], pdf["_kgforge_rowid"]):
                 if not line or not line.strip():
                     continue
                 tag = hashlib.sha256(line.encode()).hexdigest()[:12] + f".{int(rowid)}"
-                try:
-                    doc = _json.loads(line)
-                    tuples = jsonld_to_triple_tuples(doc)
-                except Exception as exc:
-                    if on_error == "raise":
-                        raise
-                    if on_error == "skip":
-                        continue
-                    tuples = [
-                        (f"_:badline.{tag}", ERROR_PRED,
-                         f"{type(exc).__name__}: {exc}", "string", False)
-                    ]
-                for s, p, o, dt, iri in tuples:
+                for s, p, o, dt, iri in jsonld_to_triple_tuples(_json.loads(line)):
                     if s.startswith("_:"):
                         s = f"{s}.{tag}"
                     if iri and isinstance(o, str) and o.startswith("_:"):

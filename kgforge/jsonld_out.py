@@ -9,11 +9,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from kgforge.triples import RDF_TYPE
+from kgforge.triples import RDF_MAX, RDF_MIN, RDF_TYPE
 
 XSD_NS = "http://www.w3.org/2001/XMLSchema#"
-_RDF_MIN = "http://www.w3.org/2000/01/rdf-schema#min"
-_RDF_MAX = "http://www.w3.org/2000/01/rdf-schema#max"
 
 # internal dtype tag → full datatype IRI (compacted against the request
 # context at serialization time, so xsd:double with an xsd prefix prints
@@ -86,7 +84,7 @@ def serialize_jsonld(triples: DataFrame, context: dict | None = None) -> dict:
             elif dtype in (None, "string"):
                 v = value
             else:
-                if dtype == "xsd:date" and pred in (_RDF_MIN, _RDF_MAX):
+                if dtype == "xsd:date" and pred in (RDF_MIN, RDF_MAX):
                     dt_iri = "java:java.time.LocalDate"
                 else:
                     dt_iri = _DTYPE_IRI.get(dtype, dtype)

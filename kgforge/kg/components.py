@@ -37,19 +37,16 @@ def union_find_components(edge_list) -> dict:
 
 def connected_components(
     edges: DataFrame, src: str = "a", dst: str = "b", max_iter: int = 25,
-    driver_threshold: int = 0, n_edges: int | None = None,
+    driver_threshold: int = 0,
 ) -> DataFrame:
     """edges (src, dst) → (node, component) with component = min node id.
 
-    When the edge count (``n_edges`` if the caller already knows it, else a
-    ``count()``) is at or below ``driver_threshold``, the graph is collected
-    and solved with union-find on the driver — one job instead of
+    When the edge count is at or below ``driver_threshold``, the graph is
+    collected and solved with union-find on the driver — one job instead of
     O(diameter) shuffle rounds.  Above the threshold the distributed
     hash-min loop runs; both paths produce identical labels."""
     if driver_threshold > 0:
-        if n_edges is None:
-            n_edges = edges.count()
-        if n_edges <= driver_threshold:
+        if edges.count() <= driver_threshold:
             rows = edges.select(src, dst).collect()
             comp = union_find_components([(r[0], r[1]) for r in rows])
             spark = edges.sparkSession
@@ -88,36 +85,3 @@ def connected_components(
             break
     und.unpersist()
     return labels
-
-def incremental_components(
-    labels: DataFrame,
-    new_edges: DataFrame,
-    src: str = "a",
-    dst: str = "b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Fold a batch of NEW edges into an existing (node, comp) labeling
-    without recomputing over the historical edge set.
-
-    The committed labeling is itself a spanning forest: each (node, comp)
-    row is an edge to the component's anchor, and hash-min over
-    (label-edges ∪ new-edges) reaches the same fixpoint as recomputing
-    over (old-edges ∪ new-edges) — min labels are preserved under
-    contraction, so work scales with |labels| + |delta|, never with the
-    historical EDGE count (the edge set is typically orders of magnitude
-    larger than the node set it labels).  A new edge joining two old
-    components relabels the larger-anchored one; labels therefore stay
-    canonical (global min node id per component) across any merge
-    sequence — the stability policy ROADMAP.md flags for update_kg.
-
-    New-edge endpoints never seen before label themselves, exactly as a
-    full rebuild would."""
-    anchor_edges = labels.select(
-        F.col("node").alias(src), F.col("comp").alias(dst)
-    )
-    return connected_components(
-        anchor_edges.unionByName(new_edges.select(src, dst)),
-        src=src,
-        dst=dst,
-        max_iter=max_iter,
-    )

@@ -46,10 +46,9 @@ def write_graph(
     *,
     stage: str,
     fingerprint: str,
-    mode: str = "overwrite",
     iceberg_table: str | None = None,
 ) -> dict:
-    """Write the triple table and commit a snapshot with lineage metrics:
+    """Replace the triple table and commit a snapshot with lineage metrics:
     ``rows`` is what the writer consumed, ``partitions`` the
     ``{"pred", "rows"}`` counts of the stored table after the commit."""
     t0 = time.time()
@@ -58,13 +57,14 @@ def write_graph(
     observed = triples.observe(written, F.count(F.lit(1)).alias("rows"))
     if iceberg_table is not None:
         try:
-            w = observed.writeTo(iceberg_table)
-            (w.createOrReplace() if mode == "overwrite" else w.append())
-        except Exception as e:  # no Iceberg jars in this image — fall through
-            raise RuntimeError(f"iceberg write failed ({e}); use parquet path")
+            observed.writeTo(iceberg_table).createOrReplace()
+        except Exception as e:
+            # no fallback to the parquet path: a session without the Iceberg
+            # catalog fails the write here, with the catalog error as cause
+            raise RuntimeError(f"iceberg write failed ({e}); use parquet path") from e
         stored = spark.table(iceberg_table)
     else:
-        observed.write.mode(mode).partitionBy("pred").parquet(path)
+        observed.write.mode("overwrite").partitionBy("pred").parquet(path)
         # the known schema skips the footer-sampling inference job; a count
         # over the partition column alone reads no column chunks
         stored = spark.read.schema(triples.schema).parquet(path)
@@ -106,30 +106,3 @@ def resume_or_run(
     df = build_fn()
     write_graph(df, path, stage=stage, fingerprint=fingerprint)
     return spark.read.parquet(path), False
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    buckets: int = 16,
-    sort: bool = True,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a table hash-bucketed (and optionally sorted) on ``key`` —
-    the co-located-join layout: two tables bucketed the same way join with
-    ZERO exchange (and with ``sort`` zero sort), because every bucket pair
-    is already partition-aligned on the join key.  At 100 TB this turns the
-    recurring entity⋈mentions / triples⋈triples joins from full shuffles
-    into local merges; the write cost is paid once.
-
-    Uses the session catalog (``saveAsTable`` — bucket metadata only exists
-    for managed tables; plain parquet paths cannot record it)."""
-    w = df.write.format("parquet").mode(mode).bucketBy(buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

@@ -36,11 +36,10 @@ def candidate_table(spark) -> DataFrame:
     )
 
 
-def trigram_jaccard_col(df: DataFrame, a: str, b: str,
-                        out: str = "score") -> DataFrame:
-    """Whole-stage-codegen trigram Jaccard between two string columns
-    (lowercased, padded ``^…$``, distinct 3-character windows) — pure JVM,
-    so scoring needs no Python worker."""
+def trigram_jaccard_col(df: DataFrame, a: str, b: str) -> DataFrame:
+    """``df`` plus ``score``: whole-stage-codegen trigram Jaccard between two
+    string columns (lowercased, padded ``^…$``, distinct 3-character
+    windows) — pure JVM, so scoring needs no Python worker."""
     ta, tb = f"_tri_{a}", f"_tri_{b}"
     d = df
     for col, tmp in ((a, ta), (b, tb)):
@@ -56,7 +55,7 @@ def trigram_jaccard_col(df: DataFrame, a: str, b: str,
         )
     inter = F.size(F.array_intersect(F.col(ta), F.col(tb)))
     union = F.size(ta) + F.size(tb) - inter
-    return d.withColumn(out, inter.cast("double") / union).drop(
+    return d.withColumn("score", inter.cast("double") / union).drop(
         ta, tb, ta + "_p", tb + "_p"
     )
 
@@ -95,17 +94,13 @@ def entity_initials(name_col) -> F.Column:
         F.transform(words, lambda w: F.substring(w, 1, 1)), ""))
 
 
-def acronym_links(
-    mentions: DataFrame,
-    catalog: DataFrame,
-    surface_col: str = "surface",
-    name_col: str = "canonical",
-) -> DataFrame:
-    """Initialism entity linking: an ALL-CAPS single-token mention surface
-    (≥2 letters) links to catalog entities whose word-initial letters spell
-    it — the classic acronym block of entity-resolution blocking schemes
-    (complementary to string-similarity scoring, which never fires on
-    "IBM" vs "International Business Machines": trigram Jaccard = 0).
+def acronym_links(mentions: DataFrame, catalog: DataFrame) -> DataFrame:
+    """Initialism entity linking: an ALL-CAPS single-token mention
+    ``surface`` (≥2 letters) links to catalog entities whose word-initial
+    letters of ``canonical`` spell it — the classic acronym block of
+    entity-resolution blocking schemes (complementary to string-similarity
+    scoring, which never fires on "IBM" vs "International Business
+    Machines": trigram Jaccard = 0).
 
     Scale shape: the catalog gains one derived column and broadcasts; the
     mention side is filtered to the all-caps minority BEFORE the join, so
@@ -113,14 +108,14 @@ def acronym_links(
     Ambiguous acronyms (two entities sharing initials) produce one row per
     candidate — downstream disambiguation keeps corpus-level support.
     """
-    s = F.col(surface_col)
+    s = F.col("surface")
     m = mentions.filter(
         (F.length(s) >= 2)
         & (s == F.upper(s))
         & (~s.contains(" "))
         & s.rlike("^[A-Z]+$")
     )
-    cand = catalog.withColumn("_initials", entity_initials(F.col(name_col)))
+    cand = catalog.withColumn("_initials", entity_initials(F.col("canonical")))
     return (
         m.join(F.broadcast(cand), s == F.col("_initials"))
         .drop("_initials")

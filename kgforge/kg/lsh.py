@@ -1,11 +1,16 @@
-"""MinHash-LSH blocking over surface forms — pure JVM implementation.
+"""MinHash-LSH blocking — pure JVM implementation.
 
-shingle → minhash → band → bucket-join: character 3-gram shingles built with
-``transform(sequence(...))``, per-shingle 64-bit hashes via ``xxhash64``, K
-min-hash lanes as K aggregate columns (one shuffle), band hashes via
-``hash()``, candidate pairs from a self-join on (band, band_hash).  No Python
-in the path; the self-join key space is the LSH bucket, so skew is bounded by
-bucket size, not corpus size.
+shingle → minhash → band → bucket-join → verify, one function per step, each
+called directly by its users (``kg.pipeline`` canonicalization, the
+``datapipe.dedup`` near-duplicate passes): :func:`shingle_df` builds
+character 3-gram (or word 3-gram) shingles with ``transform(sequence(...))``,
+:func:`signatures_from_shingles` computes K min-hash lanes from per-shingle
+64-bit hashes (``xxhash64``) as K aggregate columns (one shuffle),
+:func:`pairs_from_signatures` hashes each band with ``hash()`` and self-joins
+on (band, band_hash), and :func:`jaccard_filter` keeps the candidates whose
+exact 3-gram Jaccard reaches the threshold.  No Python in the path; the
+self-join key space is the LSH bucket, so skew is bounded by bucket size,
+not corpus size.
 """
 
 from __future__ import annotations
@@ -15,14 +20,15 @@ from pyspark.sql import functions as F
 
 _P = (1 << 31) - 1  # Mersenne prime for the affine rehash; 31-bit operands
 # keep every product below 2^63 (Spark 4 runs ANSI mode: overflow throws)
+_LANE_SEED = 7  # seeds the per-lane rehash constants (lane_constants)
 
 
-def shingle_df(df: DataFrame, key: str, text_col: str, n: int = 3,
+def shingle_df(df: DataFrame, key: str, text_col: str,
                mode: str = "char") -> DataFrame:
-    """Distinct shingles per key.
+    """Distinct 3-gram shingles per key.
 
-    ``char`` (default): padded character n-grams — right for short surface
-    strings.  ``word``: space-joined word n-grams — right for documents,
+    ``char`` (default): padded character 3-grams — right for short surface
+    strings.  ``word``: space-joined word 3-grams — right for documents,
     where char-grams of templated text are near-identical across rows and
     would flood LSH with candidate pairs."""
     if mode == "word":
@@ -32,10 +38,10 @@ def shingle_df(df: DataFrame, key: str, text_col: str, n: int = 3,
             key,
             F.explode(
                 F.expr(
-                    f"if(size(_toks) >= {n},"
-                    f" transform(sequence(1, size(_toks)-{n - 1}),"
-                    f" i -> array_join(slice(_toks, i, {n}), ' ')),"
-                    f" array())"
+                    "if(size(_toks) >= 3,"
+                    " transform(sequence(1, size(_toks)-2),"
+                    " i -> array_join(slice(_toks, i, 3), ' ')),"
+                    " array())"
                 )
             ).alias("shingle"),
         ).dropDuplicates([key, "shingle"])
@@ -45,30 +51,29 @@ def shingle_df(df: DataFrame, key: str, text_col: str, n: int = 3,
         key,
         F.explode_outer(
             F.expr(
-                f"transform(sequence(1, greatest(length(_padded) - {n - 1}, 1)),"
-                f" i -> substring(_padded, i, {n}))"
+                "transform(sequence(1, greatest(length(_padded) - 2, 1)),"
+                " i -> substring(_padded, i, 3))"
             )
         ).alias("shingle"),
     ).dropDuplicates([key, "shingle"])
 
 
-def lane_constants(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
+def lane_constants(num_hashes: int) -> list[tuple[int, int]]:
     """The (a, b) affine rehash constants per minhash lane — exposed so an
     external oracle (DuckDB SQL) can reproduce the exact signatures."""
     from kgforge.kg.synth import _splitmix64
 
     return [
         (
-            (_splitmix64(seed * 1000003 + i) % (_P - 1)) + 1,
-            _splitmix64(seed * 7777777 + i) % _P,
+            (_splitmix64(_LANE_SEED * 1000003 + i) % (_P - 1)) + 1,
+            _splitmix64(_LANE_SEED * 7777777 + i) % _P,
         )
         for i in range(num_hashes)
     ]
 
 
 def signatures_from_shingles(
-    sh: DataFrame, key: str, num_hashes: int = 24, seed: int = 7,
-    shingle_hash=None,
+    sh: DataFrame, key: str, num_hashes: int = 24, shingle_hash=None,
 ) -> DataFrame:
     """(key, _mh0.._mh{K-1}) from an exploded (key, shingle) table — split out
     so callers can persist the shingle table and reuse it for verification."""
@@ -82,22 +87,9 @@ def signatures_from_shingles(
     hashed = sh.select(key, h.alias("_h"))
     aggs = [
         F.min((F.col("_h") * F.lit(a) + F.lit(b)) % F.lit(_P)).alias(f"_mh{i}")
-        for i, (a, b) in enumerate(lane_constants(num_hashes, seed))
+        for i, (a, b) in enumerate(lane_constants(num_hashes))
     ]
     return hashed.groupBy(key).agg(*aggs)
-
-
-def minhash_signatures(
-    df: DataFrame, key: str, text_col: str, num_hashes: int = 24, n: int = 3,
-    seed: int = 7, shingle_hash=None, mode: str = "char",
-) -> DataFrame:
-    """One row per key with columns _mh0.._mh{K-1}.
-
-    ``shingle_hash`` (Column → Column, values in [0, 2^31)) defaults to the
-    xxhash64-reduced hash; pass a portable polynomial hash (see
-    kgforge.datapipe.dedup.poly_hash) to make signatures oracle-mirrorable."""
-    sh = shingle_df(df, key, text_col, n, mode)
-    return signatures_from_shingles(sh, key, num_hashes, seed, shingle_hash)
 
 
 def pick_bands(num_hashes: int, threshold: float) -> int:
@@ -147,26 +139,13 @@ def pairs_from_signatures(
     )
 
 
-def lsh_candidate_pairs(
-    df: DataFrame, key: str, text_col: str, num_hashes: int = 24, bands: int = 8,
-    n: int = 3, seed: int = 7, shingle_hash=None, portable_bands: bool = False,
-    mode: str = "char",
-) -> DataFrame:
-    """Candidate near-duplicate pairs (a, b) with a < b.
-
-    ``portable_bands`` keys each band by the concatenated lane values instead
-    of their murmur3 ``hash()`` — identical candidates, engine-portable."""
-    sig = minhash_signatures(df, key, text_col, num_hashes, n, seed, shingle_hash, mode)
-    return pairs_from_signatures(sig, key, num_hashes, bands, portable_bands)
-
-
 def jaccard_filter(
     pairs: DataFrame, df: DataFrame, key: str, text_col: str, threshold: float,
-    n: int = 3, mode: str = "char",
 ) -> DataFrame:
-    """Verify candidates with exact shingle Jaccard — set sizes + intersection
-    via joins on the exploded shingle table (stays distributed)."""
-    sh = shingle_df(df, key, text_col, n, mode)
+    """Verify candidates with exact character-3-gram Jaccard — set sizes +
+    intersection via joins on the exploded shingle table (stays
+    distributed)."""
+    sh = shingle_df(df, key, text_col)
     sizes = sh.groupBy(key).count()
     za = sizes.select(F.col(key).alias("a"), F.col("count").alias("na"))
     zb = sizes.select(F.col(key).alias("b"), F.col("count").alias("nb"))

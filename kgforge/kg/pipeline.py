@@ -19,7 +19,12 @@ from pyspark.sql import types as T
 
 from kgforge.kg.components import connected_components
 from kgforge.kg.linking import link_mentions
-from kgforge.kg.lsh import jaccard_filter, lsh_candidate_pairs
+from kgforge.kg.lsh import (
+    jaccard_filter,
+    pairs_from_signatures,
+    shingle_df,
+    signatures_from_shingles,
+)
 from kgforge.kg.mentions import detect_mentions
 from kgforge.kg.synth import explode_spans
 from kgforge.kg.vocab import DOC_NS, ENT_NS, KG
@@ -55,14 +60,14 @@ def _iri_triple(df, subj, pred, value):
     )
 
 
-def _py_shingles(s: str, n: int = 3) -> set:
-    """Driver-side mirror of kgforge.kg.lsh.shingle_df (same padding, same
-    short-string quirk) so the small-vocabulary fast path and the distributed
-    LSH path agree on Jaccard values."""
+def _py_shingles(s: str) -> set:
+    """Driver-side mirror of kgforge.kg.lsh.shingle_df (same 3-grams, same
+    padding, same short-string quirk) so the small-vocabulary fast path and
+    the distributed LSH path agree on Jaccard values."""
     p = "^" + s.lower() + "$"
-    if len(p) <= n:
-        return {p[:n]}
-    return {p[i : i + n] for i in range(len(p) - n + 1)}
+    if len(p) <= 3:
+        return {p}
+    return {p[i : i + 3] for i in range(len(p) - 2)}
 
 
 def _canonicalize_driver(spark, surface_list, threshold: float):
@@ -85,34 +90,38 @@ def _canonicalize_driver(spark, surface_list, threshold: float):
 
 
 def _canonicalize_surfaces(
-    spark, surfaces: DataFrame, threshold: float, n_surfaces: int | None = None,
-) -> DataFrame:
-    """(surface) → (surface, canon_surface).  Up to ``SMALL_CANON_THRESHOLD``
-    distinct surfaces the vocabulary is collected and clustered exactly on
-    the driver (one job; the result is a local relation, its rows already in
-    the plan); above it the MinHash-LSH + distributed connected-components
-    path runs and its result is persisted.  Both paths agree on the
-    synthetic vocabulary (tested)."""
-    if n_surfaces is None:
-        n_surfaces = surfaces.count()
-    if n_surfaces <= SMALL_CANON_THRESHOLD:
-        return _canonicalize_driver(
-            spark, [r["surface"] for r in surfaces.collect()], threshold
-        )
+    spark, surfaces: DataFrame, threshold: float,
+) -> tuple[DataFrame, int, str]:
+    """(surface) → ((surface, canon_surface), distinct surfaces, path).
+
+    One action decides: ``limit(SMALL_CANON_THRESHOLD + 1).collect()``.
+    When the vocabulary fits, it is clustered exactly on the driver
+    (``"driver"``; the result is a local relation, its rows already in the
+    plan).  Otherwise the surfaces are persisted and counted and the
+    MinHash-LSH + distributed connected-components path runs; its result
+    is persisted (``"lsh"``).  Both paths agree on the synthetic vocabulary
+    (tested)."""
+    head = [r["surface"] for r in surfaces.limit(SMALL_CANON_THRESHOLD + 1).collect()]
+    if len(head) <= SMALL_CANON_THRESHOLD:
+        return _canonicalize_driver(spark, head, threshold), len(head), "driver"
+    surfaces = surfaces.persist()
+    n_surfaces = surfaces.count()
     # 96 lanes / 32 bands (r=3): ≥0.998 candidate recall at the 0.55
     # Jaccard threshold (24/8 missed ~23% of near-threshold pairs); the
     # exact-Jaccard verify prunes the extra sub-threshold candidates
-    pairs = lsh_candidate_pairs(
-        surfaces, "surface", "surface", num_hashes=96, bands=32
+    sig = signatures_from_shingles(
+        shingle_df(surfaces, "surface", "surface"), "surface", num_hashes=96
     )
+    pairs = pairs_from_signatures(sig, "surface", 96, 32)
     verified = jaccard_filter(pairs, surfaces, "surface", "surface", threshold)
     comps = connected_components(verified.select("a", "b"))
-    return (
+    canon = (
         surfaces.join(
             comps.withColumnRenamed("node", "surface"), "surface", "left"
         ).withColumn("canon_surface", F.coalesce(F.col("comp"), F.col("surface")))
         .select("surface", "canon_surface")
     ).persist()
+    return canon, n_surfaces, "lsh"
 
 
 def _neardup_triples(canon: DataFrame) -> DataFrame:
@@ -145,10 +154,11 @@ def build_kg(
     ``collect_metrics=False`` skips the per-stage count actions (each is a
     full pipeline barrier) — used by throughput benchmarks; the numbers are
     still available from the graph-write snapshot (kgforge.kg.io).
-    ``SMALL_CANON_THRESHOLD`` picks the canonicalization strategy: up to
-    that many distinct surfaces the vocabulary is collected and clustered
-    exactly on the driver (one job); above it the MinHash-LSH + distributed
-    connected-components path runs."""
+    ``SMALL_CANON_THRESHOLD`` picks the canonicalization path, reported as
+    ``metrics["canon_path"]``: up to that many distinct surfaces the
+    vocabulary is collected and clustered exactly on the driver
+    (``"driver"``); above it the MinHash-LSH + distributed
+    connected-components path runs (``"lsh"``)."""
     metrics: dict = {}
     spark = docs.sparkSession
     spans = explode_spans(docs).persist()
@@ -167,10 +177,9 @@ def build_kg(
         metrics["n_mentions"] = linked.count()
 
     # --- canonicalization of surface forms ----------------------------------
-    surfaces = linked.select("surface").distinct().persist()
-    n_surfaces = surfaces.count()
-    metrics["n_surfaces"] = n_surfaces
-    canon = _canonicalize_surfaces(spark, surfaces, near_dup_threshold, n_surfaces)
+    canon, metrics["n_surfaces"], metrics["canon_path"] = _canonicalize_surfaces(
+        spark, linked.select("surface").distinct(), near_dup_threshold
+    )
     if collect_metrics:
         metrics["n_surface_clusters"] = canon.select("canon_surface").distinct().count()
 
@@ -328,9 +337,8 @@ def update_kg(
         rest.filter(F.col("pred") == KG + "surfaceForm")
         .select(F.col("obj_value").alias("surface"))
         .distinct()
-        .persist()
     )
-    canon = _canonicalize_surfaces(spark, surfaces, near_dup_threshold)
+    canon, _, _ = _canonicalize_surfaces(spark, surfaces, near_dup_threshold)
     t_neardup = _neardup_triples(canon)
     metrics["incremental"] = True
     return rest.unionByName(t_counts).unionByName(t_neardup), metrics

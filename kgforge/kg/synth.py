@@ -118,9 +118,10 @@ def synth_docs(spark: SparkSession, n_docs: int, seed: int = 42,
     return base.mapInPandas(gen, schema=DOCS_SCHEMA)
 
 
-def docs_from_testdata(spark: SparkSession, sf_dir: str, seed: int = 42) -> DataFrame:
-    """Derive the span-structured variant deterministically from the driver's
-    documents.parquet (doc_id, text, ...) — FIXTURES.md §1."""
+def docs_from_testdata(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Derive the span-structured variant deterministically (stream seed 42)
+    from the driver's documents.parquet (doc_id, text, ...) — FIXTURES.md
+    §1."""
     raw = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "text")
@@ -138,7 +139,7 @@ def docs_from_testdata(spark: SparkSession, sf_dir: str, seed: int = 42) -> Data
                 rows.append(
                     {
                         "doc_id": f"doc_{int(idx):012d}",
-                        "spans": make_spans(seed, int(idx), base_text=txt),
+                        "spans": make_spans(42, int(idx), base_text=txt),
                     }
                 )
             yield pd.DataFrame(rows)

@@ -409,12 +409,12 @@ def test_contamination_check(spark):
 
 
 def test_jsonl_ingest_on_error_modes(spark):
-    """Corrupt-line policy for distributed JSONL ingest: raise (default),
-    skip, or auditable in-band error triples."""
+    """Corrupt-line policy for distributed JSONL ingest: a malformed line
+    fails the job; the good lines alone ingest."""
     import pytest as _pytest
     from pyspark.errors.exceptions.base import PySparkException
 
-    from kgforge.ingest import ERROR_PRED, jsonld_lines_to_triples
+    from kgforge.ingest import jsonld_lines_to_triples
 
     # absolute-IRI predicate: a bare term like "p" is dropped by the
     # JSON-LD expansion rule (fixture-04 parity), yielding zero triples
@@ -422,22 +422,11 @@ def test_jsonl_ingest_on_error_modes(spark):
     bad = '{"@id": broken'
     lines = spark.createDataFrame([(good,), (bad,), (good,)], "value string")
 
-    with _pytest.raises(PySparkException):
+    with _pytest.raises(PySparkException, match="JSONDecodeError"):
         jsonld_lines_to_triples(lines).count()
 
-    skipped = jsonld_lines_to_triples(lines, on_error="skip")
-    assert skipped.filter("subj = 'http://x/a'").count() > 0
-    assert skipped.filter(f"pred = '{ERROR_PRED}'").count() == 0
-
-    tri = jsonld_lines_to_triples(lines, on_error="triple")
-    errs = tri.filter(f"pred = '{ERROR_PRED}'").collect()
-    assert len(errs) == 1 and "JSONDecodeError" in errs[0]["obj_value"]
-    assert errs[0]["subj"].startswith("_:badline.")
-    # good lines unaffected relative to skip mode
-    assert tri.count() == skipped.count() + 1
-
-    with _pytest.raises(ValueError):
-        jsonld_lines_to_triples(lines, on_error="nope")
+    ok = spark.createDataFrame([(good,), (good,)], "value string")
+    assert jsonld_lines_to_triples(ok).filter("subj = 'http://x/a'").count() == 2
 
 
 def test_wav_roundtrip_real_decode(spark):

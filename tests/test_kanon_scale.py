@@ -2,9 +2,10 @@
 strategies must produce identical k, and the scalable paths must work on the
 skew case that kills the pair join (one generalization group = whole table).
 
-The numpy-mirror scale sweeps are ``slow``; one small equivalence test per
-scale path, the routing rule and the cache-release checks run in the
-default lane.
+The input picks the path (``kpi.auto_mode``), so these tests reach each path
+by moving ``kpi.PAIR_THRESHOLD`` (:func:`_k_via`).  The numpy-mirror scale
+sweeps are ``slow``; one small equivalence test per scale path, the routing
+rule and the cache-release checks run in the default lane.
 """
 
 from __future__ import annotations
@@ -92,6 +93,15 @@ def _expected_k(data, rand_attrs):
     return k or 0
 
 
+def _k_via(monkeypatch, path, triples, used):
+    """(k, path that ran) with the size switch moved so that ``path`` is the
+    one the input picks: ``pairs`` below any subject count, a scale path
+    (``ranges`` for one randomized attribute, ``sliced`` for more) above."""
+    threshold = 1 << 62 if path == "pairs" else -1
+    monkeypatch.setattr(kpi, "PAIR_THRESHOLD", threshold)
+    return k_anonymity(triples, T, used, CFG)
+
+
 CFG = {
     GEN: AttrConfig("double", "generalization"),
     A0: AttrConfig("double", "randomization"),
@@ -100,17 +110,17 @@ CFG = {
 }
 
 
-def test_ranges_equals_pairs_single_attr(spark):
+def test_ranges_equals_pairs_single_attr(spark, monkeypatch):
     triples, data = _mk_triples(spark, 400, n_groups=5, rand_attrs=[A0])
     used = [GEN, A0]
-    k_pairs, _ = k_anonymity(triples, T, used, CFG, mode="pairs")
-    k_ranges, ran = k_anonymity(triples, T, used, CFG, mode="ranges")
-    assert ran == "ranges"
+    k_pairs, ran_pairs = _k_via(monkeypatch, "pairs", triples, used)
+    k_ranges, ran = _k_via(monkeypatch, "ranges", triples, used)
+    assert (ran_pairs, ran) == ("pairs", "ranges")
     assert k_pairs == k_ranges == _expected_k(data, [A0])
 
 
 @pytest.mark.slow
-def test_ranges_survives_single_giant_group(spark):
+def test_ranges_survives_single_giant_group(spark, monkeypatch):
     """The skew case: no generalization attr → every resource lands in ONE
     null group.  The pair join would build n² rows; the ranges path is a
     sort + prefix sum and must both finish and agree with a numpy oracle."""
@@ -127,7 +137,8 @@ def test_ranges_survives_single_giant_group(spark):
     triples = spark.createDataFrame(
         rows, "subj string, pred string, obj_value string, obj_dtype string, obj_is_iri boolean"
     )
-    k, _ = k_anonymity(triples, T, [A0], CFG, mode="ranges")
+    k, ran = _k_via(monkeypatch, "ranges", triples, [A0])
+    assert ran == "ranges"
     bench = 2.0 * np.abs(o - r).mean()
     so = np.sort(o)
     lo = np.searchsorted(so, r - bench, side="left")
@@ -148,12 +159,6 @@ def test_auto_mode_routes_by_subjects_and_attr_count(n_rand, at_threshold,
     assert auto_mode(PAIR_THRESHOLD + 1, n_rand) == above_threshold
 
 
-@pytest.mark.parametrize("mode", ["grid", "groups", "Pairs"])
-def test_unknown_mode_is_rejected_before_any_job(mode):
-    with pytest.raises(ValueError, match="unknown k-anonymity mode"):
-        k_anonymity(None, T, [A0], CFG, mode=mode)
-
-
 def _typed_only(spark, n, extra=()):
     rows = [(f"http://ex.org/r{i:02d}", RDF_TYPE, T, "iri", True) for i in range(n)]
     return spark.createDataFrame(
@@ -163,12 +168,12 @@ def _typed_only(spark, n, extra=()):
 
 
 @pytest.mark.slow
-def test_nulls_and_empty_bench(spark):
+def test_nulls_and_empty_bench(spark, monkeypatch):
     # all originals null → bench None → only null-pairs count
     triples = _typed_only(spark, 20)
     for m, used in (("pairs", [A0]), ("ranges", [A0]),
                     ("pairs", [A0, A1]), ("sliced", [A0, A1])):
-        k, ran = k_anonymity(triples, T, used, CFG, mode=m)
+        k, ran = _k_via(monkeypatch, m, triples, used)
         assert (k, ran) == (20, m)
     # originals present but no _randomized triple → bench None and the
     # non-null stratum matches nothing
@@ -181,22 +186,21 @@ def test_nulls_and_empty_bench(spark):
     triples = _typed_only(spark, 20, extra)
     for m, used in (("pairs", [A1]), ("ranges", [A1]),
                     ("pairs", [A0, A1]), ("sliced", [A0, A1])):
-        k, ran = k_anonymity(triples, T, used, CFG, mode=m)
+        k, ran = _k_via(monkeypatch, m, triples, used)
         assert (k, ran) == (0, m)
     # no subject of the type at all
     for m in ("pairs", "sliced"):
-        k, ran = k_anonymity(_typed_only(spark, 0), T, [A0, A1], CFG, mode=m)
+        k, ran = _k_via(monkeypatch, m, _typed_only(spark, 0), [A0, A1])
         assert (k, ran) == (0, m)
 
 
-def test_k_anonymity_releases_its_caches(spark, cache_entries):
+def test_k_anonymity_releases_its_caches(spark, monkeypatch, cache_entries):
     triples, _ = _mk_triples(spark, 60, n_groups=3, rand_attrs=[A0, A1])
-    # an explicit "ranges" with two attributes resolves to sliced
-    for used, mode, ran in (([GEN], "auto", "groups"), ([GEN, A0], "pairs", "pairs"),
-                            ([GEN, A0], "ranges", "ranges"),
-                            ([GEN, A0, A1], "ranges", "sliced")):
+    # with no randomized attribute every threshold counts the groups
+    for used, ran in (([GEN], "groups"), ([GEN, A0], "pairs"),
+                      ([GEN, A0], "ranges"), ([GEN, A0, A1], "sliced")):
         before = cache_entries()
-        _, got = k_anonymity(triples, T, used, CFG, mode=mode)
+        _, got = _k_via(monkeypatch, ran, triples, used)
         assert got == ran
         assert cache_entries() == before, ran
 
@@ -220,38 +224,40 @@ def test_k_anonymity_releases_its_caches_on_failure(spark, monkeypatch,
 
     monkeypatch.setattr(rank, "with_global_running_sum", failing_runsum)
     monkeypatch.setattr(kpi, "_min_count", failing_min_count)
-    for used, mode in (([GEN, A0], "ranges"), ([GEN, A0, A1], "sliced")):
+    for used, path in (([GEN, A0], "ranges"), ([GEN, A0, A1], "sliced")):
         before = cache_entries()
         with pytest.raises(RuntimeError, match="injected"):
-            k_anonymity(triples, T, used, CFG, mode=mode)
-        assert cache_entries() == before, mode
+            _k_via(monkeypatch, path, triples, used)
+        assert cache_entries() == before, path
 
 
 @pytest.mark.parametrize("n, null_frac", [
     (300, 0.2),
     pytest.param(350, 0.15, marks=pytest.mark.slow),
 ])
-def test_sliced_equals_pairs_two_attrs(spark, n, null_frac):
+def test_sliced_equals_pairs_two_attrs(spark, monkeypatch, n, null_frac):
     triples, data = _mk_triples(spark, n, n_groups=4, rand_attrs=[A0, A1],
                                 null_frac=null_frac)
     used = [GEN, A0, A1]
-    k_pairs, _ = k_anonymity(triples, T, used, CFG, mode="pairs")
-    k_sliced, _ = k_anonymity(triples, T, used, CFG, mode="sliced")
+    k_pairs, ran_pairs = _k_via(monkeypatch, "pairs", triples, used)
+    k_sliced, ran = _k_via(monkeypatch, "sliced", triples, used)
+    assert (ran_pairs, ran) == ("pairs", "sliced")
     assert k_pairs == k_sliced == _expected_k(data, [A0, A1])
 
 
 @pytest.mark.slow
-def test_sliced_equals_pairs_three_attrs(spark):
+def test_sliced_equals_pairs_three_attrs(spark, monkeypatch):
     triples, data = _mk_triples(spark, 250, n_groups=3,
                                 rand_attrs=[A0, A1, A2], null_frac=0.15)
     used = [GEN, A0, A1, A2]
-    k_pairs, _ = k_anonymity(triples, T, used, CFG, mode="pairs")
-    k_sliced, _ = k_anonymity(triples, T, used, CFG, mode="sliced")
+    k_pairs, ran_pairs = _k_via(monkeypatch, "pairs", triples, used)
+    k_sliced, ran = _k_via(monkeypatch, "sliced", triples, used)
+    assert (ran_pairs, ran) == ("pairs", "sliced")
     assert k_pairs == k_sliced == _expected_k(data, [A0, A1, A2])
 
 
 @pytest.mark.slow
-def test_sliced_survives_single_giant_group_three_attrs(spark):
+def test_sliced_survives_single_giant_group_three_attrs(spark, monkeypatch):
     """The ≥3-attr skew case: one group, 20k rows — `pairs` would build
     4·10⁸ rows; the sliced path (attr-0 slabs + cogrouped searchsorted) must finish
     distributed and match a numpy oracle."""
@@ -280,7 +286,8 @@ def test_sliced_survives_single_giant_group_three_attrs(spark):
     triples = spark.createDataFrame(
         rows, "subj string, pred string, obj_value string, obj_dtype string, obj_is_iri boolean"
     )
-    k, _ = k_anonymity(triples, T, attrs, CFG, mode="sliced")
+    k, ran = _k_via(monkeypatch, "sliced", triples, attrs)
+    assert ran == "sliced"
     b = [2.0 * np.abs(o[j] - r[j]).mean() for j in range(3)]
     order = np.argsort(o[0], kind="stable")
     so = [o[j][order] for j in range(3)]
@@ -298,7 +305,7 @@ def test_sliced_survives_single_giant_group_three_attrs(spark):
 
 
 @pytest.mark.slow
-def test_sliced_survives_single_giant_group_two_attrs(spark):
+def test_sliced_survives_single_giant_group_two_attrs(spark, monkeypatch):
     """The 2-attr skew case: one group, 20k rows — the pair join would build
     4·10⁸ pairs; the sliced path must finish and match a numpy
     rectangle-count oracle."""
@@ -319,7 +326,8 @@ def test_sliced_survives_single_giant_group_two_attrs(spark):
     triples = spark.createDataFrame(
         rows, "subj string, pred string, obj_value string, obj_dtype string, obj_is_iri boolean"
     )
-    k, _ = k_anonymity(triples, T, [A0, A1], CFG, mode="sliced")
+    k, ran = _k_via(monkeypatch, "sliced", triples, [A0, A1])
+    assert ran == "sliced"
     b0 = 2.0 * np.abs(o0 - r0).mean()
     b1 = 2.0 * np.abs(o1 - r1).mean()
     # numpy oracle: sort by o0, window via searchsorted, verify o1

@@ -225,6 +225,7 @@ def test_build_kg_links_hot_entities(spark, docs):
     triples = triples.persist()
     n = triples.count()
     assert n > 0 and metrics["n_mentions"] > 0
+    assert metrics["canon_path"] == "driver" and metrics["n_surfaces"] > 0
 
     # hot entities must dominate mention counts (skew by construction)
     counts = {
@@ -270,7 +271,7 @@ def test_checkpoint_resume(spark, tmp_path, docs):
 
 # Spark jobs of build_kg → write_graph on the 300-doc fixture with the test
 # session's settings (local[4], four shuffle partitions, AQE on)
-KG_BUILD_WRITE_JOB_BUDGET = 21
+KG_BUILD_WRITE_JOB_BUDGET = 17
 
 
 def test_build_write_job_budget(spark, docs, tmp_path):
@@ -364,40 +365,14 @@ def test_canonicalization_paths_agree(spark, docs, monkeypatch):
     recall at the 0.55 threshold, then exact-Jaccard verify)."""
     from kgforge.kg import pipeline
 
-    a, _ = build_kg(docs)
+    a, ma = build_kg(docs)
     monkeypatch.setattr(pipeline, "SMALL_CANON_THRESHOLD", 0)
-    b, _ = build_kg(docs)
+    b, mb = build_kg(docs)
+    assert (ma["canon_path"], mb["canon_path"]) == ("driver", "lsh")
+    assert ma["n_surfaces"] == mb["n_surfaces"] > 0
     key = lambda t: {(r["subj"], r["obj_value"]) for r in
                      t.filter(F.col("pred").endswith("nearDuplicateOf")).collect()}
     assert key(a) == key(b) and len(key(a)) > 0
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the join key must join with zero shuffle and
-    zero sort — the co-located layout write_bucketed exists for."""
-    from kgforge.kg.io import read_table, write_bucketed
-
-    ent = spark.range(0, 1000).select(
-        F.col("id").alias("eid"), (F.col("id") % 7).alias("etype")
-    )
-    men = spark.range(0, 5000).select(
-        (F.col("id") % 1000).alias("eid"), F.col("id").alias("mention_id")
-    )
-    write_bucketed(ent, "t_ent_b", "eid", buckets=8)
-    write_bucketed(men, "t_men_b", "eid", buckets=8)
-    try:
-        j = read_table(spark, "t_ent_b").join(read_table(spark, "t_men_b"), "eid")
-        # disable broadcast so the join strategy is the bucketed SMJ
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            plan = j._jdf.queryExecution().executedPlan().toString()
-        finally:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        assert "Exchange" not in plan, plan
-        assert j.count() == 5000
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_ent_b")
-        spark.sql("DROP TABLE IF EXISTS t_men_b")
 
 
 def test_update_kg_equals_batch_rebuild(spark):

@@ -405,3 +405,47 @@ def test_flat_df_to_triples_matches_driver_ingest(spark):
     w_payloads, w_counters = norm(want)
     assert g_payloads == w_payloads
     assert g_counters == w_counters == list(range(40))
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_unmaterialized_flat_input_anonymizes_like_driver_ingest(spark, ansi):
+    """``flat_df_to_triples`` → ``anonymize_triples`` with no action in
+    between, under ANSI mode on and off, answers exactly as the driver
+    ingest of the same valid rows: every operator kind (mask, generalize,
+    randomize on integer, double and date attributes) and the k-anonymity
+    KPI.  The engine's checkpointed pivot keeps the other attributes' rows
+    away from the strict casts."""
+    from kgforge.anonymize.engine import anonymize_triples
+    from kgforge.config import ANONYMISATION_DEMO, DEMO_PREFIX
+    from kgforge.ingest import flat_df_to_triples, flat_rows_to_triples
+
+    rows = [
+        {"type": "AnonymisationDemo", "name": f"Person {i}",
+         "latitude": 46 + i % 4, "longitude": 9.5 + 0.61 * i,
+         "start_pv": f"20{15 + i % 9}-0{1 + i % 9}-1{i % 9}",
+         "geburtsdatum": f"19{60 + 3 * i}-1{i % 3}-2{i % 8}",
+         "gehalt": 1800 + 377 * i}
+        for i in range(12)
+    ]
+    cols = list(rows[0])
+    df = spark.createDataFrame(
+        [tuple(r[c] for c in cols) for r in rows],
+        "type string, name string, latitude long, longitude double,"
+        " start_pv string, geburtsdatum string, gehalt long",
+    )
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        answers = []
+        for triples in (flat_df_to_triples(df, DEMO_PREFIX),
+                        flat_rows_to_triples(spark, rows, DEMO_PREFIX)):
+            out, report = anonymize_triples(
+                triples, ANONYMISATION_DEMO, random_seed=4242,
+                order_pred=DEMO_PREFIX + "counter",
+            )
+            answers.append(({tuple(r) for r in out.collect()}, report.k_anonymity))
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)
+    (got, got_k), (want, want_k) = answers
+    assert got == want and got_k == want_k
+    assert len(want) > 12 and all(k > 0 for k in want_k.values())
