@@ -6,17 +6,25 @@ benchmark = 2·mean(|orig − rand|) and null originals form their own
 similarity group (KpiService.java:75-154).
 
 The input picks the counting path (:func:`auto_mode`); no caller chooses
-it.  Up to PAIR_THRESHOLD subjects, a null-safe self-join on the
-generalization group key plus one range predicate per randomized attribute
-(``pairs``, O(Σ group²) pairs).  Above it, a distributed sort + running sum
-for one randomized attribute (``ranges``) and slab-sliced cogrouped counting
-for two or more (``sliced``).  Neither scale path materializes a pair, so one
-giant generalization group (e.g. an all-masked config) spreads across
-partitions instead of pinning one reducer.
+it.  One ``limit(PAIR_THRESHOLD + 1).collect()`` of the per-subject KPI
+frame decides.  Up to PAIR_THRESHOLD subjects (every request-sized input)
+that collect is the only Spark action: the driver computes the benchmarks
+and counts k from the collected rows in numpy, per (group, null-pattern)
+stratum with a sorted candidate window and blockwise exact verification
+(``pairs``, or ``groups`` without randomized attributes).  Above it, a
+distributed sort + running sum for one randomized attribute (``ranges``)
+and slab-sliced cogrouped counting for two or more (``sliced``).  No path
+materializes a pair or a group-sized square, so one giant generalization
+group (e.g. an all-masked config) stays bounded in memory, and on the scale
+paths spreads across partitions instead of pinning one reducer.
 """
 
 from __future__ import annotations
 
+import math
+from collections import Counter, defaultdict
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -29,7 +37,7 @@ HAS_ATTRIBUTE = SOYA_URL + "hasAttribute"
 ANONYMIZATION_TYP = SOYA_URL + "anonymizationTyp"
 NR_BUCKETS = SOYA_URL + "nrBucketsUsed"
 
-# subjects up to which k is counted with the pair join
+# subjects up to which k is counted on the driver from one collect
 PAIR_THRESHOLD = 50_000
 
 
@@ -94,13 +102,13 @@ def k_anonymity(
     OPTIONAL binding, so rows that occur twice in ``triples`` change
     nothing.
 
-    :func:`auto_mode` picks the counting path for randomized attributes
-    from the subject count and the randomized-attribute count:
+    One ``limit(PAIR_THRESHOLD + 1).collect()`` of that frame decides the
+    path (:func:`auto_mode`).  Up to PAIR_THRESHOLD subjects the collected
+    rows are the whole input, and the driver counts k from them
+    (:func:`_k_local`): one Spark action, nothing persisted.  ``mode`` is
+    ``"pairs"`` with randomized attributes and ``"groups"`` without.  Above
+    the threshold the frame is persisted and counted in Spark:
 
-    - ``"pairs"`` — null-safe self-join on the generalization-group key plus
-      one range predicate per attribute.  Simple and oracle-mirrored, but the
-      pair set costs O(Σ group²): one huge/skewed group (e.g. an all-masked
-      config ⇒ a single group) pins reducers at corpus scale.
     - ``"ranges"`` (one randomized attribute) — the reference's own
       ``TreeMap.subMap`` counting (KpiService.java:156-170) distributed:
       per-group sorted event stream of value points (+1) and query bounds
@@ -118,25 +126,38 @@ def k_anonymity(
       ``searchsorted`` plus vectorized verification of the remaining
       attributes.  A giant group spreads across its slabs — no pair set, no
       single-partition group.
-
-    With no randomized attribute, k is the size of the smallest
-    generalization group and ``mode`` is ``"groups"``.
+    - ``"groups"`` (no randomized attribute) — the size of the smallest
+      generalization group.
 
     All paths produce identical k (property-tested against each other with
     PAIR_THRESHOLD moved).
     """
     rand_attrs = [a for a in used_attrs if cfgs[a].strategy == "randomization"]
-    frame = _kpi_frame(triples, type_iri, used_attrs, rand_attrs, cfgs).persist()
+    frame = _kpi_frame(triples, type_iri, used_attrs, rand_attrs, cfgs)
+    rows = frame.limit(PAIR_THRESHOLD + 1).collect()
+    mode = auto_mode(len(rows), len(rand_attrs))
+    if not rows:
+        # reference quirk (QueryBuildingService.java:142-163 +
+        # QueryService.java:215-235): with zero attributes the groups query
+        # has NO GROUP BY, so the aggregate over zero rows still yields one
+        # row whose empty GROUP_CONCAT splits into a single empty-IRI
+        # resource — one group of size 1 ⇒ k = 1.  With attributes (GROUP
+        # BY present) zero rows ⇒ no groups ⇒ k = 0.
+        return (0 if used_attrs else 1), mode
+    if len(rows) <= PAIR_THRESHOLD:
+        return _k_local(rows, len(used_attrs), len(rand_attrs)), mode
+    frame = frame.persist()
     try:
-        return _dispatch(frame, len(used_attrs), rand_attrs)
+        return _k_distributed(frame, len(used_attrs), rand_attrs, mode), mode
     finally:
         frame.unpersist()
 
 
 def auto_mode(n_subj: int, n_rand: int) -> str:
     """The counting path for ``n_subj`` subjects with ``n_rand``
-    randomized attributes: ``pairs`` up to PAIR_THRESHOLD subjects (cheapest
-    for request-sized inputs), else the scale path of the attribute count."""
+    randomized attributes: ``groups`` without randomized attributes, else
+    ``pairs`` (counted on the driver) up to PAIR_THRESHOLD subjects and the
+    scale path of the attribute count above it."""
     if not n_rand:
         return "groups"
     if n_subj <= PAIR_THRESHOLD:
@@ -173,33 +194,143 @@ def _kpi_frame(triples, type_iri, used_attrs, rand_attrs, cfgs) -> DataFrame:
     )
 
 
-def _dispatch(frame, n_used, rand_attrs) -> tuple[int, str]:
+def _k_local(rows, n_used: int, n_rand: int) -> int:
+    """k over the collected KPI frame: ``rows`` are tuples in
+    :func:`_kpi_frame`'s column order, at least one.
+
+    The benchmark of attribute j is ``2·Σ|o − r| / c`` over the whole type:
+    the sum runs over subjects whose two values both parsed, ``c`` counts
+    subjects with both preds PRESENT (the reference's inner-join
+    denominator; a c>0/all-unparseable attribute has benchmark 0), and no
+    present pair leaves it empty (None).  ``math.fsum`` rounds the sum once,
+    so it does not depend on the order the rows arrive in.
+
+    Subject a matches subject b when they share the group key (None equals
+    None) and, for every randomized attribute, both originals are null, or
+    the benchmark is set, both originals are non-null and
+    ``|o_b − r_a| <= benchmark``, in the float64 arithmetic and with the
+    NaN ordering of Spark's ``abs(o_b - r_a) <= benchmark`` (the
+    algebraically equal ``r_a − benchmark <= o_b <= r_a + benchmark``
+    rounds differently at the bounds).  The predicate
+    forces a and b to share the null pattern of their originals, so the
+    rows split into (group, null-pattern) strata, counted by
+    :func:`_min_matches`.
+    """
+    base = 1 + n_used
+    if not n_rand:
+        return min(Counter(tuple(r[1:base]) for r in rows).values())
+    cols = list(zip(*rows))
+    orig, rand, rand_null, benches = [], [], [], []
+    for j in range(n_rand):
+        o, r, po, pr = cols[base + 4 * j: base + 4 * j + 4]
+        c = sum(1 for x, y in zip(po, pr) if x and y)
+        try:
+            s = math.fsum(abs(x - y) for x, y in zip(o, r)
+                          if x is not None and y is not None)
+        except OverflowError:  # the exact sum is beyond float64: Spark's inf
+            s = math.inf
+        benches.append(2.0 * s / c if c else None)
+        # None → NaN: the strata keep null originals apart, rand_null the
+        # null randomized values
+        orig.append(np.array(o, dtype=float))
+        rand.append(np.array(r, dtype=float))
+        rand_null.append(np.array([y is None for y in r]))
+    strata: dict = defaultdict(list)
+    for i, row in enumerate(rows):
+        pattern = tuple(row[base + 4 * j] is None for j in range(n_rand))
+        strata[(tuple(row[1:base]), pattern)].append(i)
+    k = len(rows)
+    for (_, pattern), idx in strata.items():
+        nn = [j for j in range(n_rand) if not pattern[j]]
+        if not nn:
+            k = min(k, len(idx))  # all originals null: every member matches
+            continue
+        # an empty benchmark, or a null randomized value (|o − null| is
+        # null), leaves a non-null original with no match, itself included
+        if any(benches[j] is None or rand_null[j][idx].any() for j in nn):
+            return 0
+        k = min(k, _min_matches([orig[j][idx] for j in nn],
+                                [rand[j][idx] for j in nn],
+                                [benches[j] for j in nn]))
+        if not k:
+            return 0
+    return k
+
+
+# cells of one (queries × candidates) block that _min_matches verifies at once
+BLOCK_CELLS = 1 << 20
+
+
+def _min_matches(orig, rand, benches) -> int:
+    """min over the rows a of one stratum of #{rows b : every attribute j has
+    ``|orig_j[b] − rand_j[a]| <= benches_j``}, where no value is null.
+
+    Spark orders NaN above every double, so a NaN benchmark holds for every
+    pair and a NaN distance exceeds any other benchmark.  Points are sorted
+    by the first attribute; each query's candidates are the points inside
+    its window ``rand ± (benchmark + slack)``, widened by a relative 2⁻⁴⁰ so
+    that no point that passes the exact test in float64 falls outside.
+    Consecutive queries (sorted by their value) are verified together over
+    the union of their windows in blocks of at most BLOCK_CELLS cells:
+    memory stays bounded however large one group is, and a point outside a
+    query's own window fails the exact test, so the union counts nothing
+    extra.
+    """
+    keep = [j for j, b in enumerate(benches) if not math.isnan(b)]
+    m = len(orig[0])
+    if not keep:
+        return m
+    b0 = benches[keep[0]]
+    order = np.argsort(orig[keep[0]], kind="stable")
+    pts_cols = [orig[j][order] for j in keep]
+    qorder = np.argsort(rand[keep[0]], kind="stable")
+    q_cols = [rand[j][qorder] for j in keep]
+    bs = [benches[j] for j in keep]
+    lo, hi = [0] * m, [m] * m
+    if math.isfinite(b0):
+        r0 = q_cols[0]
+        with np.errstate(all="ignore"):
+            slack = (np.abs(r0) + b0) * 2.0 ** -40
+            fin = np.isfinite(r0)
+            lo = np.where(fin, np.searchsorted(pts_cols[0], r0 - b0 - slack, "left"),
+                          0).tolist()
+            hi = np.where(fin, np.searchsorted(pts_cols[0], r0 + b0 + slack, "right"),
+                          m).tolist()
+    best = m
+    i = 0
+    with np.errstate(all="ignore"):
+        while i < m:
+            lo_b, hi_b, j = lo[i], hi[i], i + 1
+            while j < m:
+                lo_n, hi_n = min(lo_b, lo[j]), max(hi_b, hi[j])
+                if (j + 1 - i) * (hi_n - lo_n) > BLOCK_CELLS:
+                    break
+                lo_b, hi_b, j = lo_n, hi_n, j + 1
+            ok = None
+            for p, q, b in zip(pts_cols, q_cols, bs):
+                d = p[None, lo_b:hi_b] - q[i:j, None]
+                hit = np.abs(d, out=d) <= b
+                ok = hit if ok is None else np.logical_and(ok, hit, out=ok)
+            best = min(best, int(np.count_nonzero(ok, axis=1).min()))
+            if not best:
+                return 0
+            i = j
+    return best
+
+
+def _k_distributed(frame, n_used, rand_attrs, mode) -> int:
+    """k above PAIR_THRESHOLD subjects, counted in Spark over the persisted
+    KPI frame (at least one subject)."""
     all_gcols = [f"_g{i}" for i in range(n_used)]
-    if not rand_attrs:
+    if mode == "groups":
         # a group-key column that is null for every subject cannot change
         # the groups, so no presence check is needed here
-        row = frame.groupBy(*all_gcols or [F.lit(1)]).count().agg(
-            F.min("count").alias("k")
-        ).collect()[0]
-        if row["k"] is None:
-            # reference quirk (QueryBuildingService.java:142-163 +
-            # QueryService.java:215-235): with zero attributes the groups
-            # query has NO GROUP BY, so the aggregate over zero rows still
-            # yields one row whose empty GROUP_CONCAT splits into a single
-            # empty-IRI resource — one group of size 1 ⇒ k = 1.  With
-            # attributes (GROUP BY present) zero rows ⇒ no groups ⇒ k = 0.
-            return (1 if not n_used else 0), "groups"
-        return int(row["k"]), "groups"
+        return int(frame.groupBy(*all_gcols or [F.lit(1)]).count()
+                   .agg(F.min("count")).collect()[0][0])
 
-    # ONE action: the subject count, each group column's non-null count and
-    # every attribute's benchmark scalar (2·mean |o − r|, over the whole type
-    # like the reference — never per group).  Denominator c counts subjects
-    # with both preds PRESENT even when a value fails _kpi_parse (the
-    # reference's inner-join denominator: SUM skips null |o−r| terms,
-    # COUNT(*) over the join doesn't); a c>0/all-unparseable stratum
-    # degenerates to s=0 ⇒ benchmark 0.
-    stats = [F.count(F.lit(1)).alias("n")]
-    stats += [F.count(c).alias(f"n{c}") for c in all_gcols]
+    # ONE action: each group column's non-null count and every attribute's
+    # benchmark scalar (see _k_local for the sum and its denominator).
+    stats = [F.count(c).alias(f"n{c}") for c in all_gcols]
     for j in range(len(rand_attrs)):
         o, r = F.col(f"_o{j}"), F.col(f"_r{j}")
         stats += [
@@ -214,15 +345,9 @@ def _dispatch(frame, n_used, rand_attrs) -> tuple[int, str]:
         (2.0 * (st[f"s{j}"] or 0.0) / st[f"c{j}"]) if st[f"c{j}"] else None
         for j in range(len(rand_attrs))
     ]
-
-    mode = auto_mode(int(st["n"]), len(rand_attrs))
-    if mode == "pairs":
-        k = _k_pairs(frame, gcols, benches)
-    elif mode == "ranges":
-        k = _k_ranges(frame, gcols, benches[0])
-    else:
-        k = _k_sliced(frame, gcols, benches)
-    return k, mode
+    if mode == "ranges":
+        return _k_ranges(frame, gcols, benches[0])
+    return _k_sliced(frame, gcols, benches)
 
 
 def _min_count(subjects, cnts) -> int:
@@ -232,44 +357,7 @@ def _min_count(subjects, cnts) -> int:
         .select(F.min(F.coalesce(F.col("_cnt"), F.lit(0))).alias("k"))
         .collect()[0]
     )
-    return int(row["k"]) if row["k"] is not None else 0
-
-
-def _k_pairs(frame, gcols, benches) -> int:
-    """Null-safe group-key self-join + range predicates (small-input path).
-    Every subject pairs with itself on the group key, so the per-subject
-    match counts cover every subject, zeros included."""
-    nattrs = len(benches)
-    a = frame.select(
-        F.col("subj").alias("_sa"),
-        *[F.col(c).alias(c + "_a") for c in gcols],
-        *[F.col(f"_o{j}").alias(f"_oa{j}") for j in range(nattrs)],
-        *[F.col(f"_r{j}").alias(f"_ra{j}") for j in range(nattrs)],
-    )
-    b = frame.select(
-        *[F.col(c).alias(c + "_b") for c in gcols],
-        *[F.col(f"_o{j}").alias(f"_ob{j}") for j in range(nattrs)],
-    )
-    same_group = F.lit(True)
-    for c in gcols:
-        same_group = same_group & F.col(c + "_a").eqNullSafe(F.col(c + "_b"))
-    match = F.lit(True)
-    for j, bench in enumerate(benches):
-        oa, ob, ra = F.col(f"_oa{j}"), F.col(f"_ob{j}"), F.col(f"_ra{j}")
-        null_pair = oa.isNull() & ob.isNull()
-        if bench is None:
-            match = match & null_pair
-        else:
-            in_range = oa.isNotNull() & ob.isNotNull() & (F.abs(ob - ra) <= F.lit(bench))
-            match = match & (null_pair | in_range)
-    row = (
-        a.join(b, same_group)
-        .groupBy("_sa")
-        .agg(F.count(F.when(match, 1)).alias("_cnt"))
-        .agg(F.min("_cnt").alias("k"))
-        .collect()[0]
-    )
-    return int(row["k"]) if row["k"] is not None else 0
+    return int(row["k"])
 
 
 def _with_group_struct(ent, gcols):
@@ -382,7 +470,7 @@ def _k_ranges(frame, gcols, bench) -> int:
     finally:
         for d in cleanup:
             d.unpersist()
-    return int(row["k"]) if row["k"] is not None else 0
+    return int(row["k"])
 
 
 def _k_sliced(frame, gcols, benches) -> int:
@@ -408,8 +496,6 @@ def _k_sliced(frame, gcols, benches) -> int:
                 *[F.col(f"_o{j}").isNotNull().alias(f"_p{j}") for j in range(d)]
             ).distinct().collect()
         ]
-        if not patterns:
-            return 0  # no subject of the type
         parts = [_sliced_counts(full, pat, benches) for pat in patterns]
         cnts = parts[0]
         for p in parts[1:]:
@@ -483,7 +569,6 @@ def _sliced_counts(full, pat, benches) -> DataFrame:
 def _slab_count_fn(nn, benches):
     """Cogroup function for one (group, slab): per query, the points inside
     every non-null attribute's window (``nn[0]`` via ``searchsorted``)."""
-    import numpy as np
     import pandas as pd
 
     a, ba = nn[0], benches[nn[0]]

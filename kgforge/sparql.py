@@ -784,6 +784,13 @@ def _m_dt(v: str) -> str:
 _REL_COLS = ["_ps", "_ps_iri", "_ps_dt", "_po", "_po_iri", "_po_dt"]
 
 
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint``: ``unpersist()`` drops only
+    a cache entry, while a local checkpoint lives in the persisted RDD its
+    plan reads."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def _path_rel(triples: DataFrame, path: Path, max_iter: int = 64) -> DataFrame:
     """Compile a property path to its binary relation: columns ``_ps … _po``
     with the endpoints' IRI-ness/datatype companions.
@@ -793,7 +800,9 @@ def _path_rel(triples: DataFrame, path: Path, max_iter: int = 64) -> DataFrame:
     frontier against the base edges, a distinct, and an anti-join against
     what's already reached; rounds are bounded by the path's diameter, and
     each round ``localCheckpoint``s to keep the plan flat (the same shape as
-    ``kgforge/kg/components.py``'s hash-min loop).  ``star`` adds zero-length
+    ``kgforge/kg/components.py``'s hash-min loop).  A round releases the
+    checkpoints its successor supersedes, so the returned closure is the
+    only one left.  ``star`` adds zero-length
     paths: per the SPARQL spec those connect every term IN THE GRAPH to
     itself, so the identity relation is built from the graph's subjects and
     objects."""
@@ -829,29 +838,41 @@ def _path_rel(triples: DataFrame, path: Path, max_iter: int = 64) -> DataFrame:
     if path.op in ("plus", "star"):
         base = _path_rel(triples, path.args[0], max_iter).distinct()
         step = base.select(*[F.col(c).alias(f"{c}__r") for c in _REL_COLS])
-        reach = base.localCheckpoint(eager=True)
-        frontier = reach
-        for _ in range(max_iter):
-            nxt = (
-                frontier.join(step, F.col("_po") == F.col("_ps__r"))
-                .select(
-                    "_ps", "_ps_iri", "_ps_dt",
-                    F.col("_po__r").alias("_po"),
-                    F.col("_po_iri__r").alias("_po_iri"),
-                    F.col("_po_dt__r").alias("_po_dt"),
+        reach = frontier = base.localCheckpoint(eager=True)
+        nxt = None
+        done = False
+        try:
+            for _ in range(max_iter):
+                nxt = (
+                    frontier.join(step, F.col("_po") == F.col("_ps__r"))
+                    .select(
+                        "_ps", "_ps_iri", "_ps_dt",
+                        F.col("_po__r").alias("_po"),
+                        F.col("_po_iri__r").alias("_po_iri"),
+                        F.col("_po_dt__r").alias("_po_dt"),
+                    )
+                    .distinct()
+                    .join(reach, ["_ps", "_po"], "left_anti")
+                    .localCheckpoint(eager=True)
                 )
-                .distinct()
-                .join(reach, ["_ps", "_po"], "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            if not nxt.limit(1).count():
-                break
-            frontier = nxt
-            reach = reach.unionByName(nxt).localCheckpoint(eager=True)
-        else:
-            raise SparqlError(
-                f"property path closure did not converge in {max_iter} rounds"
-            )
+                if not nxt.limit(1).count():
+                    break
+                grown = reach.unionByName(nxt).localCheckpoint(eager=True)
+                # the round's successor is materialized: what it supersedes
+                # is read by nothing any more
+                _release_checkpoint(frontier)
+                _release_checkpoint(reach)
+                frontier, reach, nxt = nxt, grown, None
+            else:
+                raise SparqlError(
+                    f"property path closure did not converge in {max_iter} rounds"
+                )
+            done = True
+        finally:
+            # only the returned closure stays checkpointed
+            for d in (frontier, nxt, reach):
+                if d is not None and not (done and d is reach):
+                    _release_checkpoint(d)
         if path.op == "plus":
             return reach
         terms = triples.select(

@@ -59,6 +59,13 @@ def cache_entries(spark):
 
 
 @pytest.fixture
+def persisted_rdds(spark):
+    """Ids of the RDDs the SparkContext holds persisted: cached frames and
+    local checkpoints alike."""
+    return lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.fixture
 def caches():
     """The ``cleanup`` list for a direct call of a helper that hands up the
     frames it persists; they are unpersisted when the test ends."""

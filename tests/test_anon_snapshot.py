@@ -11,7 +11,8 @@ request (read through its own Spark job group) must stay within
 ``JOB_BUDGET``.  The same requests are replayed in a second session with
 one shuffle partition and one default slice — the settings of a service
 answering request-sized inputs, where ranks take the single-window path —
-against the same recordings and ``SERVICE_JOB_BUDGET``.
+against the same recordings, ``SERVICE_JOB_BUDGET`` and ``PY4J_CEILING``
+(py4j round trips between the Python driver and the JVM per request).
 
 Re-record only when a response change is intended:
 ``PYTHONPATH=. python tests/test_anon_snapshot.py`` (from the repository
@@ -52,25 +53,39 @@ VARIANTS = {
 # Spark jobs per request with the test session's settings (local[4], four
 # shuffle partitions, AQE on)
 JOB_BUDGET = {
-    "flat/as_sent": 30,
-    "flat/original": 29,
-    "flat/renamed": 30,
+    "flat/as_sent": 25,
+    "flat/original": 24,
+    "flat/renamed": 25,
     "flat/no_kpi": 23,
-    "jsonld2/as_sent": 34,
-    "jsonld2/original": 32,
-    "jsonld2/renamed": 34,
+    "jsonld2/as_sent": 26,
+    "jsonld2/original": 24,
+    "jsonld2/renamed": 26,
     "jsonld2/no_kpi": 22,
 }
 # the same with one shuffle partition and one default slice
 SERVICE_JOB_BUDGET = {
-    "flat/as_sent": 21,
-    "flat/original": 20,
-    "flat/renamed": 21,
+    "flat/as_sent": 18,
+    "flat/original": 17,
+    "flat/renamed": 18,
     "flat/no_kpi": 16,
-    "jsonld2/as_sent": 24,
-    "jsonld2/original": 22,
-    "jsonld2/renamed": 24,
+    "jsonld2/as_sent": 19,
+    "jsonld2/original": 17,
+    "jsonld2/renamed": 19,
     "jsonld2/no_kpi": 15,
+}
+# py4j round trips per request in that session: the most measured plus about
+# 15% (the count moves by up to ~10% between runs of the same request).  A
+# plan built as a Column tree costs one round trip per expression node, so a
+# path that goes back to one shows here first.
+PY4J_CEILING = {
+    "flat/as_sent": 4600,
+    "flat/original": 4300,
+    "flat/renamed": 5000,
+    "flat/no_kpi": 3900,
+    "jsonld2/as_sent": 4300,
+    "jsonld2/original": 3400,
+    "jsonld2/renamed": 4600,
+    "jsonld2/no_kpi": 3300,
 }
 
 
@@ -131,25 +146,42 @@ REQUESTS = {
 }
 
 
-def run_all(spark) -> dict[str, tuple[dict, int]]:
-    """key → (parsed response, Spark jobs the request ran)."""
+def run_all(spark) -> dict[str, tuple[dict, int, int]]:
+    """key → (parsed response, Spark jobs the request ran, py4j round trips
+    the request made)."""
+    import py4j.clientserver as cs
+
     sc = spark.sparkContext
+    calls = [0]
+    send = cs.ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        calls[0] += 1
+        return send(self, command, *args, **kwargs)
+
     out = {}
-    for kind, (endpoint, build) in REQUESTS.items():
-        for variant, flags in VARIANTS.items():
-            key = f"{kind}/{variant}"
-            group = f"anon-snapshot-{kind}-{variant}"
-            sc.setJobGroup(group, key)
-            try:
-                resp = endpoint(spark, {**build(), **flags})
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setLocalProperty("spark.job.description", None)
-            sc._jsc.sc().listenerBus().waitUntilEmpty()
-            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-            # round-trip through JSON so tuples, key order and number types
-            # compare exactly as a client would parse them
-            out[key] = (json.loads(json.dumps(resp)), jobs)
+    cs.ClientServerConnection.send_command = counted
+    try:
+        for kind, (endpoint, build) in REQUESTS.items():
+            for variant, flags in VARIANTS.items():
+                key = f"{kind}/{variant}"
+                group = f"anon-snapshot-{kind}-{variant}"
+                request = {**build(), **flags}
+                sc.setJobGroup(group, key)
+                before = calls[0]
+                try:
+                    resp = endpoint(spark, request)
+                finally:
+                    trips = calls[0] - before
+                    sc.setLocalProperty("spark.jobGroup.id", None)
+                    sc.setLocalProperty("spark.job.description", None)
+                sc._jsc.sc().listenerBus().waitUntilEmpty()
+                jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+                # round-trip through JSON so tuples, key order and number
+                # types compare exactly as a client would parse them
+                out[key] = (json.loads(json.dumps(resp)), jobs, trips)
+    finally:
+        cs.ClientServerConnection.send_command = send
     return out
 
 
@@ -199,6 +231,11 @@ def test_single_partition_job_budget(service_runs, key):
     assert service_runs[key][1] <= SERVICE_JOB_BUDGET[key], (key, service_runs[key][1])
 
 
+@pytest.mark.parametrize("key", sorted(PY4J_CEILING))
+def test_single_partition_py4j_ceiling(service_runs, key):
+    assert service_runs[key][2] <= PY4J_CEILING[key], (key, service_runs[key][2])
+
+
 def _session(partitions: int):
     from pyspark.sql import SparkSession
 
@@ -233,6 +270,6 @@ if __name__ == "__main__":
     with open(SNAPSHOTS, "w") as f:
         json.dump({k: v[0] for k, v in results.items()}, f, indent=1, sort_keys=True)
         f.write("\n")
-    for k, (_, jobs) in results.items():
-        print(k, "jobs", jobs)
+    for k, (_, jobs, trips) in results.items():
+        print(k, "jobs", jobs, "py4j", trips)
     session.stop()

@@ -417,6 +417,29 @@ def test_path_rest_star_first_list_walk(chain):
     assert [r["item"] for r in out] == ["one", "three", "two"]
 
 
+def test_path_closure_keeps_only_its_result_checkpointed(spark, persisted_rdds):
+    """Each closure round local-checkpoints its frontier and what it has
+    reached; the superseded ones are released, so a call leaves at most the
+    returned closure persisted."""
+    rdf = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+    rows = []
+    for i in range(6):
+        cell = f"{EX}cell{i}"
+        rows.append((cell, rdf + "first", f"v{i}", "string", False))
+        rest = f"{EX}cell{i + 1}" if i < 5 else rdf + "nil"
+        rows.append((cell, rdf + "rest", rest, "iri", True))
+    cells = triples_df(spark, rows)
+    query = f"""
+        PREFIX rdf: <{rdf}>
+        SELECT ?v WHERE {{ <{EX}cell0> rdf:rest*/rdf:first ?v . }} ORDER BY ?v
+    """
+    for _ in range(3):
+        before = persisted_rdds()
+        out = sparql_select(cells, query).collect()
+        assert [r["v"] for r in out] == [f"v{i}" for i in range(6)]
+        assert len(persisted_rdds() - before) <= 1
+
+
 def test_path_joins_with_patterns_and_metadata(chain, graph):
     # path endpoint joins a plain pattern; companions flow (isIRI works)
     out = sparql_select(chain, f"""
