@@ -49,7 +49,8 @@ class AnonymizationReport:
     """Bookkeeping for assertions / KPIs (also present as triples)."""
 
     k_anonymity: dict[str, int] = field(default_factory=dict)  # type -> k
-    # type -> the k-anonymity counting path that ran (kpi.k_anonymity modes)
+    # type -> where kpi.k_anonymity counted the strata: "driver" up to
+    # kpi.PAIR_THRESHOLD subjects, else "spark"
     k_mode: dict[str, str] = field(default_factory=dict)
     nr_buckets: dict[str, dict[str, int]] = field(default_factory=dict)
     used: dict[str, list[str]] = field(default_factory=dict)

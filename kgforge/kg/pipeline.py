@@ -32,8 +32,11 @@ from kgforge.triples import RDF_TYPE, local_df
 
 _SALT_BUCKETS = 16
 # distinct surfaces up to which canonicalization clusters exactly on the
-# driver; above it the MinHash-LSH + distributed connected-components path runs
-SMALL_CANON_THRESHOLD = 20_000
+# driver; above it the MinHash-LSH + distributed connected-components path
+# runs.  The wall times cross between 12k and 15k surfaces (local[4], 4
+# cores, synthetic one-edit near-duplicate vocabulary: driver 27.5 / 40.9 /
+# 76.1 s vs LSH 30.3 / 48.3 / 49.8 s at 10k / 12k / 15k)
+SMALL_CANON_THRESHOLD = 12_000
 _CANON_SCHEMA = T.StructType([
     T.StructField("surface", T.StringType()),
     T.StructField("canon_surface", T.StringType()),

@@ -92,9 +92,7 @@ def with_global_running_sum(
 
     Rows with equal keys may order arbitrarily among themselves, so the
     result is deterministic only where ``value_col`` is constant across ties
-    or ties carry value 0 — exactly the contract the k-anonymity range
-    counting needs (queries have weight 0, tied points are interchangeable
-    +1s).
+    or ties carry value 0.
     """
     npart = num_partitions or max(df.sparkSession.sparkContext.defaultParallelism, 1)
     d = _ranged_with_pid(df, order_cols, npart, cleanup)

@@ -22,7 +22,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from kgforge import rank
-from kgforge.anonymize import kpi
 from kgforge.anonymize.ops import AttrSpec, generalize
 from kgforge.anonymize.privacy import microaggregate, pseudonymize, rank_swap
 from kgforge.api import anonymize_flat_json
@@ -74,11 +73,6 @@ def _gen_input(spark, tag):
     return _frame(spark, tag, rows, "subj string, obj_value string, _tie long")
 
 
-def _stratum(spark, tag):
-    rows = [(i % 2, float(i % 11), float((i * 3) % 13)) for i in range(N)]
-    return _frame(spark, tag, rows, "_gs int, _o double, _r double")
-
-
 def _cells(spark, tag):
     return _frame(spark, tag, [(float(i), i % 4 + 1) for i in range(N)],
                   "v double, n_v long")
@@ -107,7 +101,6 @@ CASES = {
     "generalize": _owned(lambda s, t, c: generalize(
         _gen_input(s, t), [AttrSpec("x", "double", 4, N)], F.col("_tie"),
         cleanup=c)),
-    "counts_1d": _owned(lambda s, t, c: kpi._counts_1d(_stratum(s, t), 2.0, c)),
     "with_cumsums": _owned(lambda s, t, c: hypotests._with_cumsums(
         _cells(s, t), "v", ["n_v"], c)),
     "microaggregate": _returned(lambda s, t: microaggregate(
