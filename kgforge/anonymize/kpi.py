@@ -16,7 +16,15 @@ Spark action; above it in Spark, one grouped ``applyInPandas`` task per
 stratum.  A stratum of m subjects counts in O(m log m) for one randomized
 attribute and in blocks of bounded size for more, so no pair or group-sized
 square is ever built.  One stratum is one task: a single giant
-generalization group runs on one core.
+generalization group runs on one core, and its rows are held whole in that
+task's Python worker (a few numpy columns of m values per randomized
+attribute).
+
+The benchmarks are the one input the two places do not compute alike: the
+driver sums ``|o − r|`` exactly (``math.fsum``), Spark with its own
+partition-ordered ``sum``.  When the two sums round to different doubles
+and a distance falls between the two benchmarks, k differs between the
+places.
 """
 
 from __future__ import annotations
@@ -108,9 +116,10 @@ def k_anonymity(
     the driver counts k from them (:func:`_k_local`): one Spark action,
     nothing persisted.  Above it the frame is persisted, one aggregation
     gives the benchmarks and one ``applyInPandas`` counts each stratum in
-    its own task (:func:`_k_spark`).  Both run :func:`_stratum_k` on the
-    same strata with the same predicate; the benchmark sum is exact on the
-    driver (``math.fsum``) and Spark's ``sum`` in Spark.
+    its own task (:func:`_k_spark`); with no used attribute, k is the
+    subject count.  Both run :func:`_stratum_k` on the same strata with the
+    same predicate; the benchmark sum is exact on the driver
+    (``math.fsum``) and Spark's ``sum`` in Spark.
     """
     rand_attrs = [a for a in used_attrs if cfgs[a].strategy == "randomization"]
     frame = _kpi_frame(triples, type_iri, used_attrs, rand_attrs, cfgs)
@@ -125,6 +134,10 @@ def k_anonymity(
         return (0 if used_attrs else 1), "driver"
     if len(rows) <= PAIR_THRESHOLD:
         return _k_local(rows, len(used_attrs), len(rand_attrs)), "driver"
+    if not used_attrs:
+        # one stratum, every subject matches; it leaves no column to group
+        # by or to hand to applyInPandas
+        return frame.count(), "spark"
     frame = frame.persist()
     try:
         return _k_spark(frame, len(used_attrs), len(rand_attrs)), "spark"
@@ -202,10 +215,11 @@ def _k_local(rows, n_used: int, n_rand: int) -> int:
 
 
 def _k_spark(frame, n_used: int, n_rand: int) -> int:
-    """k over the persisted KPI frame (at least one subject): the
-    benchmarks (as in :func:`_k_local`, summed by Spark) in one
-    aggregation, then one ``applyInPandas`` task per (group, null-pattern)
-    stratum returns its :func:`_stratum_k`, and k is their minimum."""
+    """k over the persisted KPI frame (at least one subject, at least one
+    used attribute): the benchmarks (as in :func:`_k_local`, summed by
+    Spark) in one aggregation, then one ``applyInPandas`` task per (group,
+    null-pattern) stratum returns its :func:`_stratum_k`, and k is their
+    minimum."""
     benches = []
     if n_rand:
         stats = []

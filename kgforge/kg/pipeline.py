@@ -35,8 +35,11 @@ _SALT_BUCKETS = 16
 # driver; above it the MinHash-LSH + distributed connected-components path
 # runs.  The wall times cross between 12k and 15k surfaces (local[4], 4
 # cores, synthetic one-edit near-duplicate vocabulary: driver 27.5 / 40.9 /
-# 76.1 s vs LSH 30.3 / 48.3 / 49.8 s at 10k / 12k / 15k)
-SMALL_CANON_THRESHOLD = 12_000
+# 76.1 / 114.1 s vs LSH 30.3 / 48.3 / 49.8 / 55.0 s at 10k / 12k / 15k /
+# 20k), but LSH's banding recall is below 1: it merged 1-6 fewer surfaces
+# than the exact path from 10k on.  The switch stays where the exact path
+# still runs in about two minutes.
+SMALL_CANON_THRESHOLD = 20_000
 _CANON_SCHEMA = T.StructType([
     T.StructField("surface", T.StringType()),
     T.StructField("canon_surface", T.StringType()),

@@ -348,6 +348,14 @@ def test_no_subject(spark, used, k):
     assert k_anonymity(triples, T, used, CFG) == (k, "driver")
 
 
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_no_used_attribute_counts_every_subject(spark, monkeypatch, path):
+    """No configured predicate occurs: one stratum of every subject, whose
+    members all match, on both paths."""
+    triples = _typed_only(spark, 30, [("http://ex.org/x", A0, "1.0", "xsd:double", False)])
+    assert _k_via(monkeypatch, path, triples, []) == (30, path)
+
+
 @pytest.mark.parametrize("n_attrs", [1, pytest.param(2, marks=pytest.mark.slow)])
 def test_driver_count_single_giant_group(n_attrs):
     """One 50,000-subject group (PAIR_THRESHOLD subjects), counted on the
