@@ -7,17 +7,26 @@ operator dispatch (Configuration.java:29-65), KPI write-back, original
 deletion (QueryBuildingService.java:98-123), optional rename-to-original
 (AnonymizationService.java:159-201).
 
-Each type starts from ONE materialized pivot: a single ``groupBy(subj)``
-over the pred-filtered triples yields the type's subjects, every configured
-attribute's values (as arrays, so multi-valued attributes survive) and the
-tie column.  J1's counts are observed while the pivot materializes; the
-delete's victims and the long-format attribute frame
-``(subj, _tie, _k, obj_value, …)`` — exploded once, ``_k`` the attribute's
-index — all read that pivot; none re-derives the type's subjects from the
-triple table.  The reference dispatches one operator per attribute; here
-each operator kind runs once per type over all of its attributes (masking,
-generalization, randomization — object generalization stays per
-attribute), so a type's Spark jobs do not grow with its attribute count.
+Each type starts from ONE materialized pivot in long layout, ``(subj,
+_tie, _k, pred, obj_value, obj_dtype, obj_is_iri)``: a single
+``groupBy(subj)`` over the triples finds the type's subjects and their
+tie value and emits one row per value of a configured attribute, ``_k``
+the attribute's index.  J1's counts are observed while the pivot
+materializes; the operators and the delete's victims all read that pivot;
+none re-derives the type's subjects from the triple table.  The reference
+dispatches one operator per attribute; here each operator kind runs once
+per type over all of its attributes (masking, generalization, object
+generalization, randomization), so a type's Spark jobs do not grow with
+its attribute count.
+
+The configuration reaches the plans only as data: attribute names,
+predicates, datatypes and bucket counts are array literals looked up by
+``_k`` or ``pred`` (:func:`kgforge.triples.array_sql`), which generated code
+reads by reference.  Every checkpoint a type reads has one schema (the
+input is checkpointed first, all columns nullable).  So the pivot and KPI
+plans are the same for every type, configuration and endpoint, and Spark
+compiles their classes once per session instead of once per type; only a
+write-back whose operator kinds differ compiles classes of its own.
 The config is driver-side; all data movement is DataFrame transforms.
 Per-type results accumulate into the same triple table, exactly like the
 reference's shared Jena model (M5).
@@ -26,16 +35,18 @@ reference's shared Jena model (M5).
 from __future__ import annotations
 
 import time
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kgforge.anonymize import kpi as kpi_mod
 from kgforge.anonymize import ops
 from kgforge.anonymize.buckets import calculate_number_of_buckets
 from kgforge.config import AnonymizationConfig, AttrConfig
-from kgforge.triples import RDF_TYPE, triples_df
+from kgforge.triples import RDF_TYPE, TRIPLE_SCHEMA, array_sql, local_df, triples_df
 
 _SUFFIX = {
     "masking": "_masked",
@@ -54,6 +65,15 @@ class AnonymizationReport:
     k_mode: dict[str, str] = field(default_factory=dict)
     nr_buckets: dict[str, dict[str, int]] = field(default_factory=dict)
     used: dict[str, list[str]] = field(default_factory=dict)
+    # the local checkpoint the returned triples read (none when no type
+    # wrote anything); its owner frees it with release() once done with them
+    checkpoints: list[DataFrame] = field(default_factory=list)
+
+    def release(self) -> None:
+        """Free the blocks of :attr:`checkpoints`; the returned triples are
+        unreadable afterwards."""
+        while self.checkpoints:
+            _release(self.checkpoints.pop())
 
 
 def anonymize_triples(
@@ -73,15 +93,62 @@ def anonymize_triples(
     unspecified (HashMap iteration, Randomization.java:61-66); we make it
     deterministic — value multisets are tie-order-invariant so KPIs and bucket
     contents match the reference exactly, only tied rows may swap resources.
+
+    The input is checkpointed first, and each type's KPI triple is written
+    with the next type's write-back, so every type reads a checkpoint and
+    runs the same plans, whatever its configuration.  Each type's pivot is
+    freed once the type's write-back is materialized, and each checkpoint
+    once the next one and its KPI are; the last one, which the returned
+    triples read, is left in ``report.checkpoints`` for the caller to free
+    (:meth:`AnonymizationReport.release`).
     """
-    spark = triples.sparkSession
     seed = int(time.time() * 1000) if random_seed is None else random_seed
     report = AnonymizationReport()
+    # KPI triples of the types done so far that no write-back holds yet
+    pending: list[tuple] = []
+    try:
+        triples = _truncate_triples(triples)
+        report.checkpoints.append(triples)
+        for type_iri, attrs_cfg in config.items():
+            triples = _anonymize_type(
+                triples, type_iri, attrs_cfg, report, seed, order_pred, pending,
+                calculate_kpi=calculate_kpi,
+                include_original_data=include_original_data,
+                use_adjusted_attributes=use_adjusted_attributes,
+            )
+    except BaseException:
+        report.release()
+        raise
+    if pending:
+        triples = triples.unionByName(triples_df(triples.sparkSession, pending))
+    return triples, report
 
-    for type_iri, attrs_cfg in config.items():
-        attrs = list(attrs_cfg)
-        pivot, sizes = _type_pivot(triples, type_iri, attrs, order_pred)
 
+def _anonymize_type(
+    triples: DataFrame,
+    type_iri: str,
+    attrs_cfg: dict[str, AttrConfig],
+    report: AnonymizationReport,
+    seed: int,
+    order_pred: str | None,
+    pending: list[tuple],
+    *,
+    calculate_kpi: bool,
+    include_original_data: bool,
+    use_adjusted_attributes: bool,
+) -> DataFrame:
+    """One configured type of :func:`anonymize_triples`: returns
+    ``triples`` with the type's values (and the ``pending`` KPI triples)
+    written back, records the type's KPIs and write-back checkpoint in
+    ``report`` and leaves its KPI triple in ``pending``."""
+    spark = triples.sparkSession
+    attrs = list(attrs_cfg)
+    long_df, sizes = _type_pivot(triples, type_iri, attrs, order_pred)
+    # the rank caches generalize persists for this type; the checkpoint
+    # below materializes every operator plan, so they and the pivot go right
+    # after it
+    caches: list[DataFrame] = []
+    try:
         # J1: which configured predicates are actually used by this type
         counts = {a: n for a, n in zip(attrs, sizes) if n}
         used = [a for a in attrs if a in counts]
@@ -91,17 +158,6 @@ def anonymize_triples(
             for a in used
             if attrs_cfg[a].strategy in ("generalization", "randomization")
         )
-
-        # every used attribute's values, one row per value; _k is the
-        # attribute's index in ``attrs``
-        long_df = pivot.select(
-            "subj", "_tie",
-            F.posexplode(F.array(*[f"_a{i}" for i in range(len(attrs))]))
-            .alias("_k", "_vs"),
-        ).select("subj", "_tie", "_k", F.explode("_vs").alias("_e")).select(
-            "subj", "_tie", "_k", "_e.obj_value", "_e.obj_dtype", "_e.obj_is_iri"
-        )
-        new_parts: list[DataFrame] = []
         kpi_rows: list[tuple] = []
         report.nr_buckets[type_iri] = {}
         # operator kind -> the specs of its attributes, one call per kind
@@ -124,145 +180,130 @@ def anonymize_triples(
                 kpi_rows.extend(
                     kpi_mod.attribute_info_rows(type_iri, attr, cfg.strategy, g)
                 )
-            if cfg.is_object_generalization:
-                col_df = long_df.filter(F.col("_k") == k)
-                new_parts.append(
-                    ops.generalize_object(
-                        triples, col_df, attr, cfg.attr_order, g, n
-                    )
-                )
-            else:
-                batches.setdefault(cfg.strategy, []).append(
-                    ops.AttrSpec(attr, cfg.datatype, g, n, k)
-                )
+            kind = "object" if cfg.is_object_generalization else cfg.strategy
+            batches.setdefault(kind, []).append(
+                ops.AttrSpec(attr, cfg.datatype, g, n, k, cfg.attr_order)
+            )
 
         order_col = F.col("_tie")
-        # the rank caches generalize persists for this type; the checkpoint
-        # below materializes every operator plan, so they go right after it
-        caches: list[DataFrame] = []
-        try:
-            if "masking" in batches:
-                new_parts.append(ops.mask(long_df, batches["masking"]))
-            if "generalization" in batches:
-                new_parts.append(
-                    ops.generalize(
-                        long_df, batches["generalization"], order_col, cleanup=caches
-                    )
+        parts: list[DataFrame] = []
+        if "object" in batches:
+            parts.append(ops.generalize_object(triples, long_df, batches["object"]))
+        if "masking" in batches:
+            parts.append(ops.mask(long_df, batches["masking"]))
+        if "generalization" in batches:
+            parts.append(
+                ops.generalize(
+                    long_df, batches["generalization"], order_col, cleanup=caches
                 )
-            if "randomization" in batches:
-                new_parts.append(
-                    ops.randomize(
-                        long_df, batches["randomization"], seed, order_col
-                    )
-                )
-
-            written = triples
-            if used:
-                if not include_original_data:
-                    written = _delete_originals(written, pivot, attrs, used)
-                for part in new_parts:
-                    written = written.unionByName(part.select(
-                        "subj", "pred", "obj_value", "obj_dtype", "obj_is_iri"
-                    ))
-                if kpi_rows:
-                    written = written.unionByName(triples_df(spark, kpi_rows))
-                # Lineage truncation, not just caching: each operator stacks
-                # a rank/bucket/noise subtree onto the shared triple table.
-                # Without a checkpoint the analyzed plan grows
-                # multiplicatively per type — analysis time dominates tiny
-                # inputs and the driver can OOM just rendering plan strings
-                # for the SQL listener.  One truncation per type covers the
-                # write-back and the deletes; the KPI triple and the renames
-                # below are narrow unions/projections on top.
-                written = _truncate(written)
-        finally:
-            for c in caches:
-                c.unpersist()
-
-        if calculate_kpi:
-            # the KPI runs on the pre-delete model, like the reference (KPI at
-            # AnonymizationService.java:101-104, delete at :105-108): the
-            # type's input plus what was written.  Rows present in both are
-            # harmless — the KPI frame aggregates per subject with max().
-            kpi_input = triples if written is triples else triples.unionByName(written)
-            k, mode = kpi_mod.k_anonymity(kpi_input, type_iri, used, attrs_cfg)
-            report.k_anonymity[type_iri] = k
-            report.k_mode[type_iri] = mode
-            written = written.unionByName(
-                triples_df(spark, kpi_mod.kpi_object_rows(type_iri, k))
+            )
+        if "randomization" in batches:
+            parts.append(
+                ops.randomize(long_df, batches["randomization"], seed, order_col)
             )
 
-        if not use_adjusted_attributes and used:
-            written = _rename_to_original(
-                written,
-                {a + _SUFFIX[attrs_cfg[a].strategy]: a for a in used},
-            )
-        triples = written
+        written = triples
+        if used:
+            if not include_original_data:
+                written = _delete_originals(written, long_df)
+            for part in parts:
+                written = written.unionByName(part.select(
+                    "subj", "pred", "obj_value", "obj_dtype", "obj_is_iri"
+                ))
+            if kpi_rows or pending:
+                written = written.unionByName(triples_df(spark, kpi_rows + pending))
+                pending.clear()
+            # Lineage truncation, not just caching: each operator stacks
+            # a rank/bucket/noise subtree onto the shared triple table.
+            # Without a checkpoint the analyzed plan grows
+            # multiplicatively per type — analysis time dominates tiny
+            # inputs and the driver can OOM just rendering plan strings
+            # for the SQL listener.  One truncation per type covers the
+            # write-back and the deletes; the renames below are a
+            # projection on top.
+            written = _truncate_triples(written)
+    finally:
+        for c in caches:
+            c.unpersist()
+        _release(long_df)
 
-    return triples, report
+    # the previous checkpoint, read by ``triples`` until this type's KPI
+    superseded = list(report.checkpoints) if used else []
+    if used:
+        report.checkpoints.append(written)
+    if calculate_kpi:
+        # the KPI runs on the pre-delete model, like the reference (KPI at
+        # AnonymizationService.java:101-104, delete at :105-108): the
+        # type's input plus what was written.  Rows present in both are
+        # harmless — the KPI frame aggregates per subject with max().
+        kpi_input = triples if written is triples else triples.unionByName(written)
+        k, mode = kpi_mod.k_anonymity(kpi_input, type_iri, used, attrs_cfg)
+        report.k_anonymity[type_iri] = k
+        report.k_mode[type_iri] = mode
+        pending.extend(kpi_mod.kpi_object_rows(type_iri, k))
+    for c in superseded:
+        report.checkpoints.remove(c)
+        _release(c)
+
+    if not use_adjusted_attributes and used:
+        written = _rename_to_original(
+            written,
+            {a + _SUFFIX[attrs_cfg[a].strategy]: a for a in used},
+        )
+    return written
 
 
 def _type_pivot(
     triples: DataFrame, type_iri: str, attrs: list[str], order_pred: str | None
-) -> tuple[DataFrame, list[int | None]]:
-    """(subj, _tie, _a0 … _aN), one row per subject typed ``type_iri``;
-    ``_ai`` is the array of attribute i's (obj_value, obj_dtype,
-    obj_is_iri) values — one entry per triple, like one OPTIONAL arm of the
-    reference's pivot query (data/QueryBuildingService.java:31-46)
-    restricted to present values.  Materialized: every later step of the
-    type reads it.  Also returns each attribute's value count (J1), observed
-    while the pivot materializes, so it costs no action of its own."""
+) -> tuple[DataFrame, list[int]]:
+    """The type's attribute values in long layout, ``(subj, _tie, _k, pred,
+    obj_value, obj_dtype, obj_is_iri)``: one row per value of attribute
+    ``attrs[_k]`` held by a subject typed ``type_iri`` — one OPTIONAL arm
+    of the reference's pivot query (data/QueryBuildingService.java:31-46)
+    restricted to present values.  ``_tie`` is the subject's ``order_pred``
+    value as a long, null without one.  One ``groupBy(subj)`` finds the
+    typed subjects; the attributes and ``order_pred`` reach it as array
+    literals, so every type, configuration and endpoint runs the same plan.
+    Materialized: every later step of the type reads it.  Also returns each
+    attribute's value count (J1), observed while the pivot materializes, so
+    it costs no action of its own."""
     pred = F.col("pred")
     is_type = (pred == RDF_TYPE) & (F.col("obj_value") == type_iri)
-    value = F.struct("obj_value", "obj_dtype", "obj_is_iri")
-    aggs = [F.max(is_type).alias("_typed")] + [
-        F.collect_list(F.when(pred == a, value)).alias(f"_a{i}")
-        for i, a in enumerate(attrs)
-    ]
-    preds = list(attrs)
-    if order_pred is not None:
-        preds.append(order_pred)
-        tie = F.when(pred == order_pred, F.col("obj_value").cast("long"))
-        aggs.append(F.max(tie).alias("_tie"))
-    pivot = (
-        triples.filter(is_type | pred.isin(preds))
+    # a one-element array either way (no pred is empty): the optimizer folds
+    # a lookup in an empty array away, which changes the plan
+    is_tie = F.expr(f"array_contains({array_sql([order_pred or ''])}, pred)")
+    k = F.expr(f"CAST(array_position({array_sql(attrs)}, pred) AS INT) - 1")
+    value = F.struct("_k", "pred", "obj_value", "obj_dtype", "obj_is_iri")
+    long_df = (
+        triples.withColumn("_k", k)
+        .filter(is_type | is_tie | (F.col("_k") >= 0))
         .groupBy("subj")
-        .agg(*aggs)
+        .agg(
+            F.max(is_type).alias("_typed"),
+            F.max(F.when(is_tie, F.col("obj_value").cast("long"))).alias("_tie"),
+            F.collect_list(F.when(F.col("_k") >= 0, value)).alias("_vs"),
+        )
         .filter("_typed")
-        .drop("_typed")
+        .select("subj", "_tie", F.explode("_vs").alias("_e"))
+        .select("subj", "_tie", "_e.*")
     )
-    if order_pred is None:
-        pivot = pivot.withColumn("_tie", F.col("subj"))
-    if not attrs:
-        return _truncate(pivot), []
     sizes = Observation()
-    pivot = _truncate(pivot.observe(sizes, *[
-        F.sum(F.size(f"_a{i}")).alias(f"_n{i}") for i in range(len(attrs))
-    ]))
-    return pivot, [sizes.get[f"_n{i}"] for i in range(len(attrs))]
+    long_df = _truncate(long_df.observe(sizes, F.collect_list("_k").alias("_ks")))
+    n = Counter(sizes.get["_ks"])
+    return long_df, [n[i] for i in range(len(attrs))]
 
 
-def _delete_originals(
-    triples: DataFrame, pivot: DataFrame, attrs: list[str], used: list[str]
-) -> DataFrame:
+def _delete_originals(triples: DataFrame, long_df: DataFrame) -> DataFrame:
     """Drop the type's values of the used attributes, plus a one-hop delete
     of the objects those values point to (drops address sub-objects —
     QueryBuildingService.java:98-123).  Both victim sets come from the
-    pivot, as one broadcast ``(subj, pred)`` relation — ``pred`` null for a
-    whole object — so one anti-join keeps the surviving rows in order."""
-    victims = pivot.select(
-        "subj", F.explode(F.array(*[F.lit(a) for a in used])).alias("pred")
+    long pivot, as one broadcast ``(subj, pred)`` relation — ``pred`` null
+    for a whole object — so one anti-join keeps the surviving rows in
+    order."""
+    children = long_df.filter("obj_is_iri").select(
+        F.col("obj_value").alias("subj"), F.lit(None).cast("string").alias("pred")
     )
-    values = F.concat(*[F.col(f"_a{attrs.index(a)}") for a in used])
-    children = (
-        pivot.select(F.explode(values).alias("_v"))
-        .filter(F.col("_v.obj_is_iri"))
-        .select(
-            F.col("_v.obj_value").alias("subj"),
-            F.lit(None).cast("string").alias("pred"),
-        )
-    )
-    gone = F.broadcast(victims.unionByName(children).alias("_gone"))
+    gone = F.broadcast(long_df.select("subj", "pred").unionByName(children).alias("_gone"))
     t = triples.alias("_t")
     hit = (F.col("_t.subj") == F.col("_gone.subj")) & (
         F.col("_gone.pred").isNull() | (F.col("_t.pred") == F.col("_gone.pred"))
@@ -272,14 +313,35 @@ def _delete_originals(
 
 def _rename_to_original(triples: DataFrame, renames: dict[str, str]) -> DataFrame:
     """Move each ``<attr>_<suffix>`` value onto ``<attr>`` and drop the old
-    ``<attr>`` values — global rewrites, like listStatements(null, p, null)."""
-    pred = F.col("pred")
-    new_pred = pred
-    for src, dst in renames.items():
-        new_pred = F.when(pred == src, F.lit(dst)).otherwise(new_pred)
-    return triples.filter(~pred.isin(list(renames.values()))).withColumn(
-        "pred", new_pred
+    ``<attr>`` values — global rewrites, like listStatements(null, p, null).
+    The pairs are two array literals, so the plan does not depend on them."""
+    src, dst = array_sql(list(renames)), array_sql(list(renames.values()))
+    return triples.filter(f"NOT array_contains({dst}, pred)").withColumn(
+        "pred", F.expr(f"IF(array_contains({src}, pred),"
+                       f" element_at({dst}, CAST(array_position({src}, pred) AS INT)), pred)")
     )
+
+
+def _release(df: DataFrame) -> None:
+    """Free the blocks of a checkpoint made by :func:`_truncate`:
+    ``unpersist()`` drops only a cache entry, while a local checkpoint lives
+    in the persisted RDD its plan reads."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+# the triple schema with every column nullable
+_NULLABLE_TRIPLES = T.StructType(
+    [T.StructField(f.name, f.dataType, True) for f in TRIPLE_SCHEMA.fields]
+)
+
+
+def _truncate_triples(df: DataFrame) -> DataFrame:
+    """:func:`_truncate` a triple table with every column nullable: the
+    union with an empty nullable relation keeps the rows and widens the
+    schema, so every checkpoint a type reads has one schema — generated
+    code tests nullable columns for null, so a schema that differs in
+    nullability alone compiles to other classes."""
+    return _truncate(df.unionByName(local_df(df.sparkSession, [], _NULLABLE_TRIPLES)))
 
 
 def _truncate(df: DataFrame) -> DataFrame:

@@ -9,11 +9,11 @@ One counter serves every input size.  The match predicate makes two
 subjects share their generalization group and the null pattern of their
 originals, so the subjects split into (group, null-pattern) strata and k is
 the smallest of the strata's minima, each counted by :func:`_stratum_k`.
-One ``limit(PAIR_THRESHOLD + 1).collect()`` of the per-subject KPI frame
-decides where the strata are counted: up to PAIR_THRESHOLD subjects (every
-request-sized input) on the driver from the collected rows, with no other
-Spark action; above it in Spark, one grouped ``applyInPandas`` task per
-stratum.  A stratum of m subjects counts in O(m log m) for one randomized
+One bounded ``limit(…).collect()`` of the KPI rows decides where the
+strata are counted: up to PAIR_THRESHOLD subjects (every request-sized
+input) on the driver from the collected rows, with no other Spark action;
+above it in Spark, one grouped ``applyInPandas`` task per stratum.  A
+stratum of m subjects counts in O(m log m) for one randomized
 attribute and in blocks of bounded size for more, so no pair or group-sized
 square is ever built.  One stratum is one task: a single giant
 generalization group runs on one core, and its rows are held whole in that
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kgforge.config import AttrConfig
-from kgforge.triples import RDF_TYPE, SOYA_URL, local_name
+from kgforge.triples import RDF_TYPE, SOYA_URL, array_sql, local_name, sql_str
 
 KPI_OBJECT_URI = SOYA_URL + "kpi"
 K_ANONYMITY = SOYA_URL + "kanonymity"
@@ -76,18 +76,18 @@ def kpi_object_rows(type_iri: str, k: int) -> list[tuple]:
     ]
 
 
-def _kpi_parse(datatype: str, c):
-    """KPI numeric domain: doubles, or epoch *seconds* for dates
-    (KpiService.java:117-130 via RandomizationDateTime.literalToNumericDate).
-
-    try_cast, not cast: under ANSI mode Catalyst constant-folds projection
-    expressions of union branches BEFORE the pred filter prunes them, so a
-    strict cast would error on non-numeric literals from other predicates.
-    Values reaching the KPI are validated upstream — null means absent."""
-    if datatype in ("date", "dateTime"):
-        ts = F.coalesce(F.to_timestamp(F.to_date(c)), F.to_timestamp(c))
-        return F.unix_timestamp(ts).cast("double")
-    return c.try_cast("double")
+# KPI numeric domain of a lexical ``obj_value`` under the datatype name
+# ``dt``: doubles, or epoch *seconds* for dates (KpiService.java:117-130 via
+# RandomizationDateTime.literalToNumericDate); null when ``dt`` is ''.
+# try_cast, not cast: under ANSI mode Catalyst constant-folds projection
+# expressions of union branches BEFORE the pred filter prunes them, so a
+# strict cast would error on non-numeric literals from other predicates.
+# Values reaching the KPI are validated upstream — null means absent.
+_PARSE_SQL = (
+    "CASE WHEN {dt} = 'date' OR {dt} = 'dateTime' THEN CAST(unix_timestamp("
+    "coalesce(to_timestamp(to_date(obj_value)), to_timestamp(obj_value))) AS DOUBLE)"
+    " WHEN {dt} <> '' THEN try_cast(obj_value AS DOUBLE) END"
+)
 
 
 def k_anonymity(
@@ -103,80 +103,174 @@ def k_anonymity(
     Runs BEFORE original-value deletion, exactly like the reference (KPI at
     AnonymizationService.java:101-104, delete at :105-108).
 
-    Both places count off ONE conditional-aggregation frame, one row per
-    subject of the type: ``(subj, _g*, _o*, _r*, _po*, _pr*)`` — the
-    generalization-group key of each used attribute and the parsed original
-    and randomized values (plus their presence) of each randomized one.
-    ``max()`` picks one value per subject like the reference's pivot
-    OPTIONAL binding, so rows that occur twice in ``triples`` change
-    nothing.
+    Both places count off the same rows (:func:`_kpi_cells`): each typed
+    subject's type triple and its cells, folded per subject into the
+    layout ``(subj, _g*, _o*, _r*, _po*, _pr*)`` — the generalization-group
+    key of each used attribute and the parsed original and randomized
+    values (plus their presence) of each randomized one.  ``max()`` picks
+    one value per subject like the reference's pivot OPTIONAL binding, so
+    rows that occur twice in ``triples`` change nothing.
 
-    One ``limit(PAIR_THRESHOLD + 1).collect()`` of that frame decides.  Up
-    to PAIR_THRESHOLD subjects the collected rows are the whole input and
-    the driver counts k from them (:func:`_k_local`): one Spark action,
-    nothing persisted.  Above it the frame is persisted, one aggregation
-    gives the benchmarks and one ``applyInPandas`` counts each stratum in
-    its own task (:func:`_k_spark`); with no used attribute, k is the
-    subject count.  Both run :func:`_stratum_k` on the same strata with the
-    same predicate; the benchmark sum is exact on the driver
+    One ``limit(…).collect()`` of those rows decides: when it reads them
+    all and they hold at most PAIR_THRESHOLD typed subjects (every
+    request-sized input) the driver folds and counts them
+    (:func:`_k_local`): one Spark action, no aggregation in Spark, nothing
+    persisted.  Otherwise the subjects are folded in Spark
+    (:func:`_kpi_frame`, :func:`_wide_frame`) and persisted, one
+    aggregation gives the benchmarks and one ``applyInPandas`` counts each
+    stratum in its own task (:func:`_k_spark`); with no used attribute, k
+    is the subject count.  Both run :func:`_stratum_k` on the same strata
+    with the same predicate; the benchmark sum is exact on the driver
     (``math.fsum``) and Spark's ``sum`` in Spark.
     """
     rand_attrs = [a for a in used_attrs if cfgs[a].strategy == "randomization"]
-    frame = _kpi_frame(triples, type_iri, used_attrs, rand_attrs, cfgs)
-    rows = frame.limit(PAIR_THRESHOLD + 1).collect()
-    if not rows:
-        # reference quirk (QueryBuildingService.java:142-163 +
-        # QueryService.java:215-235): with zero attributes the groups query
-        # has NO GROUP BY, so the aggregate over zero rows still yields one
-        # row whose empty GROUP_CONCAT splits into a single empty-IRI
-        # resource — one group of size 1 ⇒ k = 1.  With attributes (GROUP
-        # BY present) zero rows ⇒ no groups ⇒ k = 0.
-        return (0 if used_attrs else 1), "driver"
-    if len(rows) <= PAIR_THRESHOLD:
-        return _k_local(rows, len(used_attrs), len(rand_attrs)), "driver"
+    n_used, n_rand = len(used_attrs), len(rand_attrs)
+    cells = _kpi_cells(triples, type_iri, used_attrs, rand_attrs, cfgs)
+    # the rows of PAIR_THRESHOLD typed subjects with one value per KPI
+    # predicate, each row twice (the KPI input holds the unchanged rows
+    # twice); a longer input takes the Spark path
+    cap = min(PAIR_THRESHOLD * 2 * (2 + n_used + 2 * n_rand), 2**31 - 2)
+    # one task reads the partitions in turn, so the read is one job
+    rows = cells.coalesce(1).limit(cap + 1).collect()
+    if len(rows) <= cap:
+        subjects = _subject_rows(rows, n_used, n_rand)
+        if not subjects:
+            # reference quirk (QueryBuildingService.java:142-163 +
+            # QueryService.java:215-235): with zero attributes the groups
+            # query has NO GROUP BY, so the aggregate over zero rows still
+            # yields one row whose empty GROUP_CONCAT splits into a single
+            # empty-IRI resource — one group of size 1 ⇒ k = 1.  With
+            # attributes (GROUP BY present) zero rows ⇒ no groups ⇒ k = 0.
+            return (0 if used_attrs else 1), "driver"
+        if len(subjects) <= PAIR_THRESHOLD:
+            return _k_local(subjects, n_used, n_rand), "driver"
+    frame = _kpi_frame(cells)
     if not used_attrs:
         # one stratum, every subject matches; it leaves no column to group
-        # by or to hand to applyInPandas
-        return frame.count(), "spark"
-    frame = frame.persist()
+        # by or to hand to applyInPandas (no subject: the quirk above)
+        return frame.count() or 1, "spark"
+    frame = _wide_frame(frame, n_used, n_rand).persist()
     try:
-        return _k_spark(frame, len(used_attrs), len(rand_attrs)), "spark"
+        return _k_spark(frame, n_used, n_rand), "spark"
     finally:
         frame.unpersist()
 
 
-def _kpi_frame(triples, type_iri, used_attrs, rand_attrs, cfgs) -> DataFrame:
-    """(subj, _g<i> per used attribute, _o<j>/_r<j>/_po<j>/_pr<j> per
-    randomized attribute) for every subject typed ``type_iri``.  _po/_pr flag
-    pred PRESENCE independent of parse success — the benchmark denominator
-    needs them."""
-    pred, val = F.col("pred"), F.col("obj_value")
-    is_type = (pred == RDF_TYPE) & (val == type_iri)
-    preds = [a + "_generalized" for a in used_attrs]
-    aggs = [F.max(is_type).alias("_typed")] + [
-        F.max(F.when(pred == p, val)).alias(f"_g{i}") for i, p in enumerate(preds)
-    ]
+def _kpi_cells(triples, type_iri, used_attrs, rand_attrs, cfgs) -> DataFrame:
+    """(subj, _t, _c, _s, _x): one row per ``rdf:type type_iri`` triple
+    (``_t`` true, no cell) and one per triple of a KPI predicate (a cell:
+    ``_c`` the column of :func:`_k_local`'s row layout it fills, ``_s`` the
+    lexical value and ``_x`` its parse, randomized attributes only).
+
+    The row layout is ``(subj, _g<i> per used attribute, _o<j>, _r<j>,
+    _po<j>, _pr<j> per randomized attribute)`` — the generalization group,
+    the parsed original and randomized value, and whether each pred is
+    PRESENT (independent of parse success; the benchmark denominator needs
+    it).  The predicates, columns and datatypes reach the plan as array
+    literals, so its shape does not depend on the configuration; the driver
+    (:func:`_subject_rows`) or :func:`_kpi_frame` and :func:`_wide_frame`
+    fold the rows into the layout."""
+    cells = [(1 + i, a + "_generalized", None) for i, a in enumerate(used_attrs)]
+    base = 1 + len(used_attrs)
     for j, attr in enumerate(rand_attrs):
-        dtp, rnd = cfgs[attr].datatype, attr + "_randomized"
-        preds += [attr, rnd]
-        aggs += [
-            F.max(F.when(pred == attr, _kpi_parse(dtp, val))).alias(f"_o{j}"),
-            F.max(F.when(pred == rnd, _kpi_parse(dtp, val))).alias(f"_r{j}"),
-            F.max(pred == attr).alias(f"_po{j}"),
-            F.max(pred == rnd).alias(f"_pr{j}"),
-        ]
+        dt = cfgs[attr].datatype
+        cells += [(base + 4 * j, attr, dt), (base + 4 * j + 1, attr + "_randomized", dt)]
+    is_type = f"pred = '{RDF_TYPE}' AND obj_value = {sql_str(type_iri)}"
+    cell = (
+        f"named_struct('_c', e._cc, '_s', obj_value, '_x', {_PARSE_SQL.format(dt='e._cd')})"
+    )
     return (
-        triples.filter(is_type | pred.isin(preds))
-        .groupBy("subj")
-        .agg(*aggs)
-        .filter("_typed")
-        .drop("_typed")
+        triples.selectExpr(
+            "subj", "pred", "obj_value", f"{is_type} AS _t",
+            f"{array_sql([c for c, _, _ in cells], 'int')} AS _cc",
+            f"{array_sql([p for _, p, _ in cells])} AS _cp",
+            f"{array_sql([dt or '' for _, _, dt in cells])} AS _cd",
+        )
+        .selectExpr("subj", "_t", "explode_outer(transform(filter(arrays_zip(_cc, _cp,"
+                    f" _cd), e -> e._cp = pred), e -> {cell})) AS _e")
+        .filter("_t OR _e IS NOT NULL")
+        .selectExpr("subj", "_t", "_e._c", "_e._s", "_e._x")
     )
 
 
+def _kpi_frame(cells: DataFrame) -> DataFrame:
+    """(subj, _cells): the cells of :func:`_kpi_cells` per typed
+    subject."""
+    return (
+        cells.groupBy("subj")
+        .agg(F.max("_t").alias("_typed"),
+             F.collect_list(F.when(F.col("_c").isNotNull(),
+                                   F.struct("_c", "_s", "_x"))).alias("_cells"))
+        .filter("_typed")
+        .select("subj", "_cells")
+    )
+
+
+def _subject_rows(rows, n_used: int, n_rand: int) -> list[tuple]:
+    """The collected rows of :func:`_kpi_cells` as :func:`_wide_rows` of
+    the typed subjects, in the order they first occur."""
+    typed: dict = {}
+    cells = defaultdict(list)
+    for subj, t, c, s, x in rows:
+        if t:
+            typed[subj] = None
+        if c is not None:
+            cells[subj].append((c, s, x))
+    return _wide_rows([(subj, cells[subj]) for subj in typed], n_used, n_rand)
+
+
+def _spark_max(a, b):
+    """``max`` as Spark aggregates it: nulls skipped, NaN above every
+    double, the earlier value kept on ties."""
+    if b is None:
+        return a
+    if a is None:
+        return b
+    if isinstance(b, float) and math.isnan(b):
+        return b
+    return b if b > a else a
+
+
+def _wide_rows(rows, n_used: int, n_rand: int) -> list[tuple]:
+    """``(subj, cells)`` pairs in the row layout :func:`_k_local` reads:
+    each column the ``max`` of its cells, each presence flag whether the
+    pred occurs."""
+    base = 1 + n_used
+    out = []
+    for subj, cells in rows:
+        row = [subj] + [None] * (n_used + 4 * n_rand)
+        seen = set()
+        for c, s, x in cells:
+            seen.add(c)
+            row[c] = _spark_max(row[c], s if c < base else x)
+        for j in range(n_rand):
+            o = base + 4 * j
+            row[o + 2], row[o + 3] = o in seen, o + 1 in seen
+        out.append(tuple(row))
+    return out
+
+
+def _wide_frame(frame, n_used: int, n_rand: int) -> DataFrame:
+    """:func:`_wide_rows` as a Spark projection of the KPI frame, with the
+    layout's column names."""
+    def top(c, field):
+        return f"array_max(transform(filter(_cells, e -> e._c = {c}), e -> e.{field}))"
+
+    def seen(c):
+        return f"exists(_cells, e -> e._c = {c})"
+
+    base = 1 + n_used
+    cols = ["subj"] + [f"{top(1 + i, '_s')} AS _g{i}" for i in range(n_used)]
+    for j in range(n_rand):
+        o = base + 4 * j
+        cols += [f"{top(o, '_x')} AS _o{j}", f"{top(o + 1, '_x')} AS _r{j}",
+                 f"{seen(o)} AS _po{j}", f"{seen(o + 1)} AS _pr{j}"]
+    return frame.selectExpr(*cols)
+
+
 def _k_local(rows, n_used: int, n_rand: int) -> int:
-    """k over the collected KPI frame: ``rows`` are tuples in
-    :func:`_kpi_frame`'s column order, at least one.
+    """k over the typed subjects' rows in the layout of :func:`_kpi_cells`
+    (as :func:`_wide_rows` returns them), at least one.
 
     The benchmark of attribute j is ``2·Σ|o − r| / c`` over the whole type:
     the sum runs over subjects whose two values both parsed, ``c`` counts
@@ -215,8 +309,8 @@ def _k_local(rows, n_used: int, n_rand: int) -> int:
 
 
 def _k_spark(frame, n_used: int, n_rand: int) -> int:
-    """k over the persisted KPI frame (at least one subject, at least one
-    used attribute): the benchmarks (as in :func:`_k_local`, summed by
+    """k over the persisted KPI frame (at least one used attribute; 0
+    without a subject): the benchmarks (as in :func:`_k_local`, summed by
     Spark) in one aggregation, then one ``applyInPandas`` task per (group,
     null-pattern) stratum returns its :func:`_stratum_k`, and k is their
     minimum."""
@@ -257,7 +351,7 @@ def _k_spark(frame, n_used: int, n_rand: int) -> int:
         .agg(F.min("_k"))
         .collect()[0]
     )
-    return int(row[0])
+    return 0 if row[0] is None else int(row[0])  # None: no typed subject
 
 
 def _stratum_k(null_orig, m: int, orig, rand, rand_null, benches) -> int:

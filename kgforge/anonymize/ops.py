@@ -9,24 +9,27 @@ rebuild immutably).  The reference runs one operator per attribute; here
 one call covers every attribute of its kind, so a request's Spark jobs do
 not grow with its attribute count.  The per-attribute parameters (name,
 datatype, bucket count, value count, rank offset) travel as a small
-broadcast relation joined on ``_k``, never as per-attribute literals, so
-plan size is O(1) in the attribute count and in the bucket count.
+array literal looked up by ``_k`` (:func:`kgforge.triples.array_sql`),
+never as per-attribute expressions or inlined integers, so plan size is
+O(1) in the attribute count and in the bucket count, and every call
+compiles to the same classes whatever the configuration.
 
-Generalization ranks all of its attributes with one range-partitioned global
-rank over ``(_k, value, tie)`` (never a single-partition window unless the
-session has a single slice); randomization's sequential RNG contract forces
-one task per attribute (one ``applyInPandas`` group per attribute, each with
-its own seeded stream — RandomizationNumeric.java:22).
+Generalization ranks all of its attributes with one range-partitioned
+global rank over ``(_k, value, tie, subj)`` (never a single-partition
+window unless the session has a single slice); randomization's sequential
+RNG contract forces one task per attribute (one ``applyInPandas`` group per
+attribute, each with its own seeded stream — RandomizationNumeric.java:22),
+and so does object generalization's choice of level.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from itertools import accumulate
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from kgforge.anonymize.values import (
     PARSED_DATATYPES,
@@ -44,7 +47,7 @@ from kgforge.triples import (
     RDF_TYPE,
     RDFS_COMMENT,
     SOYA_URL,
-    local_df,
+    array_sql,
 )
 
 MASK = "*****"
@@ -56,41 +59,41 @@ OBFUSCATED_UPPER = "For the higher bound the maximum value is obfuscated"
 class AttrSpec:
     """One attribute of an operator call: the rows whose ``_k`` is ``k``
     hold ``attr``'s values.  ``g`` (bucket count) and ``n`` (value count)
-    are read by generalization and randomization only."""
+    are read by the generalizations and randomization only, ``levels``
+    (the attributeOrder ladder) by object generalization only."""
 
     attr: str
     datatype: str = "string"
     g: int = 0
     n: int = 0
     k: int = 0
-
-
-_PARAMS_SCHEMA = T.StructType([
-    T.StructField("_k", T.IntegerType()),
-    T.StructField("_attr", T.StringType()),
-    T.StructField("_dt", T.StringType()),
-    T.StructField("_g", T.LongType()),
-    T.StructField("_n", T.LongType()),
-    T.StructField("_koff", T.LongType()),
-])
+    levels: tuple[str, ...] = ()
 
 
 def _with_params(col_df: DataFrame, specs: list[AttrSpec]) -> DataFrame:
-    """``col_df`` joined with its attributes' parameters
-    ``(_attr, _dt, _g, _n, _koff)`` on ``_k``; rows of other attributes drop
-    out.  ``_koff`` is the number of values of the attributes with a smaller
-    ``k`` — where an attribute's block starts in a rank ordered by ``_k``
-    first.  A frame without ``_k`` holds the single attribute of ``specs``.
+    """``col_df`` with its attributes' parameters ``(_attr, _dt, _g, _n,
+    _koff)``, looked up by ``_k`` in array literals; rows of other
+    attributes drop out.  ``_koff`` is the number of values of the
+    attributes with a smaller ``k`` — where an attribute's block starts in
+    a rank ordered by ``_k`` first.  A frame without ``_k`` holds the single
+    attribute of ``specs``.
     """
     if "_k" not in col_df.columns:
         (spec,) = specs
         col_df = col_df.withColumn("_k", F.lit(spec.k))
-    rows, off = [], 0
-    for s in sorted(specs, key=lambda s: s.k):
-        rows.append((s.k, s.attr, s.datatype, s.g, s.n, off))
-        off += s.n
-    params = local_df(col_df.sparkSession, rows, _PARAMS_SCHEMA)
-    return col_df.join(F.broadcast(params), "_k")
+    specs = sorted(specs, key=lambda s: s.k)
+    offs = list(accumulate((s.n for s in specs), initial=0))[:-1]
+    params = {
+        "_attr": array_sql([s.attr for s in specs]),
+        "_dt": array_sql([s.datatype for s in specs]),
+        "_g": array_sql([s.g for s in specs], "bigint"),
+        "_n": array_sql([s.n for s in specs], "bigint"),
+        "_koff": array_sql(offs, "bigint"),
+    }
+    i = f"CAST(array_position({array_sql([s.k for s in specs], 'int')}, _k) AS INT)"
+    return col_df.selectExpr("*", f"{i} AS _i").filter("_i > 0").selectExpr(
+        *col_df.columns, *[f"element_at({arr}, _i) AS {name}" for name, arr in params.items()]
+    )
 
 
 def _check_datatypes(specs: list[AttrSpec]) -> None:
@@ -122,7 +125,8 @@ def _boundaries(lo: str, hi: str, before: str) -> str:
 def _bucket_triple(b: str, pred: str, value: str, dtype: str) -> str:
     return (
         f"named_struct('subj', concat(_attr, '_', CAST({b} AS STRING)),"
-        f" 'pred', {pred}, 'obj_value', {value}, 'obj_dtype', {dtype})"
+        f" 'pred', {pred}, 'obj_value', {value}, 'obj_dtype', {dtype},"
+        " 'obj_is_iri', false)"
     )
 
 
@@ -141,8 +145,9 @@ def generalize(
     indices do not align with the assignment formula; preserved); the first
     bucket's lower and the last bucket's upper bound are obfuscated.
 
-    One global rank over ``(_k, value, tie)`` ranks every attribute; an
-    attribute's rank is that minus its offset.  Each row works out the
+    One global rank over ``(_k, value, tie, subj)`` ranks every attribute
+    (``subj`` orders the rows a null tie leaves tied); an attribute's rank
+    is that minus its offset.  Each row works out the
     boundaries it is adjacent to (integer arithmetic, no join), and one
     ``groupBy(_k, boundary)`` yields every attribute's bounds — plan size is
     O(1) in g, so g ≈ 10⁶ (k ≈ 10¹²) works.  Expressions are SQL text: the
@@ -156,7 +161,8 @@ def generalize(
         "_v", F.expr(parse_sql("_dt", "obj_value"))
     )
     ranked = with_global_rank(
-        d, [F.col("_k"), F.col("_v"), tiebreak], out="_grank", cleanup=cleanup
+        d, [F.col("_k"), F.col("_v"), tiebreak, F.col("subj")], out="_grank",
+        cleanup=cleanup,
     ).withColumn("_rank", F.expr("_grank - _koff"))
 
     # first[j] = ceil((_rank + j) * g / n): the smallest boundary c with
@@ -168,19 +174,35 @@ def generalize(
         f" {_boundaries(first[1], f'least({first[2]} - 1, _g)', 'true')})"
     )
     lex, bound_dt = format_bound_sql("_dt", median_sql("_dt", "_vb", "_va"))
-    bounds = (
-        ranked.selectExpr("_k", "_attr", "_dt", "_g", "_v", f"explode({sides}) AS _e")
-        .groupBy("_k", "_attr", "_dt", "_g", "_e._c")
+    # one row per value's assignment (_c null, keyed by its unique rank) and
+    # one per boundary it is adjacent to, so one aggregation serves both and
+    # the ranked rows are read once
+    entries = (
+        f"concat(array(named_struct('_c', CAST(NULL AS BIGINT), '_before', false,"
+        f" '_r', _rank, '_s', subj)), transform({sides},"
+        f" e -> named_struct('_c', e._c, '_before', e._before,"
+        f" '_r', CAST(NULL AS BIGINT), '_s', CAST(NULL AS STRING))))"
+    )
+    groups = (
+        ranked.selectExpr("_k", "_attr", "_dt", "_g", "_n", "_v", f"explode({entries}) AS _e")
+        .groupBy("_k", "_attr", "_dt", "_g", "_n", "_e._c", "_e._r", "_e._s")
         .agg(
             F.expr("max(IF(_e._before, _v, NULL)) AS _vb"),
             F.expr("max(IF(_e._before, NULL, _v)) AS _va"),
         )
-        .selectExpr("_attr", "_g", "_c", f"{lex} AS _lex", f"{bound_dt} AS _bdt")
+        .selectExpr("_attr", "_g", "_n", "_c", "_r", "_s", f"{lex} AS _lex",
+                    f"{bound_dt} AS _bdt")
     )
-    # boundary c emits bucket c's type triple — reference
-    # addProperty(RDF.type, String) stores it as a *string literal*
-    # (Generalization.java:75) — and lower bound, and bucket c-1's upper
-    # bound
+    # an assignment row emits its value's bucket, bucket(i) = g*i/n in
+    # integer arithmetic (Generalization.java:50); boundary c emits bucket
+    # c's type triple — reference addProperty(RDF.type, String) stores it as
+    # a *string literal* (Generalization.java:75) — and lower bound, and
+    # bucket c-1's upper bound
+    assign = (
+        "named_struct('subj', _s, 'pred', concat(_attr, '_generalized'),"
+        " 'obj_value', concat(_attr, '_', CAST(_g * _r div _n AS STRING)),"
+        " 'obj_dtype', 'iri', 'obj_is_iri', true)"
+    )
     triples = [
         _bucket_triple(
             "_c", f"'{RDF_TYPE}'", f"'{SOYA_URL}generalization'", "'string'"
@@ -198,87 +220,90 @@ def generalize(
             "IF(_c = _g, 'string', _bdt)",
         ),
     ]
-    bucket_triples = bounds.selectExpr(
-        f"explode(filter(array(IF(_c < _g, {triples[0]}, NULL),"
-        f" IF(_c < _g, {triples[1]}, NULL), IF(_c > 0, {triples[2]}, NULL)),"
-        " t -> t IS NOT NULL)) AS _t"
-    ).selectExpr("_t.*", "false AS obj_is_iri")
-
-    # bucket(i) = g*i/n in integer arithmetic (Generalization.java:50)
-    assign = ranked.selectExpr(
-        "subj",
-        "concat(_attr, '_generalized') AS pred",
-        "concat(_attr, '_', CAST(_g * _rank div _n AS STRING)) AS obj_value",
-        "'iri' AS obj_dtype",
-        "true AS obj_is_iri",
-    )
-    return assign.unionByName(bucket_triples)
+    return groups.selectExpr(
+        f"explode(IF(_c IS NULL, array({assign}), filter(array("
+        f"IF(_c < _g, {triples[0]}, NULL), IF(_c < _g, {triples[1]}, NULL),"
+        f" IF(_c > 0, {triples[2]}, NULL)), t -> t IS NOT NULL))) AS _t"
+    ).select("_t.*")
 
 
 def generalize_object(
-    triples: DataFrame,
-    col_df: DataFrame,
-    attr: str,
-    attr_order: tuple[str, ...],
-    g: int,
-    n: int,
+    triples: DataFrame, col_df: DataFrame, specs: list[AttrSpec]
 ) -> DataFrame:
-    """Hierarchy generalization (reference: GeneralizationObject.java:27-58).
+    """Hierarchy generalization (reference: GeneralizationObject.java:27-58)
+    of every attribute in ``specs`` at once; ``col_df``'s values are the
+    IRIs of the objects whose level values replace them.
 
-    Walk the attributeOrder ladder low→high; first level whose value groups
-    satisfy (#groups ≤ g AND min group count > 0.5·n/g) wins; otherwise mask.
-    Sub-property IRIs are hardcoded under the demo prefix
-    (GeneralizationObject.java:31 — quirk preserved).
+    Walk each attribute's attributeOrder ladder (``AttrSpec.levels``)
+    low→high; the first level whose value groups satisfy (#groups ≤ g AND
+    min group count > 0.5·n/g) wins; otherwise mask.  Level sub-property
+    IRIs are hardcoded under the demo prefix (GeneralizationObject.java:31
+    — quirk preserved).
+
+    Every value becomes one row per rung of its attribute's ladder, the
+    mask rung last and always eligible; one ``applyInPandas`` group per
+    attribute receives those rows and the referenced objects' level values,
+    picks the lowest eligible rung and returns its rows — no driver round
+    trip and no join, and the ladders are array literals, so the plan does
+    not depend on them.
     """
-    gen_pred = attr + "_generalized"
-    level_preds = [DEMO_PREFIX + level for level in attr_order]
-    if level_preds:
-        # every level's value per referenced object, in one pivot
-        child = (
-            triples.filter(F.col("pred").isin(level_preds) & ~F.col("obj_is_iri"))
-            .groupBy(F.col("subj").alias("_ref"))
-            .agg(*[
-                F.first(F.when(F.col("pred") == p, F.col("obj_value")), True)
-                .alias(f"_l{i}")
-                for i, p in enumerate(level_preds)
-            ])
-        )
-        vals = col_df.select("subj", F.col("obj_value").alias("_ref")).join(
-            F.broadcast(child), "_ref", "left"
-        ).select("subj", *[
-            F.coalesce(F.col(f"_l{i}"), F.lit("")).alias(f"_l{i}")
-            for i in range(len(level_preds))
-        ])
-        # the group statistics of every level in ONE action
-        per_level = F.explode(F.array(*[
-            F.struct(F.lit(i).alias("_lvl"), F.col(f"_l{i}").alias("_val"))
-            for i in range(len(level_preds))
-        ]))
-        stats = {
-            r["_lvl"]: r
-            for r in vals.select(per_level.alias("_e"))
-            .groupBy("_e._lvl", "_e._val")
-            .count()
-            .groupBy("_lvl")
-            .agg(F.count(F.lit(1)).alias("ngroups"), F.min("count").alias("mincnt"))
-            .collect()
-        }
-        for i in range(len(level_preds)):
-            st = stats.get(i)
-            if st is not None and st["ngroups"] <= g and st["mincnt"] > n * 0.5 / g:
-                return vals.select(
-                    "subj",
-                    F.lit(gen_pred).alias("pred"),
-                    F.col(f"_l{i}").alias("obj_value"),
-                    F.lit("string").alias("obj_dtype"),
-                    F.lit(False).alias("obj_is_iri"),
-                )
-    return col_df.select(
-        "subj",
-        F.lit(gen_pred).alias("pred"),
-        F.lit(MASK).alias("obj_value"),
-        F.lit("string").alias("obj_dtype"),
-        F.lit(False).alias("obj_is_iri"),
+    # every rung of every ladder: its attribute, level and level predicate
+    # ('' for the mask rung)
+    rungs = [(s.k, i, DEMO_PREFIX + lv) for s in specs for i, lv in enumerate(s.levels)]
+    rungs += [(s.k, len(s.levels), "") for s in specs]
+    ladder = [
+        f"{array_sql([r[i] for r in rungs], t)} AS {name}"
+        for i, (t, name) in enumerate((("int", "_rk"), ("int", "_rl"), ("string", "_rp")))
+    ]
+    # one row per (value, rung), and one per (level value of an object,
+    # rung of its level predicate), both keyed by attribute
+    values = _with_params(col_df, specs).selectExpr(
+        "subj", "_k", "_attr", "_g", "_n", "obj_value AS _ref", *ladder
+    ).selectExpr(
+        "subj", "_k", "_attr", "_g", "_n", "_ref",
+        "explode(filter(arrays_zip(_rk, _rl, _rp), r -> r._rk = _k)) AS _r",
+    ).selectExpr(
+        "subj", "_k", "_attr", "_g", "_n", "_ref", "_r._rl AS _lvl",
+        "_r._rp AS _lpred", "CAST(NULL AS STRING) AS _val",
+    )
+    levels = triples.filter("NOT obj_is_iri").selectExpr(
+        "subj AS _ref", "pred", "obj_value", *ladder
+    ).selectExpr(
+        "_ref", "obj_value AS _val",
+        "explode(filter(arrays_zip(_rk, _rl, _rp), r -> r._rp = pred)) AS _r",
+    ).selectExpr(
+        "CAST(NULL AS STRING) AS subj", "_r._rk AS _k", "CAST(NULL AS STRING) AS _attr",
+        "CAST(NULL AS BIGINT) AS _g", "CAST(NULL AS BIGINT) AS _n", "_ref",
+        "_r._rl AS _lvl", "_r._rp AS _lpred", "_val",
+    )
+
+    def pick(pdf: pd.DataFrame) -> pd.DataFrame:
+        is_value = pdf["subj"].notna()
+        rows = pdf[is_value].drop(columns="_val")
+        if rows.empty:
+            return pd.DataFrame({"subj": [], "pred": [], "obj_value": []})
+        # an object's first value of each level predicate
+        found = pdf[~is_value & pdf["_val"].notna()].drop_duplicates(["_ref", "_lpred"])
+        rows = rows.merge(found[["_ref", "_lpred", "_val"]], on=["_ref", "_lpred"],
+                          how="left")
+        rows["_val"] = rows["_val"].fillna("")
+        rows.loc[rows["_lpred"] == "", "_val"] = MASK
+        g, n = int(rows["_g"].iat[0]), int(rows["_n"].iat[0])
+        for _, rung in rows.groupby("_lvl", sort=True):
+            counts = rung["_val"].value_counts()
+            if (rung["_lpred"] == "").all() or (
+                len(counts) <= g and counts.min() > n * 0.5 / g
+            ):
+                break
+        return pd.DataFrame({
+            "subj": rung["subj"],
+            "pred": rung["_attr"] + "_generalized",
+            "obj_value": rung["_val"],
+        })
+
+    schema = "subj string, pred string, obj_value string"
+    return values.unionByName(levels).groupBy("_k").applyInPandas(pick, schema).selectExpr(
+        "subj", "pred", "obj_value", "'string' AS obj_dtype", "false AS obj_is_iri"
     )
 
 
@@ -324,8 +349,9 @@ def randomize(
     Window size rv = n/g (n-1 if rv == n); for each sorted value, a two-pointer
     pass finds the closest contiguous (rv+1)-window and the noise scale is the
     max distance to its ends.  Each attribute draws from its own
-    java.util.Random(seed) stream consumed in ascending (value, tie) order
-    with data-dependent retry loops — inherently sequential per attribute
+    java.util.Random(seed) stream consumed in ascending (value, tie) order,
+    the tie compared as a string (``subj`` where it is null), with
+    data-dependent retry loops — inherently sequential per attribute
     (RandomizationNumeric.java:22, fixtures pin seed=1234), so each
     attribute is one applyInPandas group (attributes parallelize across
     tasks).
@@ -335,7 +361,7 @@ def randomize(
     d = _with_params(col_df, specs).select(
         "subj", "_k", "_attr", "_dt", "_g",
         F.expr(parse_sql("_dt", "obj_value")).alias("_v"),
-        tiebreak.cast("string").alias("_ord"),
+        F.coalesce(tiebreak.cast("string"), F.col("subj")).alias("_ord"),
     )
 
     def run_group(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -152,7 +152,7 @@ def anonymize_flat_json(
     prefix = request["prefix"]
     triples = flat_rows_to_triples(spark, request["data"], prefix)
     calculate_kpi = request.get("calculateKpi", True)
-    out, _report = anonymize_triples(
+    out, report = anonymize_triples(
         triples,
         cfg,
         calculate_kpi=calculate_kpi,
@@ -161,7 +161,10 @@ def anonymize_flat_json(
         random_seed=request.get("randomSeed"),
         order_pred=prefix + "counter",
     )
-    return flat_json_output(out, cfg, prefix, calculate_kpi)
+    try:
+        return flat_json_output(out, cfg, prefix, calculate_kpi)
+    finally:
+        report.release()
 
 
 def anonymize_jsonld_response(
@@ -176,10 +179,13 @@ def anonymize_jsonld_response(
     reference's Jena writer output)."""
     from kgforge.jsonld_out import serialize_jsonld
 
-    out, _report = anonymize_jsonld(spark, request, config, transport)
+    out, report = anonymize_jsonld(spark, request, config, transport)
     data = request.get("data")
     context = data.get("@context") if isinstance(data, dict) else None
-    return serialize_jsonld(out, context if isinstance(context, dict) else None)
+    try:
+        return serialize_jsonld(out, context if isinstance(context, dict) else None)
+    finally:
+        report.release()
 
 
 def anonymize_jsonld(
@@ -188,7 +194,9 @@ def anonymize_jsonld(
     config: AnonymizationConfig | None = None,
     transport=None,
 ) -> tuple[DataFrame, AnonymizationReport]:
-    """PUT /api/anonymization equivalent: returns the anonymized triple table."""
+    """PUT /api/anonymization equivalent: returns the anonymized triple table
+    and the report; the table reads the local checkpoint in
+    ``report.checkpoints``, which ``report.release()`` frees."""
     _validate_request(request, flat=False)
     cfg = resolve_config(request.get("configurationUrl"), config, transport)
     triples = jsonld_to_triples(spark, request["data"])

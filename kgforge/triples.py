@@ -63,6 +63,34 @@ def local_df(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
     return spark.createDataFrame(table, schema=schema)
 
 
+# joins the values of an array_sql literal; no IRI or datatype name holds it
+_SEP = "\x1f"
+
+
+def array_sql(values, element_type: str = "string") -> str:
+    """SQL text of one array literal holding ``values`` (none null or
+    holding the unit separator U+001F).  The optimizer folds the split of
+    one string literal into a constant array that generated code reads by
+    reference, like a string literal, so a plan that looks values up in it
+    (``array_position``, ``element_at``) compiles to the same classes
+    whatever the values and however many — unlike a chain of per-value
+    expressions, or integers, which generated code inlines.  Written as
+    SQL text it costs a few driver round trips whatever its length, and,
+    unlike a broadcast relation, no Spark job."""
+    if not values:
+        return f"CAST(array() AS ARRAY<{element_type}>)"
+    text = _SEP.join(map(str, values))
+    if text.count(_SEP) != len(values) - 1 or any(v is None for v in values):
+        raise ValueError(f"array_sql: a null value or one holding U+001F in {values!r}")
+    return f"CAST(split({sql_str(text)}, '{_SEP}', -1) AS ARRAY<{element_type}>)"
+
+
+def sql_str(value: str) -> str:
+    """``value`` as a Spark SQL string literal (backslashes and quotes
+    escaped)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def triples_df(spark: SparkSession, rows) -> DataFrame:
     """Build a triple DataFrame from (subj, pred, obj_value, obj_dtype, obj_is_iri) tuples."""
     return local_df(spark, rows, TRIPLE_SCHEMA)

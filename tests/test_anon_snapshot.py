@@ -11,8 +11,11 @@ request (read through its own Spark job group) must stay within
 ``JOB_BUDGET``.  The same requests are replayed in a second session with
 one shuffle partition and one default slice — the settings of a service
 answering request-sized inputs, where ranks take the single-window path —
-against the same recordings, ``SERVICE_JOB_BUDGET`` and ``PY4J_CEILING``
-(py4j round trips between the Python driver and the JVM per request).
+against the same recordings, ``SERVICE_JOB_BUDGET``, ``PY4J_CEILING``
+(py4j round trips between the Python driver and the JVM per request) and
+``COMPILE_CEILING`` (classes Spark generates and compiles per request);
+before them, that session alternates flat and JSON-LD requests like the
+benchmark and counts the classes each JSON-LD type compiles.
 
 Re-record only when a response change is intended:
 ``PYTHONPATH=. python tests/test_anon_snapshot.py`` (from the repository
@@ -53,40 +56,57 @@ VARIANTS = {
 # Spark jobs per request with the test session's settings (local[4], four
 # shuffle partitions, AQE on)
 JOB_BUDGET = {
-    "flat/as_sent": 25,
-    "flat/original": 24,
-    "flat/renamed": 25,
-    "flat/no_kpi": 23,
-    "jsonld2/as_sent": 26,
-    "jsonld2/original": 24,
-    "jsonld2/renamed": 26,
-    "jsonld2/no_kpi": 22,
+    "flat/as_sent": 17,
+    "flat/original": 16,
+    "flat/renamed": 17,
+    "flat/no_kpi": 16,
+    "jsonld2/as_sent": 21,
+    "jsonld2/original": 19,
+    "jsonld2/renamed": 21,
+    "jsonld2/no_kpi": 19,
 }
 # the same with one shuffle partition and one default slice
 SERVICE_JOB_BUDGET = {
-    "flat/as_sent": 18,
-    "flat/original": 17,
-    "flat/renamed": 18,
-    "flat/no_kpi": 16,
-    "jsonld2/as_sent": 19,
-    "jsonld2/original": 17,
-    "jsonld2/renamed": 19,
-    "jsonld2/no_kpi": 15,
+    "flat/as_sent": 10,
+    "flat/original": 9,
+    "flat/renamed": 10,
+    "flat/no_kpi": 9,
+    "jsonld2/as_sent": 14,
+    "jsonld2/original": 12,
+    "jsonld2/renamed": 14,
+    "jsonld2/no_kpi": 12,
 }
 # py4j round trips per request in that session: the most measured plus about
 # 15% (the count moves by up to ~10% between runs of the same request).  A
 # plan built as a Column tree costs one round trip per expression node, so a
 # path that goes back to one shows here first.
 PY4J_CEILING = {
-    "flat/as_sent": 4600,
-    "flat/original": 4300,
-    "flat/renamed": 5000,
-    "flat/no_kpi": 3900,
-    "jsonld2/as_sent": 4300,
-    "jsonld2/original": 3400,
-    "jsonld2/renamed": 4600,
-    "jsonld2/no_kpi": 3300,
+    "flat/as_sent": 2450,
+    "flat/original": 2000,
+    "flat/renamed": 2150,
+    "flat/no_kpi": 2200,
+    "jsonld2/as_sent": 2950,
+    "jsonld2/original": 2450,
+    "jsonld2/renamed": 2950,
+    "jsonld2/no_kpi": 2800,
 }
+
+# classes Spark compiles per request in that session: plans that spell the
+# configuration out compiled 83-120 per request (69-106 for JSON-LD); the
+# counts move between runs as Spark's 100-entry code cache evicts (its
+# segments evict independently), hence the headroom
+COMPILE_CEILING = {
+    "flat/as_sent": 75,
+    "flat/original": 75,
+    "flat/renamed": 80,
+    "flat/no_kpi": 65,
+    "jsonld2/as_sent": 50,
+    "jsonld2/original": 35,
+    "jsonld2/renamed": 40,
+    "jsonld2/no_kpi": 25,
+}
+# the replay's key for steady_type_compiles
+STEADY = "steady/jsonld2"
 
 
 def _date(rng: random.Random, y0: int, y1: int) -> str:
@@ -146,43 +166,88 @@ REQUESTS = {
 }
 
 
-def run_all(spark) -> dict[str, tuple[dict, int, int]]:
-    """key → (parsed response, Spark jobs the request ran, py4j round trips
-    the request made)."""
-    import py4j.clientserver as cs
+class _Counters:
+    """Per-request counters of one session: py4j round trips (every
+    command the Python driver sends), classes Spark compiles (its static
+    ``CodegenMetrics`` counter, so cache hits count nothing) and where each
+    configured type's pivot starts (``engine._type_pivot`` is wrapped)."""
 
-    sc = spark.sparkContext
-    calls = [0]
-    send = cs.ClientServerConnection.send_command
+    def __init__(self, spark):
+        import py4j.clientserver as cs
 
-    def counted(self, command, *args, **kwargs):
-        calls[0] += 1
-        return send(self, command, *args, **kwargs)
+        from kgforge.anonymize import engine
 
-    out = {}
-    cs.ClientServerConnection.send_command = counted
-    try:
-        for kind, (endpoint, build) in REQUESTS.items():
-            for variant, flags in VARIANTS.items():
-                key = f"{kind}/{variant}"
-                group = f"anon-snapshot-{kind}-{variant}"
-                request = {**build(), **flags}
-                sc.setJobGroup(group, key)
-                before = calls[0]
-                try:
-                    resp = endpoint(spark, request)
-                finally:
-                    trips = calls[0] - before
-                    sc.setLocalProperty("spark.jobGroup.id", None)
-                    sc.setLocalProperty("spark.job.description", None)
-                sc._jsc.sc().listenerBus().waitUntilEmpty()
-                jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-                # round-trip through JSON so tuples, key order and number
-                # types compare exactly as a client would parse them
-                out[key] = (json.loads(json.dumps(resp)), jobs, trips)
-    finally:
-        cs.ClientServerConnection.send_command = send
-    return out
+        self.spark, self._cs, self._engine = spark, cs, engine
+        metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        self.compiled = metrics.METRIC_COMPILATION_TIME().getCount
+        self.calls = 0
+        self.type_starts: list[int] = []
+
+    def __enter__(self):
+        send, pivot = self._cs.ClientServerConnection.send_command, self._engine._type_pivot
+        self._send, self._pivot = send, pivot
+
+        def counted(conn, command, *args, **kwargs):
+            self.calls += 1
+            return send(conn, command, *args, **kwargs)
+
+        def marked_pivot(*args, **kwargs):
+            self.type_starts.append(self.compiled())
+            return pivot(*args, **kwargs)
+
+        self._cs.ClientServerConnection.send_command = counted
+        self._engine._type_pivot = marked_pivot
+        return self
+
+    def __exit__(self, *exc):
+        self._cs.ClientServerConnection.send_command = self._send
+        self._engine._type_pivot = self._pivot
+
+    def run(self, endpoint, request, group: str):
+        """(parsed response, Spark jobs, py4j round trips, classes
+        compiled, classes compiled from the start of each configured type's
+        pivot to the next one's or to the end of the request)."""
+        sc = self.spark.sparkContext
+        sc.setJobGroup(group, group)
+        self.type_starts.clear()
+        before, classes = self.calls, self.compiled()
+        try:
+            resp = endpoint(self.spark, request)
+        finally:
+            trips = self.calls - before
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        end = self.compiled()
+        starts = self.type_starts
+        per_type = [b - a for a, b in zip(starts, starts[1:] + [end])]
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        # round-trip through JSON so tuples, key order and number types
+        # compare exactly as a client would parse them
+        return json.loads(json.dumps(resp)), jobs, trips, end - classes, per_type
+
+
+def run_all(spark) -> dict[str, tuple[dict, int, int, int, list[int]]]:
+    """key → :meth:`_Counters.run` of that request."""
+    with _Counters(spark) as counters:
+        return {
+            f"{kind}/{variant}": counters.run(
+                endpoint, {**build(), **flags}, f"anon-snapshot-{kind}-{variant}"
+            )
+            for kind, (endpoint, build) in REQUESTS.items()
+            for variant, flags in VARIANTS.items()
+        }
+
+
+def steady_type_compiles(spark, rounds: int = 3) -> list[int]:
+    """Classes compiled per configured type of the last of ``rounds``
+    flat/JSON-LD pairs of as-sent requests — the alternation of the
+    benchmark's ``anon_requests`` workload."""
+    with _Counters(spark) as counters:
+        for i in range(rounds):
+            for kind, (endpoint, build) in REQUESTS.items():
+                per_type = counters.run(endpoint, build(), f"anon-steady-{kind}-{i}")[4]
+    return per_type
 
 
 @pytest.fixture(scope="module")
@@ -236,6 +301,24 @@ def test_single_partition_py4j_ceiling(service_runs, key):
     assert service_runs[key][2] <= PY4J_CEILING[key], (key, service_runs[key][2])
 
 
+@pytest.mark.parametrize("key", sorted(COMPILE_CEILING))
+def test_single_partition_compile_ceiling(service_runs, key):
+    assert service_runs[key][3] <= COMPILE_CEILING[key], (key, service_runs[key][3:])
+
+
+def test_second_type_reuses_the_first_types_classes(service_runs):
+    """In a fresh session's flat/JSON-LD alternation — the benchmark's
+    ``anon_requests`` loop — the JSON-LD request's second type (Object2,
+    randomization only) runs the pivot and KPI plans its first type
+    (Object1, masking and generalization) just compiled, and the write-back
+    plan of the previous request's Object2.  Plans that spell the
+    configuration out compiled 47-49 classes there; this one compiles 6-8
+    in this session (4 in the benchmark's), the write-back's own classes
+    that the flat request in between evicted."""
+    per_type = service_runs[STEADY]
+    assert len(per_type) == 2 and per_type[1] <= 10, per_type
+
+
 def _session(partitions: int):
     from pyspark.sql import SparkSession
 
@@ -257,11 +340,15 @@ def _session(partitions: int):
 
 if __name__ == "__main__":
     if sys.argv[1:2] == ["--replay"]:
-        # --replay <partitions> <out.json>: responses and job counts, no
+        # --replay <partitions> <out.json>: the steady alternation in the
+        # fresh session, then every request's response and counters; no
         # re-recording
         session = _session(int(sys.argv[2]))
+        steady = steady_type_compiles(session)
+        runs = run_all(session)
+        runs[STEADY] = steady
         with open(sys.argv[3], "w") as f:
-            json.dump(run_all(session), f)
+            json.dump(runs, f)
         session.stop()
         sys.exit(0)
     session = _session(4)
@@ -270,6 +357,6 @@ if __name__ == "__main__":
     with open(SNAPSHOTS, "w") as f:
         json.dump({k: v[0] for k, v in results.items()}, f, indent=1, sort_keys=True)
         f.write("\n")
-    for k, (_, jobs, trips) in results.items():
-        print(k, "jobs", jobs, "py4j", trips)
+    for k, (_, jobs, trips, classes, per_type) in results.items():
+        print(k, "jobs", jobs, "py4j", trips, "compiled", classes, per_type)
     session.stop()

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from kgforge import rank
 from kgforge.anonymize.ops import AttrSpec, generalize
 from kgforge.anonymize.privacy import microaggregate, pseudonymize, rank_swap
-from kgforge.api import anonymize_flat_json
+from kgforge.api import anonymize_flat_json, anonymize_jsonld_response
 from kgforge.datapipe import hypotests
 from kgforge.datapipe.blocking import sorted_neighborhood_pairs
 from kgforge.datapipe.classify import gini_tree2
@@ -32,7 +32,7 @@ from kgforge.datapipe.mix import pack_chunks
 from kgforge.datapipe.profile import gini_concentration
 from kgforge.datapipe.stats import quantile_normalize
 from kgforge.ingest import flat_df_to_triples
-from tests.test_anon_snapshot import flat_request
+from tests.test_anon_snapshot import flat_request, jsonld2_request
 
 SLICES = 4
 N = 60
@@ -157,4 +157,29 @@ def test_concurrent_calls_leave_no_cache_entry(spark, cache_entries):
         futs = {n: pool.submit(run, spark, f"pool-{n}") for n, run in CASES.items()}
         pooled = {n: _result(f.result(timeout=600)) for n, f in futs.items()}
     assert pooled == serial
+    assert cache_entries() == before
+
+
+def _responses(spark, tag):
+    """One flat and one JSON-LD response, each from a request unique to
+    ``tag``."""
+    seed = sum(map(ord, tag))
+    return (json.dumps(anonymize_flat_json(spark, flat_request(24, seed)), sort_keys=True),
+            json.dumps(anonymize_jsonld_response(spark, jsonld2_request(30, seed)),
+                       sort_keys=True))
+
+
+def test_responses_release_their_checkpoints(spark, cache_entries, persisted_rdds):
+    """The API endpoints own the engine's local checkpoints (persisted RDDs
+    without a cache entry): after a flat and a JSON-LD response, serially
+    and four at a time through a thread pool, the context holds no
+    persisted RDD it did not hold before and no new cache entry."""
+    before, rdds = cache_entries(), persisted_rdds()
+    serial = _responses(spark, "responses-serial")
+    assert persisted_rdds() <= rdds
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        pooled = list(pool.map(lambda t: _responses(spark, t),
+                               ["responses-serial"] + [f"responses-{i}" for i in range(3)]))
+    assert pooled[0] == serial
+    assert persisted_rdds() <= rdds
     assert cache_entries() == before
