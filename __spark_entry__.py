@@ -66,8 +66,10 @@ def _mask_names(spark, sf_dir):
 
 
 def _generalized(col_df, spec):
-    """``generalize`` over one attribute, tie-broken by ``_tie`` and
-    checkpointed, so the rank cache it persisted is released here."""
+    """``generalize`` over one attribute (``col_df`` carries the parsed
+    value ``_v``, built from its typed source column), tie-broken by
+    ``_tie`` and checkpointed, so the rank cache it persisted is released
+    here."""
     from kgforge.anonymize.ops import generalize
 
     caches: list = []
@@ -85,6 +87,7 @@ def _acctbal_column(spark, sf_dir):
     return cust.filter(F.col("c_acctbal").isNotNull()).select(
         F.col("c_custkey").cast("string").alias("subj"),
         F.col("c_acctbal").cast("string").alias("obj_value"),
+        F.col("c_acctbal").alias("_v"),
         F.col("c_custkey").alias("_tie"),
     )
 
@@ -138,6 +141,8 @@ def _generalize_orderdate(spark, sf_dir):
     col_df = orders.filter(F.col("o_orderdate").isNotNull()).select(
         F.col("o_orderkey").cast("string").alias("subj"),
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("obj_value"),
+        # epoch days of the session-zone date obj_value spells
+        F.datediff("o_orderdate", F.lit("1970-01-01")).cast("double").alias("_v"),
         F.col("o_orderkey").alias("_tie"),
     )
     n = col_df.count()
@@ -6608,6 +6613,7 @@ def _kg_anon_mention_counts(spark, sf_dir):
     col_df = counts.select(
         F.col("doc_id").cast("string").alias("subj"),
         F.col("nm").cast("string").alias("obj_value"),
+        F.col("nm").cast("double").alias("_v"),
         F.col("doc_id").alias("_tie"),
     )
     n = col_df.count()

@@ -13,7 +13,9 @@ _tie, _k, pred, obj_value, obj_dtype, obj_is_iri)``: a single
 tie value and emits one row per value of a configured attribute, ``_k``
 the attribute's index.  J1's counts are observed while the pivot
 materializes; the operators and the delete's victims all read that pivot;
-none re-derives the type's subjects from the triple table.  The reference
+none re-derives the type's subjects from the triple table.  The pivot
+parses each value once (``_v``); one that does not parse fails the type
+with :class:`AnonymizationError` before any operator runs.  The reference
 dispatches one operator per attribute; here each operator kind runs once
 per type over all of its attributes (masking, generalization, object
 generalization, randomization), so a type's Spark jobs do not grow with
@@ -38,21 +40,28 @@ import time
 from collections import Counter
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kgforge.anonymize import kpi as kpi_mod
 from kgforge.anonymize import ops
 from kgforge.anonymize.buckets import calculate_number_of_buckets
+from kgforge.anonymize.values import PARSED_DATATYPES, parse_sql
 from kgforge.config import AnonymizationConfig, AttrConfig
 from kgforge.triples import RDF_TYPE, TRIPLE_SCHEMA, array_sql, local_df, triples_df
+from kgforge.util import release_checkpoint, truncate_lineage
 
 _SUFFIX = {
     "masking": "_masked",
     "generalization": "_generalized",
     "randomization": "_randomized",
 }
+
+
+class AnonymizationError(RuntimeError):
+    """Anonymization-process failure (500, GlobalExceptionHandler.java:49-56):
+    a configured value that does not parse as its attribute's datatype."""
 
 
 @dataclass
@@ -73,7 +82,7 @@ class AnonymizationReport:
         """Free the blocks of :attr:`checkpoints`; the returned triples are
         unreadable afterwards."""
         while self.checkpoints:
-            _release(self.checkpoints.pop())
+            release_checkpoint(self.checkpoints.pop())
 
 
 def anonymize_triples(
@@ -143,7 +152,7 @@ def _anonymize_type(
     ``report`` and leaves its KPI triple in ``pending``."""
     spark = triples.sparkSession
     attrs = list(attrs_cfg)
-    long_df, sizes = _type_pivot(triples, type_iri, attrs, order_pred)
+    long_df, sizes, bad = _type_pivot(triples, type_iri, attrs_cfg, order_pred)
     # the rank caches generalize persists for this type; the checkpoint
     # below materializes every operator plan, so they and the pivot go right
     # after it
@@ -181,8 +190,16 @@ def _anonymize_type(
                     kpi_mod.attribute_info_rows(type_iri, attr, cfg.strategy, g)
                 )
             kind = "object" if cfg.is_object_generalization else cfg.strategy
+            if kind != "object" and cfg.datatype not in PARSED_DATATYPES:
+                raise ValueError(f"unsupported datatype for value parsing: {cfg.datatype}")
             batches.setdefault(kind, []).append(
                 ops.AttrSpec(attr, cfg.datatype, g, n, k, cfg.attr_order)
+            )
+        if bad is not None:
+            attr = attrs[bad["_k"]]
+            raise AnonymizationError(
+                f"Value '{bad['obj_value']}' of attribute {attr} is not a valid"
+                f" {attrs_cfg[attr].datatype}"
             )
 
         order_col = F.col("_tie")
@@ -225,7 +242,7 @@ def _anonymize_type(
     finally:
         for c in caches:
             c.unpersist()
-        _release(long_df)
+        release_checkpoint(long_df)
 
     # the previous checkpoint, read by ``triples`` until this type's KPI
     superseded = list(report.checkpoints) if used else []
@@ -243,7 +260,7 @@ def _anonymize_type(
         pending.extend(kpi_mod.kpi_object_rows(type_iri, k))
     for c in superseded:
         report.checkpoints.remove(c)
-        _release(c)
+        release_checkpoint(c)
 
     if not use_adjusted_attributes and used:
         written = _rename_to_original(
@@ -254,19 +271,26 @@ def _anonymize_type(
 
 
 def _type_pivot(
-    triples: DataFrame, type_iri: str, attrs: list[str], order_pred: str | None
-) -> tuple[DataFrame, list[int]]:
+    triples: DataFrame, type_iri: str, attrs_cfg: dict[str, AttrConfig],
+    order_pred: str | None,
+) -> tuple[DataFrame, list[int], Row | None]:
     """The type's attribute values in long layout, ``(subj, _tie, _k, pred,
-    obj_value, obj_dtype, obj_is_iri)``: one row per value of attribute
+    obj_value, obj_dtype, obj_is_iri, _v)``: one row per value of attribute
     ``attrs[_k]`` held by a subject typed ``type_iri`` — one OPTIONAL arm
     of the reference's pivot query (data/QueryBuildingService.java:31-46)
     restricted to present values.  ``_tie`` is the subject's ``order_pred``
-    value as a long, null without one.  One ``groupBy(subj)`` finds the
-    typed subjects; the attributes and ``order_pred`` reach it as array
-    literals, so every type, configuration and endpoint runs the same plan.
-    Materialized: every later step of the type reads it.  Also returns each
-    attribute's value count (J1), observed while the pivot materializes, so
-    it costs no action of its own."""
+    value as a long, null without one; ``_v`` the value parsed by
+    :func:`parse_sql`, null for masking and object generalization.  One
+    ``groupBy(subj)`` finds the typed subjects; the attributes, datatypes
+    and ``order_pred`` reach it as array literals, so every type,
+    configuration and endpoint runs the same plan.  Materialized: every
+    later step of the type reads it.  Also returns, observed while the
+    pivot materializes, so at no action of its own, each attribute's value
+    count (J1) and the smallest ``(_k, obj_value)`` with a datatype whose
+    ``_v`` is null (None when every value parses)."""
+    attrs = list(attrs_cfg)
+    dts = array_sql(["" if c.strategy == "masking" or c.is_object_generalization
+                     else c.datatype for c in attrs_cfg.values()])
     pred = F.col("pred")
     is_type = (pred == RDF_TYPE) & (F.col("obj_value") == type_iri)
     # a one-element array either way (no pred is empty): the optimizer folds
@@ -274,23 +298,31 @@ def _type_pivot(
     is_tie = F.expr(f"array_contains({array_sql([order_pred or ''])}, pred)")
     k = F.expr(f"CAST(array_position({array_sql(attrs)}, pred) AS INT) - 1")
     value = F.struct("_k", "pred", "obj_value", "obj_dtype", "obj_is_iri")
+    v = parse_sql(f"element_at({dts}, _e._k + 1)", "_e.obj_value")
     long_df = (
         triples.withColumn("_k", k)
         .filter(is_type | is_tie | (F.col("_k") >= 0))
         .groupBy("subj")
         .agg(
             F.max(is_type).alias("_typed"),
-            F.max(F.when(is_tie, F.col("obj_value").cast("long"))).alias("_tie"),
+            # try_cast: a malformed tie value orders like a missing one
+            F.max(F.when(is_tie, F.col("obj_value").try_cast("long"))).alias("_tie"),
             F.collect_list(F.when(F.col("_k") >= 0, value)).alias("_vs"),
         )
         .filter("_typed")
         .select("subj", "_tie", F.explode("_vs").alias("_e"))
-        .select("subj", "_tie", "_e.*")
+        .selectExpr("subj", "_tie", "_e.*", f"{v} AS _v")
     )
-    sizes = Observation()
-    long_df = _truncate(long_df.observe(sizes, F.collect_list("_k").alias("_ks")))
-    n = Counter(sizes.get["_ks"])
-    return long_df, [n[i] for i in range(len(attrs))]
+    bad = f"element_at({dts}, _k + 1) <> '' AND obj_value IS NOT NULL AND _v IS NULL"
+    stats = Observation()
+    long_df = truncate_lineage(long_df.observe(
+        stats,
+        F.collect_list("_k").alias("_ks"),
+        F.expr(f"min(IF({bad}, struct(_k, obj_value), NULL))").alias("_bad"),
+    ))
+    got = stats.get
+    n = Counter(got["_ks"])
+    return long_df, [n[i] for i in range(len(attrs))], got["_bad"]
 
 
 def _delete_originals(triples: DataFrame, long_df: DataFrame) -> DataFrame:
@@ -322,13 +354,6 @@ def _rename_to_original(triples: DataFrame, renames: dict[str, str]) -> DataFram
     )
 
 
-def _release(df: DataFrame) -> None:
-    """Free the blocks of a checkpoint made by :func:`_truncate`:
-    ``unpersist()`` drops only a cache entry, while a local checkpoint lives
-    in the persisted RDD its plan reads."""
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-
-
 # the triple schema with every column nullable
 _NULLABLE_TRIPLES = T.StructType(
     [T.StructField(f.name, f.dataType, True) for f in TRIPLE_SCHEMA.fields]
@@ -336,22 +361,9 @@ _NULLABLE_TRIPLES = T.StructType(
 
 
 def _truncate_triples(df: DataFrame) -> DataFrame:
-    """:func:`_truncate` a triple table with every column nullable: the
+    """:func:`truncate_lineage` a triple table with every column nullable: the
     union with an empty nullable relation keeps the rows and widens the
     schema, so every checkpoint a type reads has one schema — generated
     code tests nullable columns for null, so a schema that differs in
     nullability alone compiles to other classes."""
-    return _truncate(df.unionByName(local_df(df.sparkSession, [], _NULLABLE_TRIPLES)))
-
-
-def _truncate(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` and cut its lineage: a reliable ``checkpoint`` when
-    the session has a checkpoint dir (cluster-safe — replicated, survives
-    executor loss), ``localCheckpoint`` otherwise (local mode / short-lived
-    fixture jobs).  Always eager: under AQE a lazy checkpoint still runs
-    every shuffle stage of the plan as soon as its RDD is built, so
-    ``eager=False`` would defer nothing."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir():
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+    return truncate_lineage(df.unionByName(local_df(df.sparkSession, [], _NULLABLE_TRIPLES)))

@@ -20,6 +20,11 @@ generalization group runs on one core, and its rows are held whole in that
 task's Python worker (a few numpy columns of m values per randomized
 attribute).
 
+Values parse as the operators parse them (:func:`values.parse_sql`): a
+dateTime keeps its time of day, as the reference's ``literalToNumericDate``
+does; a date is in days, not seconds, which moves no ``<=`` (its distances
+are integers and their sums exact).
+
 The benchmarks are the one input the two places do not compute alike: the
 driver sums ``|o − r|`` exactly (``math.fsum``), Spark with its own
 partition-ordered ``sum``.  When the two sums round to different doubles
@@ -36,6 +41,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgforge.anonymize.values import parse_sql
 from kgforge.config import AttrConfig
 from kgforge.triples import RDF_TYPE, SOYA_URL, array_sql, local_name, sql_str
 
@@ -74,20 +80,6 @@ def kpi_object_rows(type_iri: str, k: int) -> list[tuple]:
         # int k widens to long → typed xsd:long (KpiService.java:47)
         (kpi_obj, K_ANONYMITY, str(k), "xsd:long", False),
     ]
-
-
-# KPI numeric domain of a lexical ``obj_value`` under the datatype name
-# ``dt``: doubles, or epoch *seconds* for dates (KpiService.java:117-130 via
-# RandomizationDateTime.literalToNumericDate); null when ``dt`` is ''.
-# try_cast, not cast: under ANSI mode Catalyst constant-folds projection
-# expressions of union branches BEFORE the pred filter prunes them, so a
-# strict cast would error on non-numeric literals from other predicates.
-# Values reaching the KPI are validated upstream — null means absent.
-_PARSE_SQL = (
-    "CASE WHEN {dt} = 'date' OR {dt} = 'dateTime' THEN CAST(unix_timestamp("
-    "coalesce(to_timestamp(to_date(obj_value)), to_timestamp(obj_value))) AS DOUBLE)"
-    " WHEN {dt} <> '' THEN try_cast(obj_value AS DOUBLE) END"
-)
 
 
 def k_anonymity(
@@ -177,7 +169,7 @@ def _kpi_cells(triples, type_iri, used_attrs, rand_attrs, cfgs) -> DataFrame:
         cells += [(base + 4 * j, attr, dt), (base + 4 * j + 1, attr + "_randomized", dt)]
     is_type = f"pred = '{RDF_TYPE}' AND obj_value = {sql_str(type_iri)}"
     cell = (
-        f"named_struct('_c', e._cc, '_s', obj_value, '_x', {_PARSE_SQL.format(dt='e._cd')})"
+        f"named_struct('_c', e._cc, '_s', obj_value, '_x', {parse_sql('e._cd', 'obj_value')})"
     )
     return (
         triples.selectExpr(

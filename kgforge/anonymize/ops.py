@@ -1,8 +1,11 @@
 """Column anonymization operators as DataFrame transforms.
 
 Each operator consumes the values of one or more attributes in long format
-``(subj, _k, obj_value, ...)`` — ``_k`` selects the row's attribute among
-the call's :class:`AttrSpec` list — and returns NEW triples to union into
+``(subj, _k, obj_value, _v, ...)`` — ``_k`` selects the row's attribute
+among the call's :class:`AttrSpec` list, ``_v`` is the value parsed by
+:func:`kgforge.anonymize.values.parse_sql` (read by generalization and
+randomization; the engine parses it once, in its pivot, and rejects a type
+with a value that does not parse) — and returns NEW triples to union into
 the graph (the reference mutates its Jena model in place —
 Masking.java:19-25, Generalization.java:59-62, Randomization.java:72-75; we
 rebuild immutably).  The reference runs one operator per attribute; here
@@ -31,13 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgforge.anonymize.values import (
-    PARSED_DATATYPES,
-    format_bound,
-    format_bound_sql,
-    median_sql,
-    parse_sql,
-)
+from kgforge.anonymize.values import format_bound, format_bound_sql, median_sql
 from kgforge.config import DEMO_PREFIX
 from kgforge.javarandom import JavaRandom, java_math_round
 from kgforge.rank import with_global_rank
@@ -96,12 +93,6 @@ def _with_params(col_df: DataFrame, specs: list[AttrSpec]) -> DataFrame:
     )
 
 
-def _check_datatypes(specs: list[AttrSpec]) -> None:
-    for s in specs:
-        if s.datatype not in PARSED_DATATYPES:
-            raise ValueError(f"unsupported datatype for value parsing: {s.datatype}")
-
-
 def mask(col_df: DataFrame, specs: list[AttrSpec]) -> DataFrame:
     """Masking (reference: Masking.java:19-25): constant '*****' per value."""
     return _with_params(col_df, specs).selectExpr(
@@ -155,14 +146,10 @@ def generalize(
     The rank's persisted frame goes to ``cleanup``; the caller unpersists it
     after its last action over the result.
     """
-    _check_datatypes(specs)
     tiebreak = order_col if order_col is not None else F.col("subj")
-    d = _with_params(col_df, specs).withColumn(
-        "_v", F.expr(parse_sql("_dt", "obj_value"))
-    )
     ranked = with_global_rank(
-        d, [F.col("_k"), F.col("_v"), tiebreak, F.col("subj")], out="_grank",
-        cleanup=cleanup,
+        _with_params(col_df, specs), [F.col("_k"), F.col("_v"), tiebreak, F.col("subj")],
+        out="_grank", cleanup=cleanup,
     ).withColumn("_rank", F.expr("_grank - _koff"))
 
     # first[j] = ceil((_rank + j) * g / n): the smallest boundary c with
@@ -356,11 +343,9 @@ def randomize(
     attribute is one applyInPandas group (attributes parallelize across
     tasks).
     """
-    _check_datatypes(specs)
     tiebreak = order_col if order_col is not None else F.col("subj")
     d = _with_params(col_df, specs).select(
-        "subj", "_k", "_attr", "_dt", "_g",
-        F.expr(parse_sql("_dt", "obj_value")).alias("_v"),
+        "subj", "_k", "_attr", "_dt", "_g", "_v",
         F.coalesce(tiebreak.cast("string"), F.col("subj")).alias("_ord"),
     )
 

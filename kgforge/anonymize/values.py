@@ -5,6 +5,10 @@ Sortable numeric domain per reference datatype:
   date           → epoch days (GeneralizationDate.java:40-48, RandomizationDate.java:33-37)
   dateTime       → epoch seconds/millis (GeneralizationDateTime.java:33-46,
                    RandomizationDateTime.java:31-33)
+
+:func:`parse_sql` is the one lexical → double parser, called by the
+engine's pivot (the ``_v`` column the operators read) and the KPI.  It
+never raises, with ANSI mode on or off: a value that does not parse is null.
 """
 
 from __future__ import annotations
@@ -28,14 +32,16 @@ def _numeric(dt: str) -> str:
 def parse_sql(dt: str, c: str) -> str:
     """SQL expression: lexical column ``c`` → sortable double, per row by
     the datatype name in column ``dt`` (one of :data:`PARSED_DATATYPES`;
-    anything else → null).  Expression text, not a Column: one parse on the
-    JVM instead of a driver round trip per node."""
-    # xsd:date-or-dateTime fallback parse (RandomizationDateTime.java:58-70)
-    ts = f"coalesce(to_timestamp({c}), to_timestamp(to_date({c})))"
+    anything else → null).  A value that does not parse is null, whatever
+    the ANSI mode: every cast is a try-form.  Expression text, not a
+    Column: one parse on the JVM instead of a driver round trip per node."""
+    # xsd:dateTime first, then the date at midnight (RandomizationDateTime
+    # .java:58-70 accepts both)
+    ts = f"coalesce(try_to_timestamp({c}), try_to_timestamp(try_cast({c} AS DATE)))"
     return (
-        f"CASE WHEN {_numeric(dt)} THEN CAST({c} AS DOUBLE)"
+        f"CASE WHEN {_numeric(dt)} THEN try_cast({c} AS DOUBLE)"
         f" WHEN {dt} = 'date'"
-        f" THEN CAST(datediff(to_date({c}), '1970-01-01') AS DOUBLE)"
+        f" THEN CAST(datediff(try_cast({c} AS DATE), '1970-01-01') AS DOUBLE)"
         f" WHEN {dt} = 'dateTime' THEN CAST(unix_timestamp({ts}) AS DOUBLE) END"
     )
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kgforge.anonymize.engine import AnonymizationReport, anonymize_triples
+from kgforge.anonymize.engine import AnonymizationError, AnonymizationReport, anonymize_triples
 from kgforge.anonymize.flat_output import flat_json_output
 from kgforge.config import CONFIG_BY_URL, AnonymizationConfig, fetch_config
 from kgforge.ingest import (
@@ -44,10 +44,6 @@ class MessageNotReadableError(ValueError):
     object where ``data`` must be a list of objects (error fixture
     04-no-json-ld).  Binding happens BEFORE bean validation, exactly like
     Jackson runs before @Valid."""
-
-
-class AnonymizationError(RuntimeError):
-    """Anonymization-process failure (500, GlobalExceptionHandler.java:49-56)."""
 
 
 def problem_detail(exc: Exception, instance: str) -> dict:

@@ -308,7 +308,7 @@ def dbscan_grid(
         # unpersisted on exit (reliable checkpoint on clusters, local here)
         from kgforge.util import truncate_lineage
 
-        out = truncate_lineage(out, eager=True)
+        out = truncate_lineage(out)
     finally:
         pts.unpersist()
         pairs.unpersist()

@@ -140,6 +140,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kgforge.util import release_checkpoint
+
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 
@@ -784,13 +786,6 @@ def _m_dt(v: str) -> str:
 _REL_COLS = ["_ps", "_ps_iri", "_ps_dt", "_po", "_po_iri", "_po_dt"]
 
 
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free the blocks of a ``localCheckpoint``: ``unpersist()`` drops only
-    a cache entry, while a local checkpoint lives in the persisted RDD its
-    plan reads."""
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-
-
 def _path_rel(triples: DataFrame, path: Path, max_iter: int = 64) -> DataFrame:
     """Compile a property path to its binary relation: columns ``_ps … _po``
     with the endpoints' IRI-ness/datatype companions.
@@ -860,8 +855,8 @@ def _path_rel(triples: DataFrame, path: Path, max_iter: int = 64) -> DataFrame:
                 grown = reach.unionByName(nxt).localCheckpoint(eager=True)
                 # the round's successor is materialized: what it supersedes
                 # is read by nothing any more
-                _release_checkpoint(frontier)
-                _release_checkpoint(reach)
+                release_checkpoint(frontier)
+                release_checkpoint(reach)
                 frontier, reach, nxt = nxt, grown, None
             else:
                 raise SparqlError(
@@ -872,7 +867,7 @@ def _path_rel(triples: DataFrame, path: Path, max_iter: int = 64) -> DataFrame:
             # only the returned closure stays checkpointed
             for d in (frontier, nxt, reach):
                 if d is not None and not (done and d is reach):
-                    _release_checkpoint(d)
+                    release_checkpoint(d)
         if path.op == "plus":
             return reach
         terms = triples.select(

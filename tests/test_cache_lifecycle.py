@@ -69,8 +69,8 @@ def _returned(fn):
 
 
 def _gen_input(spark, tag):
-    rows = [(f"s{i}", str(float((i * 5) % 17)), i) for i in range(N)]
-    return _frame(spark, tag, rows, "subj string, obj_value string, _tie long")
+    rows = [(f"s{i}", str(float((i * 5) % 17)), float((i * 5) % 17), i) for i in range(N)]
+    return _frame(spark, tag, rows, "subj string, obj_value string, _v double, _tie long")
 
 
 def _cells(spark, tag):

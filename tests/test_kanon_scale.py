@@ -30,6 +30,7 @@ T = "http://ex.org/Person"
 A0 = "http://ex.org/salary"
 A1 = "http://ex.org/age"
 A2 = "http://ex.org/height"
+AT = "http://ex.org/seen"
 GEN = "http://ex.org/grp"
 
 
@@ -112,6 +113,7 @@ CFG = {
     A0: AttrConfig("double", "randomization"),
     A1: AttrConfig("double", "randomization"),
     A2: AttrConfig("double", "randomization"),
+    AT: AttrConfig("dateTime", "randomization"),
 }
 
 
@@ -520,6 +522,30 @@ def test_float_tie_counts_alike_on_both_paths(spark, monkeypatch, path):
     counter that tests the window bounds instead of the distance reads 1."""
     rows = _subject(0, a0=(30.6, 32.1)) + _subject(1, a0=(1.8, 30.6))
     assert _k_via(monkeypatch, path, _triples_from(spark, rows), [A0]) == (2, path)
+
+
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_datetime_distances_keep_the_time_of_day(spark, monkeypatch, path):
+    """A randomized dateTime is compared in seconds: six subjects seen
+    within one day, in three pairs hours apart, each randomized by minutes,
+    have k = 2, as the brute-force mirror in seconds counts it.  A parser
+    that drops the time of day puts every value at midnight, where every
+    subject matches all six."""
+    import datetime as dt
+
+    day = dt.datetime(2020, 5, 1, tzinfo=dt.timezone.utc)
+    originals = [0, 600, 20000, 20500, 50000, 50900]
+    shifts = [300, -200, 250, -300, 400, -500]
+    rows, data = [], {}
+    for i, (o, d) in enumerate(zip(originals, shifts)):
+        s = f"http://ex.org/r{i:03d}"
+        rows.append((s, RDF_TYPE, T, "iri", True))
+        for pred, sec in ((AT, o), (AT + "_randomized", o + d)):
+            lex = (day + dt.timedelta(seconds=sec)).strftime("%Y-%m-%dT%H:%M:%SZ")
+            rows.append((s, pred, lex, "xsd:dateTime", False))
+        data[s] = {"grp": None, AT: (day.timestamp() + o, day.timestamp() + o + d)}
+    assert _expected_k(data, [AT]) == 2
+    assert _k_via(monkeypatch, path, _triples_from(spark, rows), [AT]) == (2, path)
 
 
 def _spark_le(x, b):

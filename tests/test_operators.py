@@ -9,7 +9,18 @@ from pyspark.sql import functions as F
 
 from kgforge.anonymize.buckets import calculate_number_of_buckets
 from kgforge.anonymize.ops import AttrSpec, generalize, randomize
+from kgforge.anonymize.values import parse_sql
 from kgforge.rank import with_global_rank
+
+_SCHEMA = "subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
+
+
+def _parsed(spark, rows, datatype):
+    """``rows`` of :data:`_SCHEMA` with the engine pivot's parsed value
+    ``_v`` of each ``obj_value``."""
+    return spark.createDataFrame(rows, _SCHEMA).withColumn(
+        "_v", F.expr(parse_sql(f"'{datatype}'", "obj_value"))
+    )
 
 
 @pytest.mark.parametrize(
@@ -32,9 +43,7 @@ def test_floor_bucket_differs_from_ntile(spark, caches):
     """g*i/k with k=10, g=3 → sizes [4,3,3]; ntile(3) would give [4,4,2].
     The reference formula (Generalization.java:50) must win."""
     rows = [(str(i), str(float(i)), "c", False, i) for i in range(10)]
-    col_df = spark.createDataFrame(
-        rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
-    )
+    col_df = _parsed(spark, rows, "double")
     out = generalize(
         col_df, [AttrSpec("x", "double", 3, 10)], F.col("_tie"), cleanup=caches
     )
@@ -48,9 +57,7 @@ def test_floor_bucket_differs_from_ntile(spark, caches):
 
 def test_bucket_bounds_medians_and_obfuscation(spark, caches):
     rows = [(str(i), str(float(10 * i)), "c", False, i) for i in range(10)]
-    col_df = spark.createDataFrame(
-        rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
-    )
+    col_df = _parsed(spark, rows, "double")
     out = generalize(
         col_df, [AttrSpec("x", "double", 3, 10)], F.col("_tie"), cleanup=caches
     ).collect()
@@ -81,9 +88,7 @@ def test_date_median_truncates_toward_zero(spark, caches):
         ("c", "1970-01-03", "c", False, 2),  # 2
         ("d", "1970-01-07", "c", False, 3),  # 6
     ]
-    col_df = spark.createDataFrame(
-        rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
-    )
+    col_df = _parsed(spark, rows, "date")
     out = generalize(
         col_df, [AttrSpec("d", "date", 2, 4)], F.col("_tie"), cleanup=caches
     ).collect()
@@ -121,9 +126,7 @@ def test_global_rank_matches_window(spark, caches):
 
 def test_randomize_exact_stays_in_range_and_seeded(spark):
     rows = [(str(i), str(float(i * 3 % 50)), "c", False, i) for i in range(50)]
-    col_df = spark.createDataFrame(
-        rows, schema="subj string, obj_value string, obj_dtype string, obj_is_iri boolean, _tie long"
-    )
+    col_df = _parsed(spark, rows, "double")
     a = {r["subj"]: r["obj_value"] for r in
          randomize(col_df, [AttrSpec("x", "double", 2, 50)], 99, F.col("_tie")).collect()}
     b = {r["subj"]: r["obj_value"] for r in
@@ -161,14 +164,16 @@ _BATCH = [
 
 
 def _batch_frame(spark, batch):
+    """The batch as the engine's pivot holds it: ``_v`` parsed by each
+    attribute's datatype."""
     rows = [
-        (subj, k, lex, tie)
-        for k, _a, _dt, _g, values in batch
+        (subj, k, lex, dt, tie)
+        for k, _a, dt, _g, values in batch
         for subj, lex, tie in values
     ]
     return spark.createDataFrame(
-        rows, "subj string, _k int, obj_value string, _tie long"
-    ).repartition(3)
+        rows, "subj string, _k int, obj_value string, _pdt string, _tie long"
+    ).selectExpr("*", f"{parse_sql('_pdt', 'obj_value')} AS _v").repartition(3)
 
 
 def _batch_specs(batch):
@@ -451,40 +456,154 @@ def test_unmaterialized_flat_input_anonymizes_like_driver_ingest(spark, ansi):
     assert len(want) > 12 and all(k > 0 for k in want_k.values())
 
 
-@pytest.mark.xfail(strict=True, reason=(
-    "direction 5: a malformed configured value fails the request under ANSI "
-    "(500 'Unexpected error') and is accepted silently without it"))
-def test_malformed_value_answers_alike_under_both_ansi_modes(spark):
-    """``"gehalt": "abc"`` (integer, generalization) on the unmaterialized
-    flat path: ANSI on and off must give the same ``problem_detail``
-    answer.  Today ANSI on raises ``CAST_INVALID_INPUT`` (a 500) while ANSI
-    off answers normally, so this fails; it pins that split until
-    malformed values get a defined answer."""
-    from kgforge.anonymize.engine import anonymize_triples
-    from kgforge.api import problem_detail
-    from kgforge.config import ANONYMISATION_DEMO, DEMO_PREFIX
-    from kgforge.ingest import flat_df_to_triples
+# (datatype, lexical) pairs for parse_sql: numbers with and without an
+# exponent or surrounding blanks, dates before and after 1970, dateTimes with
+# a zone, an offset and none, a date-only dateTime, and values that parse as
+# nothing under each datatype
+_PARSE_CASES = [
+    ("integer", "12"), ("integer", " 7 "), ("double", "1.5"), ("double", "-2.5E-2"),
+    ("double", "1e3"), ("date", "2020-05-01"), ("date", "1969-12-25"),
+    ("dateTime", "2020-05-01T10:20:30Z"), ("dateTime", "2020-05-01T10:20:30"),
+    ("dateTime", "2020-05-01T10:20:30+02:00"), ("dateTime", "2020-05-01"),
+    *[(dt, bad) for dt in ("integer", "double", "date", "dateTime")
+      for bad in ("", "abc", "31.12.1999")],
+    ("string", "12"), ("", "12"),
+]
 
-    rows = [("AnonymisationDemo", f"Person {i}", 46 + i % 4, 9.5 + 0.61 * i,
-             "abc" if i == 3 else str(1800 + 377 * i)) for i in range(12)]
-    df = spark.createDataFrame(
-        rows, "type string, name string, latitude long, longitude double, gehalt string"
-    )
+
+def _mirror_parse(datatype, lex):
+    """Python twin of ``parse_sql`` over :data:`_PARSE_CASES` (session time
+    zone UTC): doubles, epoch days, epoch seconds; None where it fails."""
+    import datetime as dt
+    import re
+
+    s = lex.strip()
+    if datatype in ("integer", "double"):
+        number = re.fullmatch(r"[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?", s)
+        return float(s) if number else None
+    try:
+        if datatype == "date":
+            return float((dt.date.fromisoformat(s) - dt.date(1970, 1, 1)).days)
+        if datatype == "dateTime":
+            t = dt.datetime.fromisoformat(s)
+            return float(int(t.replace(tzinfo=t.tzinfo or dt.timezone.utc).timestamp()))
+    except ValueError:
+        return None
+    return None
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_parse_sql_matches_python_mirror_under_both_ansi_modes(spark, ansi):
+    """The one parser of configured values gives the mirror's number or null
+    for every case, and raises under neither ANSI mode (a strict cast fails
+    on "abc" with ANSI on)."""
+    df = spark.createDataFrame(_PARSE_CASES, "dt string, lex string")
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        got = [r[0] for r in df.selectExpr(parse_sql("dt", "lex")).collect()]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)
+    want = [_mirror_parse(dt, lex) for dt, lex in _PARSE_CASES]
+    assert got == want
+    assert want[7] == 1588328430.0  # the dateTime keeps its time of day
+    assert sum(w is None for w in want) == 14
+
+
+def _flat_rows(key, value):
+    rows = [{"type": "AnonymisationDemo", "name": f"Person {i}",
+             "latitude": str(46 + i % 4), "longitude": str(9.5 + 0.61 * i),
+             "geburtsdatum": f"19{60 + 3 * i}-1{i % 3}-2{i % 8}",
+             "gehalt": str(1800 + 377 * i)} for i in range(12)]
+    rows[3][key] = value
+    return rows
+
+
+def _jsonld_doc(value):
+    from kgforge.config import DEMO2_PREFIX
+
+    nodes = [{"@id": f"oyd:o{i}", "@type": "oyd:Object1", "oyd:name": f"Person {i}",
+              "oyd:gehalt": {"@value": value if i == 3 else str(1800 + 377 * i),
+                             "@type": "xsd:integer"}} for i in range(12)]
+    return {"@context": {"oyd": DEMO2_PREFIX,
+                         "xsd": "http://www.w3.org/2001/XMLSchema#"},
+            "@graph": nodes}
+
+
+def _malformed_answer(spark, case, ingest):
+    """(problem_detail of the failed call, whether it left a persisted RDD
+    behind) for one malformed configured value."""
+    import json
+
+    from kgforge.anonymize.engine import anonymize_triples
+    from kgforge.api import anonymize_flat_json, anonymize_jsonld_response, problem_detail
+    from kgforge.config import ANONYMISATION_DEMO, ANONYMISATION_DEMO2, DEMO_PREFIX
+    from kgforge.ingest import flat_df_to_triples, jsonld_lines_to_triples
+
+    jsonld = case == "jsonld_integer"
+    instance = "/api/anonymization" if jsonld else "/api/anonymization/flatjson"
+    if jsonld:
+        doc = _jsonld_doc("abc")
+        if ingest == "driver":
+            call = lambda: anonymize_jsonld_response(spark, {  # noqa: E731
+                "configurationUrl": "https://soya.ownyourdata.eu/AnonymisationDemo2",
+                "randomSeed": 1717, "data": doc})
+        else:
+            triples = jsonld_lines_to_triples(
+                spark.createDataFrame([(json.dumps(doc),)], "value string"))
+            call = lambda: anonymize_triples(  # noqa: E731
+                triples, ANONYMISATION_DEMO2, random_seed=1717)
+    else:
+        rows = (_flat_rows("gehalt", "abc") if case == "flat_integer"
+                else _flat_rows("geburtsdatum", "31.12.1999"))
+        if ingest == "driver":
+            call = lambda: anonymize_flat_json(spark, {  # noqa: E731
+                "configurationUrl": "https://soya.ownyourdata.eu/AnonymisationDemo",
+                "prefix": DEMO_PREFIX, "randomSeed": 4242, "data": rows})
+        else:
+            cols = list(rows[0])
+            df = spark.createDataFrame([tuple(r[c] for c in cols) for r in rows],
+                                       ", ".join(f"{c} string" for c in cols))
+            triples = flat_df_to_triples(df, DEMO_PREFIX)
+            call = lambda: anonymize_triples(  # noqa: E731
+                triples, ANONYMISATION_DEMO, random_seed=4242,
+                order_pred=DEMO_PREFIX + "counter")
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keySet())
+    try:
+        call()
+        answer = None
+    except Exception as exc:  # noqa: BLE001 — the answer under test
+        answer = problem_detail(exc, instance)
+    return answer, set(rdds().keySet()) <= before
+
+
+@pytest.mark.parametrize("ingest", ["driver", "dataframe"])
+@pytest.mark.parametrize("case,attr,datatype,value", [
+    ("flat_integer", "AnonymisationDemo/gehalt", "integer", "abc"),
+    ("flat_date", "AnonymisationDemo/geburtsdatum", "date", "31.12.1999"),
+    ("jsonld_integer", "AnonymisationDemo2/gehalt", "integer", "abc"),
+])
+def test_malformed_value_answers_alike_under_both_ansi_modes(
+    spark, case, attr, datatype, value, ingest
+):
+    """A configured value that does not parse as its attribute's datatype —
+    an integer generalization value, a date randomization value, a JSON-LD
+    typed literal — fails the request with one 500 "Error during
+    anonymization process" naming the attribute, the value and the
+    datatype, under ANSI mode on and off, on the driver and the DataFrame
+    ingest, and leaves no persisted RDD behind."""
     before = spark.conf.get("spark.sql.ansi.enabled")
     answers = []
     try:
         for ansi in ("true", "false"):
             spark.conf.set("spark.sql.ansi.enabled", ansi)
-            try:
-                out, report = anonymize_triples(
-                    flat_df_to_triples(df, DEMO_PREFIX), ANONYMISATION_DEMO,
-                    random_seed=4242, order_pred=DEMO_PREFIX + "counter",
-                )
-                out.collect()
-                report.release()
-                answers.append(None)
-            except Exception as exc:  # noqa: BLE001 — the answer under test
-                answers.append(problem_detail(exc, "/api/anonymization/flatjson"))
+            answers.append(_malformed_answer(spark, case, ingest))
     finally:
         spark.conf.set("spark.sql.ansi.enabled", before)
-    assert answers[0] == answers[1]
+    (on, on_freed), (off, off_freed) = answers
+    assert on == off
+    assert on_freed and off_freed
+    assert on["status"] == 500 and on["title"] == "Error during anonymization process"
+    assert on["detail"] == (f"Value '{value}' of attribute https://soya.ownyourdata.eu/"
+                            f"{attr} is not a valid {datatype}")

@@ -195,6 +195,7 @@ def test_generalize_plan_flat_at_large_g(spark, caches):
     col_df = spark.range(n).select(
         F.concat(F.lit("http://ex.org/r"), F.col("id")).alias("subj"),
         F.col("id").cast("double").cast("string").alias("obj_value"),
+        F.col("id").cast("double").alias("_v"),
     )
     plans = {}
     for g in (10, 10_000):
@@ -221,8 +222,8 @@ def test_generalize_large_g_bounds_match_driver_formula(spark, caches):
     n, g = 5_000, 1_000
     vals = [((i * 37) % n) * 0.5 for i in range(n)]
     col_df = spark.createDataFrame(
-        [(f"http://ex.org/r{i:05d}", str(v)) for i, v in enumerate(vals)],
-        "subj string, obj_value string",
+        [(f"http://ex.org/r{i:05d}", str(v), v) for i, v in enumerate(vals)],
+        "subj string, obj_value string, _v double",
     )
     out = generalize(col_df, [AttrSpec("http://ex.org/a", "double", g, n)],
                      cleanup=caches)

@@ -73,6 +73,7 @@ def test_frozen_bounds_agree_with_generalize_interior(spark, caches):
     )]
     df = spark.createDataFrame(vals, "subj string, obj_value string").select(
         "subj", F.col("obj_value").cast("string").alias("obj_value"),
+        F.col("obj_value").cast("double").alias("_v"),
         F.col("subj").cast("int").alias("_tie"),
     )
     n = len(vals)
